@@ -223,10 +223,6 @@ def load_events_stream(
     )
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view for the spark.sql surface
     (the analog of the reference's on-demand/store query entry point —

@@ -23,20 +23,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def agg_map(col: str) -> dict[str, Column]:
-    """The full scalar aggregator set over one numeric column, named."""
-    c = F.col(col)
-    return {
-        "sum": F.sum(c),
-        "avg": F.avg(c),
-        "count": F.count(F.lit(1)),
-        "distinct_count": F.countDistinct(c),
-        "min": F.min(c),
-        "max": F.max(c),
-        "std_dev": F.stddev_pop(c),
-    }
-
-
 def union_set(col: str) -> Column:
     """`unionSet(x)` (`UnionSetAttributeAggregatorExecutor`): group set.
     Rendered sorted-joined so results are deterministic under shuffle

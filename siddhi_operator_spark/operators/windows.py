@@ -658,18 +658,6 @@ def delay(df: DataFrame, ts: str, duration: str) -> DataFrame:
     return df.withColumn(ts, F.col(ts) + F.expr(f"INTERVAL {duration}"))
 
 
-def expired_time(df: DataFrame, ts: str, duration: str) -> DataFrame:
-    """`insert expired events into` over `time(t)`
-    (`QuerySelector.java` output event type + `TimeWindowProcessor`'s
-    expiry path): every event leaves the window exactly t after it
-    entered — the expired stream is the input with eviction time
-    `expired_ts = ts + t` (delay() is this same fixed point re-stamped
-    onto ts)."""
-    return df.withColumn(
-        "expired_ts", F.col(ts) + F.expr(f"INTERVAL {duration}")
-    )
-
-
 def expired_length(
     df: DataFrame,
     n: int,

@@ -40,7 +40,7 @@ def ensure_input_parallelism(df: DataFrame) -> DataFrame:
     every pre-exchange stage built on it (per-token hashing, char/word
     explodes, n-gram folds, pairwise scoring probes) runs serially
     regardless of core count. Measured r15 across the document
-    pipeline (`tools/r15_docpar_ab.py`, identical sorted rows per
+    pipeline (OPTIMIZATION_r15.md §3, identical sorted rows per
     arm): minhash bench row 2.61 → 1.07 s, dsir 10.1 → 1.9 s,
     shingles 3.0 → 0.4 s, token-jaccard 5.3 → 1.4 s, char-LM 3.2 →
     1.1 s, repeated-spans 7.4 → 4.7 s at 32 cores.

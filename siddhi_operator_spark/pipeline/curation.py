@@ -728,7 +728,7 @@ _SPAN_TAIL_CACHE: list[DataFrame] = []
 
 # (picked_prefilter, n_shared_fps, prunable_fraction) of the LAST
 # remove_repeated_spans(prefilter="auto") call — observability for
-# tests and the SCALEBENCH tools; never consumed by the operator.
+# tests; never consumed by the operator.
 LAST_SPAN_PREFILTER: tuple[str, int, float] | None = None
 
 
@@ -747,7 +747,6 @@ def remove_repeated_spans(
     k: int = 3,
     w: int = 4,
     min_docs: int = 2,
-    impl: str = "probe",
     prefilter: str = "none",
 ) -> DataFrame:
     """The span-REMOVAL pass the cross-doc detector feeds (the second
@@ -757,8 +756,8 @@ def remove_repeated_spans(
     boilerplate/license/template runs — and keep the rest of the text
     intact. Emits (doc_id, n_tokens, n_removed, text_clean).
 
-    Shape (``impl="probe"``, the measured default): the per-doc
-    winnow arrays compute in-row (zero shuffle, :func:`_winnow_fps`);
+    Shape: the per-doc winnow arrays compute in-row (zero shuffle,
+    :func:`_winnow_fps`);
     the shared-fingerprint set is ONE map-side-combinable aggregation
     whose output is only the repeated tail; it semi-joins back onto
     the position explode WITHOUT a hard broadcast hint — the
@@ -803,26 +802,14 @@ def remove_repeated_spans(
     (prunable 0.168) at [278.6, 299.2] s and BEAT both manual legs —
     the persisted decision tail doubles as the probe's cached input. Output is bit-identical across all three prefilter
     modes (pinned by test). The persisted aggregation is released on
-    the NEXT call (or via :func:`release_span_tail_cache`).
-
-    ``impl="fused"`` is the measured NEGATIVE kept for the record
-    (SCALEBENCH r8): one explicit fp-partitioned exchange meant to
-    feed both the count and the probe — but column pruning gives the
-    two branches different exchange outputs, AQE reuse never fires,
-    and it runs ~1.7× (×1000) to ~4× (×100) slower than the probe
-    shape. Do not flip the default without re-measuring."""
+    the NEXT call (or via :func:`release_span_tail_cache`)."""
     if prefilter not in ("none", "bloom", "auto"):
         raise ValueError(
             f"prefilter must be 'none', 'bloom' or 'auto', got {prefilter!r}"
         )
-    if impl == "fused" and prefilter != "none":
-        # the prefilter tiers are probe-shape only: fused's single
-        # co-partitioned exchange has no pre-shuffle explode to prune,
-        # so silently degrading to 'none' would misreport the regime
-        raise ValueError("impl='fused' supports prefilter='none' only")
     # previous call's cached tail goes now (see _SPAN_TAIL_CACHE) —
-    # unconditionally, so a fused call cannot leak a prior probe
-    # call's persisted tail across the session
+    # unconditionally, so no call leaks a prior call's persisted tail
+    # across the session
     release_span_tail_cache()
     # narrow-scan guard: the winnow kernel + position explode are the
     # heaviest in-row work in curation (7.38 → 4.69 s probe, 7.89 →
@@ -848,154 +835,131 @@ def remove_repeated_spans(
     ).select(
         "doc_id", (F.col("_p0") + 1).alias("pos"), F.unhex("fp").alias("fp")
     )
-    if impl == "fused":
-        # r8 rewrite (measured in SCALEBENCH r8): ONE explicit
-        # fp-partitioned exchange of the position explode feeds BOTH
-        # the shared-count aggregation (count_distinct(doc_id) — the
-        # per-doc dedup the probe variant did in-row) and the probe
-        # join; AQE exchange reuse makes them the same shuffle, the
-        # semi join is co-partitioned (zero extra exchange), and —
-        # the actual win — the interpreted-HOF winnow arrays compute
-        # ONCE instead of twice (the probe variant's two subtrees
-        # each recomputed _hs/_fps over the whole corpus).
-        ex = pos_fp.repartition("fp")
-        shared = (
-            ex.groupBy("fp")
-            .agg(F.count_distinct("doc_id").alias("_nd"))
+    # shared-fp set: per-doc dedup happens IN-ROW (array_distinct)
+    # before the explode, so the only corpus-sized shuffle is this
+    # one map-side-combinable count — not a (doc, fp) DISTINCT
+    fp_counts = (
+        with_fps.select(F.explode(F.array_distinct("_fps")).alias("_fphex"))
+        .select(F.unhex("_fphex").alias("fp"))
+        .groupBy("fp")
+        .agg(F.count(F.lit(1)).alias("_nd"))
+    )
+    bloom_bits = 24  # manual-bloom default; auto derives from the tail
+    if prefilter == "auto":
+        # regime auto-pick (r8 verdict ask). Decision variables:
+        # (a) the shared tail's size vs AQE's 10 MB broadcast
+        # threshold (below it the exact semi join broadcasts and
+        # pruning is free anyway — measured parity-to-−10 % at
+        # ×100; ~40 B/row is the broadcast-relation estimate for a
+        # 16-byte binary key), and (b) the fraction of window
+        # occurrences the bloom could prune (at full saturation
+        # there is nothing to prune — measured wash-with-variance
+        # at the all-shared ×1000). Persist ONLY the shared tail —
+        # the same artifact the manual bloom leg caches; the full
+        # (fp, count) agg at a mixed decade is dominated by the
+        # UNSHARED per-doc-unique fps and caching it is the large
+        # on-heap tail the r8 GC-thrash lesson warns about.
+        # n_shared/w_shared come from the cached tail; the
+        # denominator is the SAME distinct-(doc, fp) basis,
+        # captured by an Observation on the pre-filter agg in the
+        # SAME job that materializes the tail — zero extra corpus
+        # passes, and no mixed-basis bias (a raw-position
+        # denominator counts within-doc repeats the numerator
+        # deduped, inflating `prunable` near the 0.3 threshold on
+        # repetition-heavy corpora).
+        obs = Observation()
+        shared_c = (
+            fp_counts.observe(obs, F.sum("_nd").alias("w_all"))
             .filter(F.col("_nd") >= min_docs)
-            .select("fp")
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        hit_pos = (
-            ex.join(shared, "fp", "left_semi")
-            .groupBy("doc_id")
-            .agg(F.collect_set("pos").alias("_hits"))
+        _SPAN_TAIL_CACHE.append(shared_c)
+        st = shared_c.agg(
+            F.count(F.lit(1)).alias("n_shared"),
+            F.sum("_nd").alias("w_shared"),
+        ).first()
+        w_all = obs.get["w_all"]
+        prunable = 1.0 - float(st.w_shared or 0) / float(w_all or 1)
+        # three measured conditions, not two (r10: the mixed-decade
+        # legs found a third failure mode — a 19.8 M-fp tail
+        # saturates ANY fixed-size bloom; ~8 bits/key is the FP≈2 %
+        # regime, so past 2^27/8 keys there is no sane size inside
+        # a bounded broadcast and the tier is refused):
+        #   (a) tail past AQE's broadcast threshold (else pruning
+        #       is free anyway), (b) ≥30 % of distinct (doc, fp)
+        #       pairs prunable (else saturation wash), (c) a
+        #       ≤16 MB bloom can hold the tail at ~8 bits/key.
+        prefilter = (
+            "bloom"
+            if st.n_shared * 40 > 10 * 1024 * 1024
+            and prunable >= 0.3
+            and st.n_shared * 8 <= 2**27
+            else "none"
         )
-    else:  # "probe": the r7 two-pass shape
-        # shared-fp set: per-doc dedup happens IN-ROW (array_distinct)
-        # before the explode, so the only corpus-sized shuffle is this
-        # one map-side-combinable count — not a (doc, fp) DISTINCT
-        fp_counts = (
-            with_fps.select(F.explode(F.array_distinct("_fps")).alias("_fphex"))
-            .select(F.unhex("_fphex").alias("fp"))
-            .groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("_nd"))
-        )
-        bloom_bits = 24  # manual-bloom default; auto derives from the tail
-        if prefilter == "auto":
-            # regime auto-pick (r8 verdict ask). Decision variables:
-            # (a) the shared tail's size vs AQE's 10 MB broadcast
-            # threshold (below it the exact semi join broadcasts and
-            # pruning is free anyway — measured parity-to-−10 % at
-            # ×100; ~40 B/row is the broadcast-relation estimate for a
-            # 16-byte binary key), and (b) the fraction of window
-            # occurrences the bloom could prune (at full saturation
-            # there is nothing to prune — measured wash-with-variance
-            # at the all-shared ×1000). Persist ONLY the shared tail —
-            # the same artifact the manual bloom leg caches; the full
-            # (fp, count) agg at a mixed decade is dominated by the
-            # UNSHARED per-doc-unique fps and caching it is the large
-            # on-heap tail the r8 GC-thrash lesson warns about.
-            # n_shared/w_shared come from the cached tail; the
-            # denominator is the SAME distinct-(doc, fp) basis,
-            # captured by an Observation on the pre-filter agg in the
-            # SAME job that materializes the tail — zero extra corpus
-            # passes, and no mixed-basis bias (a raw-position
-            # denominator counts within-doc repeats the numerator
-            # deduped, inflating `prunable` near the 0.3 threshold on
-            # repetition-heavy corpora).
-            obs = Observation()
-            shared_c = (
-                fp_counts.observe(obs, F.sum("_nd").alias("w_all"))
-                .filter(F.col("_nd") >= min_docs)
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            _SPAN_TAIL_CACHE.append(shared_c)
-            st = shared_c.agg(
-                F.count(F.lit(1)).alias("n_shared"),
-                F.sum("_nd").alias("w_shared"),
-            ).first()
-            w_all = obs.get["w_all"]
-            prunable = 1.0 - float(st.w_shared or 0) / float(w_all or 1)
-            # three measured conditions, not two (r10: the mixed-decade
-            # legs found a third failure mode — a 19.8 M-fp tail
-            # saturates ANY fixed-size bloom; ~8 bits/key is the FP≈2 %
-            # regime, so past 2^27/8 keys there is no sane size inside
-            # a bounded broadcast and the tier is refused):
-            #   (a) tail past AQE's broadcast threshold (else pruning
-            #       is free anyway), (b) ≥30 % of distinct (doc, fp)
-            #       pairs prunable (else saturation wash), (c) a
-            #       ≤16 MB bloom can hold the tail at ~8 bits/key.
-            prefilter = (
-                "bloom"
-                if st.n_shared * 40 > 10 * 1024 * 1024
-                and prunable >= 0.3
-                and st.n_shared * 8 <= 2**27
-                else "none"
-            )
-            if prefilter == "bloom":
-                # derive the bloom size from the MEASURED tail (the
-                # mips_ann_bits / ivf n_cells discipline: geometry
-                # scales with the corpus, never a fixed constant that
-                # silently saturates): ~8 bits per key, floor 2^24.
-                bloom_bits = min(
-                    27, max(24, (int(st.n_shared) * 8 - 1).bit_length())
-                )
-            # observability: tests and the scale tools read back what
-            # auto decided (module-level, like LAST_* in the ml ops)
-            global LAST_SPAN_PREFILTER
-            LAST_SPAN_PREFILTER = (
-                prefilter,
-                int(st.n_shared),
-                round(prunable, 4),
-            )
-            shared = shared_c.select("fp")
-        else:
-            shared = fp_counts.filter(F.col("_nd") >= min_docs).select("fp")
-        # (doc_id, pos, fp) semi probe — AQE picks broadcast at small
-        # scale, so only the HIT positions (the repeated tail) reach
-        # the per-doc regroup; no hard hint (corpus-proportional side)
-        probe_in = pos_fp
         if prefilter == "bloom":
-            # large-corpus tier (measured, SCALEBENCH r8): when the
-            # shared tail has outgrown AQE's 10 MB broadcast threshold
-            # (exact rows shuffle-join) but its DISTINCT fp count
-            # still fits a 2^24-bit bloom (~≤2e6 fps under ~2 % FP), a
-            # fixed 2 MB bloom over the shared set prunes the position
-            # explode BEFORE its shuffle — false positives just ride
-            # into the exact semi join below, so the output is
-            # bit-identical to prefilter="none". At full bloom
-            # saturation (every window shared) the pruning buys
-            # nothing and the tier measured a wash-with-variance —
-            # don't opt in for a fully-boilerplate corpus.
-            # the bloom branch consumes `shared` TWICE (build + exact
-            # semi join); unpersisted, each consumption re-runs the
-            # corpus-wide winnow+agg subtree — measured at docs ×1000
-            # that third winnow pass cost more than the bloom saved
-            # (474 vs 366 s). Persist the DISTINCT tail so the winnow
-            # feeding it runs once. MEMORY_AND_DISK measured best:
-            # DISK_ONLY paid serialize+reread for the whole tail
-            # (389 s vs 304-327 on the mixed ×1000 leg) — the
-            # columnar on-heap cache spills per-batch only when it
-            # must. On a saturated corpus (EVERY window shared) the
-            # cached tail is large and the tier buys nothing anyway —
-            # see the docstring's regime note. (In auto mode the full
-            # fp_counts agg is already persisted above and `shared` is
-            # a filter over it — don't double-cache.)
-            if not _SPAN_TAIL_CACHE:
-                shared = shared.persist(StorageLevel.MEMORY_AND_DISK)
-                _SPAN_TAIL_CACHE.append(shared)
-            bloom = bloom_build(
-                shared, "fp", k=4, hash_fn="xxhash64", bits_log2=bloom_bits
+            # derive the bloom size from the MEASURED tail (the
+            # mips_ann_bits / ivf n_cells discipline: geometry
+            # scales with the corpus, never a fixed constant that
+            # silently saturates): ~8 bits per key, floor 2^24.
+            bloom_bits = min(
+                27, max(24, (int(st.n_shared) * 8 - 1).bit_length())
             )
-            probe_in = bloom_probe(
-                pos_fp, bloom, "fp", keys=("doc_id", "pos"), k=4,
-                hash_fn="xxhash64", bits_log2=bloom_bits,
-            )
-        hit_pos = (
-            probe_in.join(shared, "fp", "left_semi")
-            .groupBy("doc_id")
-            .agg(F.collect_set("pos").alias("_hits"))
+        # observability: tests read back what auto decided
+        # (module-level, like LAST_* in the ml ops)
+        global LAST_SPAN_PREFILTER
+        LAST_SPAN_PREFILTER = (
+            prefilter,
+            int(st.n_shared),
+            round(prunable, 4),
         )
+        shared = shared_c.select("fp")
+    else:
+        shared = fp_counts.filter(F.col("_nd") >= min_docs).select("fp")
+    # (doc_id, pos, fp) semi probe — AQE picks broadcast at small
+    # scale, so only the HIT positions (the repeated tail) reach
+    # the per-doc regroup; no hard hint (corpus-proportional side)
+    probe_in = pos_fp
+    if prefilter == "bloom":
+        # large-corpus tier (measured, SCALEBENCH r8): when the
+        # shared tail has outgrown AQE's 10 MB broadcast threshold
+        # (exact rows shuffle-join) but its DISTINCT fp count
+        # still fits a 2^24-bit bloom (~≤2e6 fps under ~2 % FP), a
+        # fixed 2 MB bloom over the shared set prunes the position
+        # explode BEFORE its shuffle — false positives just ride
+        # into the exact semi join below, so the output is
+        # bit-identical to prefilter="none". At full bloom
+        # saturation (every window shared) the pruning buys
+        # nothing and the tier measured a wash-with-variance —
+        # don't opt in for a fully-boilerplate corpus.
+        # the bloom branch consumes `shared` TWICE (build + exact
+        # semi join); unpersisted, each consumption re-runs the
+        # corpus-wide winnow+agg subtree — measured at docs ×1000
+        # that third winnow pass cost more than the bloom saved
+        # (474 vs 366 s). Persist the DISTINCT tail so the winnow
+        # feeding it runs once. MEMORY_AND_DISK measured best:
+        # DISK_ONLY paid serialize+reread for the whole tail
+        # (389 s vs 304-327 on the mixed ×1000 leg) — the
+        # columnar on-heap cache spills per-batch only when it
+        # must. On a saturated corpus (EVERY window shared) the
+        # cached tail is large and the tier buys nothing anyway —
+        # see the docstring's regime note. (In auto mode the full
+        # fp_counts agg is already persisted above and `shared` is
+        # a filter over it — don't double-cache.)
+        if not _SPAN_TAIL_CACHE:
+            shared = shared.persist(StorageLevel.MEMORY_AND_DISK)
+            _SPAN_TAIL_CACHE.append(shared)
+        bloom = bloom_build(
+            shared, "fp", k=4, hash_fn="xxhash64", bits_log2=bloom_bits
+        )
+        probe_in = bloom_probe(
+            pos_fp, bloom, "fp", keys=("doc_id", "pos"), k=4,
+            hash_fn="xxhash64", bits_log2=bloom_bits,
+        )
+    hit_pos = (
+        probe_in.join(shared, "fp", "left_semi")
+        .groupBy("doc_id")
+        .agg(F.collect_set("pos").alias("_hits"))
+    )
     base = df.select("doc_id", ws.alias("_ws"))
     return refold_masked_tokens(base, hit_pos, span)
 

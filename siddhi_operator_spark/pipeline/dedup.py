@@ -276,6 +276,16 @@ def lsh_candidate_pairs(
     scoring happens inside the bucket self-join, the only shape whose
     cost stays linear at corpus scale.
 
+    Inline codegen bound: the inline scorer unrolls one 16-byte
+    substring compare per signature into ONE generated method, so its
+    size grows linearly with ``n_hashes`` (measured on 4 cores, capped
+    / uncapped tier: 4.6 / 7.2 KB at 32, 22.7 / 26.5 KB at 128,
+    47.0 / 54.4 KB at 256). At 512 the method passes the JVM's 64 KB
+    limit: Janino fails with "Code grows beyond 64 KB" and Spark
+    silently runs the stage interpreted. Keep ``n_hashes`` ≤ 256 with
+    ``inline``; `tests/test_plans.py` pins 128 below
+    ``spark.sql.codegen.hugeMethodLimit``.
+
     Pair dedup (r15): a pair that collides in k bands comes out of the
     band self-join k times (1.64× duplication measured at sf0.1). The
     uncapped tier removes the duplicates WITHOUT a pair-stream
@@ -857,7 +867,7 @@ def _cc_star(edges: DataFrame, _materialize, max_iter: int) -> DataFrame:
         # the lazy large_star subtree and reuses it: nothing is
         # recomputed, and each round runs one action + one
         # materialization instead of two. Honest measurement
-        # (tools/r16_cc_ab.py, order-controlled interleaved A/B,
+        # (OPTIMIZATION_r16.md §2, order-controlled interleaved A/B,
         # labels fingerprint-identical): WARM-NEUTRAL at sf0.1
         # (loop 3.40 vs 3.44 s — localCheckpoint is near free
         # locally); the win this ships for is the checkpoint_dir

@@ -53,7 +53,7 @@ def derived_state_partitions(spark, est_state_rows: int) -> int:
     toward MORE partitions). Local effect: small-state rows collapse
     from 32 stores/operator to 1-2; fingerprints unchanged (state
     partitioning never affects results, pinned by the interleaved A/B
-    in tools/r16_state_partitions_ab.py).
+    recorded in OPTIMIZATION_r16.md §3).
     """
     rows_per_store = int(os.environ.get("SPARK_GRAFT_STATE_ROWS_PER_STORE", 65536))
     if rows_per_store <= 0:  # escape hatch: disable the derivation

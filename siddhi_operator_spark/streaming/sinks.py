@@ -31,10 +31,6 @@ def memory_sink(stream: DataFrame, name: str, output_mode: str = "append") -> St
     )
 
 
-def console_sink(stream: DataFrame, output_mode: str = "append") -> StreamingQuery:
-    return stream.writeStream.format("console").outputMode(output_mode).start()
-
-
 def parquet_sink(
     stream: DataFrame, path: str, checkpoint: str
 ) -> StreamingQuery:

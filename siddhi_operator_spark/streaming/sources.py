@@ -42,16 +42,6 @@ def file_stream(
     return r.load(path)
 
 
-def rate_stream(spark: SparkSession, rows_per_second: int = 1000) -> DataFrame:
-    """Timer source (`PeriodicTrigger`): synthetic (timestamp, value)
-    rows — the trigger-stream analog."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-    )
-
-
 def kafka_stream(
     spark: SparkSession, bootstrap: str, topic: str, schema: T.StructType
 ) -> DataFrame:

@@ -43,8 +43,8 @@ def _materialize(
     # (streaming.derived_state_partitions) so a small-state query does
     # not open+commit 32 RocksDB stores per operator per micro-batch.
     # shuffle.partitions is read at the query's FIRST batch and pinned
-    # by its checkpoint; restored right after start so nothing else in
-    # the session is affected.
+    # by its checkpoint; restored in `finally` once the query has
+    # drained, so nothing else in the session is affected.
     prev = spark.conf.get("spark.sql.shuffle.partitions") if state_partitions else None
     if state_partitions:
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))

@@ -876,9 +876,8 @@ def test_remove_repeated_spans_bloom_prefilter_equivalent(spark):
 
 
 def test_remove_repeated_spans_prefilter_validation(spark):
-    """Unknown prefilter strings and prefilter-with-fused are rejected
-    at entry (r9 ADVICE: 'auto'+fused used to silently degrade to
-    'none' and leak the previous call's persisted tail)."""
+    """Unknown prefilter strings are rejected at entry, and every call
+    releases the previous call's persisted tail."""
     import pytest
 
     from siddhi_operator_spark.pipeline import curation as C
@@ -888,9 +887,8 @@ def test_remove_repeated_spans_prefilter_validation(spark):
     )
     with pytest.raises(ValueError, match="prefilter"):
         C.remove_repeated_spans(df, prefilter="blomm")
-    with pytest.raises(ValueError, match="fused"):
-        C.remove_repeated_spans(df, impl="fused", prefilter="auto")
-    # a fused call releases any previously persisted tail
+    # a default (probe, no prefilter) call releases any previously
+    # persisted tail
     C.remove_repeated_spans(
         spark.createDataFrame(
             [(1, "x y z w x y z w"), (2, "x y z w q r s t")],
@@ -899,7 +897,7 @@ def test_remove_repeated_spans_prefilter_validation(spark):
         prefilter="bloom",
     ).collect()
     assert len(C._SPAN_TAIL_CACHE) == 1
-    C.remove_repeated_spans(df, impl="fused").collect()
+    C.remove_repeated_spans(df).collect()
     assert not C._SPAN_TAIL_CACHE
 
 
@@ -1023,14 +1021,13 @@ def test_remove_repeated_spans_property(spark):
                 body = f"{body} {boiler} {body}".strip()
             docs.append((did, body))
         df = spark.createDataFrame(docs, "doc_id long, text string")
-        for impl in ("fused", "probe"):  # both tiers, same semantics
-            got = {
-                r.doc_id: (r.n_tokens, r.n_removed, r.text_clean)
-                for r in C.remove_repeated_spans(
-                    df, k=k, w=w, min_docs=min_docs, impl=impl
-                ).collect()
-            }
-            assert got == ref(docs), f"trial {trial} impl {impl}"
+        got = {
+            r.doc_id: (r.n_tokens, r.n_removed, r.text_clean)
+            for r in C.remove_repeated_spans(
+                df, k=k, w=w, min_docs=min_docs
+            ).collect()
+        }
+        assert got == ref(docs), f"trial {trial}"
 
 
 def test_dedup_lines_property(spark):
@@ -2159,7 +2156,7 @@ def test_document_pipeline_input_parallelism(spark):
     plan: the helper's round-robin repartition appears exactly when
     the input is narrower than the cluster. Result identity per
     operator is pinned by the DuckDB oracle rows + the r15 A/B
-    (`tools/r15_docpar_ab.py`, sorted collects equal on all arms)."""
+    (OPTIMIZATION_r15.md §3, sorted collects equal on all arms)."""
     from siddhi_operator_spark.pipeline import text as X
 
     target = spark.sparkContext.defaultParallelism

@@ -865,3 +865,36 @@ def test_shard_assign_never_single_partition(spark):
     assert "SinglePartition" not in plan
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+@pytest.mark.parametrize("max_bucket", ["auto", None])
+def test_lsh_inline_scorer_stays_in_codegen(spark, max_bucket):
+    """The inline scorer unrolls one substring compare per signature
+    into a single generated method. At n_hashes=128 every
+    WholeStageCodegen subtree — the scorer's included — must compile
+    below `spark.sql.codegen.hugeMethodLimit`; past the JVM's 64 KB
+    method limit Spark silently drops the stage out of codegen (see
+    `lsh_candidate_pairs`). Checked after collect(), so AQE has
+    finalised the plan."""
+    import re
+
+    from siddhi_operator_spark.pipeline import dedup as D
+
+    rows = [(i, " ".join(f"w{(i * 7 + j) % 60}" for j in range(12))) for i in range(40)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    sigs = D.minhash_signature(docs, n_hashes=128)
+    pairs = D.lsh_candidate_pairs(
+        sigs, n_hashes=128, inline=True, max_bucket=max_bucket
+    )
+    assert pairs.collect()
+    cg = pairs._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("codegen")
+    )
+    subtrees = re.split(r"(?m)^== Subtree ", cg)[1:]
+    assert subtrees, cg[:2000]
+    sizes = [re.search(r"maxMethodCodeSize:(\d+);", t) for t in subtrees]
+    assert all(sizes), "a subtree failed to compile"
+    limit = int(spark.conf.get("spark.sql.codegen.hugeMethodLimit"))
+    assert max(int(m.group(1)) for m in sizes) < limit
+    # the scorer itself is generated code, not an interpreted fallback
+    assert any("n_sig_match" in t for t in subtrees)
