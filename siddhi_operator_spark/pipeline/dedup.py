@@ -702,15 +702,42 @@ def connected_components(
 
     Two algorithm tiers (``algo=``):
 
-    - ``"star"`` (default) — alternating large-star/small-star
-      contraction (Kiveris et al., "Connected Components in MapReduce
-      and Beyond"): large-star hangs every node's larger neighbors off
-      its min neighbor, small-star flattens the smaller ones;
-      components contract to stars in O(log diameter) alternations AND
-      the edge set SHRINKS every alternation, so late rounds are near
-      free. Measured at ×100 docs (57.3 M strong-pair edges): 29.4 s
-      vs 116.9 s min-label — 4.0× — identical 391 793 labels; parity
-      at sf0.01 (SCALEBENCH.md r6). Default since round 6.
+    - ``"star"`` (default) — per-partition contraction, then
+      alternating large-star/small-star rounds (Kiveris et al.,
+      "Connected Components in MapReduce and Beyond"):
+
+      1. the directed pairs are materialized through one Arrow
+         union-find kernel per partition, with no shuffle: every node
+         becomes an edge (node, partition-local min root). Rows with a
+         NULL endpoint and self-loops pass through unchanged;
+         connectivity is unchanged, and the edge set never grows (a
+         partition's spanning forest has no more edges than the
+         partition). The input is first coalesced, without a
+         shuffle, to at most one partition per task slot. The
+         contraction is only as global as a partition, so a graph
+         whose edges are hash-spread over the partitions is only
+         partly contracted. Its cost at corpus scale (a Python pass
+         and a per-partition node dict over every edge) is
+         unmeasured;
+      2. each round, large-star hangs every node's larger neighbors
+         off its min neighbor and small-star flattens the smaller
+         ones; components contract to stars in O(log diameter)
+         rounds and the edge set shrinks every round;
+      3. a round has converged when its output equals its input
+         ("f(x) == x"), tested on an (edge count, xxhash64 sum)
+         fingerprint observed inside each materializing action. The
+         contraction's fingerprint seeds the check, so a graph that
+         one partition already holds whole (min-rooted stars after
+         the contraction) returns after ONE round; a node contracted
+         to different roots in different partitions only costs more
+         rounds, never a wrong answer. As with any hash fingerprint,
+         two different edge sets with the same count and hash sum
+         would stop the loop early.
+
+      ``max_iter`` counts star rounds after the contraction. The
+      star rounds without the contraction were measured against
+      min-label at ×100 docs (SCALEBENCH.md r6); the current tier
+      has not been measured at that scale.
     - ``"label"`` — iterative min-label propagation. Each round every
       node takes the min of its own label and its neighbors' labels —
       one keyed shuffle per round, but EVERY round reshuffles the full
@@ -726,11 +753,6 @@ def connected_components(
     so the loop distributes at 100 TB like any iterative graph
     algorithm (this is GraphFrames' CC shape without the dependency).
     """
-    # Materialize the directed pairs FIRST: the symmetrizing union has
-    # two branches that would otherwise each recompute the entire
-    # upstream pipeline (for LSH input that is the full minhash scan,
-    # twice) inside one action.
-    #
     # Materialization tier: localCheckpoint pins partitions in executor
     # memory/disk -- fine to ~10^7 edges, but a corpus-scale edge list
     # (measured: 241 M strong pairs at x100 docs) blows the heap.
@@ -755,23 +777,15 @@ def connected_components(
         def _materialize(df: DataFrame) -> DataFrame:
             return df.localCheckpoint(eager=True)
 
-    base = _materialize(
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    )
-    # r15 OPT (guide §2.4 remove shuffles): the star tier consumes the
-    # symmetrized union WITHOUT the distinct+materialize the label tier
-    # needs — large_star tolerates duplicate edges (its own terminal
-    # .distinct() dedups the round's output), so a dup or reversed
-    # input pair costs one inflated first shuffle, not a wrong answer,
-    # while the up-front corpus-wide DISTINCT cost a full extra
-    # exchange + eager job on every call. The label tier keeps the
-    # materialized distinct frame: it re-reads `edges` every round.
-    sym = base.union(
-        base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    directed = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     if algo == "star":
-        return _cc_star(sym, _materialize, max_iter)
-    edges = _materialize(sym.distinct())
+        return _cc_star(directed, _materialize, max_iter)
+    # Materialize the directed pairs FIRST: the symmetrizing union has
+    # two branches that would otherwise each recompute the entire
+    # upstream pipeline (for LSH input that is the full minhash scan,
+    # twice) inside one action.
+    base = _materialize(directed)
+    edges = _materialize(_symmetrize(base).distinct())
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
@@ -804,34 +818,127 @@ def connected_components(
     )
 
 
-def _cc_star(edges: DataFrame, _materialize, max_iter: int) -> DataFrame:
-    """Alternating large-star/small-star contraction over a SYMMETRIC
-    edge frame. Large-star: for each node u with min-incl-self m,
-    re-hang every neighbor v > u onto m. Small-star: on the resulting
-    larger→smaller edges, flatten each node's smaller neighbors (and
-    itself) onto m. Components contract to stars rooted at their min
-    id in O(log diameter) alternations. Convergence is detected by an
-    (edge-count, xxhash64-sum) fingerprint going stable — both scalar
-    aggregates, nothing collects.
+def _symmetrize(edges: DataFrame) -> DataFrame:
+    return edges.union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
 
-    r15 OPT (guide §2.4 / §1.5 — fewer shuffles AND fewer actions; the
-    sf0.1 row ran ~30 jobs deep against a ~0.1 s/action local floor):
 
-    - the per-round fingerprint rides the small_star materialization
-      as an ``Observation`` instead of a separate aggregate job;
-    - the re-symmetrize union drops its ``distinct()`` AND its eager
-      materialization: every small_star edge is strictly src > dst
-      (hang targets are group minima; equal pairs are filtered), so
-      the reversed union is disjoint by construction, and a union of
-      two projections of the SAME checkpointed frame recomputes
-      nothing. large_star's terminal distinct makes the round output
-      identical either way;
+def _contract_partitions(directed: DataFrame) -> DataFrame:
+    """Per-partition union-find over (src, dst) edges, one Arrow
+    kernel and no shuffle: each node of a partition becomes the edge
+    (node, partition-local min root) with node > root, and a root
+    emits nothing of its own (it is the dst of its members). Rows with
+    a NULL endpoint and self-loops pass through unchanged, so the
+    nodes the star loop sees (NULL included) are the input's. Both
+    columns take the type the symmetrizing union would widen them to."""
+    from collections.abc import Iterator
+
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    id_type = _symmetrize(directed).schema["src"].dataType
+    out_schema = T.StructType(
+        [T.StructField("src", id_type), T.StructField("dst", id_type)]
+    )
+    arrow_schema = to_arrow_schema(out_schema)
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        parent: dict = {}
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]  # path halving
+                x = parent[x]
+            return x
+
+        src: list = []
+        dst: list = []
+        for batch in batches:
+            for a, b in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
+                if a is None or b is None or a == b:
+                    src.append(a)
+                    dst.append(b)
+                    continue
+                parent.setdefault(a, a)
+                parent.setdefault(b, b)
+                ra, rb = find(a), find(b)
+                # the smaller root wins, so every root is its set's min
+                if ra < rb:
+                    parent[rb] = ra
+                elif rb < ra:
+                    parent[ra] = rb
+        for x in parent:
+            root = find(x)
+            if root != x:
+                src.append(x)
+                dst.append(root)
+        if src:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(v, type=f.type) for v, f in zip((src, dst), arrow_schema)],
+                schema=arrow_schema,
+            )
+
+    return directed.mapInArrow(kernel, out_schema)
+
+
+def _edge_fingerprint() -> list[Column]:
+    """(count, xxhash64 sum) of the strict src > dst edges — every edge
+    a star round outputs, and every edge the contraction emits (its
+    pass-through self-loops and NULL rows are left out)."""
+    strict = F.col("src") > F.col("dst")
+    return [
+        F.count(F.when(strict, F.lit(1))).alias("n"),
+        # decimal sum: a long sum of 2^63-range hashes overflows ANSI
+        F.sum(
+            F.when(strict, F.xxhash64("src", "dst").cast("decimal(38,0)"))
+        ).alias("h"),
+    ]
+
+
+def _cc_star(directed: DataFrame, _materialize, max_iter: int) -> DataFrame:
+    """Per-partition contraction, then alternating large-star/small-star
+    rounds over the symmetrized edges. Large-star: for each node u with
+    min-incl-self m, re-hang every neighbor v > u onto m. Small-star:
+    on the resulting larger→smaller edges, flatten each node's smaller
+    neighbors (and itself) onto m. Components contract to stars rooted
+    at their min id in O(log diameter) rounds. A round has converged
+    when its (edge-count, xxhash64-sum) fingerprint equals that of its
+    input — both scalar aggregates, nothing collects.
+
+    Fewer shuffles AND fewer actions (a local action costs ~0.07 s of
+    scheduling floor, so jobs, not edges, dominate small graphs):
+
+    - every fingerprint rides the action that materializes its frame
+      as an ``Observation``, the contraction's included, so the first
+      round can already prove the fixpoint;
+    - the symmetrized edges take no ``distinct()``: large_star
+      tolerates duplicate edges (its terminal distinct dedups the
+      round's output), so a duplicate or reversed input pair costs one
+      inflated first shuffle, not a wrong answer. Every small_star edge
+      is strictly src > dst, so re-symmetrizing a round's output is
+      disjoint by construction, and a union of two projections of the
+      SAME materialized frame recomputes nothing;
     - ``all_nodes`` stays lazy (one terminal consumer).
-
-    Labels identical (unchanged oracle row + tests)."""
+    """
     from pyspark.sql import Observation
 
-    all_nodes = edges.select(F.col("src").alias("node")).distinct()
+    # Every task of the Arrow kernel pays a fixed Python-worker cost
+    # (measured ~70 ms of wall time per task on 4 cores, whatever its
+    # size), so a pair list that kept a shuffle's full partition count
+    # (a cached frame: 128 partitions of ~6 edges) would pay it 128
+    # times and contract nothing. A narrow coalesce to one partition
+    # per task slot bounds that cost without idling a core; a frame
+    # with no more partitions than slots is left as it is.
+    directed = directed.coalesce(directed.sparkSession.sparkContext.defaultParallelism)
+    obs = Observation("cc_fp_contracted")
+    contracted = _materialize(
+        _contract_partitions(directed).observe(obs, *_edge_fingerprint())
+    )
+    prev_fp = (obs.get["n"], obs.get["h"])
+    cur = _symmetrize(contracted)
+    all_nodes = cur.select(F.col("src").alias("node")).distinct()
 
     def large_star(sym: DataFrame) -> DataFrame:
         mins = sym.groupBy("src").agg(F.min("dst").alias("_mn"))
@@ -856,38 +963,18 @@ def _cc_star(edges: DataFrame, _materialize, max_iter: int) -> DataFrame:
             .distinct()
         )
 
-    cur = edges
-    prev_fp = None
     for it in range(max_iter):
-        # r16 OPT (guide §2.4/§1.5): large_star is no longer
-        # materialized separately — the round materializes ONCE, after
-        # small_star. small_star's two consumers of the large_star
-        # output (the groupBy mins and the hang join) both require
-        # hashpartitioning(src), so Catalyst plans one exchange over
-        # the lazy large_star subtree and reuses it: nothing is
-        # recomputed, and each round runs one action + one
-        # materialization instead of two. Honest measurement
-        # (OPTIMIZATION_r16.md §2, order-controlled interleaved A/B,
-        # labels fingerprint-identical): WARM-NEUTRAL at sf0.1
-        # (loop 3.40 vs 3.44 s — localCheckpoint is near free
-        # locally); the win this ships for is the checkpoint_dir
-        # tier, where each round's materialization is a full
-        # parquet write+read of the edge list (241 M edges at the
-        # ×100 extreme) — halved per round by construction.
-        directed = large_star(cur)
-        # the fingerprint observation fills during the SAME action that
-        # materializes the round's stars — zero extra jobs
+        # large_star is not materialized on its own: the round
+        # materializes ONCE, after small_star. small_star's two
+        # consumers of the large_star output (the groupBy mins and the
+        # hang join) both require hashpartitioning(src), so Catalyst
+        # plans one exchange over the lazy large_star subtree and
+        # reuses it — on the checkpoint_dir tier that halves each
+        # round's parquet write+read of the edge list
+        # (OPTIMIZATION_r16.md §2).
         obs = Observation(f"cc_fp_{it}")
         stars = _materialize(
-            small_star(directed).observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                # decimal sum: a long sum of 2^63-range hashes
-                # overflows ANSI
-                F.sum(
-                    F.xxhash64("src", "dst").cast("decimal(38,0)")
-                ).alias("h"),
-            )
+            small_star(large_star(cur)).observe(obs, *_edge_fingerprint())
         )
         fp = (obs.get["n"], obs.get["h"])
         if fp == prev_fp:
@@ -901,13 +988,7 @@ def _cc_star(edges: DataFrame, _materialize, max_iter: int) -> DataFrame:
                 )
             )
         prev_fp = fp
-        # re-symmetrize for the next large-star pass: small_star edges
-        # are strictly src > dst, so the reversed union is disjoint and
-        # duplicate-free — no distinct, no materialization (both
-        # branches project the just-checkpointed stars)
-        cur = stars.union(
-            stars.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
+        cur = _symmetrize(stars)
     raise RuntimeError(
         f"connected_components(algo='star') did not converge in {max_iter} "
         "alternations; raise max_iter"

@@ -204,8 +204,9 @@ CC_ORACLE = f"""
 def dedup_connected_components(spark: SparkSession, sf: str) -> DataFrame:
     """Duplicate-GROUP clustering — the step after candidate
     generation that real dedup pipelines need: strong minhash pairs
-    (>= 30/32 signature agreement) → connected components via
-    iterative min-label propagation → component id = canonical doc.
+    (>= 30/32 signature agreement) → connected components (the
+    default star tier: per-partition union-find contraction, then
+    large-star/small-star rounds) → component id = canonical doc.
     The oracle computes the same components with a recursive-CTE
     transitive closure (exact, viable at oracle scale; the Spark loop
     is the 100 TB path)."""

@@ -159,7 +159,7 @@ def test_multimodal_frame_sample(spark):
 
 
 def test_connected_components_basic(spark):
-    """Path graph 1-2-3-4 + isolated pair 10-11: min-label propagation
+    """Path graph 1-2-3-4 + isolated pair 10-11: the default star tier
     converges to component minima; labels never leave executors."""
     from siddhi_operator_spark.pipeline import dedup as D
 
@@ -183,9 +183,26 @@ def test_connected_components_non_convergence_raises(spark):
         D.connected_components(pairs, max_iter=1)
 
 
+def _union_find_components(edges) -> dict[int, int]:
+    """Pure-python reference: node -> smallest node of its component."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
 def test_connected_components_property(spark):
-    """Randomized graphs vs a pure-python union-find reference —
-    min-label propagation must produce identical components (a
+    """Randomized graphs vs a pure-python union-find reference — the
+    default star tier must produce identical components (a
     hypothesis-style sweep with a fixed seed; one Spark run per graph
     keeps it affordable)."""
     import random
@@ -202,25 +219,67 @@ def test_connected_components_property(spark):
                 for _ in range(n_edges)
             }
         )
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            while parent.setdefault(x, x) != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        expect = {x: find(x) for x in parent}
-        # path-compress to true minimum labels
-        expect = {x: find(x) for x in expect}
+        expect = _union_find_components(edges)
 
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
         got = {r.node: r.component for r in D.connected_components(pairs).collect()}
         assert got == expect, f"trial {trial}: {got} != {expect}"
+
+
+def test_connected_components_cross_partition_property(spark):
+    """Randomized graphs with duplicate and reversed edges, shuffled
+    over 4 partitions: the per-partition contraction then hangs one
+    node off different roots in different partitions, and the star
+    rounds must still merge them into the union-find reference's
+    components."""
+    import random
+
+    from siddhi_operator_spark.pipeline import dedup as D
+
+    rng = random.Random(23)
+    split_roots = 0
+    for trial in range(6):
+        n_nodes = rng.randint(4, 40)
+        edges = [tuple(rng.sample(range(n_nodes), 2)) for _ in range(rng.randint(3, 60))]
+        edges += [(b, a) for a, b in rng.sample(edges, len(edges) // 3)]
+        edges += rng.sample(edges, len(edges) // 4)
+        rng.shuffle(edges)
+        expect = _union_find_components(edges)
+
+        pairs = spark.createDataFrame(edges, "id_a long, id_b long").repartition(4)
+        contracted = D._contract_partitions(
+            pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        ).collect()
+        nodes = [r.src for r in contracted]
+        split_roots += len(nodes) != len(set(nodes))
+        got = [(r.node, r.component) for r in D.connected_components(pairs).collect()]
+        assert len(got) == len(dict(got)), f"trial {trial}: duplicate nodes"
+        assert dict(got) == expect, f"trial {trial}: {dict(got)} != {expect}"
+    assert split_roots, "no trial contracted a node to two roots"
+
+
+def test_connected_components_degenerate_inputs(spark, tmp_path):
+    """Degenerate graphs keep the labels the star tier gave before the
+    per-partition contraction, on both materialization tiers: a node
+    whose only edge is a self-loop labels itself, NULL endpoints give
+    one (None, None) row while their partners label themselves, an
+    empty frame gives no rows, and duplicate or reversed pairs give
+    the union-find answer."""
+    from siddhi_operator_spark.pipeline import dedup as D
+
+    dup = [(2, 1), (1, 2), (1, 2), (3, 2), (2, 3), (6, 5), (5, 6), (5, 6)]
+    cases = [
+        ([(1, 2), (7, 7), (3, 3), (3, 4)], {(1, 1), (2, 1), (3, 3), (4, 3), (7, 7)}),
+        ([(1, 2), (None, 5), (6, None)], {(1, 1), (2, 1), (5, 5), (6, 6), (None, None)}),
+        ([], set()),
+        (dup, set(_union_find_components(dup).items())),
+    ]
+    for kw in ({}, {"checkpoint_dir": str(tmp_path)}):
+        for edges, expect in cases:
+            pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+            got = [tuple(r) for r in D.connected_components(pairs, **kw).collect()]
+            assert len(got) == len(set(got)), (kw, edges, got)
+            assert set(got) == expect, (kw, edges, got)
 
 
 def test_connected_components_star_equivalence(spark):
