@@ -246,7 +246,7 @@ def lsh_candidate_pairs(
     n_hashes: int = 32,
     band_size: int = 8,
     cache: bool = True,
-    max_bucket: int | None | str = "auto",
+    max_bucket: int | None = 2000,
     min_match: int | None = None,
     inline: bool | None = None,
 ) -> DataFrame:
@@ -306,23 +306,21 @@ def lsh_candidate_pairs(
     fingerprint tiers already collapse, which is how production dedup
     pipelines treat super-shingles.
 
-    The DEFAULT is ``"auto"`` = a flat 2000. The cap must be ABSOLUTE,
+    The DEFAULT is a flat 2000. The cap must be ABSOLUTE,
     not corpus-proportional: pair work per bucket is cap²·bands/2, so
     a cap that grows with the corpus re-opens the quadratic door
     exactly when it matters (measured: a 1%-of-500k cap admitted 322 M
     candidate pairs from one ×100 replica corpus; the flat cap bounds
     any one bucket at ≤2 M pairs forever). Healthy buckets at sane
     shingle cardinality sit orders of magnitude below 2000 — at test
-    scale nothing approaches it, so auto is also oracle-parity-safe
-    there. Pass an int to tune, or ``None`` for the exhaustive
+    scale nothing approaches it, so the default is also
+    oracle-parity-safe there. Pass an int to tune, or ``None`` for the exhaustive
     all-pairs behavior (exact-parity runs at small scale only — this
     is the path that died at 20× docs)."""
     sig_cols = [F.col(f"sig_{i}") for i in range(n_hashes)]
     sig_table = sigs.select(F.col(id_col), *sig_cols)
     if cache:
         sig_table = sig_table.cache()
-    if max_bucket == "auto":
-        max_bucket = 2000
     n_bands = n_hashes // band_size
 
     def _band_hashes() -> list[Column]:
@@ -377,6 +375,16 @@ def lsh_candidate_pairs(
     # when the private estimate API is unavailable (Spark Connect):
     # the scale-safe default. Explicit ``inline=`` pins either form
     # (both oracle-parity-pinned row-identical by tests).
+    #
+    # ATTACH is not a simplification target: always taking INLINE
+    # would delete this pick and one branch, but it is slower while
+    # the signature table is broadcast-sized. Measured on 4 cores,
+    # `SPARK_GRAFT_BENCH_ONLY=dedup_minhash_lsh SPARK_GRAFT_BENCH_DUCKDB=0
+    # python bench.py` (sf0.1), interleaved auto (ATTACH) vs forced
+    # INLINE legs: 5.58–6.40 s vs 6.40–7.73 s, INLINE slower in 4 of 4
+    # pairs (an earlier set: 5.10–5.80 s vs 6.12–6.91 s, 4 of 4). On
+    # the `curate_dedup` benchmark the two regimes were within noise
+    # (8 pairs, 10.7 vs 11.2 s median).
     if inline is None:
         est = _est_size_bytes(sig_table)
         thresh = _auto_broadcast_threshold(sig_table.sparkSession)

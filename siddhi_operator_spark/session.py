@@ -58,10 +58,7 @@ def build_session(
         # local-cpu-derived initial count (ADVICE r12).
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get(
-                "SPARK_GRAFT_INITIAL_SHUFFLE_PARTITIONS",
-                str(max(32 * cpus, shuffle_partitions)),
-            ),
+            str(max(32 * cpus, shuffle_partitions)),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -72,10 +69,7 @@ def build_session(
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # ×100 A/B sweep (SCALEBENCH.md round 4): 8192 is ~8% faster on
         # scan+agg shapes than the 4096 default, neutral elsewhere
-        .config(
-            "spark.sql.parquet.columnarReaderBatchSize",
-            os.environ.get("SPARK_GRAFT_READER_BATCH", "8192"),
-        )
+        .config("spark.sql.parquet.columnarReaderBatchSize", "8192")
         # streaming state: RocksDB scales past heap for big keyed state
         .config(
             "spark.sql.streaming.stateStore.providerClass",
@@ -95,7 +89,7 @@ def build_session(
         # local bench nothing.
         .config(
             "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-            os.environ.get("SPARK_GRAFT_ROCKSDB_CHANGELOG", "true"),
+            "true",
         )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

@@ -2965,7 +2965,10 @@ def _route_streaming_length(
     env: dict, model: AppModel, q, inp, ts_col: str, id_col: str
 ) -> DataFrame:
     """QL `#window.length(n)` + aggregation in streaming mode → the
-    per-key count-window state op. Supported select shape: the group
+    count-window state op, its state grouped by key or — under
+    `@app:stateBuckets` — by hash bucket (one python call per bucket
+    per micro-batch; measured 6–8× at ×100 for high-churn key spaces,
+    SCALEBENCH r5). Supported select shape: the group
     key, plus any of count(*), sum(X), avg(X) over one value column
     (plus event_id/ts passthroughs) — the canonical Siddhi length-
     window query. Anything wider raises with a pointer to the
@@ -3018,26 +3021,10 @@ def _route_streaming_length(
                 f"event_id/ts, count()/sum(x)/avg(x) — got {expr!r}; use "
                 "streaming.windows.length_window directly"
             )
-    buckets = _state_buckets(model)
-    if buckets is not None:
-        # `@app:stateBuckets('128')` routes the count window onto the
-        # coarse-bucket state layout (streaming.windows.
-        # length_window_bucketed — hash(key) % buckets state keys, one
-        # python call per bucket per micro-batch instead of per key;
-        # measured 6–8× at ×100 for high-churn key spaces, SCALEBENCH
-        # r5). Identical output to the per-key layout (pinned by
-        # tests); a ported app opts in with one annotation, no Python.
-        from ..streaming.windows import length_window_bucketed
-
-        out = length_window_bucketed(
-            src, n, key=key, n_buckets=buckets, ts=ts_col,
-            id_col=id_col, value_col=value_col or "value",
-        )
-    else:
-        out = length_window(
-            src, n, key=key, ts=ts_col, id_col=id_col,
-            value_col=value_col or "value",
-        )
+    out = length_window(
+        src, n, key=key, n_buckets=_state_buckets(model), ts=ts_col,
+        id_col=id_col, value_col=value_col or "value",
+    )
     key_type = dict(zip(src.schema.fieldNames(), src.schema.fields))[
         key
     ].dataType
@@ -3055,19 +3042,16 @@ def _route_streaming_expression(
 ) -> DataFrame:
     """QL `#window.expression('sum(col) <= L')` in streaming mode →
     the retain-while state op (`streaming.windows.expression_window`),
-    or its coarse-bucket layout when the app carries
-    `@app:stateBuckets` (r9 verdict ask #5 — the 6.1×-measured
-    `expression_window_bucketed` tier was library-only; a ported app
-    now opts in with one annotation). Supported select shape mirrors
+    its state grouped by hash bucket when the app carries
+    `@app:stateBuckets` (r9 verdict ask #5 — the 6.1×-measured bucket
+    layout was library-only; a ported app now opts in with one
+    annotation). Supported select shape mirrors
     the length-window route: the group key, event_id/ts/budget-column
     passthroughs, count() and sum(<budget col>) — the canonical Siddhi
     expression-window query. Budgets are cent-scaled exactly like the
     batch runner's `expression_sliding` translation, so all three
     engines share the integer membership test."""
-    from ..streaming.windows import (
-        expression_window,
-        expression_window_bucketed,
-    )
+    from ..streaming.windows import expression_window
 
     keys = q.group_by or []
     if len(keys) != 1:
@@ -3119,18 +3103,11 @@ def _route_streaming_expression(
                 f"{expr!r}; use streaming.windows.expression_window "
                 "directly"
             )
-    limit_scaled = int(round(limit * 100))
-    buckets = _state_buckets(model)
-    if buckets is not None:
-        out = expression_window_bucketed(
-            src, limit_scaled, key=key, n_buckets=buckets, ts=ts_col,
-            id_col=id_col, value_col=value_col,
-        )
-    else:
-        out = expression_window(
-            src, limit_scaled, key=key, ts=ts_col, id_col=id_col,
-            value_col=value_col,
-        )
+    out = expression_window(
+        src, int(round(limit * 100)), key=key,
+        n_buckets=_state_buckets(model), ts=ts_col, id_col=id_col,
+        value_col=value_col,
+    )
     key_type = src.schema[key].dataType
     cols = []
     for src_col, alias in plan:
@@ -3152,19 +3129,15 @@ def _route_streaming_reorder(
     event, because only downstream stateful ops read a watermark):
     kslack → the constant-K lateness filter
     (`streaming.reorder.kslack_stateful`, single-batch row-identical
-    to `kslack_batch`); akslack → the per-key adaptive state op — or
-    its coarse-bucket layout when the app carries `@app:stateBuckets`
-    (the 2.7×-at-×100 tier, SCALEBENCH r10). The bare watermark
+    to `kslack_batch`); akslack → the adaptive state op
+    (`streaming.reorder.akslack`). Both group state by hash bucket
+    when the app carries `@app:stateBuckets` (the 2.7×-at-×100
+    layout, SCALEBENCH r10). The bare watermark
     annotation stays available as `streaming.reorder.kslack` for apps
     that want tolerance-without-drop explicitly. Select shape for
     both: the key, `event_id`/`ts` passthroughs, and the op's
     `late_us`/`slack_us` outputs."""
-    from ..streaming.reorder import (
-        akslack,
-        akslack_bucketed,
-        kslack_bucketed,
-        kslack_stateful,
-    )
+    from ..streaming.reorder import akslack, kslack_stateful
 
     src = env[inp.stream]
     if inp.filter_expr:
@@ -3181,22 +3154,12 @@ def _route_streaming_reorder(
     key = keys[0]
     buckets = _state_buckets(model)
     if ms is not None:
-        if buckets is not None:
-            out = kslack_bucketed(
-                src, ts=rts, key=key, id_col=id_col, slack_ms=ms,
-                n_buckets=buckets,
-            )
-        else:
-            out = kslack_stateful(
-                src, ts=rts, key=key, id_col=id_col, slack_ms=ms
-            )
+        out = kslack_stateful(
+            src, ts=rts, key=key, id_col=id_col, slack_ms=ms,
+            n_buckets=buckets,
+        )
     else:
-        if buckets is not None:
-            out = akslack_bucketed(
-                src, ts=rts, key=key, id_col=id_col, n_buckets=buckets
-            )
-        else:
-            out = akslack(src, ts=rts, key=key, id_col=id_col)
+        out = akslack(src, ts=rts, key=key, id_col=id_col, n_buckets=buckets)
     if not q.select:
         return out
     passthrough = {key: "key", id_col: "event_id", rts: "ts"}
@@ -3240,13 +3203,16 @@ def run_app_streaming(
     shift), with `withWatermark(ts, …)` applied before any stateful
     aggregation (the engine's late-data contract, SURVEY.md §3.10) —
     plus PATTERN queries, which route to the streaming NFA / absence
-    timer (`..streaming.cep`, see ``_run_pattern_streaming``).
+    timer (`..streaming.cep`, see ``_run_pattern_streaming``), and
+    `#window.length`, `#window.expression` and `#reorder:kslack/akslack`,
+    which route to keyed `applyInPandasWithState` operators
+    (`..streaming.windows`, `..streaming.reorder`). Each of those
+    keyed operators — the NFA too — runs one kernel whose state groups
+    by the key, or by hash bucket under `@app:stateBuckets('N')`.
     Sources come from ``sources`` (streaming frames) or from
     `@source(type='file', @map(...))` annotations (directory source).
-    Joins and count-based windows have dedicated streaming operators
-    (`..streaming.joins`, `..streaming.windows`) with semantics a
-    generic translation would get wrong — the runner raises and points
-    there.
+    Other shapes outside the supported select forms raise with a
+    pointer to the operator API.
 
     ``plan_defaults`` / ``@plan`` per-runner contract (r15): this
     runner honors ``bucket='true'`` on stream-stream joins (the epoch
@@ -3257,9 +3223,9 @@ def run_app_streaming(
     runners; an EXPLICIT per-query ``@plan(bucket='auto')`` still
     raises (the user named a specific query; silence would fake
     protection).  ``impl=`` hints are a NO-OP for streaming pattern
-    queries: the streaming NFA has its own derived per-key
-    `state_buckets` tier (`..streaming.cep`), which IS the streaming
-    pattern hot-key answer — there is no scan/join regime to pick.
+    queries: the streaming NFA's state layout (`@app:stateBuckets`,
+    `..streaming.cep`) IS the streaming pattern hot-key answer —
+    there is no scan/join regime to pick.
 
     ``plan_stats`` (r15): the streaming story for precomputed picks —
     derive ``(max_pairs, total)`` offline on a batch sample, key by
@@ -3400,7 +3366,7 @@ def run_app_streaming(
             _emit(q, df)
             continue
         if inp.window is not None and inp.window.kind == "length":
-            # `#window.length(n)` + aggregation: route to the per-key
+            # `#window.length(n)` + aggregation: route to the keyed
             # count-window state machine (`streaming.windows.
             # length_window` — `LengthWindowProcessor.java`), the
             # operator the batch ROWS-frame twin is proven against.
@@ -3412,9 +3378,8 @@ def run_app_streaming(
             continue
         if inp.window is not None and inp.window.kind == "expression":
             # `#window.expression('sum(x) <= L')`: the dynamic
-            # retain-while window has a dedicated per-key state op and
-            # a bucketed layout (`@app:stateBuckets`) — same routing
-            # contract as the length window above
+            # retain-while window has a dedicated keyed state op —
+            # same routing contract as the length window above
             df = _route_streaming_expression(
                 env, model, q, inp, ts_col, id_col
             )

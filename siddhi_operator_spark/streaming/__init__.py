@@ -15,7 +15,13 @@ reference's at-least-once NATS redelivery.
 from __future__ import annotations  # noqa: E402
 
 import math  # noqa: E402
-import os  # noqa: E402
+
+import numpy as np  # noqa: E402
+import pandas as pd  # noqa: E402
+from pyspark.sql import DataFrame, GroupedData  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
+
+_ROWS_PER_STORE = 65536
 
 
 def derived_state_partitions(spark, est_state_rows: int) -> int:
@@ -35,13 +41,13 @@ def derived_state_partitions(spark, est_state_rows: int) -> int:
     bands / state buckets / join epochs — parameterised, never a
     local-core constant):
 
-        partitions = clamp(ceil(state_rows / rows_per_store), 1, ceiling)
+        partitions = clamp(ceil(state_rows / _ROWS_PER_STORE), 1, ceiling)
 
-    - ``rows_per_store`` (`SPARK_GRAFT_STATE_ROWS_PER_STORE`, default
-      65536): below ~64k rows a store's fixed open/commit overhead
-      dominates its data work, so splitting smaller state across more
-      stores only multiplies overhead; at ~100 B/row it also keeps a
-      store's working set ~6 MB — memtable-resident.
+    - ``_ROWS_PER_STORE`` (65536): below ~64k rows a store's fixed
+      open/commit overhead dominates its data work, so splitting
+      smaller state across more stores only multiplies overhead; at
+      ~100 B/row it also keeps a store's working set ~6 MB —
+      memtable-resident.
     - ``ceiling``: the session's AQE `initialPartitionNum` (32 ×
       cores locally, the cluster-submit value in production) — the
       same scale ceiling the batch side uses, reached only when state
@@ -55,14 +61,53 @@ def derived_state_partitions(spark, est_state_rows: int) -> int:
     partitioning never affects results, pinned by the interleaved A/B
     recorded in OPTIMIZATION_r16.md §3).
     """
-    rows_per_store = int(os.environ.get("SPARK_GRAFT_STATE_ROWS_PER_STORE", 65536))
-    if rows_per_store <= 0:  # escape hatch: disable the derivation
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
     try:
         ceiling = int(
             spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
         )
     except Exception:  # noqa: BLE001 — vanilla session without the knob
         ceiling = spark.sparkContext.defaultParallelism * 32
-    n = math.ceil(max(1, est_state_rows) / rows_per_store)
+    n = math.ceil(max(1, est_state_rows) / _ROWS_PER_STORE)
     return max(1, min(n, ceiling))
+
+
+def keyed_groups(
+    projected: DataFrame, key: str, n_buckets: int | None
+) -> GroupedData:
+    """Group a stream carrying ``__sem_key`` for the segment kernels:
+    by the key itself when ``n_buckets`` is None, else by
+    ``pmod(hash(key), n_buckets)`` — the coarse-bucket layout, where
+    one python call per micro-batch handles every key in a bucket.
+
+    `applyInPandasWithState` costs ~0.3 ms per (group × micro-batch)
+    python call (measured: 100 k user keys × 4 batches = 127 s of pure
+    per-group overhead at ×100 — SCALEBENCH round 5), so keying the
+    STATE by the semantic key makes high-cardinality streams
+    overhead-bound; buckets amortize that over |keys|/n_buckets keys.
+    Trade-off: each batch rewrites the whole bucket's state, so size
+    n_buckets so one bucket's state fits a task comfortably, and keep
+    per-key grouping for sparse-key streams."""
+    if n_buckets is None:
+        return projected.groupBy("__sem_key")
+    return projected.withColumn(
+        "__bucket", F.pmod(F.hash(F.col(key)), F.lit(n_buckets))
+    ).groupBy("__bucket")
+
+
+def key_segments(keys: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Order rows into contiguous per-key segments (``keys`` = their
+    key column, e.g. carried state rows followed by a batch's rows):
+    returns (order, seg_start, seg_end) — the permutation, and per
+    permuted row the first/last index of its key's segment. The sort
+    is stable, so within a key rows keep their incoming order (state
+    rows before batch rows). Keys are factorized, not compared as
+    strings: a NULL key is its own segment (never the string
+    'None')."""
+    codes = pd.factorize(keys, use_na_sentinel=False)[0]
+    order = np.argsort(codes, kind="stable")
+    c = codes[order]
+    change = np.concatenate([[True], c[1:] != c[:-1]])
+    first = np.nonzero(change)[0]
+    last = np.concatenate([first[1:], [len(c)]]) - 1
+    seg_id = np.cumsum(change) - 1
+    return order, first[seg_id], last[seg_id]

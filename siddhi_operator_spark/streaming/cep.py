@@ -60,12 +60,15 @@ from __future__ import annotations
 from collections.abc import Iterator, Sequence
 from typing import Any
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from . import key_segments, keyed_groups
 
 StepSpec = "str | tuple"
 
@@ -120,22 +123,13 @@ def _match_out_schema(steps: list[dict]) -> T.StructType:
     return T.StructType(fields)
 
 
-# partial matches as parallel arrays: step index, arming timestamp,
-# aux (count-so-far for count steps; branch bitmask for and-steps),
-# and the bound events encoded "b:id:ts_us|…" per step, ';' between
-# step groups (variable-length per partial; arrays-of-arrays are
-# avoided for state-store schema stability).
-_NFA_STATE = T.StructType(
-    [
-        T.StructField("next_step", T.ArrayType(T.IntegerType())),
-        T.StructField("start_us", T.ArrayType(T.LongType())),
-        T.StructField("aux", T.ArrayType(T.IntegerType())),
-        T.StructField("toks", T.ArrayType(T.StringType())),
-    ]
-)
-
-
-_NFA_BUCKET_STATE = T.StructType(
+# partial matches as parallel arrays over every key in the group:
+# key, step index, arming timestamp, aux (count-so-far for count
+# steps; branch bitmask for and-steps), and the bound events encoded
+# "b:id:ts_us|…" per step, ';' between step groups (variable-length per
+# partial; arrays-of-arrays are avoided for state-store schema
+# stability).
+_NFA_SEG_STATE = T.StructType(
     [
         T.StructField("keys", T.ArrayType(T.StringType())),
         T.StructField("next_step", T.ArrayType(T.IntegerType())),
@@ -177,6 +171,10 @@ def pattern_nfa(
     `e{i}_first`/`e{i}_last` for count steps). First-completion per
     armed partial; ``every`` re-arms on every step-1 match (the
     reference's `every` quantifier).
+
+    State groups by the key, or by `hash(key) % state_buckets`
+    (:func:`.keyed_groups`); either way one call advances every key of
+    its group, key by key, through the same event loop.
     """
     steps = _normalize_steps(step_predicates)
     n_steps = len(steps)
@@ -200,7 +198,7 @@ def pattern_nfa(
         for b, p in enumerate(st["preds"]):
             flag_cols.append(F.expr(p).cast("boolean").alias(f"__p{i}_{b}"))
     flagged = stream.select(
-        F.col(key).cast("string").alias("__key"),
+        F.col(key).cast("string").alias("__sem_key"),
         F.col(id_col).alias("__id"),
         F.col(ts).alias("__ts"),
         *flag_cols,
@@ -232,8 +230,7 @@ def pattern_nfa(
 
     def _make_feed(matches: list, key_str: str):
         """Per-key closures: feed/advance bound to this key's match
-        sink (shared verbatim by the per-key and bucketed state
-        layouts, so the two cannot drift)."""
+        sink."""
 
         def complete_or_advance(p: _Partial) -> bool:
             """Move p to the next step; True if the match completed."""
@@ -351,40 +348,11 @@ def pattern_nfa(
     def proc(
         key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            partials = [
-                _load_partial(*t) for t in zip(*state.get)
-            ]
-        else:
-            partials = []
-        matches: list[tuple] = []
-        key_str = str(key_tuple[0])
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["__ts", "__id"])
-            flags = _flags_of(pdf)
-            ids = pdf["__id"].to_numpy()
-            tss = pdf["__ts"].astype("int64").to_numpy()  # ns
-            partials = _run_events(
-                partials, ids, tss, flags, 0, len(ids), matches, key_str
-            )
-        state.update(
-            (
-                [p.step for p in partials],
-                [p.start_us for p in partials],
-                [p.aux for p in partials],
-                [";".join("|".join(g) for g in p.groups) for p in partials],
-            )
-        )
-        yield pd.DataFrame(matches, columns=cols)
-
-    def proc_bucketed(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        # dict of per-key partial lists inside ONE state entry — the
+        # dict of per-key partial lists inside ONE state entry — one
+        # key per group, or every key of a hash bucket, whose
         # per-(group × batch) python-call overhead (~0.3 ms, SCALEBENCH
-        # round 5) amortizes over every key in the bucket; the per-key
-        # event loop is _run_events, shared verbatim with `proc`.
-        per_key: dict[str, list[_Partial]] = {}
+        # round 5) then amortizes over the bucket's keys.
+        per_key: dict[str | None, list[_Partial]] = {}
         if state.exists:
             s_keys, s_step, s_start, s_aux, s_toks = state.get
             for k, st, su, ax, tk in zip(s_keys, s_step, s_start, s_aux, s_toks):
@@ -393,19 +361,18 @@ def pattern_nfa(
         for pdf in pdfs:
             if not len(pdf):
                 continue
-            pdf = pdf.sort_values(["__key", "__ts", "__id"])
-            flags = _flags_of(pdf)
             ids = pdf["__id"].to_numpy()
             tss = pdf["__ts"].astype("int64").to_numpy()  # ns
-            keys_arr = pdf["__key"].to_numpy(dtype=str)
-            bounds = (
-                [0]
-                + list((keys_arr[1:] != keys_arr[:-1]).nonzero()[0] + 1)
-                + [len(keys_arr)]
-            )
-            for si in range(len(bounds) - 1):
-                lo, hi = bounds[si], bounds[si + 1]
-                k = str(keys_arr[lo])
+            t = np.lexsort((ids, tss))  # (ts, id) order
+            keys_arr = pdf["__sem_key"].to_numpy(dtype=object)[t]
+            order, _, seg_end = key_segments(keys_arr)
+            o = t[order]
+            ids, tss, keys_arr = ids[o], tss[o], keys_arr[order]
+            flags = {f: v[o] for f, v in _flags_of(pdf).items()}
+            lo = 0
+            while lo < len(keys_arr):
+                hi = seg_end[lo] + 1
+                k = keys_arr[lo]
                 survivors = _run_events(
                     per_key.get(k, []), ids, tss, flags, lo, hi, matches, k
                 )
@@ -413,6 +380,7 @@ def pattern_nfa(
                     per_key[k] = survivors
                 else:
                     per_key.pop(k, None)
+                lo = hi
         flat = [
             (k, p) for k, ps in per_key.items() for p in ps
         ]
@@ -427,21 +395,11 @@ def pattern_nfa(
         )
         yield pd.DataFrame(matches, columns=cols)
 
-    if state_buckets is not None:
-        bucketed = flagged.withColumn(
-            "__bucket", F.pmod(F.hash(F.col("__key")), F.lit(state_buckets))
-        )
-        return bucketed.groupBy("__bucket").applyInPandasWithState(
-            proc_bucketed,
-            out_schema,
-            _NFA_BUCKET_STATE,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    return flagged.groupBy("__key").applyInPandasWithState(
+    grouped = keyed_groups(flagged, "__sem_key", state_buckets)
+    return grouped.applyInPandasWithState(
         proc,
         out_schema,
-        _NFA_STATE,
+        _NFA_SEG_STATE,
         "append",
         GroupStateTimeout.NoTimeout,
     )

@@ -89,7 +89,6 @@ def incremental_neardup_sink(
     checkpoint: str,
     n_hashes: int = 32,
     band_size: int = 8,
-    impl: str = "arrow",
 ) -> StreamingQuery:
     """Attach the incremental near-dup service to a document stream.
 
@@ -114,7 +113,7 @@ def incremental_neardup_sink(
         spark = batch.sparkSession
         if not batch.take(1):
             return
-        sigs_new = D.minhash_signature(batch, n_hashes, impl=impl).select(
+        sigs_new = D.minhash_signature(batch, n_hashes, impl="arrow").select(
             "doc_id", *sig_names
         )
         sigs_new.persist()

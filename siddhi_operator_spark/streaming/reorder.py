@@ -46,6 +46,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from . import key_segments, keyed_groups
+
 
 def kslack(stream: DataFrame, ts: str, slack: str) -> DataFrame:
     """`reorder:kslack(tsAttr, K)` → event-time tolerance of K on every
@@ -158,156 +160,8 @@ _AKSLACK_OUT = T.StructType(
         T.StructField("slack_us", T.LongType()),
     ]
 )
-_AKSLACK_STATE = T.StructType([T.StructField("run_max_us", T.LongType())])
-
-
-def akslack(
-    stream: DataFrame,
-    ts: str = "ts",
-    key: str = "user_id",
-    id_col: str = "event_id",
-    q_pct: int = 90,
-) -> DataFrame:
-    """Streaming `reorder:akslack` — the per-batch adaptive reorder:
-    each micro-batch derives its key's slack from the disorder it
-    OBSERVES (the same rank-based discrete quantile as
-    :func:`akslack_batch`, over this batch's events with the running
-    max carried across batches as state), drops events later than the
-    derived slack, and emits the rest. A single-batch replay is
-    therefore row-identical to the batch twin — which is what lets the
-    relational oracle prove this path.
-
-    State per key = ONE long (the running max event time): the
-    adaptive quantile re-derives from each batch's observed disorder
-    (the "windowed disorder quantile" contract — adaptation reacts at
-    batch granularity, like the reference recomputes K per arrived
-    chunk), so state never grows with history."""
-
-    def proc(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        run_max = state.get[0] if state.exists else None
-        outs = []
-        # the arrow reader may deliver one group's batch rows in
-        # several chunks — the quantile must see the WHOLE batch for
-        # the group (chunk-local slacks would diverge from the batch
-        # twin), so concatenate first; memory = one key's batch slice
-        chunks = [p for p in pdfs if len(p)]
-        for pdf in (
-            [pd.concat(chunks, ignore_index=True)] if chunks else []
-        ):
-            pdf = pdf.sort_values(id_col)
-            ts_us = (
-                pdf[ts].to_numpy().astype("datetime64[us]").astype("int64")
-            )
-            cm = np.maximum.accumulate(ts_us)
-            if run_max is not None:
-                cm = np.maximum(cm, run_max)
-            late_us = cm - ts_us
-            n = len(late_us)
-            idx = (q_pct * n + 99) // 100  # ceil(q·n), integer-exact
-            slack = int(np.sort(late_us, kind="stable")[idx - 1])
-            keep = late_us <= slack
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "key": str(key_tuple[0]),
-                        "event_id": pdf[id_col].to_numpy()[keep],
-                        "ts": pdf[ts].to_numpy()[keep],
-                        "late_us": late_us[keep],
-                        "slack_us": slack,
-                    }
-                )
-            )
-            run_max = int(cm[-1])
-        state.update((run_max,))
-        yield (
-            pd.concat(outs, ignore_index=True)
-            if outs
-            else pd.DataFrame(columns=[f.name for f in _AKSLACK_OUT.fields])
-        )
-
-    projected = stream.withColumn("__key", F.col(key).cast("string"))
-    return projected.groupBy("__key").applyInPandasWithState(
-        proc,
-        _AKSLACK_OUT,
-        _AKSLACK_STATE,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
-def kslack_stateful(
-    stream: DataFrame,
-    ts: str = "ts",
-    key: str = "user_id",
-    id_col: str = "event_id",
-    slack_ms: int = 0,
-) -> DataFrame:
-    """Streaming `reorder:kslack(tsAttr, K)` with the DROP contract
-    enforced in-operator — the constant-K sibling of :func:`akslack`
-    and the state-op twin of :func:`kslack_batch` (ADVICE r10: the QL
-    routing must yield the same row set in both runners; the watermark
-    annotation alone emits every event because only downstream
-    stateful ops read it).
-
-    Per key: lateness = (running max event time over arrival order,
-    carried across micro-batches as ONE long of state) − own event
-    time; drop events with lateness > K. A single-batch replay is
-    row-identical to :func:`kslack_batch` — the shared relational
-    oracle proves the pair. Output shape matches the akslack family:
-    (key, event_id, ts, late_us, slack_us) with slack_us the constant
-    K in microseconds."""
-    slack_us = int(slack_ms) * 1000
-
-    def proc(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        run_max = state.get[0] if state.exists else None
-        outs = []
-        chunks = [p for p in pdfs if len(p)]
-        for pdf in (
-            [pd.concat(chunks, ignore_index=True)] if chunks else []
-        ):
-            pdf = pdf.sort_values(id_col)
-            ts_us = (
-                pdf[ts].to_numpy().astype("datetime64[us]").astype("int64")
-            )
-            cm = np.maximum.accumulate(ts_us)
-            if run_max is not None:
-                cm = np.maximum(cm, run_max)
-            late_us = cm - ts_us
-            keep = late_us <= slack_us
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "key": str(key_tuple[0]),
-                        "event_id": pdf[id_col].to_numpy()[keep],
-                        "ts": pdf[ts].to_numpy()[keep],
-                        "late_us": late_us[keep],
-                        "slack_us": slack_us,
-                    }
-                )
-            )
-            run_max = int(cm[-1])
-        state.update((run_max,))
-        yield (
-            pd.concat(outs, ignore_index=True)
-            if outs
-            else pd.DataFrame(columns=[f.name for f in _AKSLACK_OUT.fields])
-        )
-
-    projected = stream.withColumn("__key", F.col(key).cast("string"))
-    return projected.groupBy("__key").applyInPandasWithState(
-        proc,
-        _AKSLACK_OUT,
-        _AKSLACK_STATE,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
-_AKSLACK_BUCKET_STATE = T.StructType(
+# state: every key's running max in the group, as parallel arrays
+_AKSLACK_SEG_STATE = T.StructType(
     [
         T.StructField("keys", T.ArrayType(T.StringType())),
         T.StructField("run_max_us", T.ArrayType(T.LongType())),
@@ -335,7 +189,7 @@ def derive_state_buckets(
     return min(32768, max(16, 1 << (raw - 1).bit_length()))
 
 
-def akslack_bucketed(
+def akslack(
     stream: DataFrame,
     ts: str = "ts",
     key: str = "user_id",
@@ -345,138 +199,109 @@ def akslack_bucketed(
     approx_keys: int | None = None,
     const_slack_us: int | None = None,
 ) -> DataFrame:
-    """`reorder:akslack` on the COARSE-bucket state layout — identical
-    output to :func:`akslack` (pinned by test), state keyed by
-    hash(key) % ``n_buckets`` so one python call handles every key in
-    a bucket per micro-batch. Shipped from the r10 ×100 measurement:
-    the per-key op processed 10 M events / 150 k keys at
-    0.417 M events/s with the per-(key × batch) call constant
-    dominating (150 k group calls for 24 s of wall; the Catalyst batch
-    twin does the same work in 2.25 s) — the same regime where the
-    bucketed length window measured 6–8× and the bucketed NFA 7.8×.
+    """Streaming `reorder:akslack` — the per-batch adaptive reorder:
+    each micro-batch derives its key's slack from the disorder it
+    OBSERVES (the same rank-based discrete quantile as
+    :func:`akslack_batch`, over this batch's events with the running
+    max carried across batches as state), drops events later than the
+    derived slack, and emits the rest. A single-batch replay is
+    therefore row-identical to the batch twin — which is what lets the
+    relational oracle prove this path. ``const_slack_us`` replaces the
+    quantile with a constant K (:func:`kslack_stateful`).
 
-    The bucket body is fully vectorized except two O(#keys-in-bucket)
-    segment loops (running max and quantile pick — each segment is one
-    key's batch slice, contiguous after the sort): per-event work
-    stays numpy, per-key work is a python-level constant ~300× rarer
-    than per-event. State per key is still ONE long, stored as
-    parallel (keys, run_max) arrays sorted by key.
+    State per key = ONE long (the running max event time): the
+    adaptive quantile re-derives from each batch's observed disorder
+    (the "windowed disorder quantile" contract — adaptation reacts at
+    batch granularity, like the reference recomputes K per arrived
+    chunk), so state never grows with history.
 
-    Sizing: pass ``approx_keys`` (measured key cardinality — a
-    distinct count over a history sample) and the bucket count derives
-    via :func:`derive_state_buckets` (~1.5 k keys/bucket, the
-    throughput-flat regime the decade legs measured); an explicit
-    ``n_buckets`` overrides; neither falls back to 128 (the ×100-tuned
-    legacy constant — fine to ~200 k keys, 36 % slow by ×1000)."""
-    if n_buckets is None:
-        # `is None`, not truthiness: approx_keys=0 is a measurement
-        # error and must raise in derive_state_buckets, not silently
-        # fall back to the legacy 128 (ADVICE r11)
-        n_buckets = (
-            128 if approx_keys is None else derive_state_buckets(approx_keys)
-        )
+    State groups by the key, or — with ``n_buckets`` — by
+    `hash(key) % n_buckets` (:func:`.keyed_groups`), one python call
+    per bucket per micro-batch (r10 ×100: the per-key layout's 150 k
+    group calls dominated 24 s of wall; 16 buckets cut it 2.7×). The
+    kernel is the same either way: per-event work is numpy, plus one
+    python-level step per key in the call (running max and quantile
+    pick over the key's contiguous batch slice). Sizing: pass
+    ``approx_keys`` (measured key cardinality — a distinct count over
+    a history sample) and the bucket count derives via
+    :func:`derive_state_buckets`; an explicit ``n_buckets``
+    overrides."""
+    if n_buckets is None and approx_keys is not None:
+        # `is not None`, not truthiness: approx_keys=0 is a measurement
+        # error and must raise in derive_state_buckets (ADVICE r11)
+        n_buckets = derive_state_buckets(approx_keys)
 
     def proc(
         key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            x = state.get
-            st_keys = np.asarray(x[0], dtype=str)
-            st_max = np.asarray(x[1], dtype="int64")
-        else:
-            st_keys = np.empty(0, dtype=str)
-            st_max = np.empty(0, dtype="int64")
+        run_max = dict(zip(*state.get)) if state.exists else {}
+        # the arrow reader may deliver one group's batch rows in
+        # several chunks — the quantile must see the WHOLE batch for
+        # each key (chunk-local slacks would diverge from the batch
+        # twin), so concatenate first
         chunks = [p for p in pdfs if len(p)]
         outs = []
         for pdf in (
             [pd.concat(chunks, ignore_index=True)] if chunks else []
         ):
-            # whole-batch view per key: sort by (key, arrival) — the
-            # same contract as the per-key op's sort_values(id_col)
-            pdf = pdf.sort_values(["__sem_key", id_col], kind="stable")
-            b_keys = pdf["__sem_key"].to_numpy(dtype=str)
-            ts_us = (
-                pdf[ts].to_numpy().astype("datetime64[us]").astype("int64")
-            )
+            # whole-batch view per key, in arrival order
+            a = np.argsort(pdf[id_col].to_numpy(), kind="stable")
+            keys = pdf["__sem_key"].to_numpy(dtype=object)[a]
+            order, seg_start, seg_end = key_segments(keys)
+            o = a[order]
+            b_keys = keys[order]
+            b_ids = pdf[id_col].to_numpy()[o]
+            b_ts = pdf[ts].to_numpy()[o]
+            ts_us = b_ts.astype("datetime64[us]").astype("int64")
             n = len(b_keys)
-            change = np.concatenate([[True], b_keys[1:] != b_keys[:-1]])
-            seg_starts = np.nonzero(change)[0]
-            seg_ends = np.concatenate([seg_starts[1:], [n]])
-            # carried running max for each segment's key (sorted-state
-            # binary search; absent keys get int64 min)
-            if len(st_keys):
-                pos = np.searchsorted(st_keys, b_keys[seg_starts])
-                pos = np.clip(pos, 0, len(st_keys) - 1)
-                hit = st_keys[pos] == b_keys[seg_starts]
-                carried = np.where(hit, st_max[pos], np.int64(-(2**62)))
-            else:
-                carried = np.full(len(seg_starts), -(2**62), dtype="int64")
-            cm = np.empty(n, dtype="int64")
             late = np.empty(n, dtype="int64")
             keep = np.zeros(n, dtype=bool)
             slack_out = np.empty(n, dtype="int64")
-            new_max = np.empty(len(seg_starts), dtype="int64")
-            for si in range(len(seg_starts)):
-                s, e = seg_starts[si], seg_ends[si]
+            for s in np.nonzero(seg_start == np.arange(n))[0]:
+                e = seg_end[s] + 1
+                k = b_keys[s]
                 seg_cm = np.maximum.accumulate(ts_us[s:e])
-                if carried[si] != -(2**62):
-                    seg_cm = np.maximum(seg_cm, carried[si])
-                cm[s:e] = seg_cm
+                if k in run_max:
+                    seg_cm = np.maximum(seg_cm, run_max[k])
                 seg_late = seg_cm - ts_us[s:e]
                 late[s:e] = seg_late
                 if const_slack_us is None:
-                    idx = (q_pct * (e - s) + 99) // 100
+                    idx = (q_pct * (e - s) + 99) // 100  # ceil(q·n), exact
                     slack = int(np.sort(seg_late, kind="stable")[idx - 1])
-                else:  # constant-K tier (kslack_bucketed wrapper)
+                else:
                     slack = const_slack_us
                 slack_out[s:e] = slack
                 keep[s:e] = seg_late <= slack
-                new_max[si] = int(seg_cm[-1])
+                run_max[k] = int(seg_cm[-1])
             outs.append(
                 pd.DataFrame(
                     {
                         "key": b_keys[keep],
-                        "event_id": pdf[id_col].to_numpy()[keep],
-                        "ts": pdf[ts].to_numpy()[keep],
+                        "event_id": b_ids[keep],
+                        "ts": b_ts[keep],
                         "late_us": late[keep],
                         "slack_us": slack_out[keep],
                     }
                 )
             )
-            # merge the batch's per-key maxima into the sorted state
-            seg_key_arr = b_keys[seg_starts]
-            if len(st_keys):
-                merged = {k: int(v) for k, v in zip(st_keys, st_max)}
-            else:
-                merged = {}
-            merged.update(
-                {k: int(v) for k, v in zip(seg_key_arr, new_max)}
-            )
-            ks = sorted(merged)
-            st_keys = np.asarray(ks, dtype=str)
-            st_max = np.asarray([merged[k] for k in ks], dtype="int64")
-        state.update(
-            ([str(k) for k in st_keys], [int(v) for v in st_max])
-        )
+        state.update((list(run_max), [int(v) for v in run_max.values()]))
         yield (
             pd.concat(outs, ignore_index=True)
             if outs
-            else pd.DataFrame(columns=[f.name for f in _AKSLACK_OUT.fields])
+            else pd.DataFrame(columns=_AKSLACK_OUT.fieldNames())
         )
 
-    projected = stream.withColumn(
-        "__sem_key", F.col(key).cast("string")
-    ).withColumn("__bucket", F.pmod(F.hash(F.col(key)), F.lit(n_buckets)))
-    return projected.groupBy("__bucket").applyInPandasWithState(
+    projected = stream.withColumn("__sem_key", F.col(key).cast("string"))
+    return keyed_groups(projected, key, n_buckets).applyInPandasWithState(
         proc,
         _AKSLACK_OUT,
-        _AKSLACK_BUCKET_STATE,
+        _AKSLACK_SEG_STATE,
         "append",
         GroupStateTimeout.NoTimeout,
     )
 
 
-def kslack_bucketed(
+def kslack_stateful(
     stream: DataFrame,
     ts: str = "ts",
     key: str = "user_id",
@@ -485,16 +310,22 @@ def kslack_bucketed(
     n_buckets: int | None = None,
     approx_keys: int | None = None,
 ) -> DataFrame:
-    """Constant-K `reorder:kslack` on the COARSE-bucket state layout —
-    the :func:`kslack_stateful` drop contract with
-    :func:`akslack_bucketed`'s geometry (hash(key) % buckets state,
-    numpy per-event work, cardinality-derived bucket count via
-    ``approx_keys``). Same output shape and single-batch row identity
-    with :func:`kslack_batch` as the per-key op (pinned by test) —
-    the difference is the per-(key × micro-batch) python-call
-    constant, the 2.7-2.8× the decade legs measured for the adaptive
-    sibling."""
-    return akslack_bucketed(
+    """Streaming `reorder:kslack(tsAttr, K)` with the DROP contract
+    enforced in-operator — the constant-K sibling of :func:`akslack`
+    (same kernel, state layout and ``n_buckets``/``approx_keys``
+    sizing) and the state-op twin of :func:`kslack_batch` (ADVICE
+    r10: the QL routing must yield the same row set in both runners;
+    the watermark annotation alone emits every event because only
+    downstream stateful ops read it).
+
+    Per key: lateness = (running max event time over arrival order,
+    carried across micro-batches as ONE long of state) − own event
+    time; drop events with lateness > K. A single-batch replay is
+    row-identical to :func:`kslack_batch` — the shared relational
+    oracle proves the pair. Output shape matches the akslack family:
+    (key, event_id, ts, late_us, slack_us) with slack_us the constant
+    K in microseconds."""
+    return akslack(
         stream, ts=ts, key=key, id_col=id_col, n_buckets=n_buckets,
         approx_keys=approx_keys, const_slack_us=int(slack_ms) * 1000,
     )

@@ -3,9 +3,10 @@
 Native event-time windows (tumbling/sliding/session) are thin
 watermarked twins of the batch operators. Count-based windows —
 `length(n)` / `lengthBatch(n)` (`LengthWindowProcessor.java`,
-`LengthBatchWindowProcessor.java`) — have no Spark primitive and run
-as per-key state machines on ``applyInPandasWithState``
-(SURVEY.md §5 "custom work" item 2).
+`LengthBatchWindowProcessor.java`) — and the retain-while
+`expression` window have no Spark primitive and run as keyed state
+machines on ``applyInPandasWithState`` (SURVEY.md §5 "custom work"
+item 2).
 
 Scale notes: all state is keyed (the shuffle is hash(key)); count
 windows are per-key only — a GLOBAL count window is a deliberate
@@ -26,6 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from . import key_segments, keyed_groups
 
 
 def tumbling_agg(
@@ -103,6 +106,13 @@ def session_agg(
 # count windows: applyInPandasWithState
 # --------------------------------------------------------------------
 
+
+def _micros(col: pd.Series) -> np.ndarray:
+    """A timestamp column as int64 epoch microseconds (Spark's own
+    resolution, so the round trip through state is exact)."""
+    return col.to_numpy().astype("datetime64[us]").astype("int64")
+
+
 _LENGTH_OUT = T.StructType(
     [
         T.StructField("key", T.StringType()),
@@ -113,9 +123,11 @@ _LENGTH_OUT = T.StructType(
         T.StructField("avg_value", T.DoubleType()),
     ]
 )
-# state: parallel arrays of the last-n (event_id, ts_micros, value)
-_LENGTH_STATE = T.StructType(
+# state: flat parallel arrays over every key in the group, grouped by
+# key in storage order (each key's segment is its last-n deque)
+_LENGTH_SEG_STATE = T.StructType(
     [
+        T.StructField("keys", T.ArrayType(T.StringType())),
         T.StructField("ids", T.ArrayType(T.LongType())),
         T.StructField("tss", T.ArrayType(T.LongType())),
         T.StructField("vals", T.ArrayType(T.DoubleType())),
@@ -127,153 +139,33 @@ def length_window(
     stream: DataFrame,
     n: int,
     key: str,
+    n_buckets: int | None = None,
     ts: str = "ts",
     id_col: str = "event_id",
     value_col: str = "value",
 ) -> DataFrame:
     """Streaming `length(n)` per key (`LengthWindowProcessor.java`):
     each arriving event emits the aggregate over the last n events of
-    its key. State = bounded deque per key (arrays in the state store);
-    events are processed in event-time order within each micro-batch
-    (cross-batch order is arrival order, exactly the reference's
-    arrival-ordered window)."""
-
-    def proc(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        # fully vectorized: prior state is prepended to the sorted
-        # batch, per-event window sums come from a prefix-sum
-        # difference — O(batch) total, no iterrows, no per-event
-        # sum(vals) (that pattern measured 10-50x slower in round-1
-        # profiling of the CEP NFA; same hoist applied here)
-        if state.exists:
-            s_ids, s_tss, s_vals = (list(x) for x in state.get)
-        else:
-            s_ids, s_tss, s_vals = [], [], []
-        outs = []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values([ts, id_col])
-            b_ids = pdf[id_col].to_numpy(dtype="int64")
-            b_vals = pdf[value_col].to_numpy(dtype="float64")
-            b_tss = pdf[ts].to_numpy()
-            s = len(s_vals)
-            vals = np.concatenate([np.asarray(s_vals, dtype="float64"), b_vals])
-            cs = np.concatenate([[0.0], np.cumsum(vals)])
-            end = np.arange(s, s + len(b_ids))  # window-end index per event
-            lo = np.maximum(0, end + 1 - n)
-            counts = end + 1 - lo
-            sums = cs[end + 1] - cs[lo]
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "key": str(key_tuple[0]),
-                        "event_id": b_ids,
-                        "ts": b_tss,
-                        "n_in_window": counts.astype("int32"),
-                        "sum_value": sums,
-                        "avg_value": sums / counts,
-                    }
-                )
-            )
-            ids = s_ids + [int(i) for i in b_ids]
-            ns = b_tss.astype("datetime64[ns]").astype("int64")  # unit-stable
-            tss_us = s_tss + [int(t) // 1000 for t in ns]
-            s_ids, s_tss = ids[-n:], tss_us[-n:]
-            s_vals = [float(v) for v in vals[-n:]]
-        state.update((s_ids, s_tss, s_vals))
-        yield (
-            pd.concat(outs, ignore_index=True)
-            if outs
-            else pd.DataFrame(
-                columns=[
-                    "key",
-                    "event_id",
-                    "ts",
-                    "n_in_window",
-                    "sum_value",
-                    "avg_value",
-                ]
-            )
-        )
-
-    projected = stream.withColumn("__key", F.col(key).cast("string"))
-    return projected.groupBy("__key").applyInPandasWithState(
-        proc,
-        _LENGTH_OUT,
-        _LENGTH_STATE,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
-# coarse-bucket state: flat parallel arrays over ALL keys in the bucket,
-# grouped by key in storage order (each key's segment is its deque)
-_LENGTH_BUCKET_STATE = T.StructType(
-    [
-        T.StructField("keys", T.ArrayType(T.StringType())),
-        T.StructField("ids", T.ArrayType(T.LongType())),
-        T.StructField("tss", T.ArrayType(T.LongType())),
-        T.StructField("vals", T.ArrayType(T.DoubleType())),
-    ]
-)
-
-
-def length_window_bucketed(
-    stream: DataFrame,
-    n: int,
-    key: str,
-    n_buckets: int = 128,
-    ts: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """`length(n)` per key with COARSE state buckets — identical output
-    to `length_window` (pinned by test), different state sharding.
-
-    `applyInPandasWithState` costs ~0.3 ms per (group × micro-batch)
-    python call (measured: 100 k user keys × 4 batches = 127 s of pure
-    per-group overhead at ×100 — SCALEBENCH round 5), so keying the
-    STATE by the semantic key makes high-cardinality count windows
-    overhead-bound. Here the state key is `hash(key) % n_buckets`; one
-    python call handles every user in the bucket, with the per-key
-    windows computed vectorized across key segments (sort by (key,
-    state-first arrival order), segment-reset prefix sums). Per-call
-    overhead amortizes over |keys|/n_buckets users.
-
-    Trade-off: each batch rewrites the whole bucket's state (read/write
-    amplification ~1 for high-churn streams where most keys appear
-    every batch — exactly the regime where the per-group overhead
-    hurts; for sparse-key streams keep the per-key variant). Size
-    n_buckets so one bucket's state (n × keys/bucket rows) fits a
-    task comfortably."""
-
-    def _seg_end(keys_s: "np.ndarray") -> "np.ndarray":
-        # index of the LAST row of each row's key segment
-        m = len(keys_s)
-        if not m:
-            return np.empty(0, dtype="int64")
-        change_next = np.concatenate([keys_s[1:] != keys_s[:-1], [True]])
-        ends = np.nonzero(change_next)[0]
-        seg_id = np.cumsum(
-            np.concatenate([[True], keys_s[1:] != keys_s[:-1]])
-        ) - 1
-        return ends[seg_id]
+    its key. Events are processed in event-time order within each
+    micro-batch (cross-batch order is arrival order, exactly the
+    reference's arrival-ordered window). State groups by the key, or
+    by `hash(key) % n_buckets` (see :func:`.keyed_groups`) — the
+    kernel is the same: per-key windows computed vectorized across key
+    segments (state rows first, then the batch by (ts, id);
+    segment-reset prefix sums), O(batch) per call, no per-event
+    python."""
 
     def proc(
         key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         if state.exists:
             x = state.get
-            # 'U' dtype: numpy sorts fixed-width unicode ~3x faster
-            # than object arrays (measured on 2.5M keys)
-            st_keys = np.asarray(x[0], dtype=str)
+            st_keys = np.asarray(x[0], dtype=object)
             st_ids = np.asarray(x[1], dtype="int64")
             st_tss = np.asarray(x[2], dtype="int64")
             st_vals = np.asarray(x[3], dtype="float64")
         else:
-            st_keys = np.empty(0, dtype=str)
+            st_keys = np.empty(0, dtype=object)
             st_ids = np.empty(0, dtype="int64")
             st_tss = np.empty(0, dtype="int64")
             st_vals = np.empty(0, dtype="float64")
@@ -281,94 +173,58 @@ def length_window_bucketed(
         for pdf in pdfs:
             if not len(pdf):
                 continue
-            pdf = pdf.sort_values(["__sem_key", ts, id_col])
-            b_keys = pdf["__sem_key"].to_numpy(dtype=str)
             b_ids = pdf[id_col].to_numpy(dtype="int64")
-            b_ts_ns = pdf[ts].to_numpy().astype("datetime64[ns]").astype("int64")
-            b_vals = pdf[value_col].to_numpy(dtype="float64")
-
-            # merge order per key: state rows first (stored order),
-            # then batch rows by (ts, id) — the cross-batch arrival
-            # order of the per-key variant, reproduced exactly
-            keys_all = np.concatenate([st_keys, b_keys])
-            ids_all = np.concatenate([st_ids, b_ids])
-            tss_all = np.concatenate([st_tss, b_ts_ns // 1000])
-            vals_all = np.concatenate([st_vals, b_vals])
-            is_new = np.concatenate(
-                [np.zeros(len(st_keys), dtype=bool), np.ones(len(b_keys), dtype=bool)]
+            b_tss = _micros(pdf[ts])
+            b = np.lexsort((b_ids, b_tss))  # the batch in (ts, id) order
+            keys_all = np.concatenate(
+                [st_keys, pdf["__sem_key"].to_numpy(dtype=object)[b]]
             )
-            # stable sort by key only: state rows precede batch rows of
-            # the same key (state indices are smaller), batch rows stay
-            # in (ts, id) order from the pre-sort
-            sort_idx = np.argsort(keys_all, kind="stable")
-            keys_s = keys_all[sort_idx]
-            vals_s = vals_all[sort_idx]
-            new_s = is_new[sort_idx]
+            order, seg_start, seg_end = key_segments(keys_all)
+            keys_s = keys_all[order]
+            ids_s = np.concatenate([st_ids, b_ids[b]])[order]
+            tss_s = np.concatenate([st_tss, b_tss[b]])[order]
+            vals_s = np.concatenate(
+                [st_vals, pdf[value_col].to_numpy(dtype="float64")[b]]
+            )[order]
+            new_s = order >= len(st_keys)
 
-            seg_start = np.zeros(len(keys_s), dtype="int64")
-            if len(keys_s):
-                change = np.concatenate(
-                    [[True], keys_s[1:] != keys_s[:-1]]
-                )
-                seg_first = np.nonzero(change)[0]
-                seg_start = seg_first[np.cumsum(change) - 1]
             pos = np.arange(len(keys_s))
             cs = np.concatenate([[0.0], np.cumsum(vals_s)])
             lo = np.maximum(seg_start, pos + 1 - n)
             sums = cs[pos + 1] - cs[lo]
             counts = (pos + 1 - lo).astype("int32")
-
-            m = new_s
             outs.append(
                 pd.DataFrame(
                     {
-                        "key": keys_s[m],
-                        "event_id": ids_all[sort_idx][m],
-                        "ts": (tss_all[sort_idx][m] * 1000).astype(
-                            "datetime64[ns]"
-                        ),
-                        "n_in_window": counts[m],
-                        "sum_value": sums[m],
-                        "avg_value": sums[m] / counts[m],
+                        "key": keys_s[new_s],
+                        "event_id": ids_s[new_s],
+                        "ts": (tss_s[new_s] * 1000).astype("datetime64[ns]"),
+                        "n_in_window": counts[new_s],
+                        "sum_value": sums[new_s],
+                        "avg_value": sums[new_s] / counts[new_s],
                     }
                 )
             )
             # new state: last n rows per key segment, in order
-            keep = pos >= np.maximum(seg_start, _seg_end(keys_s) + 1 - n)
+            keep = pos >= np.maximum(seg_start, seg_end + 1 - n)
             st_keys = keys_s[keep]
-            st_ids = ids_all[sort_idx][keep]
-            st_tss = tss_all[sort_idx][keep]
+            st_ids = ids_s[keep]
+            st_tss = tss_s[keep]
             st_vals = vals_s[keep]
         state.update(
-            (
-                [str(k) for k in st_keys],
-                [int(i) for i in st_ids],
-                [int(t) for t in st_tss],
-                [float(v) for v in st_vals],
-            )
+            (st_keys.tolist(), st_ids.tolist(), st_tss.tolist(), st_vals.tolist())
         )
         yield (
             pd.concat(outs, ignore_index=True)
             if outs
-            else pd.DataFrame(
-                columns=[
-                    "key",
-                    "event_id",
-                    "ts",
-                    "n_in_window",
-                    "sum_value",
-                    "avg_value",
-                ]
-            )
+            else pd.DataFrame(columns=_LENGTH_OUT.fieldNames())
         )
 
-    projected = stream.withColumn(
-        "__sem_key", F.col(key).cast("string")
-    ).withColumn("__bucket", F.pmod(F.hash(F.col(key)), F.lit(n_buckets)))
-    return projected.groupBy("__bucket").applyInPandasWithState(
+    projected = stream.withColumn("__sem_key", F.col(key).cast("string"))
+    return keyed_groups(projected, key, n_buckets).applyInPandasWithState(
         proc,
         _LENGTH_OUT,
-        _LENGTH_BUCKET_STATE,
+        _LENGTH_SEG_STATE,
         "append",
         GroupStateTimeout.NoTimeout,
     )
@@ -479,11 +335,15 @@ _EXPR_OUT = T.StructType(
         T.StructField("win_sum", T.DoubleType()),
     ]
 )
-# state: the retained suffix as parallel (scaled-budget, value) arrays
-_EXPR_STATE = T.StructType(
+# state: each key's retained suffix as flat parallel arrays, grouped
+# by key in storage order
+_EXPR_SEG_STATE = T.StructType(
     [
+        T.StructField("keys", T.ArrayType(T.StringType())),
         T.StructField("bs", T.ArrayType(T.LongType())),
         T.StructField("vals", T.ArrayType(T.DoubleType())),
+        T.StructField("ids", T.ArrayType(T.LongType())),
+        T.StructField("tss", T.ArrayType(T.LongType())),
     ]
 )
 
@@ -492,6 +352,7 @@ def expression_window(
     stream: DataFrame,
     limit: int,
     key: str,
+    n_buckets: int | None = None,
     budget_scale: int = 100,
     ts: str = "ts",
     id_col: str = "event_id",
@@ -507,125 +368,26 @@ def expression_window(
     (`operators.windows.expression_sliding`), whose keyed range
     self-join oracle proves this state machine.
 
-    Scale shape: state per key is the retained suffix only (bounded by
-    the budget, not the stream); each event appends once and is
-    evicted at most once, so per-batch work is O(events) amortized
-    regardless of window occupancy."""
-
-    def proc(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            s_bs, s_vals = (list(x) for x in state.get)
-        else:
-            s_bs, s_vals = [], []
-        tot = sum(s_bs)
-        outs = []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values([ts, id_col])
-            ids = pdf[id_col].to_numpy(dtype="int64")
-            tss = pdf[ts].to_numpy()
-            vals = pdf[value_col].to_numpy(dtype="float64")
-            bs = np.rint(vals * budget_scale).astype("int64")
-            win_n = np.empty(len(ids), dtype="int32")
-            win_sum = np.empty(len(ids), dtype="float64")
-            for i in range(len(ids)):
-                s_bs.append(int(bs[i]))
-                s_vals.append(float(vals[i]))
-                tot += int(bs[i])
-                drop = 0
-                while tot > limit and drop < len(s_bs) - 1:
-                    tot -= s_bs[drop]
-                    drop += 1
-                if drop:
-                    del s_bs[:drop]
-                    del s_vals[:drop]
-                # an arrival whose own budget busts the limit sees an
-                # EMPTY window (batch-twin membership: even k = a fails
-                # the test) — emit nothing, but it stays in state as a
-                # candidate for later windows
-                if tot > limit:
-                    win_n[i] = 0
-                    win_sum[i] = 0.0
-                else:
-                    win_n[i] = len(s_bs)
-                    # exact: the integer budget total IS the sum at
-                    # budget_scale resolution (no FP drift vs batch)
-                    win_sum[i] = tot / budget_scale
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "key": str(key_tuple[0]),
-                        "event_id": ids,
-                        "ts": tss,
-                        "value": vals,
-                        "win_n": win_n,
-                        "win_sum": win_sum,
-                    }
-                )
-            )
-        state.update((s_bs, s_vals))
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
-
-    projected = stream.withColumn("__key", F.col(key).cast("string"))
-    return projected.groupBy("__key").applyInPandasWithState(
-        proc,
-        _EXPR_OUT,
-        _EXPR_STATE,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
-_EXPR_BUCKET_STATE = T.StructType(
-    [
-        T.StructField("keys", T.ArrayType(T.StringType())),
-        T.StructField("bs", T.ArrayType(T.LongType())),
-        T.StructField("vals", T.ArrayType(T.DoubleType())),
-        T.StructField("ids", T.ArrayType(T.LongType())),
-        T.StructField("tss", T.ArrayType(T.LongType())),
-    ]
-)
-
-
-def expression_window_bucketed(
-    stream: DataFrame,
-    limit: int,
-    key: str,
-    n_buckets: int = 128,
-    budget_scale: int = 100,
-    ts: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """`expression('sum(value) <= L')` with COARSE state buckets —
-    identical output to `expression_window` (pinned by test), state
-    keyed by `hash(key) % n_buckets` so one python call handles every
-    key in the bucket (the r5 bucketed-state layout; see
-    `length_window_bucketed` for the per-group-constant analysis).
-
-    The bucketed form is also where the retain-while semantics
-    VECTORIZE: budgets are non-negative, so the per-key prefix-sum is
-    monotone and each event's window start is one
-    `np.searchsorted(pre, pre[i+1] - limit)` — the whole bucket's
-    windows come from one vectorized binary search instead of the
-    per-event eviction loop."""
+    The retain-while semantics VECTORIZE: budgets are non-negative, so
+    the per-key prefix-sum is monotone and each event's window start
+    is one `np.searchsorted(pre, pre[i+1] - limit)` — every key's
+    windows in the call come from one binary search, no per-event
+    eviction loop. State is each key's retained suffix (bounded by the
+    budget, not the stream), grouped by the key or by
+    `hash(key) % n_buckets` (see :func:`.keyed_groups`)."""
 
     def proc(
         key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         if state.exists:
             x = state.get
-            st_keys = np.asarray(x[0], dtype=str)
+            st_keys = np.asarray(x[0], dtype=object)
             st_bs = np.asarray(x[1], dtype="int64")
             st_vals = np.asarray(x[2], dtype="float64")
             st_ids = np.asarray(x[3], dtype="int64")
             st_tss = np.asarray(x[4], dtype="int64")
         else:
-            st_keys = np.empty(0, dtype=str)
+            st_keys = np.empty(0, dtype=object)
             st_bs = np.empty(0, dtype="int64")
             st_vals = np.empty(0, dtype="float64")
             st_ids = np.empty(0, dtype="int64")
@@ -634,88 +396,75 @@ def expression_window_bucketed(
         for pdf in pdfs:
             if not len(pdf):
                 continue
-            pdf = pdf.sort_values(["__sem_key", ts, id_col])
-            b_keys = pdf["__sem_key"].to_numpy(dtype=str)
             b_ids = pdf[id_col].to_numpy(dtype="int64")
-            b_ts_ns = pdf[ts].to_numpy().astype("datetime64[ns]").astype("int64")
-            b_vals = pdf[value_col].to_numpy(dtype="float64")
-            b_bs = np.rint(b_vals * budget_scale).astype("int64")
-
-            keys_all = np.concatenate([st_keys, b_keys])
-            bs_all = np.concatenate([st_bs, b_bs])
-            vals_all = np.concatenate([st_vals, b_vals])
-            ids_all = np.concatenate([st_ids, b_ids])
-            tss_all = np.concatenate([st_tss, b_ts_ns // 1000])
-            is_new = np.concatenate(
-                [np.zeros(len(st_keys), dtype=bool), np.ones(len(b_keys), dtype=bool)]
+            b_tss = _micros(pdf[ts])
+            b = np.lexsort((b_ids, b_tss))  # the batch in (ts, id) order
+            b_vals = pdf[value_col].to_numpy(dtype="float64")[b]
+            if not (b_vals >= 0).all():  # NaN fails too: NULL values
+                raise ValueError(
+                    f"expression window: {value_col!r} must be non-NULL "
+                    "and non-negative (window starts are searched in a "
+                    "monotone prefix sum)"
+                )
+            keys_all = np.concatenate(
+                [st_keys, pdf["__sem_key"].to_numpy(dtype=object)[b]]
             )
-            sort_idx = np.argsort(keys_all, kind="stable")
-            keys_s = keys_all[sort_idx]
-            bs_s = bs_all[sort_idx]
-            m = len(keys_s)
-            if not m:
-                continue
-            change = np.concatenate([[True], keys_s[1:] != keys_s[:-1]])
-            seg_first = np.nonzero(change)[0]
-            seg_id = np.cumsum(change) - 1
-            seg_start = seg_first[seg_id]
-            change_next = np.concatenate([keys_s[1:] != keys_s[:-1], [True]])
-            seg_last = np.nonzero(change_next)[0]
-            seg_end = seg_last[seg_id]
+            order, seg_start, seg_end = key_segments(keys_all)
+            keys_s = keys_all[order]
+            bs_s = np.concatenate(
+                [st_bs, np.rint(b_vals * budget_scale).astype("int64")]
+            )[order]
+            vals_s = np.concatenate([st_vals, b_vals])[order]
+            ids_s = np.concatenate([st_ids, b_ids[b]])[order]
+            tss_s = np.concatenate([st_tss, b_tss[b]])[order]
+            new_s = order >= len(st_keys)
 
             pre = np.concatenate([[0], np.cumsum(bs_s)])
-            pos = np.arange(m)
+            pos = np.arange(len(keys_s))
             # minimal j with window sum pre[i+1]-pre[j] <= limit
             j = np.searchsorted(pre, pre[1:] - limit, side="left")
             j = np.maximum(j, seg_start)
             win_n = (pos + 1 - j).astype("int32")  # 0 = own-budget bust
             win_sum = (pre[pos + 1] - pre[j]) / budget_scale
             win_sum[win_n == 0] = 0.0
-
-            nm = is_new[sort_idx]
             outs.append(
                 pd.DataFrame(
                     {
-                        "key": keys_s[nm],
-                        "event_id": ids_all[sort_idx][nm],
-                        "ts": (tss_all[sort_idx][nm] * 1000).astype(
-                            "datetime64[ns]"
-                        ),
-                        "value": vals_all[sort_idx][nm],
-                        "win_n": win_n[nm],
-                        "win_sum": win_sum[nm],
+                        "key": keys_s[new_s],
+                        "event_id": ids_s[new_s],
+                        "ts": (tss_s[new_s] * 1000).astype("datetime64[ns]"),
+                        "value": vals_s[new_s],
+                        "win_n": win_n[new_s],
+                        "win_sum": win_sum[new_s],
                     }
                 )
             )
             # retained suffix per key = segment-end's window start
             # (never drop the last row: an own-budget buster stays
-            # resident as a later-window candidate, like the per-key op)
-            j_end = np.minimum(j[seg_end], seg_end)
-            keep = pos >= j_end
+            # resident as a later-window candidate)
+            keep = pos >= np.minimum(j[seg_end], seg_end)
             st_keys = keys_s[keep]
             st_bs = bs_s[keep]
-            st_vals = vals_all[sort_idx][keep]
-            st_ids = ids_all[sort_idx][keep]
-            st_tss = tss_all[sort_idx][keep]
+            st_vals = vals_s[keep]
+            st_ids = ids_s[keep]
+            st_tss = tss_s[keep]
         state.update(
             (
-                [str(k) for k in st_keys],
-                [int(b) for b in st_bs],
-                [float(v) for v in st_vals],
-                [int(i) for i in st_ids],
-                [int(t) for t in st_tss],
+                st_keys.tolist(),
+                st_bs.tolist(),
+                st_vals.tolist(),
+                st_ids.tolist(),
+                st_tss.tolist(),
             )
         )
         if outs:
             yield pd.concat(outs, ignore_index=True)
 
-    projected = stream.withColumn(
-        "__sem_key", F.col(key).cast("string")
-    ).withColumn("__bucket", F.pmod(F.hash(F.col(key)), F.lit(n_buckets)))
-    return projected.groupBy("__bucket").applyInPandasWithState(
+    projected = stream.withColumn("__sem_key", F.col(key).cast("string"))
+    return keyed_groups(projected, key, n_buckets).applyInPandasWithState(
         proc,
         _EXPR_OUT,
-        _EXPR_BUCKET_STATE,
+        _EXPR_SEG_STATE,
         "append",
         GroupStateTimeout.NoTimeout,
     )

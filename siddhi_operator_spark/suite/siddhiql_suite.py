@@ -986,11 +986,11 @@ def siddhiql_bucketed_length_window(spark: SparkSession, sf: str) -> DataFrame:
     layout from SiddhiQL text (r8 verdict ask #6): the 6–8× bucketed
     tiers were library-level only — a ported app now opts into the
     high-churn layout with one annotation and no Python. The QL
-    length-window query routes onto `streaming.windows.
-    length_window_bucketed` (state keyed by hash(key) % 16, one
-    python call per bucket per micro-batch); output must equal the
-    per-key layout, which the batch ROWS-frame oracle proves here and
-    tests/test_siddhiql.py pins at the routing level."""
+    length-window query routes onto `streaming.windows.length_window`
+    with ``n_buckets=16`` (state keyed by hash(key) % 16, one python
+    call per bucket per micro-batch); output must equal the per-key
+    layout, which the batch ROWS-frame oracle proves here and
+    tests/test_streaming.py pins at the routing level."""
     import uuid
 
     from ..catalog import load_events_stream
@@ -1105,7 +1105,7 @@ def siddhiql_bucketed_expression_window(
     """`#window.expression('sum(value) <= 1000')` from SiddhiQL text
     in STREAMING mode, on the coarse-bucket state layout (r9 verdict
     ask #5 — `_route_streaming_expression` is new QL surface; the
-    6.1×-measured `expression_window_bucketed` tier routes from
+    6.1×-measured bucket layout of `expression_window` routes from
     `@app:stateBuckets('16')`). The retain-while budget cent-scales
     exactly like the batch translation, so the keyed range self-join
     oracle proves the vectorized bucket state machine event for
@@ -1151,8 +1151,8 @@ def siddhiql_reorder_akslack(spark: SparkSession, sf: str) -> DataFrame:
     """`from events#reorder:akslack(ts)` — the §3.9 [ext:reorder]
     stream processor routed from SiddhiQL text (r10 QL surface; the
     operators shipped in r9/r10), here onto the COARSE-bucket state
-    layout via `@app:stateBuckets('16')` (`akslack_bucketed`, the
-    2.7×-at-×100 tier). The md5-jittered replay is applied to the
+    layout via `@app:stateBuckets('16')` (`akslack` with
+    ``n_buckets=16``, the 2.7×-at-×100 layout). The md5-jittered replay is applied to the
     SOURCE handed to the app (the same disorder model as the
     `streaming_reorder_akslack` row), and the QL output must land on
     the identical relational fixed point — same oracle SQL."""
@@ -1282,9 +1282,10 @@ def siddhiql_reorder_kslack_bucketed(
     """`#reorder:kslack(ts, 3600000)` under `@app:stateBuckets('16')`
     — the QL routing seam the r11 verdict named (missing #2): the
     annotation must route the constant-K drop contract onto the
-    coarse-bucket state layout (`streaming.reorder.kslack_bucketed`,
-    `siddhiql/builder._route_streaming_reorder`'s `ms is not None and
-    buckets is not None` branch), and the row set must land on the
+    coarse-bucket state layout (`streaming.reorder.kslack_stateful`
+    with ``n_buckets=16``, passed by
+    `siddhiql/builder._route_streaming_reorder`), and the row set must
+    land on the
     SAME relational fixed point as the per-key QL row and the direct
     bucketed-op row — one oracle across all kslack tiers."""
     import uuid

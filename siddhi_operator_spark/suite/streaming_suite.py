@@ -42,9 +42,10 @@ def _materialize(
     # corpus-stat-derived partition count
     # (streaming.derived_state_partitions) so a small-state query does
     # not open+commit 32 RocksDB stores per operator per micro-batch.
-    # shuffle.partitions is read at the query's FIRST batch and pinned
-    # by its checkpoint; restored in `finally` once the query has
-    # drained, so nothing else in the session is affected.
+    # The query snapshots the session conf at `start()` and its first
+    # batch pins the partition count in the checkpoint, so the conf is
+    # restored right after `start()` and nothing else in the session
+    # sees it.
     prev = spark.conf.get("spark.sql.shuffle.partitions") if state_partitions else None
     if state_partitions:
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
@@ -55,26 +56,24 @@ def _materialize(
             .outputMode(mode)
             .start()
         )
-        # conf must stay set until the query drains: micro-batches plan
-        # asynchronously and each read the live session conf
-        q.processAllAvailable()
-        if expect_single_batch:
-            # rows whose relational oracle is only valid for a one-trigger
-            # replay (e.g. akslack's per-batch quantile re-derivation)
-            # must FAIL LOUDLY if the fixture ever splits into multiple
-            # triggers (ADVICE r9) — a maxFilesPerTrigger option or a
-            # multi-part fixture would otherwise make a correct
-            # implementation gate red with no hint why
-            fed = [p for p in q.recentProgress if p["numInputRows"] > 0]
-            if len(fed) > 1:  # contract check — must survive python -O
-                raise RuntimeError(
-                    f"oracle assumes a single-trigger replay; stream fed "
-                    f"{len(fed)} non-empty micro-batches"
-                )
-        q.stop()
     finally:
         if prev is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q.processAllAvailable()
+    if expect_single_batch:
+        # rows whose relational oracle is only valid for a one-trigger
+        # replay (e.g. akslack's per-batch quantile re-derivation)
+        # must FAIL LOUDLY if the fixture ever splits into multiple
+        # triggers (ADVICE r9) — a maxFilesPerTrigger option or a
+        # multi-part fixture would otherwise make a correct
+        # implementation gate red with no hint why
+        fed = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        if len(fed) > 1:  # contract check — must survive python -O
+            raise RuntimeError(
+                f"oracle assumes a single-trigger replay; stream fed "
+                f"{len(fed)} non-empty micro-batches"
+            )
+    q.stop()
     return name
 
 
@@ -1268,14 +1267,14 @@ def streaming_reorder_akslack_bucketed(
     spark: SparkSession, sf: str
 ) -> DataFrame:
     """`reorder:akslack` on the COARSE-bucket state layout
-    (`streaming.reorder.akslack_bucketed` — shipped from the r10 ×100
-    measurement: the per-key op ran 10 M events / 150 k keys at
-    0.417 M events/s with the per-(key × batch) python-call constant
-    dominating; hash(key) % 16 buckets cut wall 2.7× to
+    (`streaming.reorder.akslack` with ``n_buckets=16`` — shipped from
+    the r10 ×100 measurement: per-key state ran 10 M events / 150 k
+    keys at 0.417 M events/s with the per-(key × batch) python-call
+    constant dominating; hash(key) % 16 buckets cut wall 2.7× to
     1.14 M events/s, SCALEBENCH r10). Output must be row-identical to
-    the per-key op — same oracle proves both, and the multi-batch
+    per-key state — same oracle proves both, and the multi-batch
     equivalence is pinned in tests/test_streaming_extras.py."""
-    from ..streaming.reorder import akslack_bucketed
+    from ..streaming.reorder import akslack
 
     s = _events_stream(spark, sf).select(
         "event_id",
@@ -1286,7 +1285,7 @@ def streaming_reorder_akslack_bucketed(
             "16, 10) AS BIGINT) % 86400)"
         ).alias("ts"),
     )
-    out = akslack_bucketed(
+    out = akslack(
         s, ts="ts", key="user_id", q_pct=90, n_buckets=16
     ).select(
         "event_id",
@@ -1320,16 +1319,16 @@ def streaming_reorder_kslack_bucketed(
     spark: SparkSession, sf: str
 ) -> DataFrame:
     """Constant-K `reorder:kslack` on the COARSE-bucket state layout
-    (`streaming.reorder.kslack_bucketed` — r11 code, first oracle row
-    r12 per the r11 verdict: the op was pinned row-identical to
-    `kslack_batch` by routing tests but never exercised through the
-    driver gate). Same geometry as the bucketed akslack sibling
-    (hash(key) % n_buckets state, numpy per-event work) with the
-    1-hour constant slack; the md5-jittered lateness fixed point is
+    (`streaming.reorder.kslack_stateful` with ``n_buckets=16`` — r11
+    code, first oracle row r12 per the r11 verdict: the op was pinned
+    row-identical to `kslack_batch` by routing tests but never
+    exercised through the oracle gate). Same geometry as the bucketed
+    akslack sibling (hash(key) % n_buckets state, numpy per-event
+    work) with the 1-hour constant slack; the md5-jittered lateness fixed point is
     the same relational oracle the QL kslack row proves, so all three
     runners (batch, per-key streaming, bucketed streaming) land on
     one row set."""
-    from ..streaming.reorder import kslack_bucketed
+    from ..streaming.reorder import kslack_stateful
 
     s = _events_stream(spark, sf).select(
         "event_id",
@@ -1340,7 +1339,7 @@ def streaming_reorder_kslack_bucketed(
             "16, 10) AS BIGINT) % 86400)"
         ).alias("ts"),
     )
-    out = kslack_bucketed(
+    out = kslack_stateful(
         s, ts="ts", key="user_id", slack_ms=3_600_000, n_buckets=16
     ).select(
         "event_id",

@@ -867,7 +867,7 @@ def test_shard_assign_never_single_partition(spark):
     assert "SortMergeJoin" not in plan
 
 
-@pytest.mark.parametrize("max_bucket", ["auto", None])
+@pytest.mark.parametrize("max_bucket", [2000, None])
 def test_lsh_inline_scorer_stays_in_codegen(spark, max_bucket):
     """The inline scorer unrolls one substring compare per signature
     into a single generated method. At n_hashes=128 every

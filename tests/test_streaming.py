@@ -1108,11 +1108,10 @@ def test_streaming_span_removal_replay_idempotent(spark, tmp_path):
 
 def test_state_buckets_annotation_routes_length_window(spark, events_df):
     """`@app:stateBuckets('5')` opts QL length-window queries into the
-    coarse-bucket state layout (streaming.windows.
-    length_window_bucketed) through the front end — identical rows to
-    the per-key default, and the routing itself is pinned (the
-    bucketed plan carries the __bucket state key, the per-key plan
-    carries __key)."""
+    coarse-bucket state layout (streaming.windows.length_window with
+    ``n_buckets``) through the front end — identical rows to the
+    per-key default, and the routing itself is pinned (the bucketed
+    plan carries the __bucket state key, the per-key plan does not)."""
     import tempfile
     import uuid
 
@@ -1160,9 +1159,10 @@ def test_state_buckets_annotation_routes_length_window(spark, events_df):
 def test_state_buckets_annotation_routes_expression_window(spark, events_df):
     """`@app:stateBuckets('5')` opts QL `#window.expression` queries
     into the coarse-bucket retain-while layout (streaming.windows.
-    expression_window_bucketed) through the front end — identical
-    rows to the per-key default, routing pinned by the state key in
-    the plan (bucketed = __bucket, per-key = __key)."""
+    expression_window with ``n_buckets``) through the front end —
+    identical rows to the per-key default, routing pinned by the
+    state key in the plan (only the bucketed plan carries
+    __bucket)."""
     import tempfile
     import uuid
 
@@ -1454,15 +1454,16 @@ def test_replay_dir_per_split_row_order(spark, tmp_path):
     assert sorted(seen) == [r[0] for r in sorted(rows)]
 
 
-def test_derived_state_partitions(spark):
+def test_derived_state_partitions(spark, monkeypatch):
     """r16 OPT (guide §5): the state-partition pick is DERIVED from the
     state-size estimate — small state collapses to few stores (the
     per-store open/commit overhead floor), huge state saturates at the
     session's initialPartitionNum ceiling (production unchanged at
-    corpus scale), and rows_per_store=0 disables the derivation.
-    Measured on the five stream-stream join rows (fresh-process
-    alternated A/B, fingerprints identical): 1.5-2.9x, state commit
-    time 143-331k ms -> ~1k ms."""
+    corpus scale). Measured on the five stream-stream join rows
+    (fresh-process alternated A/B, fingerprints identical): 1.5-2.9x,
+    state commit time 143-331k ms -> ~1k ms."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
     from siddhi_operator_spark.streaming import derived_state_partitions
 
     ceiling = int(
@@ -1471,25 +1472,36 @@ def test_derived_state_partitions(spark):
     assert derived_state_partitions(spark, 1000) == 1
     assert derived_state_partitions(spark, 65537) == 2
     assert derived_state_partitions(spark, 10**12) == ceiling
-    import os
 
-    os.environ["SPARK_GRAFT_STATE_ROWS_PER_STORE"] = "0"
-    try:
-        assert derived_state_partitions(spark, 1000) == int(
-            spark.conf.get("spark.sql.shuffle.partitions")
-        )
-    finally:
-        del os.environ["SPARK_GRAFT_STATE_ROWS_PER_STORE"]
-
-    # _materialize must restore the session conf after the query drains
+    # _materialize restores the session conf right after start(): the
+    # query snapshots the conf when it starts, so it still runs on the
+    # derived partition count while the session is already restored
     from siddhi_operator_spark.suite import streaming_suite as SS
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
+    assert prev != "2"
+    seen = {}
+    drain = StreamingQuery.processAllAvailable
+
+    def spy(q):
+        seen["conf"] = spark.conf.get("spark.sql.shuffle.partitions")
+        seen["query"] = q
+        return drain(q)
+
+    monkeypatch.setattr(StreamingQuery, "processAllAvailable", spy)
     s = _stream_events(spark, spark.createDataFrame(
         [(1, "2024-01-01 00:00:01", 1, "click", 1.0)],
         "event_id long, ts string, user_id long, event_type string, value double",
     ).withColumn("ts", F.col("ts").cast("timestamp")), n_splits=1)
     SS._materialize(
-        s.groupBy("user_id").count(), "complete", state_partitions=1
+        s.groupBy("user_id").count(), "complete", state_partitions=2
     )
+    assert seen["conf"] == prev
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    stores = {
+        op["numStateStoreInstances"]
+        for p in seen["query"].recentProgress
+        if p["numInputRows"] > 0
+        for op in p["stateOperators"]
+    }
+    assert stores == {2}

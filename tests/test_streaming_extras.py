@@ -4,6 +4,7 @@ dead letter."""
 
 from __future__ import annotations
 
+import itertools
 import tempfile
 import uuid
 
@@ -13,6 +14,15 @@ import pytest
 from siddhi_operator_spark.streaming import frequent as FR
 from siddhi_operator_spark.streaming import ratelimit as RL
 from siddhi_operator_spark.streaming import reorder, sinks, sources
+
+
+# key-column inputs (SQL over the input) for the per-key vs bucketed
+# layout tests: the fixture's keys, an all-NULL key column, one hot key
+_DEGENERATE_KEYS = {
+    "fixture": "user_id",
+    "null_key": "CAST(NULL AS BIGINT)",
+    "hot_key": "CAST(7 AS BIGINT)",
+}
 
 
 def _stream(spark, df, n_splits=2):
@@ -242,10 +252,12 @@ def test_debezium_stream_equals_batch(spark, tmp_path):
 
 
 def test_length_window_bucketed_equals_per_key(spark, tmp_path):
-    """The coarse-bucket state variant of the streaming length window
-    must emit the same rows as the per-key variant across multiple
+    """The coarse-bucket state layout of the streaming length window
+    must emit the same rows as the per-key layout across multiple
     micro-batches (the per-group-overhead amortization must not change
-    semantics). Sums compare under the engine's rounding contract —
+    semantics) — also on degenerate keys: an all-NULL key column (one
+    NULL-keyed segment, emitted as NULL, never the string 'None') and
+    one hot key. Sums compare under the engine's rounding contract —
     the bucket-wide vectorized prefix scan accumulates in a different
     FP order (~1e-9 relative), which the suite's 4-decimal epsilon
     rounding absorbs by design."""
@@ -255,12 +267,13 @@ def test_length_window_bucketed_equals_per_key(spark, tmp_path):
     from siddhi_operator_spark.streaming import windows as SW
 
     outs = {}
-    for variant in ("per_key", "bucketed"):
+    for (label, key_col), (variant, buckets) in itertools.product(
+        _DEGENERATE_KEYS.items(), (("per_key", None), ("bucketed", 7))
+    ):
         s = load_events_stream(spark, "/root/testdata/sf0.001")
-        win = (
-            SW.length_window(s, 5, "user_id")
-            if variant == "per_key"
-            else SW.length_window_bucketed(s, 5, "user_id", n_buckets=7)
+        win = SW.length_window(
+            s.withColumn("user_id", F.expr(key_col)), 5, "user_id",
+            n_buckets=buckets,
         )
         name = f"lw_{variant}_{uuid.uuid4().hex[:6]}"
         q = (
@@ -273,31 +286,37 @@ def test_length_window_bucketed_equals_per_key(spark, tmp_path):
             q.processAllAvailable()
         finally:
             q.stop()
-        outs[variant] = sorted(
+        outs[label, variant] = sorted(
             (r["key"], r["event_id"], r["ts"], r["n_in_window"],
              round(r["sum_value"], 6))
             for r in spark.table(name).select(
                 "key", "event_id", "ts", "n_in_window", "sum_value"
             ).collect()
         )
-    assert outs["per_key"] == outs["bucketed"]
-    assert len(outs["per_key"]) > 0
+    for label in _DEGENERATE_KEYS:
+        assert outs[label, "per_key"] == outs[label, "bucketed"], label
+        assert len(outs[label, "per_key"]) > 0, label
+    assert {r[0] for r in outs["null_key", "per_key"]} == {None}
+    assert max(r[3] for r in outs["hot_key", "per_key"]) == 5
 
 
 def test_cep_nfa_bucketed_equals_per_key(spark):
     """The coarse-bucket NFA state layout must produce the identical
-    match set as the per-key layout (the event loop is shared code;
-    this pins the state (de)serialization and segment routing)."""
+    match set as the per-key layout (one kernel, two groupings; this
+    pins the state (de)serialization and segment routing) — also on
+    an all-NULL key column (matches keyed NULL) and one hot key."""
     import uuid
 
     from siddhi_operator_spark.catalog import load_events_stream
     from siddhi_operator_spark.streaming import cep
 
     outs = {}
-    for variant, buckets in (("per_key", None), ("bucketed", 7)):
+    for (label, key_col), (variant, buckets) in itertools.product(
+        _DEGENERATE_KEYS.items(), (("per_key", None), ("bucketed", 7))
+    ):
         s = load_events_stream(spark, "/root/testdata/sf0.001")
         out = cep.pattern_nfa(
-            s,
+            s.withColumn("user_id", F.expr(key_col)),
             key="user_id",
             step_predicates=[
                 "event_type = 'signup'",
@@ -317,9 +336,11 @@ def test_cep_nfa_bucketed_equals_per_key(spark):
             q.processAllAvailable()
         finally:
             q.stop()
-        outs[variant] = sorted(map(tuple, spark.table(name).collect()))
-    assert outs["per_key"] == outs["bucketed"]
-    assert len(outs["per_key"]) > 0
+        outs[label, variant] = sorted(map(tuple, spark.table(name).collect()))
+    for label in _DEGENERATE_KEYS:
+        assert outs[label, "per_key"] == outs[label, "bucketed"], label
+        assert len(outs[label, "per_key"]) > 0, label
+    assert {r[0] for r in outs["null_key", "per_key"]} == {None}
 
 
 def test_snapshot_every_stream_idle_key_ticks(spark):
@@ -386,7 +407,7 @@ def test_expression_window_stream_evicts_and_busts(spark):
     """Retain-while state machine: front eviction when the budget
     breaks, empty-window suppression when a single arrival busts the
     limit alone (it stays resident as a later-window candidate), state
-    carried across micro-batches."""
+    carried across micro-batches; a negative budget fails loudly."""
     from siddhi_operator_spark.streaming import windows as SW
 
     rows = [  # (user, ts, id, value) — limit 100.00 (cents 10000)
@@ -411,13 +432,21 @@ def test_expression_window_stream_evicts_and_busts(spark):
     assert got[3] == (2, 90.0)
     assert 4 not in got          # empty window: batch twin emits no row
     assert got[5] == (1, 30.0)
+    # a negative budget breaks the monotone prefix sum: a loud error
+    neg = df.withColumn("value", F.when(F.col("event_id") == 3, -1.0)
+                        .otherwise(F.col("value")))
+    with pytest.raises(Exception, match="non-negative"):
+        _run(SW.expression_window(
+            _stream(spark, neg, n_splits=1), limit=10000, key="user_id"
+        ))
 
 
 def test_expression_window_bucketed_equivalence(spark):
     """The bucketed retain-while layout (searchsorted over prefix-sum
-    budgets) must emit exactly the per-key state machine's rows —
-    including own-budget busts and cross-batch carry — on a random
-    multi-key multi-batch workload."""
+    budgets) must emit exactly the per-key layout's rows — including
+    own-budget busts and cross-batch carry — on a random multi-key
+    multi-batch workload, and on the same workload with an all-NULL
+    key column and with one hot key."""
     import random
 
     from siddhi_operator_spark.streaming import windows as SW
@@ -435,26 +464,29 @@ def test_expression_window_bucketed_equivalence(spark):
                 round(rng.uniform(0.0, 80.0), 2),
             )
         )
-    df = spark.createDataFrame(
+    base = spark.createDataFrame(
         rows, "user_id long, ts string, event_id long, value double"
     ).withColumn("ts", F.col("ts").cast("timestamp"))
 
-    def run_op(make):
+    def run_op(df, n_buckets):
         s = _stream(spark, df, n_splits=3)
-        name = _run(make(s))
+        name = _run(
+            SW.expression_window(
+                s, limit=10000, key="user_id", n_buckets=n_buckets
+            )
+        )
         return sorted(
             (r.key, r.event_id, r.win_n, r.win_sum)
             for r in spark.table(name).collect()
         )
 
-    per_key = run_op(lambda s: SW.expression_window(s, limit=10000, key="user_id"))
-    bucketed = run_op(
-        lambda s: SW.expression_window_bucketed(
-            s, limit=10000, key="user_id", n_buckets=4
-        )
-    )
-    assert per_key == bucketed
-    assert len(per_key) == 120
+    for label, key_col in _DEGENERATE_KEYS.items():
+        df = base.withColumn("user_id", F.expr(key_col))
+        per_key = run_op(df, None)
+        assert per_key == run_op(df, 4), label
+        assert len(per_key) == 120, label
+        if label == "null_key":
+            assert {r[0] for r in per_key} == {None}
 
 
 def test_snapshot_every_stream_property_random_vs_batch(spark):
@@ -633,11 +665,12 @@ def test_akslack_adapts_across_batches(spark, tmp_path):
 
 
 def test_akslack_bucketed_equals_per_key(spark, tmp_path):
-    """`akslack_bucketed` (coarse-bucket state, r10 ×100 measurement:
-    the per-key op's 150 k group calls dominated 24 s of wall) must be
-    row-identical to the per-key op across a MULTI-batch replay —
+    """The coarse-bucket akslack layout (r10 ×100 measurement: the
+    per-key layout's 150 k group calls dominated 24 s of wall) must be
+    row-identical to per-key state across a MULTI-batch replay —
     running max carried per key inside the bucket arrays, quantile
-    re-derived per (key, batch), same integer arithmetic."""
+    re-derived per (key, batch), same integer arithmetic — also with
+    an all-NULL key column and with one hot key."""
     from siddhi_operator_spark.catalog import load
 
     jit = F.expr(
@@ -645,40 +678,38 @@ def test_akslack_bucketed_equals_per_key(spark, tmp_path):
         "CAST(conv(substring(md5(CAST(event_id AS STRING)), 1, 5), "
         "16, 10) AS BIGINT) % 86400)"
     ).alias("ts")
-    df = (
+    base = (
         load(spark, "/root/testdata/sf0.001", "events")
         .select("event_id", "ts", "user_id", "event_type", "value")
         .withColumn("ts", jit)
     )
-    d = tempfile.mkdtemp(prefix="akslack_bkt_")
-    sources.replay_dir(df, d, "event_id", 3)
-    results = {}
-    for variant, fn in (
-        ("per_key", lambda s: reorder.akslack(s, q_pct=90)),
-        (
-            "bucketed",
-            lambda s: reorder.akslack_bucketed(s, q_pct=90, n_buckets=7),
-        ),
-    ):
-        s = sources.file_stream(
-            spark, d, df.schema, max_files_per_trigger=1
-        ).select("event_id", "user_id", "ts")
-        name = _run(fn(s))
-        results[variant] = sorted(
-            (r.event_id, r.key, r.ts, r.late_us, r.slack_us)
-            for r in spark.table(name).collect()
-        )
-    assert results["per_key"] == results["bucketed"]
-    assert results["per_key"]
-    assert any(r[3] > 0 for r in results["per_key"])
+    for label, key_col in _DEGENERATE_KEYS.items():
+        df = base.withColumn("user_id", F.expr(key_col))
+        d = tempfile.mkdtemp(prefix="akslack_bkt_")
+        sources.replay_dir(df, d, "event_id", 3)
+        results = {}
+        for variant, buckets in (("per_key", None), ("bucketed", 7)):
+            s = sources.file_stream(
+                spark, d, df.schema, max_files_per_trigger=1
+            ).select("event_id", "user_id", "ts")
+            name = _run(reorder.akslack(s, q_pct=90, n_buckets=buckets))
+            results[variant] = sorted(
+                (r.event_id, r.key, r.ts, r.late_us, r.slack_us)
+                for r in spark.table(name).collect()
+            )
+        assert results["per_key"] == results["bucketed"], label
+        assert results["per_key"], label
+        assert any(r[3] > 0 for r in results["per_key"]), label
+        if label == "null_key":
+            assert {r[1] for r in results["per_key"]} == {None}
 
 
 def test_kslack_bucketed_equals_per_key(spark, tmp_path):
-    """`kslack_bucketed` (constant-K drop contract on the coarse-bucket
-    state layout, r11) must be row-identical to the per-key
-    `kslack_stateful` across a MULTI-batch replay — same running-max
-    carry, same constant slack, bucket arrays only change the state
-    keying."""
+    """`kslack_stateful` (the constant-K drop contract, r11) must be
+    row-identical on the coarse-bucket and per-key state layouts
+    across a MULTI-batch replay — same running-max carry, same
+    constant slack, bucket arrays only change the state keying — also
+    with an all-NULL key column and with one hot key."""
     from siddhi_operator_spark.catalog import load
 
     jit = F.expr(
@@ -686,39 +717,36 @@ def test_kslack_bucketed_equals_per_key(spark, tmp_path):
         "CAST(conv(substring(md5(CAST(event_id AS STRING)), 1, 5), "
         "16, 10) AS BIGINT) % 86400)"
     ).alias("ts")
-    df = (
+    base = (
         load(spark, "/root/testdata/sf0.001", "events")
         .select("event_id", "ts", "user_id", "event_type", "value")
         .withColumn("ts", jit)
     )
-    d = tempfile.mkdtemp(prefix="kslack_bkt_")
-    sources.replay_dir(df, d, "event_id", 3)
-    results = {}
-    for variant, fn in (
-        (
-            "per_key",
-            lambda s: reorder.kslack_stateful(s, slack_ms=3_600_000),
-        ),
-        (
-            "bucketed",
-            lambda s: reorder.kslack_bucketed(
-                s, slack_ms=3_600_000, n_buckets=5
-            ),
-        ),
-    ):
-        s = sources.file_stream(
-            spark, d, df.schema, max_files_per_trigger=1
-        ).select("event_id", "user_id", "ts")
-        name = _run(fn(s))
-        results[variant] = sorted(
-            (r.event_id, r.key, r.ts, r.late_us, r.slack_us)
-            for r in spark.table(name).collect()
-        )
-    assert results["per_key"] == results["bucketed"]
-    assert results["per_key"]
-    # constant slack emitted, and the drop contract actually bites
-    assert all(r[4] == 3_600_000_000 for r in results["per_key"])
-    assert len(results["per_key"]) < df.count()
+    for label, key_col in _DEGENERATE_KEYS.items():
+        df = base.withColumn("user_id", F.expr(key_col))
+        d = tempfile.mkdtemp(prefix="kslack_bkt_")
+        sources.replay_dir(df, d, "event_id", 3)
+        results = {}
+        for variant, buckets in (("per_key", None), ("bucketed", 5)):
+            s = sources.file_stream(
+                spark, d, df.schema, max_files_per_trigger=1
+            ).select("event_id", "user_id", "ts")
+            name = _run(
+                reorder.kslack_stateful(
+                    s, slack_ms=3_600_000, n_buckets=buckets
+                )
+            )
+            results[variant] = sorted(
+                (r.event_id, r.key, r.ts, r.late_us, r.slack_us)
+                for r in spark.table(name).collect()
+            )
+        assert results["per_key"] == results["bucketed"], label
+        assert results["per_key"], label
+        # constant slack emitted, and the drop contract actually bites
+        assert all(r[4] == 3_600_000_000 for r in results["per_key"])
+        assert len(results["per_key"]) < df.count(), label
+        if label == "null_key":
+            assert {r[1] for r in results["per_key"]} == {None}
 
 
 def test_derive_state_buckets_geometry():
@@ -734,21 +762,22 @@ def test_derive_state_buckets_geometry():
     assert d(10**9) == 32768       # ceiling: shuffle-width bound
     with pytest.raises(ValueError):
         d(0)
-    # akslack_bucketed derives from approx_keys when n_buckets is
-    # omitted — geometry only; row identity is pinned above
+    # akslack derives the bucket count from approx_keys when n_buckets
+    # is omitted (neither = per-key state) — geometry only; row
+    # identity is pinned above
     import inspect
 
-    sig = inspect.signature(reorder.akslack_bucketed)
+    sig = inspect.signature(reorder.akslack)
     assert sig.parameters["n_buckets"].default is None
     assert "approx_keys" in sig.parameters
     # approx_keys=0 is a measurement error, not "use the default":
     # it must reach derive_state_buckets and raise there, for the
-    # bucketed kslack delegate too (ADVICE r11)
+    # constant-K kslack delegate too (ADVICE r11)
     df_dummy = None
     with pytest.raises(ValueError, match="n_keys"):
-        reorder.akslack_bucketed(df_dummy, approx_keys=0)
+        reorder.akslack(df_dummy, approx_keys=0)
     with pytest.raises(ValueError, match="n_keys"):
-        reorder.kslack_bucketed(df_dummy, approx_keys=0)
+        reorder.kslack_stateful(df_dummy, approx_keys=0)
 
 
 def test_state_store_session_defaults(spark):
@@ -756,9 +785,8 @@ def test_state_store_session_defaults(spark):
     RocksDB provider (state ≫ heap at scale) WITH changelog
     checkpointing — commit cost O(batch delta), not O(state size); a
     full-snapshot-per-commit default is the scale-killer at 100 TB
-    state. Parameterised via SPARK_GRAFT_ROCKSDB_CHANGELOG; measured
-    output-identical and wall-neutral at fixture scale, so the
-    production default is also the local default."""
+    state. Measured output-identical and wall-neutral at fixture
+    scale, so the production default is also the local default."""
     assert spark.conf.get(
         "spark.sql.streaming.stateStore.providerClass"
     ).endswith("RocksDBStateStoreProvider")

@@ -14,10 +14,11 @@ import hashlib
 import math
 import sys
 import traceback
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = (
