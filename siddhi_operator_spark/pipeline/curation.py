@@ -1013,14 +1013,18 @@ def refold_masked_tokens(
             ).cast("array<int>")
         ),
     )
+    # sequence(1, 0) on an empty or whitespace-only doc yields [1, 0]
+    # (Spark sequence is bidirectional) and element_at then throws —
+    # guard the empty case, as `text.refold_dropped_lines` does
+    idx = F.when(
+        F.size("_ws") > 0, F.sequence(F.lit(1), F.size("_ws"))
+    ).otherwise(F.array().cast("array<int>"))
     # array_except is a hash-set difference (O(n + |covered|)) and
     # preserves first-array order — NOT a per-token array_contains
     # scan, which is O(n·|covered|) interpreted work and quadratic on
     # boilerplate-heavy docs (r7 review)
     kept = F.transform(
-        F.array_except(
-            F.sequence(F.lit(1), F.size("_ws")), F.col("_covered")
-        ),
+        F.array_except(idx, F.col("_covered")),
         lambda p: F.element_at("_ws", p),
     )
     return joined.select(

@@ -1084,7 +1084,7 @@ def ivfpq_index_append(
 
 def _hfs(spark, path: str):
     """(jvm Path class, FileSystem) for ``path`` — Hadoop FS so every
-    scheme works (same house pattern as `streaming/dedup._epoch_dirs`)."""
+    scheme works (same house pattern as `streaming.sinks.EpochStore`)."""
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     return jvm.org.apache.hadoop.fs.Path, hpath.getFileSystem(

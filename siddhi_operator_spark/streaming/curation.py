@@ -4,8 +4,9 @@ RESIDENT ingest service.
 
 Reference parity: the upstream engine has no corpus-curation layer;
 this extends the engine's streaming surface in the LLM-data-pipeline
-direction (BASELINE.json north star), with the same exactly-once
-per-epoch state layout as `streaming/dedup.py`'s services.
+direction (BASELINE.json north star). Its state dirs are
+`streaming.sinks.EpochStore`s (the exactly-once layout is documented
+there), so ``state_dir`` may use any Hadoop scheme.
 """
 
 from __future__ import annotations
@@ -14,7 +15,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .dedup import _epoch_dirs
+from .dedup import _foreach_batch
+from .sinks import EpochStore
 
 
 def incremental_shard_sink(
@@ -38,9 +40,7 @@ def incremental_shard_sink(
     running token total:
 
     - ``running/epoch=N`` stores the batch's per-source token sums
-      (each doc lives in exactly one epoch, so summing epoch partials
-      below N is the pre-batch running total — the same additive
-      epoch-partial idiom as the line-dedup service's counts store);
+      (summing the partials below N is the pre-batch running total);
     - ``assign/epoch=N`` EMITS the batch's assignments: shard =
       floor((src_offset + prior_running + within-batch preceding
       cumsum) / budget), the batch operator's rule with the cumsum
@@ -48,20 +48,16 @@ def incremental_shard_sink(
 
     Arrival-order contract: docs must arrive in ``doc_id`` order
     within each source (the replay harness guarantees it; a real
-    ingest front-ends the kslack/akslack reorderers for this).  Same
-    exactly-once layout as the other services: per-epoch overwrite
-    subdirs + state reads strictly below the current epoch, so an
-    at-least-once foreachBatch replay recomputes its epoch
-    byte-identically.  Per-batch cost is one keyed window over the
-    batch plus two broadcast joins against source-count-bounded
-    tables — never a corpus rescan."""
-    run_dir = f"{state_dir}/running"
-    asg_dir = f"{state_dir}/assign"
+    ingest front-ends the kslack/akslack reorderers for this).  Both
+    dirs are exactly-once `streaming.sinks.EpochStore`s.  Per-batch
+    cost is one keyed window over the batch plus two broadcast joins
+    against source-count-bounded tables — never a corpus rescan."""
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession
         if not batch.take(1):
             return
+        running = EpochStore(spark, f"{state_dir}/running")
         toks = F.size(
             F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
         )
@@ -71,17 +67,12 @@ def incremental_shard_sink(
         off_df = spark.createDataFrame(
             offsets, "source string, src_offset bigint"
         )
-        prior_dirs = _epoch_dirs(spark, run_dir, below=epoch_id)
-        if prior_dirs:
-            prior = (
-                spark.read.parquet(*prior_dirs)
-                .groupBy("source")
-                .agg(F.sum("nd").alias("prior_tokens"))
-            )
-        else:
-            prior = spark.createDataFrame(
-                [], "source string, prior_tokens bigint"
-            )
+        run = d.groupBy("source").agg(F.sum("n_tokens").alias("nd"))
+        prior = (
+            running.read(below=epoch_id, like=run)
+            .groupBy("source")
+            .agg(F.sum("nd").alias("prior_tokens"))
+        )
         win = (
             Window.partitionBy("source")
             .orderBy("doc_id")
@@ -120,17 +111,10 @@ def incremental_shard_sink(
                 ).alias("shard_id"),
             )
         )
-        assign.write.mode("overwrite").parquet(f"{asg_dir}/epoch={epoch_id}")
-        d.groupBy("source").agg(F.sum("n_tokens").alias("nd")).write.mode(
-            "overwrite"
-        ).parquet(f"{run_dir}/epoch={epoch_id}")
+        EpochStore(spark, f"{state_dir}/assign").write(assign, epoch_id)
+        running.write(run, epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
+    return _foreach_batch(stream, process, checkpoint)
 
 
 def read_shard_assign(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -138,10 +122,10 @@ def read_shard_assign(spark: SparkSession, state_dir: str) -> DataFrame:
     emitted per-epoch assignments — per-doc (source, doc_id, n_tokens,
     shard_id), the BATCH `shard_assign` contract, which is what lets
     the batch DuckDB oracle prove the streaming path."""
-    dirs = _epoch_dirs(spark, f"{state_dir}/assign")
-    if not dirs:
+    assign = EpochStore(spark, f"{state_dir}/assign").read()
+    if assign is None:
         return spark.createDataFrame(
             [],
             "source string, doc_id bigint, n_tokens bigint, shard_id bigint",
         )
-    return spark.read.parquet(*dirs)
+    return assign

@@ -19,8 +19,6 @@ partition deletion and retrieval prunes.
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,25 +26,19 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.incremental import base_rollup
+from ..pipeline.similarity import _hfs
+from .sinks import EpochStore
 
 _STATE_COLS = ("cnt", "sum_v", "sum_sq", "min_v", "max_v")
 
 
 class IncrementalStateTable:
     """Parquet-backed composable-state table keyed by
-    (bucket_start, *keys), stored as versioned snapshots
-    ``path/v=<epoch>`` with only COMMITTED (``_SUCCESS``-marked)
-    versions readable.
-
-    Exactly-once under at-least-once foreachBatch replay (r7 audit —
-    the pre-r7 high-water-mark file had a crash window between the
-    state overwrite and the marker write, after which a replayed
-    epoch merge-ADDED a second time and doubled every sum): epoch N's
-    merge reads the latest committed version STRICTLY BELOW N and
-    overwrites ``v=N`` — a replay recomputes byte-identical state from
-    the same inputs, a torn first attempt carries no ``_SUCCESS`` and
-    is invisible. Same layout discipline as the near-dup band store
-    (streaming/dedup.py) and ParquetUpsertTable."""
+    (bucket_start, *keys): an :class:`~.sinks.EpochStore` of ``v=<epoch>``
+    snapshots (see there for the exactly-once layout). Epoch N's merge
+    reads the latest committed version strictly below N and writes
+    ``v=N``, so a replay recomputes byte-identical state instead of
+    merge-ADDing twice."""
 
     _KEEP_VERSIONS = 3
 
@@ -56,16 +48,7 @@ class IncrementalStateTable:
         self.spark = spark
         self.path = path
         self.keys = list(keys)
-
-    def _versions(self) -> list[int]:
-        if not os.path.isdir(self.path):
-            return []
-        return sorted(
-            int(d.split("=")[1])
-            for d in os.listdir(self.path)
-            if d.startswith("v=")
-            and os.path.exists(os.path.join(self.path, d, "_SUCCESS"))
-        )
+        self.store = EpochStore(spark, path, prefix="v")
 
     def current(self, below: int | None = None) -> DataFrame | None:
         """Latest committed snapshot (lazy). Snapshot-lifetime
@@ -74,20 +57,13 @@ class IncrementalStateTable:
         retention pruner deletes after ``_KEEP_VERSIONS`` further
         epochs commit. Materialize (collect/write) promptly, or raise
         ``_KEEP_VERSIONS`` for long-lived readers."""
-        vs = self._versions()
-        if below is not None:
-            vs = [v for v in vs if v < below]
-        if not vs:
-            return None
-        return self.spark.read.parquet(f"{self.path}/v={vs[-1]}")
+        return self.store.read(below=below, latest=True)
 
     def merge_batch(self, batch_state: DataFrame, epoch_id: int) -> None:
         """Merge-ADD a batch's composable state into the table:
         matching buckets combine (sum/sum/sum/min/max), new buckets
         append — the `IncrementalExecutor` bucket-accumulator update,
         expressed as one keyed aggregation over old ∪ new."""
-        if epoch_id in self._versions():
-            return  # replayed epoch whose state write already committed
         cur = self.current(below=epoch_id)
         combined = batch_state if cur is None else cur.unionByName(batch_state)
         merged = combined.groupBy("bucket_start", *self.keys).agg(
@@ -97,12 +73,13 @@ class IncrementalStateTable:
             F.min("min_v").alias("min_v"),
             F.max("max_v").alias("max_v"),
         )
-        merged.write.mode("overwrite").parquet(f"{self.path}/v={epoch_id}")
-        # retention: checkpoint replay only ever revisits the last
-        # uncommitted epoch, so anything older than a few versions is
-        # unreachable — prune it (delete only AFTER the new commit)
-        for v in self._versions()[: -self._KEEP_VERSIONS]:
-            shutil.rmtree(f"{self.path}/v={v}", ignore_errors=True)
+        self.store.write(merged, epoch_id)
+        # retention: checkpoint replay only ever revisits the latest
+        # epoch, so anything older than a few versions is unreachable —
+        # prune it (delete only AFTER the new commit)
+        P, fs = _hfs(self.spark, self.path)
+        for v in self.store.versions()[: -self._KEEP_VERSIONS]:
+            fs.delete(P(self.store.dir(v)), True)
 
 
 def incremental_agg_sink(

@@ -10,16 +10,115 @@
   snapshot. With Delta/Iceberg on the classpath this becomes a real
   MERGE INTO; the parquet implementation keeps the same contract
   (idempotent per epoch → exactly-once with checkpointing).
+- :class:`EpochStore`   → the one committed-state layout behind every
+  foreachBatch service and table (`[core] util/snapshot/
+  SnapshotService.java` + `FilePersistenceStore` analog).
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from ..pipeline.similarity import _hfs
+
+
+class EpochStore:
+    """Exactly-once committed state for at-least-once foreachBatch
+    bodies: one parquet dir per version, ``path/<prefix>=N``
+    (``epoch=N`` for the services, ``v=N`` for the tables), read and
+    written through the Hadoop FS API so any scheme works (local,
+    ``file://``, ``hdfs://``, ``s3a://``).
+
+    - **Write** (:meth:`write`): ``mode("overwrite")`` into version N's
+      own dir. A replayed epoch overwrites its dir with a recomputation
+      from the same inputs.
+    - **Commit**: a version is visible only once its dir carries the
+      writer's ``_SUCCESS`` marker. A crash mid-write leaves a torn,
+      invisible dir that the replay overwrites.
+    - **Read** (:meth:`read`): every committed version below N, or only
+      the latest one. Epoch N's body reads strictly below N, so its
+      recomputation is byte-identical even after a half-committed first
+      attempt. Additive state (counts, token sums) stores per-epoch
+      partials; each document lives in exactly one epoch, so the sum of
+      the partials below N is the pre-batch total.
+    - **Replay rule**: checkpoint replay only ever revisits the latest
+      epoch, so writing version N equal to the latest committed one is a
+      replay, and N BELOW it raises: a second stream (a fresh
+      checkpoint) is writing to a used state dir, and overwriting the
+      first stream's epochs would silently corrupt both. (A dir whose
+      only committed epoch is 0 cannot tell a fresh stream's epoch 0
+      from a replay.)
+    - Any other entry in ``path`` (e.g. a pre-epoch flat parquet
+      append) raises instead of being read as empty state.
+    """
+
+    def __init__(self, spark: SparkSession, path: str, prefix: str = "epoch"):
+        self.spark = spark
+        self.path = path
+        self.prefix = prefix
+
+    def dir(self, n: int) -> str:
+        return f"{self.path}/{self.prefix}={n}"
+
+    def versions(self) -> list[int]:
+        """Sorted committed version numbers."""
+        P, fs = _hfs(self.spark, self.path)
+        if not fs.exists(P(self.path)):
+            return []
+        found, foreign = [], []
+        for st in fs.listStatus(P(self.path)):
+            name = st.getPath().getName()
+            if name.startswith(f"{self.prefix}="):
+                if fs.exists(P(f"{self.path}/{name}/_SUCCESS")):
+                    found.append(int(name.split("=", 1)[1]))
+            elif not name.startswith(("_", ".")):
+                foreign.append(name)
+        if foreign:
+            raise ValueError(
+                f"{self.path} holds entries {foreign[:3]} outside the "
+                f"'{self.prefix}=N' layout — this looks like a "
+                "pre-epoch-layout (flat append) state store; the "
+                "exactly-once layout cannot read it. Rebuild the state by "
+                "replaying the corpus, or point state_dir at a fresh path."
+            )
+        return sorted(found)
+
+    def read(
+        self,
+        below: int | None = None,
+        latest: bool = False,
+        like: DataFrame | None = None,
+    ) -> DataFrame | None:
+        """Union of the committed versions strictly below ``below``
+        (all when None), or only the newest of them when ``latest``.
+        With ``like``, the read takes its schema and an empty store
+        reads as ``like.limit(0)``; without it an empty store is None."""
+        vs = [v for v in self.versions() if below is None or v < below]
+        if latest:
+            vs = vs[-1:]
+        if not vs:
+            return None if like is None else like.limit(0)
+        reader = self.spark.read
+        if like is not None:
+            reader = reader.schema(like.schema)
+        return reader.parquet(*map(self.dir, vs))
+
+    def write(self, df: DataFrame, n: int) -> None:
+        """Overwrite version ``n`` under the replay rule."""
+        vs = self.versions()
+        if vs and n < vs[-1]:
+            raise ValueError(
+                f"{self.prefix}={n} is below the latest committed "
+                f"{self.prefix}={vs[-1]} under {self.path}: another stream "
+                "(a fresh checkpoint) already wrote this state dir. Point "
+                "it at a fresh path, or restart from that stream's "
+                "checkpoint."
+            )
+        df.write.mode("overwrite").parquet(self.dir(n))
 
 
 def memory_sink(stream: DataFrame, name: str, output_mode: str = "append") -> StreamingQuery:
@@ -54,14 +153,11 @@ def dead_letter_foreach_batch(process, dead_letter_path: str):
         try:
             process(batch, epoch_id)
         except Exception:
-            # per-epoch subdir + overwrite, NOT a flat append: foreachBatch
-            # is at-least-once, and a replayed failed epoch would
-            # double-append its rows into the dead-letter set (r7 state-
-            # idempotence audit; same layout as streaming/dedup.py state)
-            (
-                batch.withColumn("_epoch", F.lit(epoch_id))
-                .write.mode("overwrite")
-                .parquet(f"{dead_letter_path}/epoch={epoch_id}")
+            # an EpochStore, NOT a flat append: foreachBatch is
+            # at-least-once, and a replayed failed epoch would
+            # double-append its rows into the dead-letter set
+            EpochStore(batch.sparkSession, dead_letter_path).write(
+                batch.withColumn("_epoch", F.lit(epoch_id)), epoch_id
             )
 
     return wrapped
@@ -73,37 +169,24 @@ class ParquetUpsertTable:
     `@store` analog, durable). Readers get the latest snapshot;
     `upsert_batch` is the foreachBatch target.
 
-    Snapshot layout: versioned directories (v=N) with only the latest
-    read — a poor-man's Delta commit log; swap for Delta/Iceberg when
-    the jars are available (same API)."""
+    Snapshot layout: an :class:`EpochStore` of ``v=N`` snapshots with
+    only the latest read — a poor-man's Delta commit log; swap for
+    Delta/Iceberg when the jars are available (same API). Versions are
+    numbered in sequence, not by epoch."""
 
     def __init__(self, spark: SparkSession, path: str, keys: Sequence[str]):
         self.spark = spark
         self.path = path
         self.keys = list(keys)
-        os.makedirs(path, exist_ok=True)
-
-    def _versions(self) -> list[int]:
-        # only COMMITTED versions (carrying _SUCCESS): a crash mid-write
-        # leaves a torn v=N dir that snapshot() must never read — the
-        # replayed epoch overwrites it (r7 state-idempotence audit)
-        return sorted(
-            int(d.split("=")[1])
-            for d in os.listdir(self.path)
-            if d.startswith("v=")
-            and os.path.exists(os.path.join(self.path, d, "_SUCCESS"))
-        )
+        self.store = EpochStore(spark, path, prefix="v")
 
     def snapshot(self) -> DataFrame | None:
-        vs = self._versions()
-        if not vs:
-            return None
-        return self.spark.read.parquet(f"{self.path}/v={vs[-1]}")
+        return self.store.read(latest=True)
 
     def upsert_batch(self, batch: DataFrame, epoch_id: int, order_col: str) -> None:
         """MERGE: dedupe the batch per key (last writer by order_col),
-        then new-snapshot = batch ∪ (current ∖ batch-keys). Writing to
-        a fresh v=N dir keeps the operation idempotent per epoch."""
+        then new-snapshot = batch ∪ (current ∖ batch-keys), written as
+        the next version."""
         from pyspark.sql.window import Window
 
         w = Window.partitionBy(*self.keys).orderBy(F.desc(order_col))
@@ -122,8 +205,8 @@ class ParquetUpsertTable:
             merged = keep.unionByName(latest)
         else:
             merged = latest
-        next_v = (self._versions()[-1] + 1) if self._versions() else 0
-        merged.write.mode("overwrite").parquet(f"{self.path}/v={next_v}")
+        vs = self.store.versions()
+        self.store.write(merged, vs[-1] + 1 if vs else 0)
 
     def changes(
         self, from_version: int = 0, to_version: int | None = None
@@ -140,15 +223,15 @@ class ParquetUpsertTable:
         Scale: each version pair is ONE keyed full-outer join (shuffle
         on the primary key) — no cross-version state; at 100 TB the
         snapshots are key-bucketed so the join is co-partitioned."""
-        vs = self._versions()
+        vs = self.store.versions()
         if not vs or to_version == from_version:
             return None
         to_version = vs[-1] if to_version is None else to_version
         chain = [v for v in vs if from_version <= v <= to_version]
         out = None
         for v_prev, v_next in zip(chain, chain[1:]):
-            prev = self.spark.read.parquet(f"{self.path}/v={v_prev}")
-            nxt = self.spark.read.parquet(f"{self.path}/v={v_next}")
+            prev = self.spark.read.parquet(self.store.dir(v_prev))
+            nxt = self.spark.read.parquet(self.store.dir(v_next))
             val_cols = [c for c in nxt.columns if c not in self.keys]
             n = nxt.withColumn("_pn", F.lit(True)).alias("n")
             p = prev.withColumn("_pp", F.lit(True)).alias("p")

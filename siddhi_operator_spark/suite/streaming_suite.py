@@ -1570,7 +1570,7 @@ def streaming_incr_agg_replay(spark: SparkSession, sf: str) -> DataFrame:
     crc = os.path.join(commits, f".{last}.crc")  # local-fs checksum twin
     if os.path.exists(crc):
         os.remove(crc)
-    success = os.path.join(state.path, f"v={last}", "_SUCCESS")
+    success = os.path.join(state.store.dir(last), "_SUCCESS")
     if os.path.exists(success):  # torn write: files present, no marker
         os.remove(success)
 

@@ -88,15 +88,18 @@ def test_state_table_replay_is_exactly_once(spark, tmp_path):
     marker write — a replayed epoch then merge-ADDED a second time
     and doubled every sum. The versioned layout must absorb (a) a
     replay of a fully-committed epoch, and (b) a replay after a TORN
-    write (v=N exists without _SUCCESS)."""
+    write (v=N exists without _SUCCESS), and (c) refuse fresh epochs
+    below the latest committed one (a second stream on a used state
+    dir) instead of dropping them. Runs on a plain path and on a
+    ``file://`` URI (state paths may use any Hadoop scheme)."""
+    import datetime
     import os
-    import shutil
+
+    import pytest
 
     from siddhi_operator_spark.streaming.incremental import (
         IncrementalStateTable,
     )
-
-    state = IncrementalStateTable(spark, str(tmp_path / "st"), keys=["k"])
 
     def bstate(rows):
         return spark.createDataFrame(
@@ -105,30 +108,38 @@ def test_state_table_replay_is_exactly_once(spark, tmp_path):
             " sum_sq double, min_v double, max_v double",
         )
 
-    import datetime
-
     b0 = datetime.datetime(2024, 1, 1)
-    state.merge_batch(bstate([(b0, "a", 2, 10.0, 60.0, 4.0, 6.0)]), 0)
-    state.merge_batch(bstate([(b0, "a", 1, 5.0, 25.0, 5.0, 5.0)]), 1)
+    for local, path in [
+        (tmp_path / "st", str(tmp_path / "st")),
+        (tmp_path / "st_uri", (tmp_path / "st_uri").as_uri()),
+    ]:
+        state = IncrementalStateTable(spark, path, keys=["k"])
+        state.merge_batch(bstate([(b0, "a", 2, 10.0, 60.0, 4.0, 6.0)]), 0)
+        state.merge_batch(bstate([(b0, "a", 1, 5.0, 25.0, 5.0, 5.0)]), 1)
 
-    def snap():
-        return {
-            (r.bucket_start, r.k): (r.cnt, r.sum_v)
-            for r in state.current().collect()
-        }
+        def snap():
+            return {
+                (r.bucket_start, r.k): (r.cnt, r.sum_v)
+                for r in state.current().collect()
+            }
 
-    after = snap()
-    assert after[(b0, "a")] == (3, 15.0)
+        after = snap()
+        assert after[(b0, "a")] == (3, 15.0), path
 
-    # (a) replay of a committed epoch: no double-add
-    state.merge_batch(bstate([(b0, "a", 1, 5.0, 25.0, 5.0, 5.0)]), 1)
-    assert snap() == after
+        # (a) replay of a committed epoch: no double-add
+        state.merge_batch(bstate([(b0, "a", 1, 5.0, 25.0, 5.0, 5.0)]), 1)
+        assert snap() == after
 
-    # (b) torn write: drop v=1's _SUCCESS, replay epoch 1 — it must
-    # recompute from v=0 and land on the same state, not on a double
-    os.remove(str(tmp_path / "st" / "v=1" / "_SUCCESS"))
-    state.merge_batch(bstate([(b0, "a", 1, 5.0, 25.0, 5.0, 5.0)]), 1)
-    assert snap() == after
+        # (b) torn write: drop v=1's _SUCCESS, replay epoch 1 — it must
+        # recompute from v=0 and land on the same state, not on a double
+        os.remove(str(local / "v=1" / "_SUCCESS"))
+        state.merge_batch(bstate([(b0, "a", 1, 5.0, 25.0, 5.0, 5.0)]), 1)
+        assert snap() == after
+
+        # (c) a fresh checkpoint's epoch 0 on the used dir raises loudly
+        with pytest.raises(ValueError, match="below the latest committed"):
+            state.merge_batch(bstate([(b0, "a", 7, 7.0, 7.0, 7.0, 7.0)]), 0)
+        assert snap() == after
 
 
 def test_state_table_prunes_old_versions(spark, tmp_path):

@@ -396,23 +396,30 @@ def test_table_change_feed_with_deletes(spark, tmp_path):
     pre/post images, and deletes across commits."""
     from siddhi_operator_spark.streaming.sinks import ParquetUpsertTable
 
-    t = ParquetUpsertTable(spark, str(tmp_path / "t"), keys=["k"])
-    v0 = spark.createDataFrame([(1, "a", 1), (2, "b", 1)], "k long, v string, o int")
-    t.upsert_batch(v0, 0, order_col="o")
-    # v1: update k=1, insert k=3; simulate a delete of k=2 by writing
-    # the snapshot directly (upserts never delete)
-    v1 = spark.createDataFrame([(1, "a2", 2), (3, "c", 2)], "k long, v string, o int")
-    v1.write.mode("overwrite").parquet(str(tmp_path / "t" / "v=1"))
-    feed = t.changes(0, 1)
-    got = sorted(
-        (r.k, r.v, r._change_type, r._commit_version) for r in feed.collect()
-    )
-    assert got == [
-        (1, "a", "update_preimage", 1),
-        (1, "a2", "update_postimage", 1),
-        (2, "b", "delete", 1),
-        (3, "c", "insert", 1),
-    ]
+    # a plain path and a file:// URI (state paths may use any Hadoop
+    # scheme; a local-only listing once read the URI as an empty table)
+    for path in [str(tmp_path / "t"), (tmp_path / "t_uri").as_uri()]:
+        t = ParquetUpsertTable(spark, path, keys=["k"])
+        v0 = spark.createDataFrame(
+            [(1, "a", 1), (2, "b", 1)], "k long, v string, o int"
+        )
+        t.upsert_batch(v0, 0, order_col="o")
+        # v1: update k=1, insert k=3; simulate a delete of k=2 by writing
+        # the snapshot directly (upserts never delete)
+        v1 = spark.createDataFrame(
+            [(1, "a2", 2), (3, "c", 2)], "k long, v string, o int"
+        )
+        v1.write.mode("overwrite").parquet(f"{path}/v=1")
+        feed = t.changes(0, 1)
+        got = sorted(
+            (r.k, r.v, r._change_type, r._commit_version) for r in feed.collect()
+        )
+        assert got == [
+            (1, "a", "update_preimage", 1),
+            (1, "a2", "update_postimage", 1),
+            (2, "b", "delete", 1),
+            (3, "c", "insert", 1),
+        ], path
 
 
 def test_streaming_cep_count_interloper_keeps_collecting(spark):
@@ -800,7 +807,9 @@ def test_streaming_incremental_neardup_replay_idempotent(spark, tmp_path):
     REPLAYED. The per-epoch overwrite layout must make that replay
     idempotent — no duplicated pairs, no duplicated signature/band
     state multiplying later joins. Simulate the crash by deleting the
-    newest commit marker from the checkpoint and restarting."""
+    newest commit marker from the checkpoint and restarting. A second
+    stream (fresh checkpoint) on the used state dir must then fail
+    loudly and leave the state as it was."""
     import os
 
     from siddhi_operator_spark.pipeline import dedup as D
@@ -852,11 +861,21 @@ def test_streaming_incremental_neardup_replay_idempotent(spark, tmp_path):
     # state must not be duplicated either (it would multiply later joins)
     sig_ids = [
         r.doc_id
-        for r in spark.read.parquet(
-            *SD._epoch_dirs(spark, f"{state}/sigs")
-        ).collect()
+        for r in sinks.EpochStore(spark, f"{state}/sigs").read().collect()
     ]
     assert sorted(sig_ids) == [1, 2, 3, 4]
+
+    # a second stream (fresh checkpoint) on the used state dir must fail
+    # loudly, not overwrite the first stream's epochs
+    s3 = SRC.file_stream(spark, d, docs.schema, max_files_per_trigger=1)
+    q3 = SD.incremental_neardup_sink(s3, state, str(tmp_path / "ckpt_fresh"))
+    with pytest.raises(Exception, match="below the latest committed"):
+        q3.processAllAvailable()
+    q3.stop()
+    assert sorted(
+        (r.id_a, r.id_b, r.n_sig_match)
+        for r in SD.read_pairs(spark, state).collect()
+    ) == want
 
 
 def test_streaming_incremental_neardup_property_random(spark, tmp_path):
@@ -912,7 +931,8 @@ def test_streaming_line_dedup_retroactive_drop_equals_batch(spark, tmp_path):
     """Line-dedup service semantics: a line crossing min_docs in a
     LATER batch drops retroactively from the earlier doc too, each
     position emitted exactly once, and the read-face refold equals
-    the batch operator output."""
+    the batch operator output — also on empty and whitespace-only
+    docs."""
     from siddhi_operator_spark.pipeline import text as X
     from siddhi_operator_spark.streaming import dedup as SD
     from siddhi_operator_spark.streaming import sources as SRC
@@ -922,10 +942,12 @@ def test_streaming_line_dedup_retroactive_drop_equals_batch(spark, tmp_path):
         (2, "totally unrelated text body"),
         (3, "unique third doc words\nshared boiler plate line"),  # makes 1's line shared
         (4, "shared boiler plate line"),  # already-shared at arrival
+        (5, ""),  # degenerate text: empty
+        (6, "   \n  "),  # degenerate text: whitespace-only lines
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     d = str(tmp_path / "replay")
-    SRC.replay_dir(docs, d, "doc_id", 2)  # batches [1,2] [3,4]
+    SRC.replay_dir(docs, d, "doc_id", 3)  # batches [1,2] [3,4] [5,6]
     s = SRC.file_stream(spark, d, docs.schema, max_files_per_trigger=1)
     state = str(tmp_path / "state")
     q = SD.incremental_line_dedup_sink(s, state, str(tmp_path / "ckpt"))
@@ -944,10 +966,9 @@ def test_streaming_line_dedup_retroactive_drop_equals_batch(spark, tmp_path):
     assert got[1] == (2, 1, "unique first content here")  # retroactive
     assert got[2] == (1, 0, "totally unrelated text body")
     assert got[4] == (1, 1, "")
+    assert got[5] == (1, 0, "") and got[6] == (2, 0, "   \n  ")
     # each dropped position emitted exactly once across epochs
-    drops = spark.read.parquet(
-        *SD._epoch_dirs(spark, f"{state}/drops")
-    ).collect()
+    drops = sinks.EpochStore(spark, f"{state}/drops").read().collect()
     assert len(drops) == len({(r.doc_id, r.idx) for r in drops}) == 3
 
 
@@ -1002,7 +1023,7 @@ def test_streaming_line_dedup_replay_idempotent(spark, tmp_path):
     assert got == want
     # counts state not duplicated (it would inflate totals forever)
     cnt = (
-        spark.read.parquet(*SD._epoch_dirs(spark, f"{state}/linecounts"))
+        sinks.EpochStore(spark, f"{state}/linecounts").read()
         .groupBy("h")
         .sum("nd")
         .collect()
@@ -1014,7 +1035,7 @@ def test_streaming_span_removal_retroactive_equals_batch(spark, tmp_path):
     """Span-removal service semantics: a winnow fingerprint crossing
     min_docs in a LATER batch masks the earlier doc's covered tokens
     retroactively, and the read-face refold equals the batch operator
-    output exactly."""
+    output exactly — also on empty and whitespace-only docs."""
     from siddhi_operator_spark.pipeline import curation as C
     from siddhi_operator_spark.streaming import dedup as SD
     from siddhi_operator_spark.streaming import sources as SRC
@@ -1025,10 +1046,12 @@ def test_streaming_span_removal_retroactive_equals_batch(spark, tmp_path):
         (2, "totally unrelated text body here now"),
         (3, f"{boiler} six seven eight nine ten"),  # makes 1's span shared
         (4, "short doc"),  # below k+w-1 tokens: never fingerprinted
+        (5, ""),  # degenerate text: empty
+        (6, "  \n\t "),  # degenerate text: whitespace only
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     d = str(tmp_path / "replay")
-    SRC.replay_dir(docs, d, "doc_id", 2)  # batches [1,2] [3,4]
+    SRC.replay_dir(docs, d, "doc_id", 3)  # batches [1,2] [3,4] [5,6]
     s = SRC.file_stream(spark, d, docs.schema, max_files_per_trigger=1)
     state = str(tmp_path / "state")
     q = SD.incremental_span_removal_sink(s, state, str(tmp_path / "ckpt"))
@@ -1047,6 +1070,7 @@ def test_streaming_span_removal_retroactive_equals_batch(spark, tmp_path):
     assert got[1][1] > 0  # retroactive mask hit doc 1
     assert got[2] == (6, 0, "totally unrelated text body here now")
     assert got[4] == (2, 0, "short doc")
+    assert got[5] == got[6] == (0, 0, "")
 
 
 def test_streaming_span_removal_replay_idempotent(spark, tmp_path):
@@ -1098,7 +1122,7 @@ def test_streaming_span_removal_replay_idempotent(spark, tmp_path):
     }
     assert got == want
     cnt = (
-        spark.read.parquet(*SD._epoch_dirs(spark, f"{state}/fpcounts"))
+        sinks.EpochStore(spark, f"{state}/fpcounts").read()
         .groupBy("fp")
         .sum("nd")
         .collect()
@@ -1372,7 +1396,7 @@ def test_streaming_shard_assign_equals_batch(spark, tmp_path):
     }
     assert got == want and len(got) == 30
     # state really is per-epoch additive: three committed epochs
-    assert len(SC._epoch_dirs(spark, f"{state}/running")) == 3
+    assert sinks.EpochStore(spark, f"{state}/running").versions() == [0, 1, 2]
 
 
 def test_streaming_shard_assign_replay_idempotent(spark, tmp_path):
