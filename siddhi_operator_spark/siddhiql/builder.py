@@ -299,14 +299,7 @@ def _run_extension_window(
     if kind == "batch":
         return OW.batch_chunks(df, keys=keys, aggs=_aggs())
     if kind in ("expression", "expressionBatch"):
-        retain = win.args[0].strip("'\" ")
-        m = re.match(r"sum\((\w+)\)\s*<=\s*([\d.]+)\s*$", retain)
-        if not m:
-            raise ValueError(
-                "expression windows support the canonical retain form "
-                f"sum(col) <= limit, got {retain!r}"
-            )
-        col, limit = m.group(1), float(m.group(2))
+        col, limit = _retain_args(win.args)
         if not keys:
             raise ValueError(f"{kind} window needs `group by` keys in batch mode")
         order = [ts_col, id_col]
@@ -390,22 +383,15 @@ def _run_extension_window(
         # the operators shipped in r9). The reference adapts one K per
         # stream runtime; this engine's contract is per partition key
         # (module docstring, streaming/reorder.py), so the key comes
-        # from `partition with (...)` or a single `group by` key.
+        # from `partition with (...)` and/or a single `group by` key.
         from ..streaming.reorder import akslack_batch, kslack_batch
 
-        if len(keys) != 1:
-            raise ValueError(
-                "reorder: stream processors need exactly one key "
-                "(`partition with (k of S)` or `group by k`) — the "
-                "engine's per-key disorder contract"
-            )
+        key = _single_key(q, kind)
         rts, ms = _reorder_args(kind, win.args, ts_col)
         if ms is not None:
-            out = kslack_batch(
-                df, ts=rts, key=keys[0], id_col=id_col, slack_ms=ms
-            )
+            out = kslack_batch(df, ts=rts, key=key, id_col=id_col, slack_ms=ms)
         else:
-            out = akslack_batch(df, ts=rts, key=keys[0], id_col=id_col)
+            out = akslack_batch(df, ts=rts, key=key, id_col=id_col)
         return _project(out)
     plug = OW.WINDOW_PLUGINS.get(kind.lower())
     if plug is not None:
@@ -422,6 +408,32 @@ def _run_extension_window(
         )
         return _project(out)
     raise ValueError(f"unsupported extension window {kind!r}")
+
+
+def _single_key(q: QueryDef, what: str) -> str:
+    """The key of a per-key operator, one rule for both runners: the
+    `partition with (k of S)` key and the `group by` keys together
+    name exactly one key."""
+    keys = {q.partition_key, *(q.group_by or [])} - {None}
+    if len(keys) != 1:
+        raise ValueError(
+            f"{what} needs exactly one key (`partition with (k of S)` "
+            "and/or `group by k`) — the engine's per-key state contract"
+        )
+    return keys.pop()
+
+
+def _retain_args(args) -> tuple[str, float]:
+    """Parse an expression window's canonical retain form
+    `'sum(col) <= limit'` for both runners. Returns (col, limit)."""
+    retain = args[0].strip("'\" ")
+    m = re.match(r"sum\((\w+)\)\s*<=\s*([\d.]+)\s*$", retain)
+    if not m:
+        raise ValueError(
+            "expression windows support the canonical retain form "
+            f"sum(col) <= limit, got {retain!r}"
+        )
+    return m.group(1), float(m.group(2))
 
 
 def _reorder_args(kind: str, args, ts_col: str) -> tuple[str, int | None]:
@@ -2961,225 +2973,116 @@ def _run_join_streaming(
     return j
 
 
-def _route_streaming_length(
+# The keyed state ops a streaming single-input query routes to, per
+# window kind: (direct API named when a select item falls outside the
+# table, passthrough output columns, aggregate → output column). The
+# `value` passthrough is the expression window's budget column.
+_KEYED_STATE_OPS = {
+    "length": (
+        "streaming.windows.length_window",
+        ("key", "event_id", "ts"),
+        {"count": "n_in_window", "sum": "sum_value", "avg": "avg_value"},
+    ),
+    "expression": (
+        "streaming.windows.expression_window",
+        ("key", "event_id", "ts", "value"),
+        {"count": "win_n", "sum": "win_sum"},
+    ),
+    "reorder": (
+        "streaming.reorder",
+        ("key", "event_id", "ts", "late_us", "slack_us"),
+        {},
+    ),
+}
+
+
+def _route_streaming_keyed(
     env: dict, model: AppModel, q, inp, ts_col: str, id_col: str
 ) -> DataFrame:
-    """QL `#window.length(n)` + aggregation in streaming mode → the
-    count-window state op, its state grouped by key or — under
-    `@app:stateBuckets` — by hash bucket (one python call per bucket
-    per micro-batch; measured 6–8× at ×100 for high-churn key spaces,
-    SCALEBENCH r5). Supported select shape: the group
-    key, plus any of count(*), sum(X), avg(X) over one value column
-    (plus event_id/ts passthroughs) — the canonical Siddhi length-
-    window query. Anything wider raises with a pointer to the
-    operator API."""
-    from ..streaming.windows import length_window
+    """QL `#window.length(n)`, `#window.expression('sum(col) <= L')` and
+    `#reorder:kslack(ts, K)` / `#reorder:akslack(ts)` in streaming mode
+    → their keyed state ops (`streaming.windows.length_window` /
+    `expression_window`, `streaming.reorder.kslack_stateful` /
+    `akslack`), keyed by :func:`_single_key`, state grouped by the key
+    or — under `@app:stateBuckets` — by hash bucket (one python call
+    per bucket per micro-batch; measured 6–8× at ×100 for high-churn
+    key spaces, SCALEBENCH r5).
 
-    keys = q.group_by or []
-    if len(keys) != 1:
-        raise ValueError(
-            "streaming #window.length(n) needs exactly one `group by` "
-            "key (the reference's per-key count window); use "
-            "streaming.windows.length_window directly for other shapes"
-        )
-    key = keys[0]
-    n = int(inp.window.args[0])
-    src = env[inp.stream]
-    if inp.filter_expr:
-        src = src.filter(F.expr(inp.filter_expr))
-    value_col = None
-    plan = []  # (output column in state-op terms, alias)
-    for i, it in enumerate(q.select):
-        expr = it.expr.strip()
-        alias = _auto_alias(it, i)
-        m_agg = re.fullmatch(
-            r"(count)\(\*\)|(sum|avg)\(\s*(\w+)\s*\)", expr, re.I
-        )
-        if expr == key:
-            plan.append(("key", alias))
-        elif expr in (id_col, ts_col):
-            plan.append((expr, alias))
-        elif m_agg:
-            fn = (m_agg.group(1) or m_agg.group(2)).lower()
-            if fn in ("sum", "avg"):
-                col = m_agg.group(3)
-                if value_col is not None and col != value_col:
-                    raise ValueError(
-                        "streaming #window.length(n): one value column "
-                        f"per query (got {value_col!r} and {col!r})"
-                    )
-                value_col = col
-            plan.append(
-                (
-                    {"count": "n_in_window", "sum": "sum_value", "avg": "avg_value"}[fn],
-                    alias,
-                )
-            )
-        else:
-            raise ValueError(
-                f"streaming #window.length(n) select supports the key, "
-                f"event_id/ts, count()/sum(x)/avg(x) — got {expr!r}; use "
-                "streaming.windows.length_window directly"
-            )
-    out = length_window(
-        src, n, key=key, n_buckets=_state_buckets(model), ts=ts_col,
-        id_col=id_col, value_col=value_col or "value",
-    )
-    key_type = dict(zip(src.schema.fieldNames(), src.schema.fields))[
-        key
-    ].dataType
-    cols = []
-    for src_col, alias in plan:
-        c = F.col(src_col)
-        if src_col == "key":
-            c = c.cast(key_type)
-        cols.append(c.alias(alias))
-    return out.select(*cols)
+    The select maps each item onto the op's output through
+    :data:`_KEYED_STATE_OPS`: the key, the passthroughs, and the
+    aggregates over ONE value column (the expression window's budget
+    column; cent-scaled exactly like the batch runner's
+    `expression_sliding`, so both engines share the integer
+    membership test). The key comes back cast to its source type.
+    Anything wider raises with a pointer to the op's API. Both reorder
+    ops keep the drop contract, so the same app text yields the same
+    row set as the batch runner (ADVICE r10)."""
+    from ..streaming import reorder as SR
+    from ..streaming import windows as SW
 
-
-def _route_streaming_expression(
-    env: dict, model: AppModel, q, inp, ts_col: str, id_col: str
-) -> DataFrame:
-    """QL `#window.expression('sum(col) <= L')` in streaming mode →
-    the retain-while state op (`streaming.windows.expression_window`),
-    its state grouped by hash bucket when the app carries
-    `@app:stateBuckets` (r9 verdict ask #5 — the 6.1×-measured bucket
-    layout was library-only; a ported app now opts in with one
-    annotation). Supported select shape mirrors
-    the length-window route: the group key, event_id/ts/budget-column
-    passthroughs, count() and sum(<budget col>) — the canonical Siddhi
-    expression-window query. Budgets are cent-scaled exactly like the
-    batch runner's `expression_sliding` translation, so all three
-    engines share the integer membership test."""
-    from ..streaming.windows import expression_window
-
-    keys = q.group_by or []
-    if len(keys) != 1:
-        raise ValueError(
-            "streaming #window.expression needs exactly one `group by` "
-            "key (the reference's per-key retain-while window); use "
-            "streaming.windows.expression_window directly for other "
-            "shapes"
+    win = inp.window
+    kind = win.kind.split(":")[0]
+    api, passthrough, agg_cols = _KEYED_STATE_OPS[kind]
+    what = f"streaming #{'' if kind == 'reorder' else 'window.'}{win.kind}"
+    key = _single_key(q, what)
+    op_ts, value_col, op_args = ts_col, None, {}
+    if kind == "length":
+        op = SW.length_window
+        op_args["n"] = int(win.args[0])
+    elif kind == "expression":
+        op = SW.expression_window
+        value_col, limit = _retain_args(win.args)
+        op_args["limit"] = int(round(limit * 100))
+    else:
+        op_ts, ms = _reorder_args(win.kind, win.args, ts_col)
+        op, op_args = (
+            (SR.akslack, {}) if ms is None
+            else (SR.kslack_stateful, {"slack_ms": ms})
         )
-    key = keys[0]
-    retain = inp.window.args[0].strip("'\" ")
-    m = re.match(r"sum\((\w+)\)\s*<=\s*([\d.]+)\s*$", retain)
-    if not m:
-        raise ValueError(
-            "expression windows support the canonical retain form "
-            f"sum(col) <= limit, got {retain!r}"
-        )
-    value_col, limit = m.group(1), float(m.group(2))
-    src = env[inp.stream]
-    if inp.filter_expr:
-        src = src.filter(F.expr(inp.filter_expr))
-    passthrough = {id_col: "event_id", ts_col: "ts", value_col: "value"}
+    role = {"key": key, "event_id": id_col, "ts": op_ts, "value": value_col}
+    names = {role.get(c, c): c for c in passthrough}
     plan = []  # (state-op output column, alias)
     for i, it in enumerate(q.select):
         expr = it.expr.strip()
-        alias = _auto_alias(it, i)
-        m_agg = re.fullmatch(
-            r"(count)\(\*?\)|(sum)\(\s*(\w+)\s*\)", expr, re.I
+        m = re.fullmatch(
+            r"(count)\(\s*\*?\s*\)|(sum|avg)\(\s*(\w+)\s*\)", expr, re.I
         )
-        if expr == key:
-            plan.append(("key", alias))
-        elif expr in passthrough:
-            plan.append((passthrough[expr], alias))
-        elif m_agg:
-            if m_agg.group(1):
-                plan.append(("win_n", alias))
-            else:
-                if m_agg.group(3) != value_col:
+        fn = m and (m.group(1) or m.group(2)).lower()
+        if expr in names:
+            plan.append((names[expr], _auto_alias(it, i)))
+        elif fn in agg_cols:
+            if m.group(3):
+                if value_col not in (None, m.group(3)):
                     raise ValueError(
-                        "streaming #window.expression aggregates the "
-                        f"retain budget column {value_col!r}, got "
-                        f"sum({m_agg.group(3)!r})"
+                        f"{what} aggregates one value column (got "
+                        f"{value_col!r} and {m.group(3)!r})"
                     )
-                plan.append(("win_sum", alias))
+                value_col = m.group(3)
+            plan.append((agg_cols[fn], _auto_alias(it, i)))
         else:
             raise ValueError(
-                f"streaming #window.expression select supports the key, "
-                f"event_id/ts/{value_col}, count()/sum({value_col}) — got "
-                f"{expr!r}; use streaming.windows.expression_window "
-                "directly"
+                f"{what} select supports "
+                + ", ".join([*names, *(f"{f}()" for f in agg_cols)])
+                + f" — got {expr!r}; use {api} directly"
             )
-    out = expression_window(
-        src, int(round(limit * 100)), key=key,
-        n_buckets=_state_buckets(model), ts=ts_col, id_col=id_col,
-        value_col=value_col,
-    )
-    key_type = src.schema[key].dataType
-    cols = []
-    for src_col, alias in plan:
-        c = F.col(src_col)
-        if src_col == "key":
-            c = c.cast(key_type)
-        cols.append(c.alias(alias))
-    return out.select(*cols)
-
-
-def _route_streaming_reorder(
-    env: dict, model: AppModel, q, inp, ts_col: str, id_col: str
-) -> DataFrame:
-    """QL `#reorder:kslack(ts, K)` / `#reorder:akslack(ts)` in
-    streaming mode (§3.9 [ext:reorder] stream processors, r10 QL
-    surface). BOTH route to per-key drop-contract state ops so the
-    same app text yields the same row set as the batch runner (ADVICE
-    r10 — the earlier watermark-passthrough kslack emitted every
-    event, because only downstream stateful ops read a watermark):
-    kslack → the constant-K lateness filter
-    (`streaming.reorder.kslack_stateful`, single-batch row-identical
-    to `kslack_batch`); akslack → the adaptive state op
-    (`streaming.reorder.akslack`). Both group state by hash bucket
-    when the app carries `@app:stateBuckets` (the 2.7×-at-×100
-    layout, SCALEBENCH r10). The bare watermark
-    annotation stays available as `streaming.reorder.kslack` for apps
-    that want tolerance-without-drop explicitly. Select shape for
-    both: the key, `event_id`/`ts` passthroughs, and the op's
-    `late_us`/`slack_us` outputs."""
-    from ..streaming.reorder import akslack, kslack_stateful
-
+    if kind != "reorder":
+        op_args["value_col"] = value_col or "value"
     src = env[inp.stream]
     if inp.filter_expr:
         src = src.filter(F.expr(inp.filter_expr))
-    win = inp.window
-    rts, ms = _reorder_args(win.kind, win.args, ts_col)
-    keys = [q.partition_key] if q.partition_key else (q.group_by or [])
-    if len(keys) != 1:
-        raise ValueError(
-            f"{win.kind} needs exactly one key (`partition with "
-            "(k of S)` or `group by k`) — the engine's per-key "
-            "disorder contract"
-        )
-    key = keys[0]
-    buckets = _state_buckets(model)
-    if ms is not None:
-        out = kslack_stateful(
-            src, ts=rts, key=key, id_col=id_col, slack_ms=ms,
-            n_buckets=buckets,
-        )
-    else:
-        out = akslack(src, ts=rts, key=key, id_col=id_col, n_buckets=buckets)
-    if not q.select:
+    out = op(
+        src, key=key, n_buckets=_state_buckets(model), ts=op_ts,
+        id_col=id_col, **op_args,
+    )
+    if not plan:
         return out
-    passthrough = {key: "key", id_col: "event_id", rts: "ts"}
     key_type = src.schema[key].dataType
-    cols = []
-    for i, it in enumerate(q.select):
-        expr = it.expr.strip()
-        alias = _auto_alias(it, i)
-        src_col = passthrough.get(expr, expr)
-        if src_col not in ("key", "event_id", "ts", "late_us", "slack_us"):
-            raise ValueError(
-                f"{win.kind} select supports the key, event_id/ts, "
-                f"late_us, slack_us — got {expr!r}; use "
-                "streaming.reorder directly"
-            )
-        c = F.col(src_col)
-        if src_col == "key":
-            c = c.cast(key_type)
-        cols.append(c.alias(alias))
-    return out.select(*cols)
+    return out.select(
+        *[
+            (F.col(c).cast(key_type) if c == "key" else F.col(c)).alias(alias)
+            for c, alias in plan
+        ]
+    )
 
 
 def run_app_streaming(
@@ -3205,8 +3108,9 @@ def run_app_streaming(
     plus PATTERN queries, which route to the streaming NFA / absence
     timer (`..streaming.cep`, see ``_run_pattern_streaming``), and
     `#window.length`, `#window.expression` and `#reorder:kslack/akslack`,
-    which route to keyed `applyInPandasWithState` operators
-    (`..streaming.windows`, `..streaming.reorder`). Each of those
+    which route through one keyed route (``_route_streaming_keyed``) to
+    keyed `applyInPandasWithState` operators (`..streaming.windows`,
+    `..streaming.reorder`). Each of those
     keyed operators — the NFA too — runs one kernel whose state groups
     by the key, or by hash bucket under `@app:stateBuckets('N')`.
     Sources come from ``sources`` (streaming frames) or from
@@ -3365,29 +3269,13 @@ def run_app_streaming(
             )
             _emit(q, df)
             continue
-        if inp.window is not None and inp.window.kind == "length":
-            # `#window.length(n)` + aggregation: route to the keyed
-            # count-window state machine (`streaming.windows.
-            # length_window` — `LengthWindowProcessor.java`), the
-            # operator the batch ROWS-frame twin is proven against.
-            # The state op emits (key, event_id, ts, n, sum, avg) over
-            # ONE value column, so the QL mapping is the canonical
-            # select shape: key + count()/sum(x)/avg(x).
-            df = _route_streaming_length(env, model, q, inp, ts_col, id_col)
-            _emit(q, df)
-            continue
-        if inp.window is not None and inp.window.kind == "expression":
-            # `#window.expression('sum(x) <= L')`: the dynamic
-            # retain-while window has a dedicated keyed state op —
-            # same routing contract as the length window above
-            df = _route_streaming_expression(
-                env, model, q, inp, ts_col, id_col
-            )
-            _emit(q, df)
-            continue
-        if inp.window is not None and inp.window.kind.startswith("reorder:"):
-            # `#reorder:kslack/akslack` stream processors (§3.9)
-            df = _route_streaming_reorder(env, model, q, inp, ts_col, id_col)
+        if (
+            inp.window is not None
+            and inp.window.kind.split(":")[0] in _KEYED_STATE_OPS
+        ):
+            # the keyed `applyInPandasWithState` ops: count and
+            # retain-while windows, and the §3.9 reorder processors
+            df = _route_streaming_keyed(env, model, q, inp, ts_col, id_col)
             _emit(q, df)
             continue
         if inp.window is not None and inp.window.kind not in (

@@ -72,12 +72,15 @@ def derived_state_partitions(spark, est_state_rows: int) -> int:
 
 
 def keyed_groups(
-    projected: DataFrame, key: str, n_buckets: int | None
+    stream: DataFrame, key: str, n_buckets: int | None
 ) -> GroupedData:
-    """Group a stream carrying ``__sem_key`` for the segment kernels:
-    by the key itself when ``n_buckets`` is None, else by
-    ``pmod(hash(key), n_buckets)`` — the coarse-bucket layout, where
-    one python call per micro-batch handles every key in a bucket.
+    """The one grouping of every keyed state op: adds ``__sem_key``
+    (``key`` cast to string; a NULL key stays NULL) and groups by it
+    when ``n_buckets`` is None — a state op then emits its group key
+    ``key_tuple[0]`` as it is — else by ``pmod(hash(key), n_buckets)``,
+    the coarse-bucket layout, where one python call per micro-batch
+    handles every key in a bucket (the kernels split a bucket's rows
+    into keys by ``__sem_key``).
 
     `applyInPandasWithState` costs ~0.3 ms per (group × micro-batch)
     python call (measured: 100 k user keys × 4 batches = 127 s of pure
@@ -86,7 +89,10 @@ def keyed_groups(
     overhead-bound; buckets amortize that over |keys|/n_buckets keys.
     Trade-off: each batch rewrites the whole bucket's state, so size
     n_buckets so one bucket's state fits a task comfortably, and keep
-    per-key grouping for sparse-key streams."""
+    per-key grouping for sparse-key streams. The bucket hash input is
+    ``key`` as given (a bucketed checkpoint pins it), so an op that
+    hashes the string key passes ``__sem_key`` itself."""
+    projected = stream.withColumn("__sem_key", F.col(key).cast("string"))
     if n_buckets is None:
         return projected.groupBy("__sem_key")
     return projected.withColumn(

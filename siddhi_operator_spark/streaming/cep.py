@@ -438,11 +438,13 @@ def absence_nfa(
     (`AbsentStreamPreStateProcessor.java`): arm a timer on p1; a p2
     event within t disarms; firing emits (key, e1). The reference uses
     its scheduler — here the event-time timeout of the state API (the
-    watermark drives time forward)."""
+    watermark drives time forward). State groups per key only
+    (:func:`.keyed_groups`); a NULL key is its own group, emitted as
+    NULL."""
     for_us = int(for_seconds * 1_000_000)
 
     flagged = stream.withWatermark(ts, watermark).select(
-        F.col(key).cast("string").alias("__key"),
+        F.col(key),
         F.col(id_col).alias("__id"),
         F.col(ts).alias("__ts"),
         F.expr(arm_predicate).cast("boolean").alias("__arm"),
@@ -525,13 +527,13 @@ def absence_nfa(
 
         yield pd.DataFrame(
             [
-                (str(key_tuple[0]), i, pd.Timestamp(u * 1000))
+                (key_tuple[0], i, pd.Timestamp(u * 1000))
                 for i, u in fired
             ],
             columns=["key", "e1_id", "e1_ts"],
         )
 
-    return flagged.groupBy("__key").applyInPandasWithState(
+    return keyed_groups(flagged, key, None).applyInPandasWithState(
         proc,
         _ABSENCE_OUT,
         _ABSENCE_STATE,

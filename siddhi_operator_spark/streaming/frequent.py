@@ -11,6 +11,9 @@ Scale: the sketch is O(n) per group key regardless of stream length —
 the canonical bounded-state answer to "top users per event type over
 an unbounded stream". The batch twin (`operators.windows.frequent`)
 computes the exact fixed point the sketch approximates.
+
+Every op here groups per key through :func:`.keyed_groups`; a NULL
+key is its own group, emitted as NULL.
 """
 
 from __future__ import annotations
@@ -24,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from . import keyed_groups
 
 _OUT = T.StructType(
     [
@@ -77,14 +82,12 @@ def frequent_stream(
                 misra_gries(sketch, v, n)
         state.update((list(sketch), [int(c) for c in sketch.values()], seq + 1))
         yield pd.DataFrame(
-            [(str(key_tuple[0]), it, int(c), seq) for it, c in sketch.items()],
+            [(key_tuple[0], it, int(c), seq) for it, c in sketch.items()],
             columns=["key", "item", "count_lb", "batch_seq"],
         )
 
-    projected = stream.withColumn("__key", F.col(key).cast("string")).withColumn(
-        "__item", F.col(item_col).cast("string")
-    )
-    return projected.groupBy("__key").applyInPandasWithState(
+    projected = stream.withColumn("__item", F.col(item_col).cast("string"))
+    return keyed_groups(projected, key, None).applyInPandasWithState(
         proc, _OUT, _STATE, "append", GroupStateTimeout.NoTimeout
     )
 
@@ -159,17 +162,15 @@ def lossy_counting_stream(
         thresh = (support - error) * n_seen
         yield pd.DataFrame(
             [
-                (str(key_tuple[0]), it, int(c), int(n_seen), seq)
+                (key_tuple[0], it, int(c), int(n_seen), seq)
                 for it, (c, _d) in sketch.items()
                 if c >= thresh
             ],
             columns=["key", "item", "count_lb", "n_seen", "batch_seq"],
         )
 
-    projected = stream.withColumn("__key", F.col(key).cast("string")).withColumn(
-        "__item", F.col(item_col).cast("string")
-    )
-    return projected.groupBy("__key").applyInPandasWithState(
+    projected = stream.withColumn("__item", F.col(item_col).cast("string"))
+    return keyed_groups(projected, key, None).applyInPandasWithState(
         proc, _LOSSY_OUT, _LOSSY_STATE, "append", GroupStateTimeout.NoTimeout
     )
 
@@ -222,17 +223,15 @@ def sort_window_stream(
         )
         yield pd.DataFrame(
             [
-                (str(key_tuple[0]), e[0], e[1], r + 1, seq)
+                (key_tuple[0], e[0], e[1], r + 1, seq)
                 for r, e in enumerate(entries)
             ],
             columns=["key", "item_id", "sort_value", "rank", "batch_seq"],
         )
 
-    projected = (
-        stream.withColumn("__key", F.col(key).cast("string"))
-        .withColumn("__id", F.col(id_col).cast("long"))
-        .withColumn("__val", F.col(sort_col).cast("double"))
+    projected = stream.withColumn("__id", F.col(id_col).cast("long")).withColumn(
+        "__val", F.col(sort_col).cast("double")
     )
-    return projected.groupBy("__key").applyInPandasWithState(
+    return keyed_groups(projected, key, None).applyInPandasWithState(
         proc, _TOPK_OUT, _TOPK_STATE, "append", GroupStateTimeout.NoTimeout
     )

@@ -291,8 +291,7 @@ def akslack(
             else pd.DataFrame(columns=_AKSLACK_OUT.fieldNames())
         )
 
-    projected = stream.withColumn("__sem_key", F.col(key).cast("string"))
-    return keyed_groups(projected, key, n_buckets).applyInPandasWithState(
+    return keyed_groups(stream, key, n_buckets).applyInPandasWithState(
         proc,
         _AKSLACK_OUT,
         _AKSLACK_SEG_STATE,

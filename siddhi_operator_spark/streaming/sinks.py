@@ -169,10 +169,10 @@ class ParquetUpsertTable:
     `@store` analog, durable). Readers get the latest snapshot;
     `upsert_batch` is the foreachBatch target.
 
-    Snapshot layout: an :class:`EpochStore` of ``v=N`` snapshots with
-    only the latest read — a poor-man's Delta commit log; swap for
-    Delta/Iceberg when the jars are available (same API). Versions are
-    numbered in sequence, not by epoch."""
+    Snapshot layout: an :class:`EpochStore` of ``v=N`` snapshots, one
+    per epoch N, with only the latest read — a poor-man's Delta commit
+    log; swap for Delta/Iceberg when the jars are available (same
+    API)."""
 
     def __init__(self, spark: SparkSession, path: str, keys: Sequence[str]):
         self.spark = spark
@@ -185,8 +185,8 @@ class ParquetUpsertTable:
 
     def upsert_batch(self, batch: DataFrame, epoch_id: int, order_col: str) -> None:
         """MERGE: dedupe the batch per key (last writer by order_col),
-        then new-snapshot = batch ∪ (current ∖ batch-keys), written as
-        the next version."""
+        then snapshot N = batch ∪ (latest version below N ∖ batch-keys),
+        written as ``v=N`` for epoch N under the store's replay rule."""
         from pyspark.sql.window import Window
 
         w = Window.partitionBy(*self.keys).orderBy(F.desc(order_col))
@@ -195,7 +195,7 @@ class ParquetUpsertTable:
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        cur = self.snapshot()
+        cur = self.store.read(below=epoch_id, latest=True)
         if cur is not None:
             keep = cur.join(
                 F.broadcast(latest.select(*self.keys).distinct()),
@@ -205,8 +205,7 @@ class ParquetUpsertTable:
             merged = keep.unionByName(latest)
         else:
             merged = latest
-        vs = self.store.versions()
-        self.store.write(merged, vs[-1] + 1 if vs else 0)
+        self.store.write(merged, epoch_id)
 
     def changes(
         self, from_version: int = 0, to_version: int | None = None

@@ -220,8 +220,7 @@ def length_window(
             else pd.DataFrame(columns=_LENGTH_OUT.fieldNames())
         )
 
-    projected = stream.withColumn("__sem_key", F.col(key).cast("string"))
-    return keyed_groups(projected, key, n_buckets).applyInPandasWithState(
+    return keyed_groups(stream, key, n_buckets).applyInPandasWithState(
         proc,
         _LENGTH_OUT,
         _LENGTH_SEG_STATE,
@@ -260,7 +259,9 @@ def length_batch_window(
     """Streaming `lengthBatch(n)` per key
     (`LengthBatchWindowProcessor.java`): buffer events; every n-th
     event flushes one aggregate row. Partial batches persist in state
-    across micro-batches."""
+    across micro-batches. State groups per key only
+    (:func:`.keyed_groups`); a NULL key is its own group, emitted as
+    NULL."""
 
     def proc(
         key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -294,7 +295,7 @@ def length_batch_window(
                 outs.append(
                     pd.DataFrame(
                         {
-                            "key": str(key_tuple[0]),
+                            "key": key_tuple[0],
                             "batch_seq": np.arange(seq, seq + n_complete),
                             "n": np.int32(n),
                             "sum_value": chunk_vals.sum(axis=1),
@@ -315,8 +316,7 @@ def length_batch_window(
             )
         )
 
-    projected = stream.withColumn("__key", F.col(key).cast("string"))
-    return projected.groupBy("__key").applyInPandasWithState(
+    return keyed_groups(stream, key, None).applyInPandasWithState(
         proc,
         _LBATCH_OUT,
         _LBATCH_STATE,
@@ -460,8 +460,7 @@ def expression_window(
         if outs:
             yield pd.concat(outs, ignore_index=True)
 
-    projected = stream.withColumn("__sem_key", F.col(key).cast("string"))
-    return keyed_groups(projected, key, n_buckets).applyInPandasWithState(
+    return keyed_groups(stream, key, n_buckets).applyInPandasWithState(
         proc,
         _EXPR_OUT,
         _EXPR_SEG_STATE,

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators import ml as ML
-from .registry import register
+from .registry import _materialize, register
 
 _KMEANS_ORACLE = """
 WITH e AS (
@@ -149,17 +149,7 @@ def ml_perceptron_online(spark: SparkSession, sf: str) -> DataFrame:
     out = SML.perceptron_online(
         s, features_col="embedding", label_col="y", eta=0.1
     )
-    import uuid
-
-    name = f"mq_{uuid.uuid4().hex[:10]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    name = _materialize(out, "append")
     return spark.sql(
         f"SELECT event_id, ts, true_label, pred_label, correct FROM {name}"
     )

@@ -11,6 +11,7 @@ Conventions enforced here (they ARE the driver contract):
 from __future__ import annotations
 
 import hashlib
+import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -51,3 +52,53 @@ def register(
         return fn
 
     return deco
+
+
+def _materialize(
+    stream: DataFrame,
+    mode: str,
+    expect_single_batch: bool = False,
+    state_partitions: int | None = None,
+) -> str:
+    """Drain a bounded replay stream into a uniquely named memory-sink
+    table and return its name: start → ``processAllAvailable`` → stop."""
+    name = f"mq_{uuid.uuid4().hex[:10]}"
+    spark = stream.sparkSession
+    # r16 OPT (guide §5, r15 verdict item 6): state-heavy rows pass a
+    # corpus-stat-derived partition count
+    # (streaming.derived_state_partitions) so a small-state query does
+    # not open+commit 32 RocksDB stores per operator per micro-batch.
+    # The query snapshots the session conf at `start()` and its first
+    # batch pins the partition count in the checkpoint, so the conf is
+    # restored right after `start()` and nothing else in the session
+    # sees it.
+    prev = spark.conf.get("spark.sql.shuffle.partitions") if state_partitions else None
+    if state_partitions:
+        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    try:
+        q = (
+            stream.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .start()
+        )
+    finally:
+        if prev is not None:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    try:
+        q.processAllAvailable()
+        fed = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    finally:
+        q.stop()
+    # rows whose relational oracle is only valid for a one-trigger
+    # replay (e.g. akslack's per-batch quantile re-derivation) must
+    # FAIL LOUDLY if the fixture ever splits into multiple triggers
+    # (ADVICE r9) — a maxFilesPerTrigger option or a multi-part
+    # fixture would otherwise make a correct implementation gate red
+    # with no hint why
+    if expect_single_batch and len(fed) > 1:  # must survive python -O
+        raise RuntimeError(
+            f"oracle assumes a single-trigger replay; stream fed "
+            f"{len(fed)} non-empty micro-batches"
+        )
+    return name

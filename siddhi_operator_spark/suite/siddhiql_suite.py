@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..siddhiql import run_app
-from .registry import register
+from .registry import _materialize, register
 
 _EVENTS_DEF = """
 define stream events (event_id long, ts string, user_id long,
@@ -889,8 +889,6 @@ def siddhiql_streaming_filter_agg(spark: SparkSession, sf: str) -> DataFrame:
     match. (The wider multi-query example app is pinned in
     tests/test_siddhiql.py; this row keeps one QL-streaming path
     inside the per-round driver gate.)"""
-    import uuid
-
     from ..catalog import load_events_stream
     from ..siddhiql import run_app_streaming
 
@@ -905,13 +903,7 @@ def siddhiql_streaming_filter_agg(spark: SparkSession, sf: str) -> DataFrame:
     outs = run_app_streaming(
         app, {"events": load_events_stream(spark, sf)}, watermark="10 minutes"
     )
-    name = f"sqs_{uuid.uuid4().hex[:8]}"
-    q = (
-        outs["Hourly"].writeStream.format("memory")
-        .queryName(name).outputMode("complete").start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    name = _materialize(outs["Hourly"], "complete")
     return spark.sql(
         f"SELECT window_start, user_id, n, round(sv + 1e-9, 4) AS sv "
         f"FROM {name}"
@@ -938,8 +930,6 @@ def siddhiql_streaming_join_bucket(spark: SparkSession, sf: str) -> DataFrame:
     join takes 28.6 s). Output must match the plain range-join oracle
     — the epoch keys only partition the state; the raw time-range
     condition still decides membership and eviction."""
-    import uuid
-
     from ..catalog import load_events_stream
     from ..siddhiql import run_app_streaming
 
@@ -960,13 +950,7 @@ def siddhiql_streaming_join_bucket(spark: SparkSession, sf: str) -> DataFrame:
     outs = run_app_streaming(
         app, {"Clicks": cs, "Views": vs}, watermark="10 minutes"
     )
-    name = f"sjbq_{uuid.uuid4().hex[:8]}"
-    q = (
-        outs["Pairs"].writeStream.format("memory")
-        .queryName(name).outputMode("append").start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    name = _materialize(outs["Pairs"], "append")
     return spark.table(name)
 
 
@@ -991,8 +975,6 @@ def siddhiql_bucketed_length_window(spark: SparkSession, sf: str) -> DataFrame:
     call per bucket per micro-batch); output must equal the per-key
     layout, which the batch ROWS-frame oracle proves here and
     tests/test_streaming.py pins at the routing level."""
-    import uuid
-
     from ..catalog import load_events_stream
     from ..siddhiql import run_app_streaming
 
@@ -1008,13 +990,7 @@ def siddhiql_bucketed_length_window(spark: SparkSession, sf: str) -> DataFrame:
     outs = run_app_streaming(
         app, {"events": load_events_stream(spark, sf)}
     )
-    name = f"sbl_{uuid.uuid4().hex[:8]}"
-    q = (
-        outs["O"].writeStream.format("memory")
-        .queryName(name).outputMode("append").start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    name = _materialize(outs["O"], "append")
     return spark.sql(
         f"SELECT user_id, event_id, round(sv + 1e-9, 4) AS sv FROM {name}"
     )
@@ -1047,8 +1023,6 @@ def siddhiql_bucketed_pattern(spark: SparkSession, sf: str) -> DataFrame:
     within 1h` (the `streaming_cep_followed_by` oracle);
     tests/test_streaming.py pins per-key == bucketed at the routing
     level."""
-    import uuid
-
     from ..catalog import load_events_stream
     from ..siddhiql import run_app_streaming
 
@@ -1065,13 +1039,7 @@ def siddhiql_bucketed_pattern(spark: SparkSession, sf: str) -> DataFrame:
     outs = run_app_streaming(
         app, {"events": load_events_stream(spark, sf)}
     )
-    name = f"sbp_{uuid.uuid4().hex[:8]}"
-    q = (
-        outs["O"].writeStream.format("memory")
-        .queryName(name).outputMode("append").start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    name = _materialize(outs["O"], "append")
     return spark.table(name)
 
 
@@ -1104,15 +1072,13 @@ def siddhiql_bucketed_expression_window(
 ) -> DataFrame:
     """`#window.expression('sum(value) <= 1000')` from SiddhiQL text
     in STREAMING mode, on the coarse-bucket state layout (r9 verdict
-    ask #5 — `_route_streaming_expression` is new QL surface; the
+    ask #5 — `_route_streaming_keyed` is the QL surface; the
     6.1×-measured bucket layout of `expression_window` routes from
     `@app:stateBuckets('16')`). The retain-while budget cent-scales
     exactly like the batch translation, so the keyed range self-join
     oracle proves the vectorized bucket state machine event for
     event. `having win_n > 0` drops own-budget busters — the same
     emission contract as `streaming_expression_window`."""
-    import uuid
-
     from ..catalog import load_events_stream
     from ..siddhiql import run_app_streaming
 
@@ -1129,13 +1095,7 @@ def siddhiql_bucketed_expression_window(
     outs = run_app_streaming(
         app, {"events": load_events_stream(spark, sf)}
     )
-    name = f"sbe_{uuid.uuid4().hex[:8]}"
-    q = (
-        outs["O"].writeStream.format("memory")
-        .queryName(name).outputMode("append").start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    name = _materialize(outs["O"], "append")
     return spark.sql(
         f"SELECT user_id, event_id, win_n, "
         f"round(win_sum + 1e-9, 4) AS win_sum FROM {name}"
@@ -1156,8 +1116,6 @@ def siddhiql_reorder_akslack(spark: SparkSession, sf: str) -> DataFrame:
     SOURCE handed to the app (the same disorder model as the
     `streaming_reorder_akslack` row), and the QL output must land on
     the identical relational fixed point — same oracle SQL."""
-    import uuid
-
     from ..catalog import load_events_stream
     from ..siddhiql import run_app_streaming
 
@@ -1179,22 +1137,9 @@ def siddhiql_reorder_akslack(spark: SparkSession, sf: str) -> DataFrame:
         ).alias("ts"),
     )
     outs = run_app_streaming(app, {"events": src})
-    name = f"sra_{uuid.uuid4().hex[:8]}"
-    q = (
-        outs["O"].writeStream.format("memory")
-        .queryName(name).outputMode("append").start()
-    )
-    q.processAllAvailable()
     # the shared _AKSLACK_ORACLE is only valid for a one-trigger
-    # replay (per-batch quantile re-derivation) — same guard as
-    # _materialize(..., expect_single_batch=True) (ADVICE r10)
-    fed = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    q.stop()
-    if len(fed) > 1:  # contract check — must survive python -O
-        raise RuntimeError(
-            f"oracle assumes a single-trigger replay; stream fed "
-            f"{len(fed)} non-empty micro-batches"
-        )
+    # replay (per-batch quantile re-derivation, ADVICE r10)
+    name = _materialize(outs["O"], "append", expect_single_batch=True)
     return spark.table(name)
 
 
@@ -1224,8 +1169,6 @@ def siddhiql_reorder_kslack(spark: SparkSession, sf: str) -> DataFrame:
     path now share one relational oracle, the md5-jittered lateness
     fixed point with a constant 1-hour slack, so the same app text
     provably yields the same row set in both engines)."""
-    import uuid
-
     from ..catalog import load_events_stream
     from ..siddhiql import run_app_streaming
 
@@ -1246,22 +1189,10 @@ def siddhiql_reorder_kslack(spark: SparkSession, sf: str) -> DataFrame:
         ).alias("ts"),
     )
     outs = run_app_streaming(app, {"events": src})
-    name = f"srk_{uuid.uuid4().hex[:8]}"
-    q = (
-        outs["O"].writeStream.format("memory")
-        .queryName(name).outputMode("append").start()
-    )
-    q.processAllAvailable()
     # constant-K lateness still re-derives the running max per
     # trigger from arrival order — single-trigger replay required for
     # the relational oracle, exactly like the akslack rows
-    fed = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    q.stop()
-    if len(fed) > 1:  # contract check — must survive python -O
-        raise RuntimeError(
-            f"oracle assumes a single-trigger replay; stream fed "
-            f"{len(fed)} non-empty micro-batches"
-        )
+    name = _materialize(outs["O"], "append", expect_single_batch=True)
     return spark.table(name)
 
 
@@ -1284,12 +1215,10 @@ def siddhiql_reorder_kslack_bucketed(
     annotation must route the constant-K drop contract onto the
     coarse-bucket state layout (`streaming.reorder.kslack_stateful`
     with ``n_buckets=16``, passed by
-    `siddhiql/builder._route_streaming_reorder`), and the row set must
+    `siddhiql/builder._route_streaming_keyed`), and the row set must
     land on the
     SAME relational fixed point as the per-key QL row and the direct
     bucketed-op row — one oracle across all kslack tiers."""
-    import uuid
-
     from ..catalog import load_events_stream
     from ..siddhiql import run_app_streaming
 
@@ -1311,19 +1240,7 @@ def siddhiql_reorder_kslack_bucketed(
         ).alias("ts"),
     )
     outs = run_app_streaming(app, {"events": src})
-    name = f"srkb_{uuid.uuid4().hex[:8]}"
-    q = (
-        outs["O"].writeStream.format("memory")
-        .queryName(name).outputMode("append").start()
-    )
-    q.processAllAvailable()
-    fed = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    q.stop()
-    if len(fed) > 1:  # contract check — must survive python -O
-        raise RuntimeError(
-            f"oracle assumes a single-trigger replay; stream fed "
-            f"{len(fed)} non-empty micro-batches"
-        )
+    name = _materialize(outs["O"], "append", expect_single_batch=True)
     return spark.table(name)
 
 

@@ -12,7 +12,6 @@ processed, and returns the materialized result as a batch DataFrame.
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,60 +20,13 @@ from ..catalog import load, load_events_stream
 from ..fpround import r4
 from ..streaming import cep
 from ..streaming import windows as SW
-from .registry import register
+from .registry import _materialize, register
 
 
 def _events_stream(spark: SparkSession, sf: str) -> DataFrame:
     """events.parquet as a file-source stream — single conversion point
     shared with batch lives in catalog.load_events_stream."""
     return load_events_stream(spark, sf)
-
-
-def _materialize(
-    stream: DataFrame,
-    mode: str,
-    expect_single_batch: bool = False,
-    state_partitions: int | None = None,
-) -> str:
-    name = f"mq_{uuid.uuid4().hex[:10]}"
-    spark = stream.sparkSession
-    # r16 OPT (guide §5, r15 verdict item 6): state-heavy rows pass a
-    # corpus-stat-derived partition count
-    # (streaming.derived_state_partitions) so a small-state query does
-    # not open+commit 32 RocksDB stores per operator per micro-batch.
-    # The query snapshots the session conf at `start()` and its first
-    # batch pins the partition count in the checkpoint, so the conf is
-    # restored right after `start()` and nothing else in the session
-    # sees it.
-    prev = spark.conf.get("spark.sql.shuffle.partitions") if state_partitions else None
-    if state_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .start()
-        )
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.processAllAvailable()
-    if expect_single_batch:
-        # rows whose relational oracle is only valid for a one-trigger
-        # replay (e.g. akslack's per-batch quantile re-derivation)
-        # must FAIL LOUDLY if the fixture ever splits into multiple
-        # triggers (ADVICE r9) — a maxFilesPerTrigger option or a
-        # multi-part fixture would otherwise make a correct
-        # implementation gate red with no hint why
-        fed = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        if len(fed) > 1:  # contract check — must survive python -O
-            raise RuntimeError(
-                f"oracle assumes a single-trigger replay; stream fed "
-                f"{len(fed)} non-empty micro-batches"
-            )
-    q.stop()
-    return name
 
 
 @register(

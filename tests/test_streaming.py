@@ -86,20 +86,33 @@ def test_streaming_length_window_state_across_batches(spark, events_df):
 
 
 def test_streaming_length_batch(spark, events_df):
-    s = _stream_events(spark, events_df, n_splits=2)
+    # events 11-13: copies of 1-3 on a NULL user_id
+    nulls = events_df.filter("event_id <= 3").select(
+        (F.col("event_id") + 10).alias("event_id"),
+        "ts",
+        F.lit(None).cast("long").alias("user_id"),
+        "event_type",
+        "value",
+    )
+    s = _stream_events(spark, events_df.unionByName(nulls), n_splits=2)
     out = SW.length_batch_window(s, 3, key="user_id")
     name = f"lb_{uuid.uuid4().hex[:8]}"
     _run(out, name)
     rows = sorted(
-        (r.key, r.batch_seq, r.first_id, r.last_id, r.sum_value)
-        for r in spark.sql(f"select * from {name}").collect()
+        (
+            (r.key, r.batch_seq, r.first_id, r.last_id, r.sum_value)
+            for r in spark.sql(f"select * from {name}").collect()
+        ),
+        key=lambda t: (t[0] is None, t),
     )
     # user1: 6 events → two full batches of 3; user2: 4 events → one
-    # full batch (4,5,6), event 10 stays buffered in state
+    # full batch (4,5,6), event 10 stays buffered in state; the NULL
+    # key is its own group and is emitted as NULL, never 'None'
     assert rows == [
         ("1", 0, 1, 3, 115.0),
         ("1", 1, 7, 9, 24.0),
         ("2", 0, 4, 6, 53.0),
+        (None, 0, 11, 13, 115.0),
     ]
 
 
@@ -345,25 +358,38 @@ def test_front_end_pattern_routes_to_nfa(spark, events_df):
 
 
 def test_front_end_absence_routes_to_timer(spark, events_df):
-    """`e1 -> not E[p] for t` under run_app_streaming → absence_nfa."""
-    from siddhi_operator_spark.siddhiql import run_app_streaming
+    """`e1 -> not E[p] for t` under run_app_streaming → absence_nfa.
+    A signup on a NULL user_id fires with its key projected as NULL
+    (the key is cast back to the source type), like the batch runner."""
+    from siddhi_operator_spark.siddhiql import run_app, run_app_streaming
 
     app = """
     define stream E (event_id long, ts string, user_id long,
                      event_type string, value double);
     from e1=E[event_type == 'signup'] -> not E[event_type == 'purchase'] for 10 sec
-    select e1.event_id as signup_id
+    select e1.event_id as signup_id, e1.user_id as user_id
     insert into NoPurchase;
     """
-    s = _stream_events(spark, events_df, n_splits=4)
+    null_signup = spark.createDataFrame(
+        [(11, "2024-01-01 00:30:00", None, "signup", 3.0)],
+        "event_id long, ts string, user_id long, event_type string, "
+        "value double",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    events = events_df.unionByName(null_signup)
+    s = _stream_events(spark, events, n_splits=4)
     outs = run_app_streaming(app, {"E": s})
     name = f"fa_{uuid.uuid4().hex[:8]}"
     _run(outs["NoPurchase"], name)
-    rows = sorted(
-        (r.key, r.signup_id)
-        for r in spark.sql(f"select * from {name}").collect()
-    )
-    assert rows == [("2", 4)]
+
+    def _rows(df):
+        return sorted(
+            ((r.user_id, r.signup_id) for r in df.collect()),
+            key=lambda t: (t[0] is None, t),
+        )
+
+    rows = _rows(spark.sql(f"select * from {name}"))
+    assert rows == [(2, 4), (None, 11)]
+    assert rows == _rows(run_app(app, {"E": events})["NoPurchase"])
 
 
 def test_front_end_count_pattern_streaming(spark, events_df):
@@ -420,6 +446,15 @@ def test_table_change_feed_with_deletes(spark, tmp_path):
             (2, "b", "delete", 1),
             (3, "c", "insert", 1),
         ], path
+        # a replayed epoch overwrites its own version: epochs 0, 1, then
+        # 1 again leave versions [0, 1] and the same change feed
+        r = ParquetUpsertTable(spark, f"{path}_replay", keys=["k"])
+        r.upsert_batch(v0, 0, order_col="o")
+        r.upsert_batch(v1, 1, order_col="o")
+        before = sorted(r.changes(0, 1).collect())
+        r.upsert_batch(v1, 1, order_col="o")
+        assert r.store.versions() == [0, 1], path
+        assert sorted(r.changes(0, 1).collect()) == before, path
 
 
 def test_streaming_cep_count_interloper_keeps_collecting(spark):

@@ -4,6 +4,7 @@ dead letter."""
 
 from __future__ import annotations
 
+import datetime
 import itertools
 import tempfile
 import uuid
@@ -31,6 +32,14 @@ def _stream(spark, df, n_splits=2):
     return sources.file_stream(spark, d, df.schema, max_files_per_trigger=1)
 
 
+def _with_null_key(spark, df, key):
+    """``df`` plus event 11: user 1 clicks at 00:30, with ``key`` NULL."""
+    extra = spark.createDataFrame(
+        [(11, datetime.datetime(2024, 1, 1, 0, 30), 1, "click", 1.0)], df.schema
+    ).withColumn(key, F.lit(None).cast(df.schema[key].dataType))
+    return df.unionByName(extra)
+
+
 def _run(stream, mode="append"):
     name = f"x_{uuid.uuid4().hex[:8]}"
     q = sinks.memory_sink(stream, name, output_mode=mode)
@@ -48,12 +57,15 @@ def test_misra_gries_unit():
 
 
 def test_frequent_stream(spark, events_df):
-    s = _stream(spark, events_df, n_splits=2)
+    s = _stream(spark, _with_null_key(spark, events_df, "event_type"), n_splits=2)
     out = FR.frequent_stream(s, 2, key="event_type", item_col="user_id")
     name = _run(out)
     rows = spark.sql(
         f"select * from {name} order by batch_seq desc"
     ).collect()
+    # the NULL event_type is its own group, emitted as NULL
+    assert {r.item for r in rows if r.key is None} == {"1"}
+    assert "None" not in {r.key for r in rows}
     # final sketch for 'click': user 1 has 4 clicks, user 2 has 1 →
     # user 1 must be a surviving candidate in the last batch's emission
     last_seq = max(r.batch_seq for r in rows if r.key == "click")
@@ -64,10 +76,13 @@ def test_frequent_stream(spark, events_df):
 
 
 def test_sort_window_stream(spark, events_df):
-    s = _stream(spark, events_df, n_splits=2)
+    s = _stream(spark, _with_null_key(spark, events_df, "user_id"), n_splits=2)
     out = FR.sort_window_stream(s, 2, key="user_id", sort_col="value")
     name = _run(out)
     rows = spark.sql(f"select * from {name}").collect()
+    # the NULL user_id is its own group, emitted as NULL
+    assert {(r.rank, r.item_id) for r in rows if r.key is None} == {(1, 11)}
+    assert "None" not in {r.key for r in rows}
     last_seq = max(r.batch_seq for r in rows if r.key == "1")
     final = sorted(
         (r.rank, r.item_id)
@@ -132,13 +147,16 @@ def test_dead_letter_on_error(spark, events_df, tmp_path):
 
 
 def test_lossy_counting_stream(spark, events_df):
-    s = _stream(spark, events_df, n_splits=2)
+    s = _stream(spark, _with_null_key(spark, events_df, "event_type"), n_splits=2)
     # support 0.5, error 0.1 → emit items with count ≥ 0.4·N per key
     out = FR.lossy_counting_stream(
         s, support=0.5, error=0.1, key="event_type", item_col="user_id"
     )
     name = _run(out)
     rows = spark.sql(f"select * from {name}").collect()
+    # the NULL event_type is its own group, emitted as NULL
+    assert {(r.item, r.n_seen) for r in rows if r.key is None} == {("1", 1)}
+    assert "None" not in {r.key for r in rows}
     # clicks: user 1 has 4/5, user 2 has 1/5 → only user 1 ≥ 0.4·N in
     # the final emission
     last_seq = max(r.batch_seq for r in rows if r.key == "click")
