@@ -74,23 +74,20 @@ def minhash_signature(
     if impl == "arrow":
         return _minhash_signature_arrow(df, n_hashes, text_col)
     toks = with_tokens(df, text_col)
-
-    # NB: the lambda must take exactly one parameter — PySpark's
-    # transform() passes (element, index) to two-parameter lambdas, so a
-    # `lambda t, i=i:` default-arg closure would silently receive the
-    # array index as `i`.
-    def hasher(seed: int):
-        return lambda t: F.md5(F.concat(F.lit(f"{seed}|"), t))
-
     # array_distinct is hoisted into ONE column instead of appearing in
     # each signature expression — Catalyst does not CSE it across the
     # n_hashes projections (measured ~9 % of pipeline wall at ×100).
+    # The signatures are ONE select of SQL text: one parse and one
+    # analysis pass, not one `withColumn` (and its py4j round trips)
+    # per signature.
     out = toks.withColumn("_dtok", F.array_distinct(F.col("tokens")))
-    for i in range(n_hashes):
-        out = out.withColumn(
-            f"sig_{i}", F.array_min(F.transform(F.col("_dtok"), hasher(i)))
-        )
-    return out.drop("_dtok")
+    return out.selectExpr(
+        "*",
+        *[
+            f"array_min(transform(_dtok, t -> md5(concat('{i}|', t)))) AS sig_{i}"
+            for i in range(n_hashes)
+        ],
+    ).drop("_dtok")
 
 
 def _minhash_signature_arrow(
@@ -179,29 +176,27 @@ def band_table(
     the batch pairing tier rides the signature payload itself through
     banding so pair scoring happens inside the bucket self-join — see
     `lsh_candidate_pairs`)."""
-    n_bands = n_hashes // band_size
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[
-                            F.col(f"sig_{i}")
-                            for i in range(b * band_size, (b + 1) * band_size)
-                        ],
-                    )
-                ).alias("band_hash"),
-            )
-            for b in range(n_bands)
-        ]
+    band_structs = F.expr(
+        "array("
+        + ", ".join(
+            f"named_struct('band', {b}, 'band_hash', {_band_hash_sql(b, band_size)})"
+            for b in range(n_hashes // band_size)
+        )
+        + ")"
     )
     carried = [F.col(c) for c in carry_cols]
     return sigs.select(
         F.col(id_col), *carried, F.explode(band_structs).alias("bb")
     ).select(F.col(id_col), F.col("bb.band"), F.col("bb.band_hash"), *carried)
 
+
+def _band_hash_sql(b: int, band_size: int) -> str:
+    """SQL text of band ``b``'s hash: md5 of its ``band_size`` sigs
+    joined by '|'. The wide expressions of the LSH stage are built as
+    SQL text so each is ONE parse on the JVM, not one py4j call per
+    node of its Column tree."""
+    sigs = ", ".join(f"sig_{i}" for i in range(b * band_size, (b + 1) * band_size))
+    return f"md5(concat_ws('|', {sigs}))"
 
 
 def _est_size_bytes(df: DataFrame) -> int | None:
@@ -304,7 +299,11 @@ def lsh_candidate_pairs(
     than ``max_bucket`` are dropped WHOLE (deterministic, no sampling):
     their members are near-certain duplicates that the cheap exact /
     fingerprint tiers already collapse, which is how production dedup
-    pipelines treat super-shingles.
+    pipelines treat super-shingles. The cap filters ONE side of the
+    self-join: the join key is (band, band_hash), so both endpoints of
+    a pair sit in the same bucket and see the same bucket size, and a
+    bucket dropped from one side makes no pairs — the same pair set as
+    filtering both sides, for one bucket-count aggregate instead of two.
 
     The DEFAULT is a flat 2000. The cap must be ABSOLUTE,
     not corpus-proportional: pair work per bucket is cap²·bands/2, so
@@ -323,19 +322,12 @@ def lsh_candidate_pairs(
         sig_table = sig_table.cache()
     n_bands = n_hashes // band_size
 
-    def _band_hashes() -> list[Column]:
-        return [
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.col(f"sig_{i}")
-                        for i in range(b * band_size, (b + 1) * band_size)
-                    ],
-                )
-            )
-            for b in range(n_bands)
-        ]
+    def _band_hashes(wrap: str = "") -> Column:
+        # the band hashes as one array, each wrapped in `wrap(...)`
+        hashes = ", ".join(
+            f"{wrap}({_band_hash_sql(b, band_size)})" for b in range(n_bands)
+        )
+        return F.expr(f"array({hashes})")
 
     # r15 OPT regime pick (decade profile, docs ×10 disjoint-token
     # fixture). The two formulations and their measured regimes:
@@ -403,17 +395,11 @@ def lsh_candidate_pairs(
         # array 10.26 s → concat binary 7.33 s, vs the attach regime's
         # 6.87 s — the inline (100 TB) regime now runs at ~parity with
         # the broadcast regime instead of 2× over it.
-        carry = sig_table.withColumn(
-            "_sigs", F.concat(*[F.unhex(c) for c in sig_cols])
-        )
+        packed = ", ".join(f"unhex(sig_{i})" for i in range(n_hashes))
+        carry = sig_table.withColumn("_sigs", F.expr(f"concat({packed})"))
         carry_cols.append("_sigs")
         if max_bucket is None:
-            carry = carry.withColumn(
-                "_bhs",
-                F.array(
-                    *[F.unhex(h) for h in _band_hashes()]
-                ),
-            )
+            carry = carry.withColumn("_bhs", _band_hashes("unhex"))
             carry_cols.append("_bhs")
         banded = band_table(
             carry,
@@ -426,16 +412,21 @@ def lsh_candidate_pairs(
         banded = band_table(
             sig_table, id_col=id_col, n_hashes=n_hashes, band_size=band_size
         )
+    # The cap filters side `a` only: both endpoints of a pair share the
+    # join key (band, band_hash), so they sit in one bucket of one size,
+    # and dropping the bucket on one side drops every pair it makes.
+    # One bucket-count aggregate (and its exchange) instead of two.
+    capped = banded
     if max_bucket is not None:
         counts = banded.groupBy("band", "band_hash").agg(
             F.count(F.lit(1)).alias("_bn")
         )
-        banded = (
+        capped = (
             banded.join(counts, on=["band", "band_hash"])
             .filter(F.col("_bn") <= max_bucket)
             .drop("_bn")
         )
-    joined = banded.alias("a").join(
+    joined = capped.alias("a").join(
         banded.alias("b"),
         on=[
             F.col("a.band") == F.col("b.band"),
@@ -451,23 +442,25 @@ def lsh_candidate_pairs(
         # endpoints' band-hash vectors: each pair is kept only at its
         # first colliding band — exactly once BY CONSTRUCTION, no
         # pair-stream distinct.
-        fb = F.lit(None).cast("int")
-        for b in range(n_bands - 1, -1, -1):
-            fb = F.when(F.col(f"{lhs}._bhs")[b] == F.col(f"{rhs}._bhs")[b], F.lit(b)).otherwise(fb)
-        return fb
+        whens = " ".join(
+            f"WHEN {lhs}._bhs[{b}] = {rhs}._bhs[{b}] THEN {b}" for b in range(n_bands)
+        )
+        return F.expr(f"CASE {whens} END")
+
+    def _n_match(same) -> Column:
+        # the n_hashes-way agreement count; same(i) is the SQL test of sig i
+        return F.expr(
+            " + ".join(f"CASE WHEN {same(i)} THEN 1 ELSE 0 END" for i in range(n_hashes))
+        )
 
     if inline:
         # flat codegen chunk compare over the packed binary payload
         # (each signature is bytes [16i, 16i+16) of _sigs) — replaces
         # the r15 interpreted zip_with+aggregate fold, which was ~2/3
         # of the inline regime's wall at ×10 (see the carry comment)
-        n_match = sum(
-            F.when(
-                F.substring(F.col("a._sigs"), i * 16 + 1, 16)
-                == F.substring(F.col("b._sigs"), i * 16 + 1, 16),
-                1,
-            ).otherwise(0)
-            for i in range(n_hashes)
+        n_match = _n_match(
+            lambda i: f"substring(a._sigs, {16 * i + 1}, 16)"
+            f" = substring(b._sigs, {16 * i + 1}, 16)"
         )
         scored_cols = [
             F.col(f"a.{id_col}").alias("id_a"),
@@ -497,19 +490,14 @@ def lsh_candidate_pairs(
         if max_bucket is not None:
             pairs = pairs.drop("_band").distinct()
         else:
-            key_tbl = sig_table.select(
-                F.col(id_col), F.array(*_band_hashes()).alias("_bhs")
-            )
+            key_tbl = sig_table.select(F.col(id_col), _band_hashes().alias("_bhs"))
             pairs = (
                 pairs.join(key_tbl.alias("ba"), F.col("id_a") == F.col(f"ba.{id_col}"))
                 .join(key_tbl.alias("bb"), F.col("id_b") == F.col(f"bb.{id_col}"))
                 .filter(F.col("_band") == _first_band("ba", "bb"))
                 .select("id_a", "id_b")
             )
-        n_match = sum(
-            F.when(F.col(f"sa.sig_{i}") == F.col(f"sb.sig_{i}"), 1).otherwise(0)
-            for i in range(n_hashes)
-        )
+        n_match = _n_match(lambda i: f"sa.sig_{i} = sb.sig_{i}")
         scored = (
             pairs.join(sig_table.alias("sa"), F.col("id_a") == F.col(f"sa.{id_col}"))
             .join(sig_table.alias("sb"), F.col("id_b") == F.col(f"sb.{id_col}"))
@@ -734,15 +722,24 @@ def connected_components(
       3. a round has converged when its output equals its input
          ("f(x) == x"), tested on an (edge count, xxhash64 sum)
          fingerprint observed inside each materializing action. The
-         contraction's fingerprint seeds the check, so a graph that
-         one partition already holds whole (min-rooted stars after
-         the contraction) returns after ONE round; a node contracted
+         contraction's fingerprint seeds the check; a node contracted
          to different roots in different partitions only costs more
          rounds, never a wrong answer. As with any hash fingerprint,
          two different edge sets with the same count and hash sum
          would stop the loop early.
+      4. the fixpoint is also checked before round 1: the contraction's
+         action observes the min and max partition id of its strict
+         (src > dst) edges. When they are equal (or there is no such
+         edge), one partition held every non-trivial edge, its
+         union-find output is already the min-rooted stars, and no
+         star round runs. This fires when the pair frame reaches the
+         contraction in one partition (a small lazy join output that
+         adaptive execution coalesced, or a ``coalesce(1)``); a
+         hash-spread pair frame (e.g. a cached shuffle output) runs
+         the round loop.
 
-      ``max_iter`` counts star rounds after the contraction. The
+      ``max_iter`` counts star rounds after the contraction, so
+      ``max_iter=0`` succeeds exactly on the zero-round case. The
       star rounds without the contraction were measured against
       min-label at ×100 docs (SCALEBENCH.md r6); the current tier
       has not been measured at that scale.
@@ -920,7 +917,8 @@ def _cc_star(directed: DataFrame, _materialize, max_iter: int) -> DataFrame:
 
     - every fingerprint rides the action that materializes its frame
       as an ``Observation``, the contraction's included, so the first
-      round can already prove the fixpoint;
+      round can already prove the fixpoint, and the contraction's
+      partition-id range can prove it before any round runs;
     - the symmetrized edges take no ``distinct()``: large_star
       tolerates duplicate edges (its terminal distinct dedups the
       round's output), so a duplicate or reversed input pair costs one
@@ -940,13 +938,27 @@ def _cc_star(directed: DataFrame, _materialize, max_iter: int) -> DataFrame:
     # per task slot bounds that cost without idling a core; a frame
     # with no more partitions than slots is left as it is.
     directed = directed.coalesce(directed.sparkSession.sparkContext.defaultParallelism)
+    strict_pid = F.when(F.col("src") > F.col("dst"), F.spark_partition_id())
     obs = Observation("cc_fp_contracted")
     contracted = _materialize(
-        _contract_partitions(directed).observe(obs, *_edge_fingerprint())
+        _contract_partitions(directed).observe(
+            obs,
+            *_edge_fingerprint(),
+            F.min(strict_pid).alias("p_lo"),
+            F.max(strict_pid).alias("p_hi"),
+        )
     )
-    prev_fp = (obs.get["n"], obs.get["h"])
-    cur = _symmetrize(contracted)
-    all_nodes = cur.select(F.col("src").alias("node")).distinct()
+    seen = obs.get
+    prev_fp = (seen["n"], seen["h"])
+    all_nodes = _symmetrize(contracted).select(F.col("src").alias("node")).distinct()
+    stars = contracted.filter(F.col("src") > F.col("dst"))
+    # Zero-round fixpoint: every partition that holds a non-trivial
+    # edge emits at least one strict edge, so strict edges from one
+    # partition only (or none at all) mean one union-find saw every
+    # edge. Its output is then the exact min-rooted stars, which
+    # large-star and small-star map to themselves: the fixpoint holds
+    # before round 1. A hash-spread graph runs the round loop.
+    converged = seen["p_lo"] == seen["p_hi"]
 
     def large_star(sym: DataFrame) -> DataFrame:
         mins = sym.groupBy("src").agg(F.min("dst").alias("_mn"))
@@ -972,6 +984,8 @@ def _cc_star(directed: DataFrame, _materialize, max_iter: int) -> DataFrame:
         )
 
     for it in range(max_iter):
+        if converged:
+            break
         # large_star is not materialized on its own: the round
         # materializes ONCE, after small_star. small_star's two
         # consumers of the large_star output (the groupBy mins and the
@@ -982,24 +996,22 @@ def _cc_star(directed: DataFrame, _materialize, max_iter: int) -> DataFrame:
         # (OPTIMIZATION_r16.md §2).
         obs = Observation(f"cc_fp_{it}")
         stars = _materialize(
-            small_star(large_star(cur)).observe(obs, *_edge_fingerprint())
+            small_star(large_star(_symmetrize(stars))).observe(
+                obs, *_edge_fingerprint()
+            )
         )
         fp = (obs.get["n"], obs.get["h"])
-        if fp == prev_fp:
-            labels = stars.groupBy("src").agg(F.min("dst").alias("component"))
-            return _materialize(
-                all_nodes.join(
-                    labels, all_nodes["node"] == labels["src"], "left"
-                ).select(
-                    "node",
-                    F.coalesce(F.col("component"), F.col("node")).alias("component"),
-                )
-            )
-        prev_fp = fp
-        cur = _symmetrize(stars)
-    raise RuntimeError(
-        f"connected_components(algo='star') did not converge in {max_iter} "
-        "alternations; raise max_iter"
+        converged, prev_fp = fp == prev_fp, fp
+    if not converged:
+        raise RuntimeError(
+            f"connected_components(algo='star') did not converge in {max_iter} "
+            "alternations; raise max_iter"
+        )
+    labels = stars.groupBy("src").agg(F.min("dst").alias("component"))
+    return _materialize(
+        all_nodes.join(labels, all_nodes["node"] == labels["src"], "left").select(
+            "node", F.coalesce(F.col("component"), F.col("node")).alias("component")
+        )
     )
 
 

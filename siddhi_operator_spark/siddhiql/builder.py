@@ -1408,8 +1408,9 @@ def _run_pattern_special(
                 ab = ab.filter(F.expr(absent.predicate))
             ab = ab.select(F.col(key).alias("__ka"), F.col(ts_col).alias("__ats"))
             pts = f"{present.alias}_{ts_col}"
+            # a NULL key is its own key, as in absence_nfa and the scan tier
             cond = (
-                (F.col("__k") == F.col("__ka"))
+                F.col("__k").eqNullSafe(F.col("__ka"))
                 & (F.col("__ats") < F.col(pts))
                 & (F.col("__ats") >= F.col(pts) - F.expr(f"INTERVAL {budget} SECONDS"))
             )
@@ -1494,8 +1495,9 @@ def _run_pattern_special(
         if last.predicate:
             ab = ab.filter(F.expr(last.predicate))
         ab = ab.select(F.col(key).alias("__ka"), F.col(ts_col).alias("__ats"))
+        # a NULL key is its own key, as in absence_nfa and the scan tier
         cond = (
-            (F.col("__k") == F.col("__ka"))
+            F.col("__k").eqNullSafe(F.col("__ka"))
             & (F.col("__ats") > F.col(prev_ts))
             & (F.col("__ats") <= F.col(prev_ts) + F.expr(f"INTERVAL {budget} SECONDS"))
         )

@@ -493,7 +493,8 @@ def test_winnow_fingerprints_shape(spark):
 def test_lsh_max_bucket_drops_degenerate_buckets(spark):
     """`max_bucket` drops super-buckets whole (deterministic): a
     template repeated many times stops producing quadratic pairs, while
-    distinct docs' pairs are unaffected."""
+    distinct docs' pairs are unaffected. The cap filters one side of
+    the bucket self-join, checked on both scoring tiers."""
     from siddhi_operator_spark.pipeline import dedup as D
 
     rows = [(i, "common boilerplate template text repeated verbatim") for i in range(30)]
@@ -502,15 +503,17 @@ def test_lsh_max_bucket_drops_degenerate_buckets(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     sigs = D.minhash_signature(docs)
     uncapped = D.lsh_candidate_pairs(sigs, max_bucket=None)
-    capped = D.lsh_candidate_pairs(sigs, max_bucket=10)
     # default "auto" derives a generous cap (>= 2000) — nothing drops here
     auto = D.lsh_candidate_pairs(sigs)
     assert auto.count() == uncapped.count()
     # the 30-clone template bucket alone yields 30*29/2 = 435 pairs
     assert uncapped.filter("id_a < 100").count() >= 435
-    assert capped.filter("id_a < 100").count() == 0  # super-bucket dropped
-    # the small near-dup pair survives the cap
-    assert capped.filter("id_a = 100 AND id_b = 101").count() == 1
+    for inline in (True, False):
+        capped = D.lsh_candidate_pairs(sigs, max_bucket=10, inline=inline)
+        # super-bucket dropped
+        assert capped.filter("id_a < 100").count() == 0, inline
+        # the small near-dup pair survives the cap
+        assert capped.filter("id_a = 100 AND id_b = 101").count() == 1, inline
 
 
 def test_brute_force_tiers_agree_and_guard(spark):

@@ -867,6 +867,31 @@ def test_shard_assign_never_single_partition(spark):
     assert "SortMergeJoin" not in plan
 
 
+@pytest.mark.parametrize("inline", [True, False])
+def test_lsh_cap_counts_buckets_once(spark, inline):
+    """The `max_bucket` cap filters one side of the bucket self-join
+    (both endpoints of a pair share one bucket), so the executed plan
+    holds ONE (band, band_hash) bucket-count aggregate on either
+    scoring tier, not one per side."""
+    import re
+
+    from siddhi_operator_spark.pipeline import dedup as D
+
+    rows = [(i, " ".join(f"w{(i * 7 + j) % 60}" for j in range(12))) for i in range(40)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    pairs = D.lsh_candidate_pairs(
+        D.minhash_signature(docs), inline=inline, max_bucket=2000
+    )
+    assert pairs.collect()
+    # the adaptive plan's final form, after collect()
+    plan = pairs._jdf.queryExecution().executedPlan().executedPlan().toString()
+    counts = re.findall(
+        r"HashAggregate\(keys=\[band#\d+, band_hash#\d+\], functions=\[count\(1\)\]",
+        plan,
+    )
+    assert len(counts) == 1, plan
+
+
 @pytest.mark.parametrize("max_bucket", [2000, None])
 def test_lsh_inline_scorer_stays_in_codegen(spark, max_bucket):
     """The inline scorer unrolls one substring compare per signature
@@ -900,14 +925,14 @@ def test_lsh_inline_scorer_stays_in_codegen(spark, max_bucket):
     assert any("n_sig_match" in t for t in subtrees)
 
 
-def test_connected_components_local_graph_runs_one_star_round(spark):
+def test_connected_components_local_graph_runs_zero_star_rounds(spark):
     """A graph that one partition holds whole leaves the per-partition
-    union-find contraction as min-rooted stars, so the contraction's
-    own fingerprint lets the first star round prove the fixpoint:
-    `max_iter=1` suffices, and the call plus a count of its result run
-    only the contraction, one round and the label assembly
-    (observed: 15 jobs on 4 cores, against 55 for the star loop before
-    the contraction, which needed more rounds)."""
+    union-find contraction as min-rooted stars, and the contraction's
+    strict edges all come from that one partition: the fixpoint holds
+    before round 1. `max_iter=0` suffices, and the call plus a count of
+    its result run only the contraction and the label assembly
+    (observed: 7 jobs on 4 cores, against 15 with one confirming star
+    round and 55 for the star loop before the contraction)."""
     from siddhi_operator_spark.pipeline import dedup as D
 
     # three components, 50 edges: a 20-node chain, a 16-node star and
@@ -917,14 +942,14 @@ def test_connected_components_local_graph_runs_one_star_round(spark):
     edges += [(200 + i, 200 + (i + 1) % 16) for i in range(16)]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long").coalesce(1)
     sc = spark.sparkContext
-    group = "test_cc_one_star_round"
+    group = "test_cc_zero_star_rounds"
     sc.setJobGroup(group, "connected_components on a one-partition graph")
     try:
-        out = D.connected_components(pairs, max_iter=1)
+        out = D.connected_components(pairs, max_iter=0)
         assert out.count() == 52
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs <= 15, jobs
+    assert jobs <= 7, jobs
     labels = {r.node: r.component for r in out.collect()}
     assert set(labels.values()) == {0, 100, 200}

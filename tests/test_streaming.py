@@ -360,7 +360,9 @@ def test_front_end_pattern_routes_to_nfa(spark, events_df):
 def test_front_end_absence_routes_to_timer(spark, events_df):
     """`e1 -> not E[p] for t` under run_app_streaming → absence_nfa.
     A signup on a NULL user_id fires with its key projected as NULL
-    (the key is cast back to the source type), like the batch runner."""
+    (the key is cast back to the source type), like the batch runner.
+    A NULL key is its own key in both runners: a NULL-user_id purchase
+    within the budget disarms a NULL-user_id signup."""
     from siddhi_operator_spark.siddhiql import run_app, run_app_streaming
 
     app = """
@@ -370,12 +372,16 @@ def test_front_end_absence_routes_to_timer(spark, events_df):
     select e1.event_id as signup_id, e1.user_id as user_id
     insert into NoPurchase;
     """
-    null_signup = spark.createDataFrame(
-        [(11, "2024-01-01 00:30:00", None, "signup", 3.0)],
+    null_keyed = spark.createDataFrame(
+        [
+            (11, "2024-01-01 00:30:00", None, "signup", 3.0),
+            (12, "2024-01-01 03:00:00", None, "signup", 4.0),
+            (13, "2024-01-01 03:00:05", None, "purchase", 5.0),
+        ],
         "event_id long, ts string, user_id long, event_type string, "
         "value double",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
-    events = events_df.unionByName(null_signup)
+    events = events_df.unionByName(null_keyed)
     s = _stream_events(spark, events, n_splits=4)
     outs = run_app_streaming(app, {"E": s})
     name = f"fa_{uuid.uuid4().hex[:8]}"
