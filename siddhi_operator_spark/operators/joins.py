@@ -55,14 +55,14 @@ def in_table(
     return stream.join(t, on=on, how="left_anti" if negate else "left_semi")
 
 
-# In-process memo for the derived regime pick (r14 — see
-# `operators/patterns.py` for the full rationale): keyed by both
-# analyzed plans' semanticHash + the key tuple + a rule version, so a
-# caller who composes the same auto join twice (or a front end that
-# rebuilds it per request) pays the stats job once per (stream pair,
-# join shape), not once per construction.
-_RULE_VERSION = 2  # v2: null-key rows excluded from the stats scan
-_DECISION_CACHE: dict[tuple, bool] = {}
+# The memo of the hot-key regime pick: keyed by the tagged frame's
+# analyzed-plan semanticHash (Catalyst's canonical identity — it covers
+# the input plans, keys and predicates), so building the same auto
+# query twice runs the stats job once.  In-process only, so the process
+# IS the code version.  A source whose files change under an unchanged
+# plan serves the cached pick; that is perf-only (the pick never
+# changes rows), and clear_decision_cache() is the refresh lever.
+_DECISION_CACHE: dict[int, bool] = {}
 STATS_JOBS_RUN = 0  # incremented per executed stats job (test hook)
 
 
@@ -70,93 +70,60 @@ def clear_decision_cache() -> None:
     _DECISION_CACHE.clear()
 
 
-def _plan_token(df: DataFrame) -> int | None:
-    # `_jdf` is a private JVM handle absent under Spark Connect — there
-    # every `auto` call silently degrades to re-running the (correct)
-    # stats job per construction; see the twin in operators/patterns.py
-    # for the Connect-safe fallback-token sketch.
-    try:
-        return df._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:
-        return None
+def _hot_key_rule(max_pairs: int, total: int) -> bool:
+    """Take the hot-key insurance tier iff the worst key's pair
+    production exceeds ``max(total / 4, 1e6)`` — see
+    :func:`_hot_key_pick`."""
+    return max_pairs > max(total // 4, 1_000_000)
 
 
-def derive_join_bucket(
-    left: DataFrame,
-    right: DataFrame,
-    equi_keys: Sequence[tuple[str, str]],
-    stats: tuple[int, int] | None = None,
-) -> bool:
-    """Derive the plain-vs-epoch-coarsened regime pick for
-    :func:`windowed_stream_join` from MEASURED key density (r13 — the
-    same discipline as `operators/patterns.py::choose_pattern_impl`,
-    extended to the join family's hot-key insurance tier).
+def _hot_key_pick(tagged: DataFrame) -> bool:
+    """The hot-key regime pick behind ``bucket="auto"`` (here) and
+    ``impl="auto"`` (`operators/patterns.py`): True picks the
+    insurance tier — the epoch-coarsened join, the pattern scan.
 
-    The plain keyed join's degenerate regime is per-key pair
-    production: it materializes l_k × r_k rows for key k BEFORE the
-    time-range residual filters them — one key holding 400 k events
-    is ~4e10 pairs and the join never finishes (measured, SCALEBENCH
-    r13 `jws_hotkey`). The epoch-coarsened tier (``bucket=True``)
-    bounds pairs to adjacent `within`-wide epochs, at a measured
-    1.4–1.7× penalty in the constant-density regime (×100 r8,
-    ×10000 r13) — same cost structure as the pattern scan tier, so
-    the same anchored rule: coarsen iff the worst key's pair
-    production ``max_k(l_k × r_k)`` exceeds ``max(total_rows / 4,
-    1e6)``.
+    ``tagged`` holds one row per event: key columns ``_k0.._kn`` and
+    ``_l``/``_r`` flags counting it on the left (arm) and right
+    (probe) side.  The plain keyed plans' degenerate regime is per-key
+    pair production — l_k × r_k rows for key k before the time
+    residual or first-match filter drops them.  One key holding 400 k
+    events is ~1.7e8 pattern pairs (the join could not finish a rep in
+    9.5 min where the scan took 1.6–4.7 s, SCALEBENCH r12) or ~4e10
+    join pairs (`jws_hotkey`, SCALEBENCH r13).  The insurance tiers
+    cost a keyed sort or epoch explode instead, measured 1.4–1.7×
+    slower at constant per-key density (r12 ×1000, r13 ×10000).
 
-    Cost: one aggregation job (per-side per-key counts unioned with a
-    side tag → one keyed agg → 1-row global max/sum). Run once per
-    (stream pair, join), not per micro-batch — at events ×10000 the
-    analogous pattern stats job costs ≈ one execution of the query
-    (SCALEBENCH r13), priced for continuous queries.
+    Rule (:func:`_hot_key_rule`): insure iff ``max_k(l_k × r_k) >
+    max(total / 4, 1e6)``.  ``total / 4`` is the crossover: the
+    insurance penalty is ~0.4× of the O(n) base work and each excess
+    pair costs ~2 shuffled rows.  The 1e6 floor keeps small inputs on
+    the plain plans, which are faster there.
 
-    r14: the decision is MEMOIZED per (analyzed-plan identities, key
-    tuple) so repeated construction runs zero extra Spark jobs, and
-    ``stats`` accepts a precomputed ``(max_pairs, total)`` pair to
-    skip the job entirely.  NULL keys are excluded from the stats
-    scan (ADVICE r13): an equi-join emits nothing for NULL keys, so a
-    null-heavy input must not flip the pick toward the
-    measured-slower coarsened tier."""
+    Cost: one aggregation job (per-key sums, then a 1-row max/sum),
+    about one execution of the query at events ×10000 (SCALEBENCH
+    r13), memoized per tagged plan.  NULL keys are left out: the plain
+    plans' equi keys never match them, so a null-heavy input must not
+    flip the pick.  Streaming inputs raise — the job cannot run on a
+    streaming plan."""
     global STATS_JOBS_RUN
-    if stats is not None:
-        max_pairs, total = stats
-        return max_pairs > max(total // 4, 1_000_000)
-    if left.isStreaming or right.isStreaming:
+    if tagged.isStreaming:
         raise ValueError(
-            "bucket='auto' is batch-only: the regime pick runs a stats "
-            "job at plan-build time — derive it on a batch sample via "
-            "derive_join_bucket(stats=...) and pass bucket=True/False "
-            "(Structured Streaming also needs the raw time-interval "
-            "condition to size state eviction)"
+            "impl='auto' / bucket='auto' is batch-only: the hot-key "
+            "pick runs a stats job at plan-build time — run the pick on "
+            "a batch sample, then pass the tier explicitly "
+            "(@plan(...) in QL)"
         )
-    lk = [p[0] for p in equi_keys]
-    rk = [p[1] for p in equi_keys]
-    cache_key = None
-    lt, rt = _plan_token(left), _plan_token(right)
-    if lt is not None and rt is not None:
-        cache_key = (_RULE_VERSION, lt, rt, tuple(lk), tuple(rk))
-        if cache_key in _DECISION_CACHE:
-            return _DECISION_CACHE[cache_key]
+    try:
+        token = tagged._jdf.queryExecution().analyzed().semanticHash()
+    except Exception:  # no JVM handle (Spark Connect): skip the memo
+        token = None
+    if token in _DECISION_CACHE:
+        return _DECISION_CACHE[token]
     STATS_JOBS_RUN += 1
-    lnn, rnn = F.lit(True), F.lit(True)
-    for c in lk:
-        lnn = lnn & F.col(c).isNotNull()
-    for c in rk:
-        rnn = rnn & F.col(c).isNotNull()
-    left, right = left.filter(lnn), right.filter(rnn)
-    lc = left.select(
-        *[F.col(c).alias(f"_k{i}") for i, c in enumerate(lk)],
-        F.lit(1).alias("_l"),
-        F.lit(0).alias("_r"),
-    )
-    rc = right.select(
-        *[F.col(c).alias(f"_k{i}") for i, c in enumerate(rk)],
-        F.lit(0).alias("_l"),
-        F.lit(1).alias("_r"),
-    )
+    keys = [c for c in tagged.columns if c.startswith("_k")]
     row = (
-        lc.unionByName(rc)
-        .groupBy(*[f"_k{i}" for i in range(len(lk))])
+        tagged.dropna(subset=keys)
+        .groupBy(*keys)
         .agg(F.sum("_l").alias("_nl"), F.sum("_r").alias("_nr"))
         .agg(
             F.max(F.col("_nl") * F.col("_nr")).alias("max_pairs"),
@@ -164,13 +131,37 @@ def derive_join_bucket(
         )
         .first()
     )
-    if row is None or row["max_pairs"] is None:
-        pick = False  # no rows on either side — either plan is a no-op
-    else:
-        pick = row["max_pairs"] > max(row["total"] // 4, 1_000_000)
-    if cache_key is not None:
-        _DECISION_CACHE[cache_key] = pick
+    # no rows on either side: either plan is a no-op
+    pick = row["max_pairs"] is not None and _hot_key_rule(
+        row["max_pairs"], row["total"]
+    )
+    if token is not None:
+        _DECISION_CACHE[token] = pick
     return pick
+
+
+def derive_join_bucket(
+    left: DataFrame,
+    right: DataFrame,
+    equi_keys: Sequence[tuple[str, str]],
+) -> bool:
+    """The plain-vs-epoch-coarsened pick for
+    :func:`windowed_stream_join` (``bucket="auto"``): True iff the
+    worst key's ``l_k × r_k`` pair production is hot
+    (:func:`_hot_key_pick`)."""
+
+    def side(df: DataFrame, cols: list[str], is_left: int) -> DataFrame:
+        return df.select(
+            *[F.col(c).alias(f"_k{i}") for i, c in enumerate(cols)],
+            F.lit(is_left).alias("_l"),
+            F.lit(1 - is_left).alias("_r"),
+        )
+
+    return _hot_key_pick(
+        side(left, [p[0] for p in equi_keys], 1).unionByName(
+            side(right, [p[1] for p in equi_keys], 0)
+        )
+    )
 
 
 def windowed_stream_join(

@@ -688,7 +688,6 @@ def connected_components(
     id_b: str = "id_b",
     max_iter: int = 25,
     checkpoint_dir: str | None = None,
-    algo: str = "star",
 ) -> DataFrame:
     """Duplicate-group clustering: connected components over a
     candidate-pair graph → (node, component) where component = the
@@ -696,59 +695,51 @@ def connected_components(
     choice, closing the dedup pipeline (candidates → groups → keep one
     per group).
 
-    Two algorithm tiers (``algo=``):
+    Per-partition contraction, then alternating large-star/small-star
+    rounds (Kiveris et al., "Connected Components in MapReduce and
+    Beyond"):
 
-    - ``"star"`` (default) — per-partition contraction, then
-      alternating large-star/small-star rounds (Kiveris et al.,
-      "Connected Components in MapReduce and Beyond"):
+    1. the directed pairs are materialized through one Arrow
+       union-find kernel per partition, with no shuffle: every node
+       becomes an edge (node, partition-local min root). Rows with a
+       NULL endpoint and self-loops pass through unchanged;
+       connectivity is unchanged, and the edge set never grows (a
+       partition's spanning forest has no more edges than the
+       partition). The input is first coalesced, without a
+       shuffle, to at most one partition per task slot. The
+       contraction is only as global as a partition, so a graph
+       whose edges are hash-spread over the partitions is only
+       partly contracted. Its cost at corpus scale (a Python pass
+       and a per-partition node dict over every edge) is
+       unmeasured;
+    2. each round, large-star hangs every node's larger neighbors
+       off its min neighbor and small-star flattens the smaller
+       ones; components contract to stars in O(log diameter)
+       rounds and the edge set shrinks every round;
+    3. a round has converged when its output equals its input
+       ("f(x) == x"), tested on an (edge count, xxhash64 sum)
+       fingerprint observed inside each materializing action. The
+       contraction's fingerprint seeds the check; a node contracted
+       to different roots in different partitions only costs more
+       rounds, never a wrong answer. As with any hash fingerprint,
+       two different edge sets with the same count and hash sum
+       would stop the loop early.
+    4. the fixpoint is also checked before round 1: the contraction's
+       action observes the min and max partition id of its strict
+       (src > dst) edges. When they are equal (or there is no such
+       edge), one partition held every non-trivial edge, its
+       union-find output is already the min-rooted stars, and no
+       star round runs. This fires when the pair frame reaches the
+       contraction in one partition (a small lazy join output that
+       adaptive execution coalesced, or a ``coalesce(1)``); a
+       hash-spread pair frame (e.g. a cached shuffle output) runs
+       the round loop.
 
-      1. the directed pairs are materialized through one Arrow
-         union-find kernel per partition, with no shuffle: every node
-         becomes an edge (node, partition-local min root). Rows with a
-         NULL endpoint and self-loops pass through unchanged;
-         connectivity is unchanged, and the edge set never grows (a
-         partition's spanning forest has no more edges than the
-         partition). The input is first coalesced, without a
-         shuffle, to at most one partition per task slot. The
-         contraction is only as global as a partition, so a graph
-         whose edges are hash-spread over the partitions is only
-         partly contracted. Its cost at corpus scale (a Python pass
-         and a per-partition node dict over every edge) is
-         unmeasured;
-      2. each round, large-star hangs every node's larger neighbors
-         off its min neighbor and small-star flattens the smaller
-         ones; components contract to stars in O(log diameter)
-         rounds and the edge set shrinks every round;
-      3. a round has converged when its output equals its input
-         ("f(x) == x"), tested on an (edge count, xxhash64 sum)
-         fingerprint observed inside each materializing action. The
-         contraction's fingerprint seeds the check; a node contracted
-         to different roots in different partitions only costs more
-         rounds, never a wrong answer. As with any hash fingerprint,
-         two different edge sets with the same count and hash sum
-         would stop the loop early.
-      4. the fixpoint is also checked before round 1: the contraction's
-         action observes the min and max partition id of its strict
-         (src > dst) edges. When they are equal (or there is no such
-         edge), one partition held every non-trivial edge, its
-         union-find output is already the min-rooted stars, and no
-         star round runs. This fires when the pair frame reaches the
-         contraction in one partition (a small lazy join output that
-         adaptive execution coalesced, or a ``coalesce(1)``); a
-         hash-spread pair frame (e.g. a cached shuffle output) runs
-         the round loop.
-
-      ``max_iter`` counts star rounds after the contraction, so
-      ``max_iter=0`` succeeds exactly on the zero-round case. The
-      star rounds without the contraction were measured against
-      min-label at ×100 docs (SCALEBENCH.md r6); the current tier
-      has not been measured at that scale.
-    - ``"label"`` — iterative min-label propagation. Each round every
-      node takes the min of its own label and its neighbors' labels —
-      one keyed shuffle per round, but EVERY round reshuffles the full
-      edge set and rounds scale with component diameter (a 40-node
-      chain exceeds the default cap). Kept as the simple reference
-      shape.
+    ``max_iter`` counts star rounds after the contraction, so
+    ``max_iter=0`` succeeds exactly on the zero-round case. The
+    star rounds without the contraction were measured against
+    min-label propagation at ×100 docs (SCALEBENCH.md r6); the current
+    tier has not been measured at that scale.
 
     Per round the frames are `localCheckpoint`-ed to truncate lineage
     (otherwise the plan doubles every round); `checkpoint_dir`
@@ -783,44 +774,7 @@ def connected_components(
             return df.localCheckpoint(eager=True)
 
     directed = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    if algo == "star":
-        return _cc_star(directed, _materialize, max_iter)
-    # Materialize the directed pairs FIRST: the symmetrizing union has
-    # two branches that would otherwise each recompute the entire
-    # upstream pipeline (for LSH input that is the full minhash scan,
-    # twice) inside one action.
-    base = _materialize(directed)
-    edges = _materialize(_symmetrize(base).distinct())
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("component"))
-    )
-    for _ in range(max_iter):
-        neigh = (
-            edges.join(labels, edges["dst"] == labels["node"])
-            .groupBy("src")
-            .agg(F.min("component").alias("nmin"))
-        )
-        updated = (
-            labels.join(neigh, labels["node"] == neigh["src"], "left")
-            .select(
-                "node",
-                F.col("component").alias("old"),
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nmin"), F.col("component"))
-                ).alias("component"),
-            )
-        )
-        updated = _materialize(updated)
-        changed = updated.filter(F.col("old") != F.col("component")).count()
-        labels = updated.select("node", "component")
-        if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds — "
-        "component diameter exceeds the cap; raise max_iter"
-    )
+    return _cc_star(directed, _materialize, max_iter)
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -1004,7 +958,7 @@ def _cc_star(directed: DataFrame, _materialize, max_iter: int) -> DataFrame:
         converged, prev_fp = fp == prev_fp, fp
     if not converged:
         raise RuntimeError(
-            f"connected_components(algo='star') did not converge in {max_iter} "
+            f"connected_components did not converge in {max_iter} "
             "alternations; raise max_iter"
         )
     labels = stars.groupBy("src").agg(F.min("dst").alias("component"))

@@ -78,7 +78,11 @@ def _plan_hints(q: QueryDef) -> dict[str, str]:
     Keys: ``impl`` ∈ {join, scan, auto} (pattern queries), ``bucket``
     ∈ {false, true, auto} (windowed stream-stream joins).  Unknown
     keys or values raise — a typo'd hint must never silently run the
-    unprotected plan the user asked to avoid."""
+    unprotected plan the user asked to avoid.  The annotation is the
+    only way to set the tier from QL; to pin it with zero stats jobs
+    (or in a streaming app, where 'auto' cannot run), run the pick on
+    a batch sample, then write ``@plan(impl='scan')`` /
+    ``@plan(bucket='true')``."""
     hints: dict[str, str] = {}
     for a in q.annotations:
         m = _PLAN_ANN_RE.match(a.strip())
@@ -953,9 +957,8 @@ def _run_join(
         equi = _equi_pairs(inp.on_expr, lname, rname) if applicable else []
         if not (applicable and equi):
             # 'auto' is lenient — the operator tier resolves
-            # bucket='auto' to plain for non-inner joins too, and an
-            # app-level plan_default must be safe on every query shape;
-            # an EXPLICIT bucket='true' that cannot apply raises.
+            # bucket='auto' to plain for non-inner joins too; an
+            # EXPLICIT bucket='true' that cannot apply raises.
             if bucket_hint == "true":
                 raise ValueError(
                     "@plan(bucket='true') applies to inner stream-"
@@ -1437,7 +1440,7 @@ def _run_pattern_special(
         j = a_side.join(
             b_side,
             on=(
-                (F.col("__k") == F.col("__k2"))
+                F.col("__k").eqNullSafe(F.col("__k2"))
                 & (dist <= int(inp.within_seconds * 1_000_000))
             ),
         ).drop("__k2")
@@ -1717,11 +1720,11 @@ def _run_pattern_simple(
             continue
         prev = prev_alias
         if inp.strict:
-            cond = (F.col("p.__k") == F.col("s.__k")) & (
+            cond = F.col("p.__k").eqNullSafe(F.col("s.__k")) & (
                 F.col(f"s.{step.alias}___seq") == F.col(f"p.{prev}___seq") + 1
             )
         else:
-            cond = (F.col("p.__k") == F.col("s.__k")) & (
+            cond = F.col("p.__k").eqNullSafe(F.col("s.__k")) & (
                 F.col(f"s.{step.alias}_{ts_col}") > F.col(f"p.{prev}_{ts_col}")
             )
         if inp.within_seconds is not None:
@@ -1864,11 +1867,11 @@ def _run_pattern_quantified(
                 prev_pa = last_pa
                 continue
             if inp.strict:
-                cond = (F.col("p.__k") == F.col("s.__k")) & (
+                cond = F.col("p.__k").eqNullSafe(F.col("s.__k")) & (
                     F.col(f"s.{pa}___seq") == F.col(f"p.{prev_pa}___seq") + 1
                 )
             else:
-                cond = (F.col("p.__k") == F.col("s.__k")) & (
+                cond = F.col("p.__k").eqNullSafe(F.col("s.__k")) & (
                     F.col(f"s.{pa}_{ts_col}") > F.col(f"p.{prev_pa}_{ts_col}")
                 )
             if inp.within_seconds is not None:
@@ -2084,117 +2087,6 @@ def _trigger_ticks(spark, td, env, ts_col: str) -> DataFrame:
     )
 
 
-def _apply_plan_defaults(
-    model: AppModel, plan_defaults: dict[str, str]
-) -> AppModel:
-    """Return a COPY of the model with an app-wide `@plan(...)` default
-    attached to every query that has no explicit one (explicit wins).
-    Keys/values are validated up front through the same `_plan_hints`
-    rules, so a typo'd default fails at submit time rather than
-    silently planning unprotected.  Only 'auto' values make safe
-    blanket defaults — 'scan'/'true' raise on queries whose shape
-    cannot express them.
-
-    Copying (r14 advice): a caller-supplied parsed AppModel must stay
-    call-scoped — mutating it in place made the injected annotations
-    persist, so a later `run_app(model)` WITHOUT plan_defaults still
-    carried them, and a later run with DIFFERENT defaults was silently
-    blocked (the injected annotation counted as 'explicit')."""
-    import dataclasses
-
-    ann = "@plan(" + ", ".join(
-        f"{k}='{v}'" for k, v in sorted(plan_defaults.items())
-    ) + ")"
-    probe = QueryDef(input=None, select=[], annotations=[ann])
-    _plan_hints(probe)  # validate keys and values once, loudly
-    queries = [
-        q
-        if any(_PLAN_ANN_RE.match(a.strip()) for a in q.annotations)
-        else dataclasses.replace(q, annotations=[*q.annotations, ann])
-        for q in model.queries
-    ]
-    return dataclasses.replace(model, queries=queries)
-
-
-_INFO_ANN_RE = re.compile(r"@info\s*\(\s*name\s*=\s*'([^']*)'\s*\)\s*$", re.I)
-
-
-def _query_info_name(q: QueryDef) -> str | None:
-    """The query's `@info(name='…')` annotation value, if any — the
-    reference's query-naming surface (`[qapi] annotation` `@info`)."""
-    for a in q.annotations:
-        m = _INFO_ANN_RE.match(a.strip())
-        if m:
-            return m.group(1)
-    return None
-
-
-def _apply_plan_stats(
-    model: AppModel, plan_stats: dict[str, tuple[int, int]]
-) -> AppModel:
-    """Pin the derived regime picks from PRECOMPUTED corpus stats —
-    zero Spark jobs at submit time (r15, closing the r14 verdict's
-    "QL-tier `auto` cannot take precomputed stats").
-
-    ``plan_stats`` maps a query's `@info(name='…')` to the
-    ``(max_pairs, total_rows)`` pair the operator tier's ``stats=``
-    parameter takes (`operators/patterns.py::choose_pattern_impl`,
-    `operators/joins.py::derive_join_bucket`).  Derive it offline ONCE
-    on a batch sample of the same bytes:
-
-        max_pairs = worst single key's arm_count × probe_count
-        total    = total (non-null-key) rows
-
-    then submit the app — batch or STREAMING — with the pick pinned.
-    The stats resolve through the same anchored decision rule the
-    'auto' tier uses, and land as an explicit `@plan(...)` annotation
-    on a COPY of the query (caller's model untouched): an existing
-    explicit non-'auto' hint wins; 'auto' or absent hints take the
-    pinned pick.  Naming a query that doesn't exist raises — a typo'd
-    name must not silently leave the hot-key query unprotected."""
-    import dataclasses
-
-    from ..operators.joins import derive_join_bucket
-    from ..operators.patterns import choose_pattern_impl
-
-    matched: set[str] = set()
-    queries: list[QueryDef] = []
-    for q in model.queries:
-        name = _query_info_name(q)
-        if name is None or name not in plan_stats:
-            queries.append(q)
-            continue
-        matched.add(name)
-        stats = tuple(plan_stats[name])
-        pinned_impl = choose_pattern_impl(None, "", None, None, stats=stats)
-        pinned_bucket = (
-            "true" if derive_join_bucket(None, None, (), stats=stats) else "false"
-        )
-        hints = _plan_hints(q)
-        new = {
-            "impl": hints.get("impl")
-            if hints.get("impl") not in (None, "auto")
-            else pinned_impl,
-            "bucket": hints.get("bucket")
-            if hints.get("bucket") not in (None, "auto")
-            else pinned_bucket,
-        }
-        ann = "@plan(" + ", ".join(
-            f"{k}='{v}'" for k, v in sorted(new.items())
-        ) + ")"
-        anns = [
-            a for a in q.annotations if not _PLAN_ANN_RE.match(a.strip())
-        ] + [ann]
-        queries.append(dataclasses.replace(q, annotations=anns))
-    unknown = sorted(set(plan_stats) - matched)
-    if unknown:
-        raise ValueError(
-            f"plan_stats names unknown queries {unknown} — match the "
-            "app's @info(name='…') annotations"
-        )
-    return dataclasses.replace(model, queries=queries)
-
-
 def run_app(
     app: str | AppModel,
     sources: dict[str, DataFrame] | None = None,
@@ -2203,8 +2095,6 @@ def run_app(
     pattern_key: str = "user_id",
     spark: SparkSession | None = None,
     write_sinks: bool = False,
-    plan_defaults: dict[str, str] | None = None,
-    plan_stats: dict[str, tuple[int, int]] | None = None,
 ) -> dict[str, DataFrame]:
     """Execute a SiddhiQL app in batch/analytics mode.
 
@@ -2214,23 +2104,7 @@ def run_app(
     declared with `@source(type='file', @map(...))` load themselves
     (SURVEY.md §3.1) when not passed explicitly; with
     ``write_sinks=True``, outputs whose stream carries
-    `@sink(type='file', @map(...))` are also written out.
-
-    ``plan_defaults`` (r14): engine-level hot-key insurance — e.g.
-    ``{"impl": "auto", "bucket": "auto"}`` applies the derived regime
-    picks to EVERY pattern/join query that carries no explicit
-    ``@plan`` annotation (explicit annotations win; 'auto' is lenient
-    on shapes it cannot express, so a blanket default is always
-    safe). The Siddhi analog is an app-level `@app:` annotation
-    changing planner behavior for the whole app.
-
-    ``plan_stats`` (r15): precomputed regime-pick stats, keyed by the
-    query's `@info(name='…')` — derive ``(max_pairs, total)`` offline
-    ONCE (`choose_pattern_impl(stats=…)` / `derive_join_bucket(stats=…)`
-    on a batch sample of the same bytes) and submit with the pick
-    pinned; ZERO stats jobs run at submit time.  Explicit non-'auto'
-    `@plan` hints win over stats; 'auto' hints and un-annotated named
-    queries take the pinned pick.  See :func:`_apply_plan_stats`."""
+    `@sink(type='file', @map(...))` are also written out."""
     from ..sources import (
         has_on_error_stream,
         load_file_source,
@@ -2239,10 +2113,6 @@ def run_app(
     )
 
     model = parse_app(app) if isinstance(app, str) else app
-    if plan_stats:
-        model = _apply_plan_stats(model, plan_stats)
-    if plan_defaults:
-        model = _apply_plan_defaults(model, plan_defaults)
     env: dict[str, DataFrame] = dict(sources or {})
     outputs: dict[str, DataFrame] = {}
     if spark is None:
@@ -2940,15 +2810,15 @@ def _run_join_streaming(
     # tier from QL text — epoch-widened equi keys bound per-key state
     # probes (SCALEBENCH r14: plain DNFs on a 400 k-event key where
     # the bucketed join takes 28.6 s). 'auto' is batch-only (the pick
-    # needs a stats job): derive it offline on a batch sample via
-    # `operators.joins.derive_join_bucket` and write bucket='true'.
+    # needs a stats job): run the pick on a batch sample, then write
+    # bucket='true'.
     bucket_hint = _plan_hints(q).get("bucket")
     bucket = False
     if bucket_hint == "auto":
         raise ValueError(
-            "@plan(bucket='auto') is batch-only — derive the pick on a "
-            "batch sample via operators.joins.derive_join_bucket and "
-            "use @plan(bucket='true') in the streaming app"
+            "@plan(bucket='auto') is batch-only — run the pick on a "
+            "batch sample, then write @plan(bucket='true') in the "
+            "streaming app"
         )
     if bucket_hint == "true":
         if how != "inner":
@@ -3095,8 +2965,6 @@ def run_app_streaming(
     pattern_key: str = "user_id",
     spark: SparkSession | None = None,
     watermark: str = "1 minute",
-    plan_defaults: dict[str, str] | None = None,
-    plan_stats: dict[str, tuple[int, int]] | None = None,
 ) -> dict[str, DataFrame]:
     """Execute a SiddhiQL app in STREAMING mode (entry point A on
     Structured Streaming): returns {output stream: unbounded DataFrame}
@@ -3120,50 +2988,16 @@ def run_app_streaming(
     Other shapes outside the supported select forms raise with a
     pointer to the operator API.
 
-    ``plan_defaults`` / ``@plan`` per-runner contract (r15): this
-    runner honors ``bucket='true'`` on stream-stream joins (the epoch
-    insurance tier).  ``bucket='auto'`` is batch-only (the stats job
-    cannot run on a streaming plan) — as an app-level DEFAULT it is
-    downgraded to plain with a `UserWarning` so the same blanket
-    ``{'impl': 'auto', 'bucket': 'auto'}`` dict works in both
-    runners; an EXPLICIT per-query ``@plan(bucket='auto')`` still
-    raises (the user named a specific query; silence would fake
-    protection).  ``impl=`` hints are a NO-OP for streaming pattern
-    queries: the streaming NFA's state layout (`@app:stateBuckets`,
-    `..streaming.cep`) IS the streaming pattern hot-key answer —
-    there is no scan/join regime to pick.
-
-    ``plan_stats`` (r15): the streaming story for precomputed picks —
-    derive ``(max_pairs, total)`` offline on a batch sample, key by
-    `@info(name='…')`, and the pick lands pinned (bucket='true' /
-    'false'); ZERO stats jobs at submit time, no batch-only 'auto'
-    error.  See :func:`_apply_plan_stats` and :func:`run_app`."""
-    import warnings
-
+    ``@plan`` in this runner: ``bucket='true'`` on stream-stream joins
+    takes the epoch insurance tier; ``bucket='auto'`` raises (the pick
+    runs a batch stats job — run it on a batch sample, then write
+    ``@plan(bucket='true')``).  ``impl=`` hints are a no-op for
+    streaming pattern queries: the streaming NFA's state layout
+    (`@app:stateBuckets`, `..streaming.cep`) IS the streaming pattern
+    hot-key answer — there is no scan/join regime to pick."""
     from ..sources import stream_file_source, stream_http_source
 
     model = parse_app(app) if isinstance(app, str) else app
-    if plan_stats:
-        model = _apply_plan_stats(model, plan_stats)
-    if plan_defaults:
-        if plan_defaults.get("bucket") == "auto":
-            # downgrade, loudly: 'auto' needs a batch stats job. The
-            # derive-offline recipe: run derive_join_bucket on a batch
-            # sample of the same bytes, then pass bucket='true'.
-            warnings.warn(
-                "plan_defaults bucket='auto' is batch-only; the "
-                "streaming runner downgrades it to the plain join. "
-                "Derive the pick offline (operators.joins."
-                "derive_join_bucket on a batch sample) and pass "
-                "bucket='true' to protect streaming joins.",
-                UserWarning,
-                stacklevel=2,
-            )
-            plan_defaults = {
-                k: v for k, v in plan_defaults.items() if k != "bucket"
-            }
-        if plan_defaults:
-            model = _apply_plan_defaults(model, plan_defaults)
     env: dict[str, DataFrame] = dict(sources or {})
     if spark is None:
         if not env:

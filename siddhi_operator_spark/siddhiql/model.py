@@ -126,11 +126,11 @@ class QueryDef:
     # output event type (`[core] query/selector/QuerySelector.java`)
     event_type: str = "current"
     # query-level annotations (`@info(name='q1')`, and the r14 engine
-    # extension `@plan(impl=..., bucket=...)` that routes the derived
-    # hot-key regime picks — `operators/patterns.py::choose_pattern_impl`
-    # / `operators/joins.py::derive_join_bucket` — through the QL front
-    # end; the reference's annotation surface is `[qapi]
-    # annotation/Annotation.java`)
+    # extension `@plan(impl=..., bucket=...)`, the one way to set the
+    # hot-key insurance tier from QL — 'auto' runs the pick
+    # (`operators/joins.py::_hot_key_pick`); to pin it, run the pick
+    # on a batch sample, then write `@plan(...)`; the reference's
+    # annotation surface is `[qapi] annotation/Annotation.java`)
     annotations: list[str] = field(default_factory=list)
 
 

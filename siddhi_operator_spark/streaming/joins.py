@@ -50,12 +50,13 @@ def stream_stream_join(
     eviction semantics are unchanged and output stays row-identical.
     Inner joins only (the batch tier's contract).  ``bucket='auto'``
     is batch-only — the pick runs a stats job the streaming planner
-    cannot: derive it on a batch sample via
-    ``operators.joins.derive_join_bucket`` and pass the bool."""
+    cannot: run the pick on a batch sample
+    (``operators.joins.derive_join_bucket``), then pass the bool
+    (``@plan(bucket='true')`` in QL)."""
     if isinstance(bucket, str):
         raise ValueError(
-            "bucket='auto' is batch-only — derive the pick on a batch "
-            "sample via operators.joins.derive_join_bucket and pass "
+            "bucket='auto' is batch-only — run the pick on a batch "
+            "sample (operators.joins.derive_join_bucket), then pass "
             "bucket=True/False"
         )
     lw = left.withWatermark(left_ts, watermark)

@@ -1348,7 +1348,7 @@ def siddhiql_playback(spark: SparkSession, sf: str) -> DataFrame:
 
 
 @register(
-    "siddhiql_plan_stats_pinned",
+    "siddhiql_plan_scan_pinned",
     oracle="""
     SELECT signup_id, purchase_id
     FROM (
@@ -1361,21 +1361,20 @@ def siddhiql_playback(spark: SparkSession, sf: str) -> DataFrame:
        AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 1 HOUR
     ) WHERE rn = 1
     """,
-    tags=("siddhiql", "pattern", "plan-stats"),
+    tags=("siddhiql", "pattern", "plan-pinned"),
 )
-def siddhiql_plan_stats_pinned(spark: SparkSession, sf: str) -> DataFrame:
-    """r15 (r14 verdict #3): `plan_stats` pins the derived regime pick
-    from stats computed OFFLINE — this row submits the canonical
-    followed-by with hot-key stats (`max_pairs` far above the anchored
-    threshold) so the SCAN tier plans with ZERO stats jobs at submit
-    time (`tests/test_siddhiql.py::test_ql_plan_stats_pins_picks_zero_
-    jobs` pins the job count; this row pins the tier's OUTPUT against
-    the join-tier relational oracle — the row-identical contract the
-    tiers must keep under every routing door)."""
+def siddhiql_plan_scan_pinned(spark: SparkSession, sf: str) -> DataFrame:
+    """A pinned `@plan(impl='scan')` — the tier a user writes after
+    running the pick on a batch sample — plans the canonical
+    followed-by on the SCAN tier with ZERO stats jobs
+    (`tests/test_siddhiql.py::test_ql_plan_pinned_hints_zero_jobs`
+    pins the job count; this row pins the tier's OUTPUT against the
+    join-tier relational oracle — the row-identical contract the tiers
+    must keep under every routing door)."""
     app = (
         _EVENTS_DEF
         + """
-    @info(name='conv')
+    @plan(impl='scan')
     from every e1=events[event_type == 'signup']
          -> e2=events[event_type == 'purchase']
          within 1 hour
@@ -1387,7 +1386,6 @@ def siddhiql_plan_stats_pinned(spark: SparkSession, sf: str) -> DataFrame:
         app,
         {"events": load(spark, sf, "events")},
         pattern_key="user_id",
-        plan_stats={"conv": (10_000_000, 1_000)},
     )["Conversions"]
 
 

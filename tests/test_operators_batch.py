@@ -768,12 +768,14 @@ def test_join_bucket_auto_derives_regime(spark, events_df):
 
 
 def test_derived_pick_memo_stats_and_guards(spark):
-    """r14: the derived regime picks are MEMOIZED (second construction
-    of the same auto query runs zero extra Spark jobs), accept a
-    precomputed stats row, exclude NULL keys from the stats scan
-    (ADVICE r13 — a join emits nothing for NULL keys, so a null-heavy
-    input must not flip the pick), and raise a clear ValueError on
-    streaming inputs instead of an opaque AnalysisException."""
+    """The hot-key pick behind both derived families (pattern
+    ``impl="auto"``, join ``bucket="auto"``) is MEMOIZED — one stats
+    job for a first pick, zero for a repeat, one counter for both —
+    applies one rule (checked on the pure rule function), excludes
+    NULL keys from the stats scan (a join emits nothing for NULL keys,
+    so a null-heavy input must not flip the pick), and raises a clear
+    ValueError on streaming inputs instead of an opaque
+    AnalysisException."""
     import pytest
 
     from siddhi_operator_spark.operators import joins as J
@@ -795,34 +797,34 @@ def test_derived_pick_memo_stats_and_guards(spark):
     pur = F.col("event_type") == "purchase"
     keys = [("user_id", "user_id")]
 
-    # --- memoization: same (plan, shape) -> one stats job total
-    P.clear_decision_cache()
+    # --- memoization: one job per first pick, zero per repeat
     J.clear_decision_cache()
     hot = mk(1, 1200)
-    before = P.STATS_JOBS_RUN
+    before = J.STATS_JOBS_RUN
     assert P.choose_pattern_impl(hot, "user_id", sig, pur) == "scan"
-    assert P.STATS_JOBS_RUN == before + 1
+    assert J.STATS_JOBS_RUN == before + 1
     assert P.choose_pattern_impl(hot, "user_id", sig, pur) == "scan"
-    assert P.STATS_JOBS_RUN == before + 1  # cache hit, zero extra jobs
+    # a rebuilt identical frame is the same analyzed plan: a hit too
+    assert P.choose_pattern_impl(mk(1, 1200), "user_id", sig, pur) == "scan"
+    assert J.STATS_JOBS_RUN == before + 1  # cache hits, zero extra jobs
     hs, hp = hot.filter(sig), hot.filter(pur)
-    jb = J.STATS_JOBS_RUN
     assert J.derive_join_bucket(hs, hp, keys) is True
-    assert J.STATS_JOBS_RUN == jb + 1
+    assert J.STATS_JOBS_RUN == before + 2
     assert J.derive_join_bucket(hs, hp, keys) is True
-    assert J.STATS_JOBS_RUN == jb + 1  # cache hit
+    assert J.STATS_JOBS_RUN == before + 2  # cache hit
     # a DIFFERENT predicate/plan is a different cache key
     assert P.choose_pattern_impl(mk(1000, 2), "user_id", sig, pur) == "join"
-    assert P.STATS_JOBS_RUN == before + 2
-    P.clear_decision_cache()
+    assert P.choose_pattern_impl(hot, "user_id", pur, sig) == "scan"
+    assert J.STATS_JOBS_RUN == before + 4
     J.clear_decision_cache()
 
-    # --- precomputed stats skip the job entirely
-    b2 = P.STATS_JOBS_RUN
-    assert P.choose_pattern_impl(hot, "user_id", sig, pur, stats=(2_000_000, 100)) == "scan"
-    assert P.choose_pattern_impl(hot, "user_id", sig, pur, stats=(10, 100)) == "join"
-    assert J.derive_join_bucket(hs, hp, keys, stats=(2_000_000, 100)) is True
-    assert J.derive_join_bucket(hs, hp, keys, stats=(10, 100)) is False
-    assert P.STATS_JOBS_RUN == b2 and J.STATS_JOBS_RUN == jb + 1
+    # --- the rule: worst key's pairs > max(total // 4, 1e6)
+    assert J._hot_key_rule(2_000_000, 100) is True
+    assert J._hot_key_rule(10, 100) is False
+    assert J._hot_key_rule(1_000_000, 100) is False  # the 1e6 floor
+    assert J._hot_key_rule(1_000_001, 100) is True
+    assert J._hot_key_rule(2_000_000, 8_000_000) is False  # total / 4
+    assert J._hot_key_rule(2_000_001, 8_000_000) is True
 
     # --- NULL keys never flip the pick: ALL the density lives on a
     # NULL key, which the join would emit nothing for
@@ -854,8 +856,6 @@ def test_derived_pick_memo_stats_and_guards(spark):
         J.windowed_stream_join(
             rate, rate, "ts", "ts", keys, within_seconds=10, bucket="auto",
         )
-    # but precomputed stats ARE usable for streaming regime planning
-    assert P.choose_pattern_impl(rate, "user_id", sig, pur, stats=(10, 100)) == "join"
     # the streaming twin rejects 'auto' at its own door too
     from siddhi_operator_spark.streaming import joins as SJ
 

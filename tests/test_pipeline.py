@@ -283,16 +283,15 @@ def test_connected_components_degenerate_inputs(spark, tmp_path):
 
 
 def test_connected_components_star_equivalence(spark):
-    """The large-star/small-star tier must produce exactly the same
-    (node, component-min) labels as min-label propagation — including
-    on a long chain (the high-diameter case it exists for) and random
-    graphs."""
+    """The large-star/small-star rounds must produce exactly the
+    union-find reference's (node, component-min) labels — including
+    on a long chain (the high-diameter case they exist for, within the
+    default round cap) and random graphs."""
     import random
 
     from siddhi_operator_spark.pipeline import dedup as D
 
-    # 40-node chain: diameter 39 — label needs ~busy rounds, star O(log)
-    chain = [(i, i + 1) for i in range(39)]
+    chain = [(i, i + 1) for i in range(39)]  # diameter 39
     cases = [chain]
     rng = random.Random(13)
     for _ in range(3):
@@ -308,19 +307,11 @@ def test_connected_components_star_equivalence(spark):
         )
     for i, edges in enumerate(cases):
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        # label needs O(diameter) rounds (60 covers the chain); star's
-        # default 25 must suffice everywhere — that asymmetry is the point
-        label = {
-            r.node: r.component
-            for r in D.connected_components(
-                pairs, max_iter=60, algo="label"
-            ).collect()
-        }
         star = {
             r.node: r.component
-            for r in D.connected_components(pairs, algo="star").collect()
+            for r in D.connected_components(pairs).collect()
         }
-        assert star == label, f"case {i}"
+        assert star == _union_find_components(edges), f"case {i}"
 
 
 # ---------------------------------------------------------------------------

@@ -1866,9 +1866,7 @@ def test_ql_plan_hints_route_derived_picks(spark):
     join, outputs are row-identical either way, and a typo'd hint
     raises instead of silently running the unprotected plan."""
     from siddhi_operator_spark.operators import joins as J
-    from siddhi_operator_spark.operators import patterns as P
 
-    P.clear_decision_cache()
     J.clear_decision_cache()
 
     def mk(n_keys: int, per_key: int):
@@ -1992,9 +1990,9 @@ def test_ql_absence_scan_tier(spark):
     (the anti-join's per-probe group scan never short-circuits on
     absence output); row-identical to the join tier; explicit scan on
     inexpressible shapes raises."""
-    from siddhi_operator_spark.operators import patterns as P
+    from siddhi_operator_spark.operators import joins as J
 
-    P.clear_decision_cache()
+    J.clear_decision_cache()
 
     def mk(n_keys: int, per_key: int):
         n = n_keys * per_key * 2
@@ -2083,9 +2081,9 @@ def test_ql_backward_absence_scan_tier(spark):
     """r14: the backward (logical) absence `not S[p] for t and
     e2=S[q]` reaches the mirrored nearest-probe scan under
     `@plan(impl='auto'|'scan')`, row-identical to the anti-join."""
-    from siddhi_operator_spark.operators import patterns as P
+    from siddhi_operator_spark.operators import joins as J
 
-    P.clear_decision_cache()
+    J.clear_decision_cache()
 
     def mk(n_keys: int, per_key: int):
         n = n_keys * per_key * 2
@@ -2137,6 +2135,7 @@ def test_run_app_streaming_join_bucket_hint(spark):
     import uuid
 
     from siddhi_operator_spark.catalog import load, load_events_stream
+    from siddhi_operator_spark.operators import joins as J
     from siddhi_operator_spark.siddhiql.builder import run_app_streaming
 
     app = """
@@ -2163,9 +2162,11 @@ def test_run_app_streaming_join_bucket_hint(spark):
     assert want
     cs = load_events_stream(spark, sf).filter(F.col("event_type") == "click")
     vs = load_events_stream(spark, sf).filter(F.col("event_type") == "view")
+    before = J.STATS_JOBS_RUN
     outs = run_app_streaming(
         app, {"Clicks": cs, "Views": vs}, watermark="13 hours"
     )
+    assert J.STATS_JOBS_RUN == before  # a pinned tier runs no stats job
     name = f"sjb_{uuid.uuid4().hex[:8]}"
     q = (
         outs["Pairs"].writeStream.format("memory")
@@ -2183,315 +2184,78 @@ def test_run_app_streaming_join_bucket_hint(spark):
         )
 
 
-def test_ql_plan_defaults(spark):
-    """r14: `plan_defaults` gives app-level hot-key insurance — every
-    pattern/join query without an explicit @plan gets the derived
-    picks; explicit annotations win; non-pattern/join queries are
-    unaffected; inapplicable shapes stay plain ('auto' leniency); a
-    typo'd default raises at submit time."""
-    from siddhi_operator_spark.operators import patterns as P
-
-    P.clear_decision_cache()
-
-    def mk(n_keys: int, per_key: int):
-        n = n_keys * per_key * 2
-        return spark.range(n).select(
-            F.col("id").alias("event_id"),
-            F.timestamp_seconds(F.lit(1700000000) + F.col("id")).alias("ts"),
-            (F.col("id") % n_keys).alias("user_id"),
-            F.when((F.col("id") % 2) == 0, "signup")
-            .otherwise("purchase")
-            .alias("event_type"),
-        )
-
-    defs = """
-    define stream events (event_id long, ts string, user_id long,
-                          event_type string);
-    """
-    app = defs + """
-    from events[event_type == 'signup']
-    select event_id, user_id
-    insert into Plain;
-
-    from every e1=events[event_type == 'signup']
-         -> e2=events[event_type == 'purchase'] within 1 hour
-    select e1.event_id as signup_id, e2.event_id as purchase_id
-    insert into Conv;
-
-    @plan(impl='join')
-    from every a=events[event_type == 'signup']
-         -> b=events[event_type == 'purchase'] within 1 hour
-    select a.event_id as signup_id, b.event_id as purchase_id
-    insert into Explicit;
-    """
-    hot = mk(1, 1200)
-    outs = run_app(
-        app, {"events": hot}, pattern_key="user_id",
-        plan_defaults={"impl": "auto", "bucket": "auto"},
-    )
-
-    def plan_of(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    assert "_probe" in plan_of(outs["Conv"])  # default routed to scan
-    assert "_probe" not in plan_of(outs["Explicit"])  # explicit wins
-    assert outs["Plain"].count() == 1200  # filter query unaffected
-    # default == no-default row identity on the pattern output
-    base = run_app(app, {"events": hot}, pattern_key="user_id")
-    assert sorted(map(tuple, outs["Conv"].collect())) == sorted(
-        map(tuple, base["Conv"].collect())
-    )
-    # typo'd default raises before any query builds
-    with pytest.raises(ValueError, match="@plan"):
-        run_app(
-            app, {"events": hot}, pattern_key="user_id",
-            plan_defaults={"impl": "atuo"},
-        )
-    # bucket default on an inapplicable join shape stays plain: a
-    # stream-table broadcast probe has no within -> leniency, no raise
-    tbl_app = defs + """
-    define table vip (user_id long, tier string);
-    from events join vip on events.user_id == vip.user_id
-    select events.event_id as event_id, vip.tier as tier
-    insert into Enriched;
-    """
-    vip = spark.createDataFrame([(0, "gold")], "user_id long, tier string")
-    out2 = run_app(
-        tbl_app, {"events": hot.limit(50), "vip": vip},
-        plan_defaults={"bucket": "auto", "impl": "auto"},
-    )
-    assert out2["Enriched"].count() == 50
-
-
-def test_ql_plan_stats_pins_picks_zero_jobs(spark):
-    """r15 (r14 verdict #3): `plan_stats` pins the derived regime
-    picks from stats computed OFFLINE — keyed by @info(name), zero
-    stats jobs at submit time, row-identical output, explicit
-    non-'auto' hints win, a typo'd name raises."""
+def test_ql_plan_pinned_hints_zero_jobs(spark):
+    """A pinned `@plan(...)` — what a user writes after running the
+    pick on a batch sample — takes its tier with ZERO stats jobs:
+    'scan'/'true' plan the insurance tiers, 'join'/'false' the plain
+    ones even on a hot key (explicit hints win), row-identical either
+    way; queries without a pattern or windowed join ignore the hint,
+    and 'auto' stays lenient on a stream-table join."""
     from siddhi_operator_spark.operators import joins as J
-    from siddhi_operator_spark.operators import patterns as P
-
-    P.clear_decision_cache()
-    J.clear_decision_cache()
-
-    def mk(n_keys: int, per_key: int):
-        n = n_keys * per_key * 2
-        return spark.range(n).select(
-            F.col("id").alias("event_id"),
-            F.timestamp_seconds(F.lit(1700000000) + F.col("id")).alias("ts"),
-            (F.col("id") % n_keys).alias("user_id"),
-            F.when((F.col("id") % 2) == 0, "signup")
-            .otherwise("purchase")
-            .alias("event_type"),
-        )
 
     defs = """
     define stream events (event_id long, ts string, user_id long,
                           event_type string);
     """
     app = defs + """
-    @info(name='conv')
-    @plan(impl='auto')
+    @plan(impl='scan')
     from every e1=events[event_type == 'signup']
          -> e2=events[event_type == 'purchase'] within 1 hour
     select e1.event_id as signup_id, e2.event_id as purchase_id
     insert into Conv;
 
-    @info(name='pairs')
+    @plan(bucket='true')
     from events[event_type == 'signup']#window.time(1 min) as a
       join events[event_type == 'purchase']#window.time(1 min) as b
       on a.user_id == b.user_id
     select a.user_id as user_id, a.event_id as l_id, b.event_id as r_id
     insert into Pairs;
-    """
-    hot = mk(1, 1200)
 
-    def plan_of(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    # hot stats pin scan + epoch tiers with ZERO stats jobs
-    hot_stats = (1200 * 1200, 2400)
-    before_p, before_j = P.STATS_JOBS_RUN, J.STATS_JOBS_RUN
-    outs = run_app(
-        app, {"events": hot}, pattern_key="user_id",
-        plan_stats={"conv": hot_stats, "pairs": hot_stats},
-    )
-    assert (P.STATS_JOBS_RUN, J.STATS_JOBS_RUN) == (before_p, before_j)
-    assert "_probe" in plan_of(outs["Conv"])
-    assert "Generate" in plan_of(outs["Pairs"])
-    # cold stats pin the plain tiers, still zero jobs
-    cold = run_app(
-        app, {"events": hot}, pattern_key="user_id",
-        plan_stats={"conv": (10, 2400), "pairs": (10, 2400)},
-    )
-    assert (P.STATS_JOBS_RUN, J.STATS_JOBS_RUN) == (before_p, before_j)
-    assert "_probe" not in plan_of(cold["Conv"])
-    assert "Generate" not in plan_of(cold["Pairs"])
-    # row identity across the pinned tiers
-    for k in ("Conv", "Pairs"):
-        assert sorted(map(tuple, outs[k].collect())) == sorted(
-            map(tuple, cold[k].collect())
-        )
-    # explicit non-auto hint wins over stats
-    exp = run_app(
-        app.replace("@plan(impl='auto')", "@plan(impl='join')"),
-        {"events": hot}, pattern_key="user_id",
-        plan_stats={"conv": hot_stats},
-    )
-    assert "_probe" not in plan_of(exp["Conv"])
-    # typo'd / unknown name raises at submit time
-    with pytest.raises(ValueError, match="plan_stats"):
-        run_app(
-            app, {"events": hot}, pattern_key="user_id",
-            plan_stats={"convv": hot_stats},
-        )
-    # plan_stats composes with plan_defaults: stats-pinned query keeps
-    # its pin, the unnamed remainder still gets the blanket default
-    both = run_app(
-        app, {"events": hot}, pattern_key="user_id",
-        plan_stats={"conv": (10, 2400)},
-        plan_defaults={"impl": "auto", "bucket": "auto"},
-    )
-    assert "_probe" not in plan_of(both["Conv"])  # pinned join wins
-
-
-def test_ql_plan_stats_streaming_zero_jobs(spark):
-    """r15: `plan_stats` is the streaming story for precomputed picks
-    — a hot-stats pin routes the streaming stream-stream join through
-    the epoch tier with zero stats jobs and no batch-only error,
-    row-identical to plain."""
-    import uuid
-
-    from siddhi_operator_spark.catalog import load, load_events_stream
-    from siddhi_operator_spark.operators import joins as J
-    from siddhi_operator_spark.siddhiql.builder import run_app_streaming
-
-    app = """
-    define stream Clicks (event_id long, ts string, user_id long, event_type string, value double);
-    define stream Views (event_id long, ts string, user_id long, event_type string, value double);
-    @info(name='pairs')
-    from Clicks#window.time(12 hour) join Views#window.time(12 hour)
-      on Clicks.user_id == Views.user_id
-    select Clicks.user_id as user_id, Clicks.event_id as click_id, Views.event_id as view_id
-    insert into Pairs;
-    """
-    sf = "/root/testdata/sf0.001"
-    e = load(spark, sf, "events")
-    want = sorted(
-        tuple(r)
-        for r in run_app(
-            app,
-            {
-                "Clicks": e.filter(F.col("event_type") == "click"),
-                "Views": e.filter(F.col("event_type") == "view"),
-            },
-        )["Pairs"].collect()
-    )
-    assert want
-    cs = load_events_stream(spark, sf).filter(F.col("event_type") == "click")
-    vs = load_events_stream(spark, sf).filter(F.col("event_type") == "view")
-    before = J.STATS_JOBS_RUN
-    outs = run_app_streaming(
-        app, {"Clicks": cs, "Views": vs}, watermark="13 hours",
-        plan_stats={"pairs": (10_000_000, 1_000)},
-    )
-    assert J.STATS_JOBS_RUN == before
-    name = f"sjs_{uuid.uuid4().hex[:8]}"
-    q = (
-        outs["Pairs"].writeStream.format("memory")
-        .queryName(name).outputMode("append").start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = sorted(tuple(r) for r in spark.table(name).collect())
-    assert got == want
-
-
-def test_ql_plan_defaults_streaming_leniency(spark):
-    """r15 (r14 verdict #4): the same blanket plan_defaults dict works
-    in BOTH runners — the streaming runner downgrades bucket='auto'
-    to plain with a UserWarning instead of raising; an EXPLICIT
-    per-query @plan(bucket='auto') still raises."""
-    import uuid
-    import warnings as W
-
-    from siddhi_operator_spark.catalog import load_events_stream
-    from siddhi_operator_spark.siddhiql.builder import run_app_streaming
-
-    app = """
-    define stream Clicks (event_id long, ts string, user_id long, event_type string, value double);
-    define stream Views (event_id long, ts string, user_id long, event_type string, value double);
-    from Clicks#window.time(12 hour) join Views#window.time(12 hour)
-      on Clicks.user_id == Views.user_id
-    select Clicks.user_id as user_id, Clicks.event_id as click_id, Views.event_id as view_id
-    insert into Pairs;
-    """
-    sf = "/root/testdata/sf0.001"
-    cs = load_events_stream(spark, sf).filter(F.col("event_type") == "click")
-    vs = load_events_stream(spark, sf).filter(F.col("event_type") == "view")
-    with W.catch_warnings(record=True) as rec:
-        W.simplefilter("always")
-        outs = run_app_streaming(
-            app, {"Clicks": cs, "Views": vs}, watermark="13 hours",
-            plan_defaults={"impl": "auto", "bucket": "auto"},
-        )
-    assert any("batch-only" in str(w.message) for w in rec)
-    name = f"sjl_{uuid.uuid4().hex[:8]}"
-    q = (
-        outs["Pairs"].writeStream.format("memory")
-        .queryName(name).outputMode("append").start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    assert spark.table(name).count() > 0
-    # explicit per-query auto still raises — the user named THIS query
-    with pytest.raises(ValueError, match="batch-only"):
-        run_app_streaming(
-            app.replace("from Clicks#", "@plan(bucket='auto')\n    from Clicks#"),
-            {"Clicks": cs, "Views": vs}, watermark="13 hours",
-        )
-
-
-def test_ql_plan_defaults_do_not_mutate_model(spark):
-    """r15 (r14 advice): plan_defaults stay call-scoped — a parsed
-    AppModel passed to run_app is NOT annotated in place, so a later
-    run without defaults plans unhinted and a later run with different
-    defaults is not blocked."""
-    from siddhi_operator_spark.siddhiql import parse_app
-
-    defs = """
-    define stream events (event_id long, ts string, user_id long,
-                          event_type string);
-    """
-    app = defs + """
-    from every e1=events[event_type == 'signup']
-         -> e2=events[event_type == 'purchase'] within 1 hour
-    select e1.event_id as signup_id, e2.event_id as purchase_id
-    insert into Conv;
+    @plan(impl='scan', bucket='true')
+    from events[event_type == 'signup']
+    select event_id, user_id
+    insert into Plain;
     """
     hot = spark.range(2400).select(
         F.col("id").alias("event_id"),
         F.timestamp_seconds(F.lit(1700000000) + F.col("id")).alias("ts"),
-        F.lit(0).alias("user_id"),
+        F.lit(0).cast("long").alias("user_id"),
         F.when((F.col("id") % 2) == 0, "signup")
         .otherwise("purchase")
         .alias("event_type"),
     )
-    model = parse_app(app)
-    before = [list(q.annotations) for q in model.queries]
 
     def plan_of(df):
         return df._jdf.queryExecution().executedPlan().toString()
 
-    out = run_app(
-        model, {"events": hot}, pattern_key="user_id",
-        plan_defaults={"impl": "auto"},
-    )["Conv"]
-    assert "_probe" in plan_of(out)  # default took effect this call
-    assert [list(q.annotations) for q in model.queries] == before
-    # a later run WITHOUT defaults plans unhinted (join tier)
-    out2 = run_app(model, {"events": hot}, pattern_key="user_id")["Conv"]
-    assert "_probe" not in plan_of(out2)
+    before = J.STATS_JOBS_RUN
+    pinned = run_app(app, {"events": hot}, pattern_key="user_id")
+    assert J.STATS_JOBS_RUN == before
+    assert "_probe" in plan_of(pinned["Conv"])
+    assert "Generate" in plan_of(pinned["Pairs"])
+    assert pinned["Plain"].count() == 1200
+    plain_app = app.replace("impl='scan'", "impl='join'").replace(
+        "bucket='true'", "bucket='false'"
+    )
+    plain = run_app(plain_app, {"events": hot}, pattern_key="user_id")
+    assert J.STATS_JOBS_RUN == before
+    assert "_probe" not in plan_of(plain["Conv"])
+    assert "Generate" not in plan_of(plain["Pairs"])
+    for k in ("Conv", "Pairs"):
+        assert sorted(map(tuple, pinned[k].collect())) == sorted(
+            map(tuple, plain[k].collect())
+        )
+    # 'auto' on a stream-table probe (no time window) stays plain
+    tbl_app = defs + """
+    define table vip (user_id long, tier string);
+    @plan(impl='auto', bucket='auto')
+    from events join vip on events.user_id == vip.user_id
+    select events.event_id as event_id, vip.tier as tier
+    insert into Enriched;
+    """
+    vip = spark.createDataFrame([(0, "gold")], "user_id long, tier string")
+    out = run_app(tbl_app, {"events": hot.limit(50), "vip": vip})
+    assert out["Enriched"].count() == 50
 
 
 def test_ql_plan_hint_strict_parse(spark):

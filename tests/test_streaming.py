@@ -335,8 +335,11 @@ def test_checkpoint_recovery_exactly_once(spark, events_df, tmp_path):
 
 def test_front_end_pattern_routes_to_nfa(spark, events_df):
     """A SiddhiQL pattern query under run_app_streaming must route to
-    the streaming NFA and honor alias.id/ts select references."""
-    from siddhi_operator_spark.siddhiql import run_app_streaming
+    the streaming NFA and honor alias.id/ts select references. A NULL
+    key is its own key in both runners: a NULL-user_id signup pairs
+    with the NULL-user_id purchase after it, and run_app gives the
+    same matches."""
+    from siddhi_operator_spark.siddhiql import run_app, run_app_streaming
 
     app = """
     define stream E (event_id long, ts string, user_id long,
@@ -346,23 +349,38 @@ def test_front_end_pattern_routes_to_nfa(spark, events_df):
     select e1.event_id as signup_id, e2.event_id as purchase_id
     insert into Matches;
     """
-    s = _stream_events(spark, events_df, n_splits=3)
+    null_keyed = spark.createDataFrame(
+        [
+            (11, "2024-01-01 03:00:00", None, "signup", 3.0),
+            (12, "2024-01-01 03:00:30", None, "purchase", 4.0),
+        ],
+        "event_id long, ts string, user_id long, event_type string, "
+        "value double",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    events = events_df.unionByName(null_keyed)
+    s = _stream_events(spark, events, n_splits=3)
     outs = run_app_streaming(app, {"E": s})
     name = f"fe_{uuid.uuid4().hex[:8]}"
     _run(outs["Matches"], name)
     rows = sorted(
-        (r.key, r.signup_id, r.purchase_id)
-        for r in spark.sql(f"select * from {name}").collect()
+        ((r.key, r.signup_id, r.purchase_id)
+         for r in spark.sql(f"select * from {name}").collect()),
+        key=lambda t: (t[0] is None, t),
     )
-    assert rows == [("1", 1, 3), ("2", 4, 6)]
+    assert rows == [("1", 1, 3), ("2", 4, 6), (None, 11, 12)]
+    batch = run_app(app, {"E": events})["Matches"].collect()
+    assert sorted((r.signup_id, r.purchase_id) for r in batch) == [
+        (1, 3), (4, 6), (11, 12)
+    ]
 
 
 def test_front_end_absence_routes_to_timer(spark, events_df):
     """`e1 -> not E[p] for t` under run_app_streaming → absence_nfa.
     A signup on a NULL user_id fires with its key projected as NULL
     (the key is cast back to the source type), like the batch runner.
-    A NULL key is its own key in both runners: a NULL-user_id purchase
-    within the budget disarms a NULL-user_id signup."""
+    A NULL key is its own key in both runners and in both batch tiers
+    (join and `@plan(impl='scan')`): a NULL-user_id purchase within
+    the budget disarms a NULL-user_id signup."""
     from siddhi_operator_spark.siddhiql import run_app, run_app_streaming
 
     app = """
@@ -396,6 +414,9 @@ def test_front_end_absence_routes_to_timer(spark, events_df):
     rows = _rows(spark.sql(f"select * from {name}"))
     assert rows == [(2, 4), (None, 11)]
     assert rows == _rows(run_app(app, {"E": events})["NoPurchase"])
+    # the batch scan tier keeps the same NULL-key semantics
+    scan_app = app.replace("from e1=", "@plan(impl='scan')\n    from e1=")
+    assert rows == _rows(run_app(scan_app, {"E": events})["NoPurchase"])
 
 
 def test_front_end_count_pattern_streaming(spark, events_df):
