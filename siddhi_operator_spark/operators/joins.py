@@ -101,9 +101,11 @@ def _hot_key_pick(tagged: DataFrame) -> bool:
 
     Cost: one aggregation job (per-key sums, then a 1-row max/sum),
     about one execution of the query at events ×10000 (SCALEBENCH
-    r13), memoized per tagged plan.  NULL keys are left out: the plain
-    plans' equi keys never match them, so a null-heavy input must not
-    flip the pick.  Streaming inputs raise — the job cannot run on a
+    r13), memoized per tagged plan.  A NULL key counts as one key, the
+    rule of the pattern kernels; a caller whose plans never match a
+    NULL key leaves it out of ``tagged`` (:func:`derive_join_bucket`
+    drops those rows, the pattern operators' probe filter zeroes their
+    ``_r``).  Streaming inputs raise — the job cannot run on a
     streaming plan."""
     global STATS_JOBS_RUN
     if tagged.isStreaming:
@@ -122,8 +124,7 @@ def _hot_key_pick(tagged: DataFrame) -> bool:
     STATS_JOBS_RUN += 1
     keys = [c for c in tagged.columns if c.startswith("_k")]
     row = (
-        tagged.dropna(subset=keys)
-        .groupBy(*keys)
+        tagged.groupBy(*keys)
         .agg(F.sum("_l").alias("_nl"), F.sum("_r").alias("_nr"))
         .agg(
             F.max(F.col("_nl") * F.col("_nr")).alias("max_pairs"),
@@ -148,7 +149,8 @@ def derive_join_bucket(
     """The plain-vs-epoch-coarsened pick for
     :func:`windowed_stream_join` (``bucket="auto"``): True iff the
     worst key's ``l_k × r_k`` pair production is hot
-    (:func:`_hot_key_pick`)."""
+    (:func:`_hot_key_pick`).  Rows with a NULL equi key are left out:
+    the join never matches them."""
 
     def side(df: DataFrame, cols: list[str], is_left: int) -> DataFrame:
         return df.select(
@@ -158,9 +160,9 @@ def derive_join_bucket(
         )
 
     return _hot_key_pick(
-        side(left, [p[0] for p in equi_keys], 1).unionByName(
-            side(right, [p[1] for p in equi_keys], 0)
-        )
+        side(left, [p[0] for p in equi_keys], 1)
+        .unionByName(side(right, [p[1] for p in equi_keys], 0))
+        .dropna()
     )
 
 

@@ -14,6 +14,13 @@ NFA twin lives in ``siddhi_operator_spark.streaming.cep``.
 Scale: every formulation joins/partitions on the pattern key, so the
 shuffle is keyed and bounded; the time bound is part of the join
 condition so state/probe ranges stay small and AQE can split skew.
+
+One batch kernel per shape: the QL compiler (`siddhiql/builder.py`)
+calls the absence and logical-`and` join kernels and the nearest-probe
+scan tier below with its own `<alias>_<col>` frames.  NULL keys: every
+kernel treats a NULL key as its own key (the QL runners' rule); each
+public operator ANDs ``key IS NOT NULL`` into its probe predicate, so
+there a NULL key never matches, in every tier.
 """
 
 from __future__ import annotations
@@ -62,13 +69,9 @@ def _nearest_probe_scan(
     deterministic and equal to the join path's (e2_ts, e2_id)
     ordering.
 
-    NULL keys: `Window.partitionBy` groups all NULL keys into ONE
-    partition, so here a NULL key is its own key (a NULL-key arm sees
-    NULL-key probes) — the QL runners' semantics.  The operator tiers
-    below, whose joins never match a NULL key (`k == k2` is null),
-    add `key IS NOT NULL` to the probe predicate: a NULL-key arm then
-    gets `_probe = null`, which reproduces their join tier exactly —
-    followed-by drops the arm, absence keeps it.
+    NULL keys: `Window.partitionBy` groups every NULL key into one
+    partition, so a NULL key is its own key, as in the join kernels
+    below; the public operators exclude it through their probe filter.
 
     Returns: k, e1_ts, e1_id, _probe (struct p_ts/p_id — null when no
     probe exists on that side of the arm event)."""
@@ -128,6 +131,121 @@ def choose_pattern_impl(
     return "scan" if _hot_key_pick(tagged) else "join"
 
 
+def _pattern_scan(
+    df: DataFrame,
+    key: str,
+    ts: str,
+    arm_pred: Column,
+    probe_pred: Column,
+    within_seconds: float | None,
+    shape: str,
+    impl: str,
+    id_col: str = "event_id",
+) -> DataFrame | None:
+    """The scan tier of the three nearest-probe shapes, or None when
+    the join tier runs (``impl="join"``, or ``"auto"`` and
+    :func:`choose_pattern_impl` picks the join):
+
+    - ``"followed"``: the first completing probe per arm IS the nearest
+      later probe, kept when it lands in (ts, ts + t] (no cut when
+      ``within_seconds`` is None);
+    - ``"absent_after"``: no probe in (ts, ts + t] IS the nearest later
+      probe missing or past the budget;
+    - ``"absent_before"``: no probe in [ts − t, ts) IS the nearest
+      earlier probe missing or before the window.
+
+    Returns ids only: k, e1_ts, e1_id (+ e2_ts, e2_id for
+    ``"followed"``)."""
+    if impl == "join" or (
+        impl == "auto" and choose_pattern_impl(df, key, arm_pred, probe_pred) == "join"
+    ):
+        return None
+    scanned = _nearest_probe_scan(
+        df, key, ts, arm_pred, probe_pred,
+        backwards=shape == "absent_before", id_col=id_col,
+    )
+    p_ts, e1_ts = F.col("_probe.p_ts"), F.col("e1_ts")
+    if shape == "followed":
+        hit = F.col("_probe").isNotNull()
+        if within_seconds is not None:
+            hit = hit & (p_ts <= e1_ts + F.expr(f"INTERVAL {within_seconds} SECONDS"))
+        return scanned.filter(hit).select(
+            "k", "e1_ts", "e1_id",
+            p_ts.alias("e2_ts"), F.col("_probe.p_id").alias("e2_id"),
+        )
+    budget = F.expr(f"INTERVAL {within_seconds} SECONDS")
+    outside = p_ts > e1_ts + budget if shape == "absent_after" else p_ts < e1_ts - budget
+    return scanned.filter(F.col("_probe").isNull() | outside).select(
+        "k", "e1_ts", "e1_id"
+    )
+
+
+def _key(col: str) -> Column:
+    """The join kernels' match key: a NULL key is its own key.  A
+    one-field struct compares NULL fields equal, as ``eqNullSafe``
+    does, but stays ONE hash key, so the logical-`and` window keyed on
+    it reuses the join's partitioning; ``eqNullSafe`` plans as a
+    (coalesce, isnull) key pair the window cannot reuse — one more
+    exchange under a sort-merge join."""
+    return F.struct(F.col(col).alias("_k"))
+
+
+def _absence_join(
+    arm: DataFrame,
+    arm_key: str,
+    arm_ts: str,
+    probe: DataFrame,
+    within_seconds: float,
+    backwards: bool = False,
+) -> DataFrame:
+    """Arm rows with NO probe of the same key in (ts, ts + t]
+    (``backwards=True``: [ts − t, ts)) — the time-bounded left-anti
+    join, the fixed point of the reference's absence timer.  ``arm``
+    may carry payload (the QL `<alias>_<col>` frames, a multi-step
+    partial match); ``probe`` holds the probe events' (key, ts), in
+    that order."""
+    probe = probe.toDF("_pk", "_pts")
+    a_ts, p_ts = F.col(arm_ts), F.col("_pts")
+    budget = F.expr(f"INTERVAL {within_seconds} SECONDS")
+    in_window = (
+        (p_ts < a_ts) & (p_ts >= a_ts - budget)
+        if backwards
+        else (p_ts > a_ts) & (p_ts <= a_ts + budget)
+    )
+    return arm.join(probe, (_key(arm_key) == _key("_pk")) & in_window, "left_anti")
+
+
+def _nearest_pair_join(
+    arm: DataFrame,
+    probe: DataFrame,
+    arm_cols: tuple[str, str, str],
+    probe_cols: tuple[str, str, str],
+    within_seconds: float,
+) -> DataFrame:
+    """Each arm row paired with its nearest probe of the same key within
+    ±t (ties: the lower probe id) — the logical `and` join.  Both
+    frames may carry payload; ``arm_cols``/``probe_cols`` name each
+    frame's (key, ts, id) columns.  The probe key column is dropped."""
+    (ak, a_ts, a_id), (pk, p_ts, p_id) = arm_cols, probe_cols
+    # integer-microsecond arithmetic so the oracle (epoch_us) is exact
+    dist = F.abs(F.unix_micros(F.col(p_ts)) - F.unix_micros(F.col(a_ts)))
+    j = arm.join(
+        probe,
+        on=(_key(ak) == _key(pk)) & (dist <= int(within_seconds * 1_000_000)),
+    ).drop(pk)
+    w = Window.partitionBy(_key(ak), a_id).orderBy(dist, p_id)
+    return (
+        j.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
+def _check_impl(impl: str) -> None:
+    if impl not in ("join", "scan", "auto"):
+        raise ValueError(f"impl must be 'join', 'scan' or 'auto', got {impl!r}")
+
+
 def followed_by(
     df: DataFrame,
     key: str,
@@ -169,42 +287,21 @@ def followed_by(
     from measured key density (:func:`choose_pattern_impl` — one
     stats job); shapes the scan cannot express (`every=False`,
     all-matches, `bucket`) stay on the join tier."""
-    if impl not in ("join", "scan", "auto"):
-        raise ValueError(f"impl must be 'join', 'scan' or 'auto', got {impl!r}")
-    if impl == "auto":
-        impl = (
-            choose_pattern_impl(df, key, first_pred, second_pred)
-            if (every and first_match_only and not bucket)
-            else "join"
+    _check_impl(impl)
+    scannable = every and first_match_only and not bucket
+    if impl == "scan" and not scannable:
+        raise ValueError(
+            "impl='scan' expresses the `every` + first-match shape "
+            "only (all-matches output is genuinely the pair count; "
+            "bucket is a join-tier option)"
         )
-    if impl == "scan":
-        if not (every and first_match_only and not bucket):
-            raise ValueError(
-                "impl='scan' expresses the `every` + first-match shape "
-                "only (all-matches output is genuinely the pair count; "
-                "bucket is a join-tier option)"
-            )
-        scanned = _nearest_probe_scan(
-            df, key, ts, first_pred, second_pred & F.col(key).isNotNull()
-        )
-        return (
-            scanned.filter(
-                F.col("_probe").isNotNull()
-                & (
-                    F.col("_probe.p_ts")
-                    <= F.col("e1_ts")
-                    + F.expr(f"INTERVAL {within_seconds} SECONDS")
-                )
-            )
-            .select(
-                "k",
-                "e1_ts",
-                "e1_id",
-                F.col("_probe.p_ts").alias("e2_ts"),
-                F.col("_probe.p_id").alias("e2_id"),
-            )
-            .withColumnRenamed("k", key)
-        )
+    probe = second_pred & F.col(key).isNotNull()
+    scanned = _pattern_scan(
+        df, key, ts, first_pred, probe, within_seconds, "followed",
+        impl if scannable else "join",
+    )
+    if scanned is not None:
+        return scanned.withColumnRenamed("k", key)
     e1 = df.filter(first_pred).select(
         F.col(key).alias("k"),
         F.col(ts).alias("e1_ts"),
@@ -213,7 +310,7 @@ def followed_by(
     if not every:
         w = Window.partitionBy("k").orderBy("e1_ts", "e1_id")
         e1 = e1.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-    e2 = df.filter(second_pred).select(
+    e2 = df.filter(probe).select(
         F.col(key).alias("k2"),
         F.col(ts).alias("e2_ts"),
         F.col("event_id").alias("e2_id"),
@@ -263,62 +360,31 @@ def absence(
 ) -> DataFrame:
     """Absence pattern: `e1=S[p1] -> not S[p2] for t`
     (`AbsentStreamPreStateProcessor.java`) — e1 events with NO p2 event
-    for the same key in (e1.ts, e1.ts + t].
+    for the same key in (e1.ts, e1.ts + t]; a NULL key never matches.
 
-    ``impl="join"`` (default): time-bounded left-anti join (the
-    reference arms a state timer; the anti-join is its fixed point).
-    ``impl="scan"`` (r12): "no p2 in (e1.ts, e1.ts + t]" IS "the
-    nearest LATER p2 is absent or past the budget" — the fanout-free
-    single-shuffle pass (:func:`_nearest_probe_scan`); hot-key
-    insurance for keys where the anti-join's range residual degrades
-    the per-key probe (see :func:`followed_by` for the measured
-    regime call); ``impl="auto"`` (r13) derives the pick from measured
-    key density (:func:`choose_pattern_impl`).
-    """
-    if impl not in ("join", "scan", "auto"):
-        raise ValueError(f"impl must be 'join', 'scan' or 'auto', got {impl!r}")
-    if impl == "auto":
-        impl = choose_pattern_impl(df, key, first_pred, absent_pred)
-    if impl == "scan":
-        scanned = _nearest_probe_scan(
-            df, key, ts, first_pred, absent_pred & F.col(key).isNotNull()
-        )
-        return (
-            scanned.filter(
-                F.col("_probe").isNull()
-                | (
-                    F.col("_probe.p_ts")
-                    > F.col("e1_ts")
-                    + F.expr(f"INTERVAL {within_seconds} SECONDS")
-                )
-            )
-            .select("k", "e1_ts", "e1_id")
-            .withColumnRenamed("k", key)
-        )
-    e1 = df.filter(first_pred).select(
-        F.col(key).alias("k"),
-        F.col(ts).alias("e1_ts"),
-        F.col("event_id").alias("e1_id"),
+    ``impl="join"`` (default): the time-bounded left-anti join
+    (:func:`_absence_join`; the reference arms a state timer, the
+    anti-join is its fixed point).  ``impl="scan"``: the fanout-free
+    nearest-probe pass (:func:`_pattern_scan`), hot-key insurance for
+    keys where the anti-join's range residual degrades the per-key
+    probe (see :func:`followed_by` for the measured regime call);
+    ``impl="auto"`` derives the pick from measured key density
+    (:func:`choose_pattern_impl`)."""
+    _check_impl(impl)
+    probe = absent_pred & F.col(key).isNotNull()
+    out = _pattern_scan(
+        df, key, ts, first_pred, probe, within_seconds, "absent_after", impl
     )
-    e2 = df.filter(absent_pred).select(
-        F.col(key).alias("k2"), F.col(ts).alias("e2_ts")
-    )
-    return (
-        e1.join(
-            e2,
-            on=(
-                (F.col("k") == F.col("k2"))
-                & (F.col("e2_ts") > F.col("e1_ts"))
-                & (
-                    F.col("e2_ts")
-                    <= F.col("e1_ts")
-                    + F.expr(f"INTERVAL {within_seconds} SECONDS")
-                )
-            ),
-            how="left_anti",
+    if out is None:
+        e1 = df.filter(first_pred).select(
+            F.col(key).alias("k"),
+            F.col(ts).alias("e1_ts"),
+            F.col("event_id").alias("e1_id"),
         )
-        .withColumnRenamed("k", key)
-    )
+        out = _absence_join(
+            e1, "k", "e1_ts", df.filter(probe).select(key, ts), within_seconds
+        )
+    return out.withColumnRenamed("k", key)
 
 
 def sequence_adjacent(
@@ -364,26 +430,17 @@ def logical_and_pattern(
     """Logical pattern `e1=S[pa] and e2=S[pb]` within t
     (`LogicalPreStateProcessor.java`): both must occur (either order)
     within the budget, per key. Pairs each a-event with the nearest
-    b-event within ±t."""
+    b-event within ±t (:func:`_nearest_pair_join`); a NULL key never
+    matches."""
     a = df.filter(pred_a).select(
         F.col(key).alias("k"), F.col(ts).alias("a_ts"), F.col("event_id").alias("a_id")
     )
-    b = df.filter(pred_b).select(
+    b = df.filter(pred_b & F.col(key).isNotNull()).select(
         F.col(key).alias("k2"), F.col(ts).alias("b_ts"), F.col("event_id").alias("b_id")
     )
-    # integer-microsecond arithmetic so the oracle (epoch_us) is exact
-    dist = F.abs(F.unix_micros(F.col("b_ts")) - F.unix_micros(F.col("a_ts")))
-    j = a.join(
-        b,
-        on=((F.col("k") == F.col("k2")) & (dist <= int(within_seconds * 1_000_000))),
-    ).drop("k2")
-    w = Window.partitionBy("k", "a_id").orderBy(dist, "b_id")
-    return (
-        j.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .withColumnRenamed("k", key)
-    )
+    return _nearest_pair_join(
+        a, b, ("k", "a_ts", "a_id"), ("k2", "b_ts", "b_id"), within_seconds
+    ).withColumnRenamed("k", key)
 
 
 def absence_logical(
@@ -399,59 +456,31 @@ def absence_logical(
     (`AbsentLogicalPreStateProcessor.java`) — e2 events with NO
     p_absent event for the same key in the t window BEFORE them (the
     absent branch is armed at match start; e2 completes the pair only
-    if the absent side never fired).
+    if the absent side never fired); a NULL key never matches.
 
-    ``impl="join"`` (default): time-bounded left-anti join looking
-    backwards. ``impl="scan"`` (r12): "no p_absent in
-    [e2.ts − t, e2.ts)" IS "the nearest EARLIER p_absent is absent or
-    before the window" — the mirrored (``backwards=True``)
-    single-shuffle pass; see :func:`absence` / :func:`followed_by`
-    for the measured regime call; ``impl="auto"`` (r13) derives the
-    pick from measured key density (:func:`choose_pattern_impl`)."""
-    if impl not in ("join", "scan", "auto"):
-        raise ValueError(f"impl must be 'join', 'scan' or 'auto', got {impl!r}")
-    if impl == "auto":
-        impl = choose_pattern_impl(df, key, present_pred, absent_pred)
-    if impl == "scan":
-        scanned = _nearest_probe_scan(
-            df, key, ts, present_pred, absent_pred & F.col(key).isNotNull(),
-            backwards=True,
-        )
-        return scanned.filter(
-            F.col("_probe").isNull()
-            | (
-                F.col("_probe.p_ts")
-                < F.col("e1_ts")
-                - F.expr(f"INTERVAL {within_seconds} SECONDS")
-            )
-        ).select(
-            "k",
-            F.col("e1_ts").alias("e2_ts"),
-            F.col("e1_id").alias("e2_id"),
+    ``impl="join"`` (default): the backward left-anti join
+    (:func:`_absence_join`).  ``impl="scan"``: the mirrored
+    nearest-probe pass (:func:`_pattern_scan`); see :func:`absence` /
+    :func:`followed_by` for the measured regime call; ``impl="auto"``
+    derives the pick from measured key density
+    (:func:`choose_pattern_impl`)."""
+    _check_impl(impl)
+    probe = absent_pred & F.col(key).isNotNull()
+    out = _pattern_scan(
+        df, key, ts, present_pred, probe, within_seconds, "absent_before", impl
+    )
+    if out is not None:
+        return out.select(
+            "k", F.col("e1_ts").alias("e2_ts"), F.col("e1_id").alias("e2_id")
         )
     e2 = df.filter(present_pred).select(
         F.col(key).alias("k"),
         F.col(ts).alias("e2_ts"),
         F.col("event_id").alias("e2_id"),
     )
-    absent = df.filter(absent_pred).select(
-        F.col(key).alias("ka"), F.col(ts).alias("a_ts")
-    )
-    return (
-        e2.join(
-            absent,
-            on=(
-                (F.col("k") == F.col("ka"))
-                & (F.col("a_ts") < F.col("e2_ts"))
-                & (
-                    F.col("a_ts")
-                    >= F.col("e2_ts")
-                    - F.expr(f"INTERVAL {within_seconds} SECONDS")
-                )
-            ),
-            how="left_anti",
-        )
-        .select(F.col("k"), F.col("e2_ts"), F.col("e2_id"))
+    return _absence_join(
+        e2, "k", "e2_ts", df.filter(probe).select(key, ts), within_seconds,
+        backwards=True,
     )
 
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 import dataclasses
 import re
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .model import (
@@ -118,49 +118,72 @@ def _plan_hints(q: QueryDef) -> dict[str, str]:
     return hints
 
 
-def _equi_pairs(on_expr: str, lname: str, rname: str) -> list[tuple[str, str]]:
-    """Extract `(left_col, right_col)` equi terms from a translated
-    join condition — top-level AND conjuncts of the form
-    `L.x = R.y` (either side order).  Non-equi conjuncts (the time
-    residual, value comparisons) are fine — they stay in the join
-    condition; they just don't contribute keys.
+_ON_TOKEN_RE = re.compile(
+    r"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"|[()]|\b(?:and|between)\b", re.I
+)
 
-    The `and`-split is syntactic, so a part whose parentheses (or
-    quotes) don't balance came from INSIDE a nested group or string
-    literal — e.g. ``C or (a.k = b.k and a.j = b.j)`` splits into
-    ``… (a.k = b.k`` / ``a.j = b.j)`` — and must contribute no key
-    (r14 advice): it is not a top-level conjunct, so treating it as
-    an equi key would accept explicit ``bucket='true'`` (and measure
-    density) on keys the join doesn't actually require."""
-    pairs: list[tuple[str, str]] = []
-    expr = on_expr.strip()
-    # strip redundant OUTER parens (the whole condition wrapped once)
-    # so `(a.k = b.k and t-range)` still yields its top-level keys
-    while expr.startswith("(") and expr.endswith(")"):
-        depth = 0
-        for i, ch in enumerate(expr):
-            depth += ch == "("
-            depth -= ch == ")"
-            if depth == 0 and i < len(expr) - 1:
-                break
+
+def _conjuncts(expr: str) -> list[str]:
+    """The top-level AND conjuncts of a condition.  An `and` inside
+    parentheses, inside a string literal or closing a `between` never
+    splits, and a conjunct wrapped whole in parentheses is opened and
+    split again."""
+    expr = expr.strip()
+    parts, start, depth, between, first_close = [], 0, 0, 0, None
+    for m in _ON_TOKEN_RE.finditer(expr):
+        tok = m.group(0).lower()
+        if tok == "(":
+            depth += 1
+        elif tok == ")":
+            depth -= 1
+            if depth == 0 and first_close is None:
+                first_close = m.end()
+        elif depth or tok[0] in "'\"":
+            continue
+        elif tok == "between":
+            between += 1
+        elif between:
+            between -= 1
         else:
-            expr = expr[1:-1].strip()
-            continue
-        break
-    for part in re.split(r"\band\b", expr, flags=re.I):
-        if part.count("(") != part.count(")") or part.count("'") % 2:
-            continue
-        m = re.fullmatch(
-            r"\s*\(?\s*(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)\s*\)?\s*", part
-        )
-        if not m:
-            continue
-        a, ac, b, bc = m.groups()
-        if a == lname and b == rname:
-            pairs.append((ac, bc))
-        elif a == rname and b == lname:
-            pairs.append((bc, ac))
-    return pairs
+            parts.append(expr[start : m.start()])
+            start = m.end()
+    if start:
+        return [c for p in [*parts, expr[start:]] for c in _conjuncts(p)]
+    if expr.startswith("(") and first_close == len(expr):
+        return _conjuncts(expr[1:-1])
+    return [expr]
+
+
+def _split_on(
+    on_expr: str, lname: str, rname: str
+) -> tuple[list[tuple[str, str]], list[str]]:
+    """Split a join ON condition into its top-level conjuncts:
+    `(left_col, right_col)` equi pairs (`L.x = R.y`, either side
+    order) and the residual conjuncts, with the side names rewritten to
+    the `l.`/`r.` join aliases outside string literals.  A term inside
+    a nested `or` group is not a top-level conjunct, so it never
+    becomes a key (an explicit ``bucket='true'`` or a streaming equi
+    key on it would require what the join does not)."""
+    equi: list[tuple[str, str]] = []
+    residual: list[str] = []
+    for part in _conjuncts(on_expr):
+        m = re.fullmatch(r"(\w+)\.(\w+)\s*==?\s*(\w+)\.(\w+)", part)
+        if m and (m[1], m[3]) == (lname, rname):
+            equi.append((m[2], m[4]))
+        elif m and (m[1], m[3]) == (rname, lname):
+            equi.append((m[4], m[2]))
+        else:
+            residual.append(
+                _map_outside_quotes(
+                    part,
+                    lambda seg: re.sub(
+                        rf"\b{re.escape(rname)}\.",
+                        "r.",
+                        re.sub(rf"\b{re.escape(lname)}\.", "l.", seg),
+                    ),
+                )
+            )
+    return equi, residual
 
 
 def _apply_window_groupby(
@@ -954,7 +977,7 @@ def _run_join(
         applicable = (
             inp.kind == "inner" and within is not None and inp.per is None
         )
-        equi = _equi_pairs(inp.on_expr, lname, rname) if applicable else []
+        equi = _split_on(inp.on_expr, lname, rname)[0] if applicable else []
         if not (applicable and equi):
             # 'auto' is lenient — the operator tier resolves
             # bucket='auto' to plain for non-inner joins too; an
@@ -1222,53 +1245,59 @@ def _run_pattern_or_chain(
     return _rewrite_pattern_select(out, q)
 
 
-def _absence_scan_single(
+def _pred(expr: str | None) -> Column:
+    return F.expr(expr) if expr else F.lit(True)
+
+
+def _own_pred(st: PatternStep, cols: list[str]) -> Column:
+    """A first step's predicate, own-alias prefix stripped."""
+    return _pred(
+        st.predicate and _classify_step_predicate(st.predicate, st.alias, [], cols)[0]
+    )
+
+
+def _scan_route(
     df: DataFrame,
     q: QueryDef,
-    s1,
-    last,
-    budget: float,
+    shape: str,
+    arm_pred: Column,
+    probe_pred: Column,
+    within: float | None,
+    aliases: list[str],
     ts_col: str,
     id_col: str,
     key: str,
     impl_hint: str,
+    project: bool = True,
 ) -> DataFrame | None:
-    """The QL absence scan tier (r14): `e1=S[p1] -> not S[p2] for t`
-    via one fanout-free keyed window pass — "no p2 in (e1.ts,
-    e1.ts + t]" IS "the nearest later p2 is absent or past the
-    budget" (`operators/patterns.py::absence(impl='scan')`), with
-    payload re-attached by an equi-join on the unique event id.
-    Returns None when the prefix predicate needs a deferred filter or
-    when ``impl_hint='auto'`` measures the join tier faster."""
-    pre1 = None
-    if s1.predicate:
-        pre1, d1 = _classify_step_predicate(s1.predicate, s1.alias, [], df.columns)
-        if d1:
-            return None
-    p1 = F.expr(pre1) if pre1 else F.lit(True)
-    pab = F.expr(last.predicate) if last.predicate else F.lit(True)
-    from ..operators.patterns import _nearest_probe_scan, choose_pattern_impl
+    """The QL scan tier of one nearest-probe shape
+    (`operators/patterns.py::_pattern_scan`, which returns ids).  Each
+    matched event's `<alias>_<col>` payload re-attaches by an equi-join
+    on the globally unique event id — fanout 1 per row, key density
+    irrelevant — so the output is column-identical to the join tier
+    (`__k`, then each alias's columns).  None when ``impl_hint='auto'``
+    measures the join tier faster."""
+    from ..operators.patterns import _pattern_scan
 
-    if impl_hint == "auto" and choose_pattern_impl(df, key, p1, pab) == "join":
+    ids = _pattern_scan(
+        df, key, ts_col, arm_pred, probe_pred, within, shape, impl_hint, id_col
+    )
+    if ids is None:
         return None
-    scanned = _nearest_probe_scan(df, key, ts_col, p1, pab, id_col=id_col)
-    kept = scanned.filter(
-        F.col("_probe").isNull()
-        | (
-            F.col("_probe.p_ts")
-            > F.col("e1_ts") + F.expr(f"INTERVAL {budget} SECONDS")
+    n = range(1, len(aliases) + 1)
+    out = ids.select(
+        F.col("k").alias("__k"), *[F.col(f"e{i}_id").alias(f"__id{i}") for i in n]
+    )
+    for i, a in zip(n, aliases):
+        out = out.join(
+            df.select(
+                F.col(id_col).alias(f"__id{i}"),
+                *[F.col(c).alias(f"{a}_{c}") for c in df.columns],
+            ),
+            f"__id{i}",
         )
-    )
-    payload = df.select(
-        F.col(id_col).alias("__id1"),
-        *[F.col(c).alias(f"{s1.alias}_{c}") for c in df.columns],
-    )
-    out = (
-        kept.select(F.col("k").alias("__k"), F.col("e1_id").alias("__id1"))
-        .join(payload, "__id1")
-        .select("__k", *[f"{s1.alias}_{c}" for c in df.columns])
-    )
-    return _rewrite_pattern_select(out, q)
+    out = out.select("__k", *[f"{a}_{c}" for a in aliases for c in df.columns])
+    return _rewrite_pattern_select(out, q) if project else out
 
 
 def _run_pattern_special(
@@ -1288,8 +1317,11 @@ def _run_pattern_special(
       t window before them (backward anti-join).
     - `e1=S[p] or e2=S[q]` — tagged union; an event matching both
       takes the first-declared branch (reference branch priority).
+
+    The absence and `and` join tiers and the scan tier are the
+    operator kernels, fed this compiler's `<alias>_<col>` frames.
     """
-    import dataclasses
+    from ..operators.patterns import _absence_join, _nearest_pair_join
 
     steps = inp.steps
     if len(steps) > 1 and any(isinstance(st, LogicalStep) for st in steps):
@@ -1314,8 +1346,7 @@ def _run_pattern_special(
                     "protect; drop the hint or use impl='auto')"
                 )
             dtypes = dict(df.dtypes)
-            pa = F.expr(a.predicate) if a.predicate else F.lit(True)
-            pb = F.expr(b.predicate) if b.predicate else F.lit(True)
+            pa, pb = _pred(a.predicate), _pred(b.predicate)
             a_rows = df.filter(pa)
             b_rows = df.filter(pb & ~pa)  # branch priority: first declared wins
             a_side = a_rows.select(
@@ -1346,78 +1377,25 @@ def _run_pattern_special(
                     "pattern `within t`"
                 )
             # `@plan(impl='scan'|'auto')` (r14): backward absence is the
-            # mirrored nearest-probe shape (`operators.patterns.
-            # absence_logical(impl='scan')`) — "no p_absent in
-            # [e.ts − t, e.ts)" IS "the nearest EARLIER p_absent is
-            # null or before the window"; same anti-join hot-key
+            # mirrored nearest-probe shape — same anti-join hot-key
             # quadratic, same fanout-free insurance.
             impl_hint = _plan_hints(q).get("impl")
+            pp, pa = _pred(present.predicate), _pred(absent.predicate)
             if impl_hint in ("scan", "auto"):
-                pp = (
-                    F.expr(present.predicate)
-                    if present.predicate
-                    else F.lit(True)
+                out = _scan_route(
+                    df, q, "absent_before", pp, pa, budget, [present.alias],
+                    ts_col, id_col, key, impl_hint,
                 )
-                pa = (
-                    F.expr(absent.predicate) if absent.predicate else F.lit(True)
-                )
-                from ..operators.patterns import (
-                    _nearest_probe_scan,
-                    choose_pattern_impl,
-                )
-
-                pick = (
-                    choose_pattern_impl(df, key, pp, pa)
-                    if impl_hint == "auto"
-                    else "scan"
-                )
-                if pick == "scan":
-                    scanned = _nearest_probe_scan(
-                        df, key, ts_col, pp, pa, backwards=True, id_col=id_col
-                    )
-                    kept = scanned.filter(
-                        F.col("_probe").isNull()
-                        | (
-                            F.col("_probe.p_ts")
-                            < F.col("e1_ts")
-                            - F.expr(f"INTERVAL {budget} SECONDS")
-                        )
-                    )
-                    payload = df.select(
-                        F.col(id_col).alias("__id1"),
-                        *[
-                            F.col(c).alias(f"{present.alias}_{c}")
-                            for c in df.columns
-                        ],
-                    )
-                    out = (
-                        kept.select(
-                            F.col("k").alias("__k"),
-                            F.col("e1_id").alias("__id1"),
-                        )
-                        .join(payload, "__id1")
-                        .select(
-                            "__k",
-                            *[f"{present.alias}_{c}" for c in df.columns],
-                        )
-                    )
-                    return _rewrite_pattern_select(out, q)
-            pres = df
-            if present.predicate:
-                pres = pres.filter(F.expr(present.predicate))
-            pres = _alias_all(pres, present.alias, key)
-            ab = df
-            if absent.predicate:
-                ab = ab.filter(F.expr(absent.predicate))
-            ab = ab.select(F.col(key).alias("__ka"), F.col(ts_col).alias("__ats"))
-            pts = f"{present.alias}_{ts_col}"
-            # a NULL key is its own key, as in absence_nfa and the scan tier
-            cond = (
-                F.col("__k").eqNullSafe(F.col("__ka"))
-                & (F.col("__ats") < F.col(pts))
-                & (F.col("__ats") >= F.col(pts) - F.expr(f"INTERVAL {budget} SECONDS"))
+                if out is not None:
+                    return out
+            out = _absence_join(
+                _alias_all(df.filter(pp), present.alias, key),
+                "__k",
+                f"{present.alias}_{ts_col}",
+                df.filter(pa).select(key, ts_col),
+                budget,
+                backwards=True,
             )
-            out = pres.join(ab, on=cond, how="left_anti")
             return _rewrite_pattern_select(out, q)
         # both present: nearest-pair within the pattern budget
         if _plan_hints(q).get("impl") == "scan":
@@ -1429,28 +1407,12 @@ def _run_pattern_special(
             )
         if inp.within_seconds is None:
             raise ValueError("logical `and` pattern needs `within t`")
-        pa_rows = df.filter(F.expr(a.predicate)) if a.predicate else df
-        pb_rows = df.filter(F.expr(b.predicate)) if b.predicate else df
-        a_side = _alias_all(pa_rows, a.alias, key)
-        b_side = _alias_all(pb_rows, b.alias, key, key_alias="__k2")
-        dist = F.abs(
-            F.unix_micros(F.col(f"{b.alias}_{ts_col}"))
-            - F.unix_micros(F.col(f"{a.alias}_{ts_col}"))
-        )
-        j = a_side.join(
-            b_side,
-            on=(
-                F.col("__k").eqNullSafe(F.col("__k2"))
-                & (dist <= int(inp.within_seconds * 1_000_000))
-            ),
-        ).drop("__k2")
-        w = Window.partitionBy("__k", f"{a.alias}_{id_col}").orderBy(
-            dist, f"{b.alias}_{id_col}"
-        )
-        out = (
-            j.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
+        out = _nearest_pair_join(
+            _alias_all(df.filter(_pred(a.predicate)), a.alias, key),
+            _alias_all(df.filter(_pred(b.predicate)), b.alias, key, key_alias="__k2"),
+            ("__k", f"{a.alias}_{ts_col}", f"{a.alias}_{id_col}"),
+            ("__k2", f"{b.alias}_{ts_col}", f"{b.alias}_{id_col}"),
+            inp.within_seconds,
         )
         return _rewrite_pattern_select(out, q)
 
@@ -1468,18 +1430,19 @@ def _run_pattern_special(
         # ALSO per-key quadratic on a dense key — left-anti with a
         # range residual scans the key's matched group per probe row,
         # and absence output means the scan never short-circuits.  The
-        # single-prefix-step form IS `operators.patterns.absence`,
-        # whose scan tier ("nearest later absent-candidate is null or
-        # past the budget") is fanout-free; route it the same way.
+        # single-prefix-step form takes the fanout-free scan tier of
+        # `operators.patterns.absence`.
         impl_hint = _plan_hints(q).get("impl")
         if impl_hint in ("scan", "auto") and (
             len(prefix) == 1 and not inp.strict and not _quant(prefix[0])
         ):
-            scan_df = _absence_scan_single(
-                df, q, prefix[0], last, budget, ts_col, id_col, key, impl_hint
+            out = _scan_route(
+                df, q, "absent_after", _own_pred(prefix[0], df.columns),
+                _pred(last.predicate), budget, [prefix[0].alias],
+                ts_col, id_col, key, impl_hint,
             )
-            if scan_df is not None:
-                return scan_df
+            if out is not None:
+                return out
         if impl_hint == "scan":
             raise ValueError(
                 "@plan(impl='scan') on an absence pattern expresses the "
@@ -1490,21 +1453,13 @@ def _run_pattern_special(
         pre_q = dataclasses.replace(q, select=[])
         partial = _run_pattern(df, pre_q, pre_inp, ts_col, id_col, key)
         prev = prefix[-1]
-        prev_quant = _quant(prev)
         prev_ts = (
-            f"{prev.alias}__last_{ts_col}" if prev_quant else f"{prev.alias}_{ts_col}"
+            f"{prev.alias}__last_{ts_col}" if _quant(prev) else f"{prev.alias}_{ts_col}"
         )
-        ab = df
-        if last.predicate:
-            ab = ab.filter(F.expr(last.predicate))
-        ab = ab.select(F.col(key).alias("__ka"), F.col(ts_col).alias("__ats"))
-        # a NULL key is its own key, as in absence_nfa and the scan tier
-        cond = (
-            F.col("__k").eqNullSafe(F.col("__ka"))
-            & (F.col("__ats") > F.col(prev_ts))
-            & (F.col("__ats") <= F.col(prev_ts) + F.expr(f"INTERVAL {budget} SECONDS"))
+        out = _absence_join(
+            partial, "__k", prev_ts, df.filter(_pred(last.predicate)).select(key, ts_col),
+            budget,
         )
-        out = partial.join(ab, on=cond, how="left_anti")
         return _rewrite_pattern_select(out, q)
     raise ValueError(
         "unsupported absence/logical pattern shape: supported are a single "
@@ -1578,13 +1533,9 @@ def _pattern_scan_two_step(
     project: bool,
 ) -> DataFrame | None:
     """The QL pattern scan tier: `e1=S[p1] -> e2=S[p2] within t` via
-    one fanout-free keyed window pass (`operators/patterns.py::
-    _nearest_probe_scan` — "first completing e2 per e1" IS "nearest
-    later e2, then a time filter") instead of the chained join, whose
-    per-key pair production explodes on one dense key.  Payload
-    columns re-attach by two equi-joins on the globally unique event
-    id — fanout 1 per row, key density irrelevant — so the output is
-    column-identical to the join tier (`__k`, `e1_*`, `e2_*`).
+    the fanout-free nearest-probe pass (:func:`_scan_route`) instead of
+    the chained join, whose per-key pair production explodes on one
+    dense key.
 
     Returns None when the shape isn't scannable (not exactly two
     non-strict steps, or a cross-step predicate that must filter
@@ -1593,12 +1544,7 @@ def _pattern_scan_two_step(
     if inp.strict or len(inp.steps) != 2:
         return None
     s1, s2 = inp.steps
-    pre1 = pre2 = None
-    if s1.predicate:
-        pre1, d1 = _classify_step_predicate(s1.predicate, s1.alias, [], base_cols)
-        if d1:
-            return None  # first step referencing a prior alias — the
-            # join tier raises the proper error
+    pre2 = None
     if s2.predicate:
         pre2, d2 = _classify_step_predicate(
             s2.predicate, s2.alias, [s1.alias], base_cols
@@ -1606,46 +1552,10 @@ def _pattern_scan_two_step(
         if d2:
             return None  # cross-step predicate filters before the
             # first-match pick — not a nearest-probe shape
-    p1 = F.expr(pre1) if pre1 else F.lit(True)
-    p2 = F.expr(pre2) if pre2 else F.lit(True)
-    from ..operators.patterns import _nearest_probe_scan, choose_pattern_impl
-
-    if impl_hint == "auto":
-        if choose_pattern_impl(df, key, p1, p2) == "join":
-            return None
-    scanned = _nearest_probe_scan(df, key, ts_col, p1, p2, id_col=id_col)
-    hit = scanned.filter(F.col("_probe").isNotNull())
-    if inp.within_seconds is not None:
-        hit = hit.filter(
-            F.col("_probe.p_ts")
-            <= F.col("e1_ts") + F.expr(f"INTERVAL {inp.within_seconds} SECONDS")
-        )
-    a1, a2 = s1.alias, s2.alias
-    e1_payload = df.select(
-        F.col(id_col).alias("__id1"),
-        *[F.col(c).alias(f"{a1}_{c}") for c in base_cols],
+    return _scan_route(
+        df, q, "followed", _own_pred(s1, base_cols), _pred(pre2), inp.within_seconds,
+        [s1.alias, s2.alias], ts_col, id_col, key, impl_hint, project,
     )
-    e2_payload = df.select(
-        F.col(id_col).alias("__id2"),
-        *[F.col(c).alias(f"{a2}_{c}") for c in base_cols],
-    )
-    out = (
-        hit.select(
-            F.col("k").alias("__k"),
-            F.col("e1_id").alias("__id1"),
-            F.col("_probe.p_id").alias("__id2"),
-        )
-        .join(e1_payload, "__id1")
-        .join(e2_payload, "__id2")
-        .select(
-            "__k",
-            *[f"{a1}_{c}" for c in base_cols],
-            *[f"{a2}_{c}" for c in base_cols],
-        )
-    )
-    if not project:
-        return out
-    return _rewrite_pattern_select(out, q)
 
 
 def _run_pattern_simple(
@@ -2722,32 +2632,6 @@ def _run_pattern_streaming(
     return out.select("key", *sel)
 
 
-def _split_equi_on(
-    on_expr: str, lname: str, rname: str
-) -> tuple[list[tuple[str, str]], list[str]]:
-    """Split a join ON conjunction into (left_col, right_col) equi
-    pairs and residual predicate strings (side names rewritten to the
-    l/r join aliases)."""
-    equi: list[tuple[str, str]] = []
-    residual: list[str] = []
-    for part in re.split(r"\band\b", on_expr, flags=re.I):
-        m = re.fullmatch(
-            r"\s*(\w+)\.(\w+)\s*==?\s*(\w+)\.(\w+)\s*", part
-        )
-        if m:
-            a, ac, b, bc = m.groups()
-            if a == lname and b == rname:
-                equi.append((ac, bc))
-                continue
-            if a == rname and b == lname:
-                equi.append((bc, ac))
-                continue
-        p = re.sub(rf"\b{lname}\.", "l.", part.strip())
-        p = re.sub(rf"\b{rname}\.", "r.", p)
-        residual.append(p)
-    return equi, residual
-
-
 def _run_join_streaming(
     env: dict[str, DataFrame],
     model: AppModel,
@@ -2798,14 +2682,14 @@ def _run_join_streaming(
             "(#window.time(t) on a side, or `within t`) so state is "
             "evictable"
         )
-    equi, residual = _split_equi_on(inp.on_expr, lname, rname)
+    equi, residual = _split_on(inp.on_expr, lname, rname)
     if not equi:
         raise ValueError(
             "streaming stream-stream join needs at least one "
             "`A.x == B.y` equi term in the ON condition (a pure range "
             "probe shuffles everything everywhere)"
         )
-    extra = F.expr(" AND ".join(residual)) if residual else None
+    extra = F.expr(" AND ".join(f"({r})" for r in residual)) if residual else None
     # `@plan(bucket='true')` (r14): the streaming hot-key insurance
     # tier from QL text — epoch-widened equi keys bound per-key state
     # probes (SCALEBENCH r14: plain DNFs on a 400 k-event key where

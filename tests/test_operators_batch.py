@@ -771,9 +771,9 @@ def test_derived_pick_memo_stats_and_guards(spark):
     """The hot-key pick behind both derived families (pattern
     ``impl="auto"``, join ``bucket="auto"``) is MEMOIZED — one stats
     job for a first pick, zero for a repeat, one counter for both —
-    applies one rule (checked on the pure rule function), excludes
-    NULL keys from the stats scan (a join emits nothing for NULL keys,
-    so a null-heavy input must not flip the pick), and raises a clear
+    applies one rule (checked on the pure rule function), counts a
+    NULL key as one key unless the caller filters it out (the operator
+    probe filter, the windowed join's NULL-key drop), and raises a clear
     ValueError on streaming inputs instead of an opaque
     AnalysisException."""
     import pytest
@@ -826,10 +826,14 @@ def test_derived_pick_memo_stats_and_guards(spark):
     assert J._hot_key_rule(2_000_000, 8_000_000) is False  # total / 4
     assert J._hot_key_rule(2_000_001, 8_000_000) is True
 
-    # --- NULL keys never flip the pick: ALL the density lives on a
-    # NULL key, which the join would emit nothing for
+    # --- ALL the density on a NULL key: the pick counts it as one key
+    # (the QL runners pair NULL with NULL); the operator form's probe
+    # filter leaves it no probe rows, and the windowed join, which
+    # never matches a NULL equi key, drops those rows
     nullhot = mk(1, 1200, null_key=True)
-    assert P.choose_pattern_impl(nullhot, "user_id", sig, pur) == "join"
+    assert P.choose_pattern_impl(nullhot, "user_id", sig, pur) == "scan"
+    not_null = pur & F.col("user_id").isNotNull()
+    assert P.choose_pattern_impl(nullhot, "user_id", sig, not_null) == "join"
     assert (
         J.derive_join_bucket(nullhot.filter(sig), nullhot.filter(pur), keys)
         is False

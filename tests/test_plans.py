@@ -803,6 +803,39 @@ def test_pattern_scan_tier_single_shuffle_no_join(spark):
     assert "unboundedfollowing" not in plan.lower()
 
 
+@pytest.mark.parametrize(
+    "pattern, joins",
+    [
+        ("e1=S[event_type == 'signup'] -> not S[event_type == 'purchase']"
+         " for 1 hour", 1),
+        ("e1=S[event_type == 'signup'] -> e2=S[event_type == 'click']"
+         " -> not S[event_type == 'purchase'] for 1 hour", 2),
+        ("not S[event_type == 'signup'] for 1 hour"
+         " and e2=S[event_type == 'purchase']", 1),
+        ("e1=S[event_type == 'signup'] and e2=S[event_type == 'purchase']"
+         " within 1 hour", 1),
+    ],
+)
+def test_ql_pattern_join_tiers_join_once_per_step(spark, pattern, joins):
+    """The QL absence and logical-`and` join tiers run the operator
+    kernels on frames that already carry each step's payload, so the
+    optimized plan holds one Join per pattern step and never re-joins
+    payload by event id."""
+    from siddhi_operator_spark.siddhiql import run_app
+
+    app = f"""
+    define stream S (event_id long, ts string, user_id long,
+                     event_type string, value double);
+    from {pattern}
+    select *
+    insert into Out;
+    """
+    out = run_app(app, {"S": load(spark, SF, "events")}, pattern_key="user_id")
+    plan = out["Out"]._jdf.queryExecution().optimizedPlan()
+    kinds = [n.getClass().getSimpleName() for n in _iter_logical_nodes(plan)]
+    assert kinds.count("Join") == joins
+
+
 def test_join_bucket_tiers_plan_shapes(spark):
     """r13: the epoch-coarsened windowed-join tier must actually change
     the physical plan — `bucket=True` introduces the epoch explode

@@ -1071,11 +1071,13 @@ def test_example_app_user_activity_monitoring(spark):
         assert n == r["n"] and abs(total - r["total"]) < 1e-6
 
 
-def test_run_app_streaming_stream_stream_join(spark):
+def test_run_app_streaming_stream_stream_join(spark, tmp_path):
     """Streaming QL stream⋈stream windowed join (watermarked, state
     bounded by the window span) must emit exactly the batch runner's
     rows — equi terms from the ON conjunction become the join keys,
-    the comparison term stays a residual."""
+    the comparison term stays a residual.  Only top-level conjuncts
+    split: an `and` inside a string literal or an `or` group does not,
+    and an ON condition with no top-level equi term raises."""
     import uuid
 
     from siddhi_operator_spark.catalog import load, load_events_stream
@@ -1116,6 +1118,67 @@ def test_run_app_streaming_stream_stream_join(spark):
     q.stop()
     got = sorted(tuple(r) for r in spark.table(name).collect())
     assert got == want
+
+    schema = "event_id long, ts string, user_id long, s string, value double"
+    sides = {
+        "A": [
+            (1, "2024-01-01 00:00:00", 1, "x and y", 6.0),
+            (2, "2024-01-01 00:00:10", 2, "z", 1.0),
+            (3, "2024-01-01 00:00:20", 1, "w", 7.0),
+        ],
+        "B": [
+            (11, "2024-01-01 00:00:05", 1, "x and y", 3.0),
+            (12, "2024-01-01 00:00:15", 2, "z", 2.5),
+            (13, "2024-01-01 00:00:25", 1, "q", 1.0),
+        ],
+    }
+    batch, streams = {}, {}
+    for side, rows in sides.items():
+        df = spark.createDataFrame(rows, schema).withColumn(
+            "ts", F.col("ts").cast("timestamp")
+        )
+        df.write.parquet(str(tmp_path / side))
+        batch[side] = df
+        streams[side] = spark.readStream.schema(df.schema).parquet(
+            str(tmp_path / side)
+        )
+
+    def on_app(on: str) -> str:
+        return f"""
+        define stream A ({schema});
+        define stream B ({schema});
+        from A#window.time(1 min) join B#window.time(1 min) on {on}
+        select A.event_id as a_id, B.event_id as b_id
+        insert into Pairs;
+        """
+
+    def stream_rows(app: str) -> list:
+        outs = run_app_streaming(app, streams, watermark="2 minutes")
+        name = f"sjon_{uuid.uuid4().hex[:8]}"
+        q = (
+            outs["Pairs"].writeStream.format("memory")
+            .queryName(name).outputMode("append").start()
+        )
+        q.processAllAvailable()
+        q.stop()
+        return sorted(tuple(r) for r in spark.table(name).collect())
+
+    for on in (
+        "A.user_id == B.user_id and A.s == 'x and y'",
+        "A.user_id == B.user_id and (A.value > 6.5 or B.value > 2.8)"
+        " and A.s != 'z'",
+    ):
+        want = sorted(tuple(r) for r in run_app(on_app(on), batch)["Pairs"].collect())
+        assert want
+        assert stream_rows(on_app(on)) == want, on
+    # the equi terms sit inside the `or` group: no top-level key
+    grouped = on_app(
+        "A.value > 5.0 or (A.user_id == B.user_id and A.s == B.s"
+        " and B.value > 2.0)"
+    )
+    assert len(run_app(grouped, batch)["Pairs"].collect()) == 7
+    with pytest.raises(ValueError, match="equi term"):
+        run_app_streaming(grouped, streams, watermark="2 minutes")
 
 
 def test_run_app_streaming_stream_table_join(spark):
@@ -2127,6 +2190,59 @@ def test_ql_backward_absence_scan_tier(spark):
         assert sorted(map(tuple, s.collect())) == ja, tag
 
 
+def test_ql_plan_auto_null_hot_key_picks_scan(spark):
+    """A NULL pattern key is its own key in the QL runners, so the
+    `@plan(impl='auto')` pick counts it: with all the density on a
+    NULL `user_id` (1600 signups × 800 purchases, past the 1e6-pair
+    floor) the followed-by and the trailing-absence queries plan the
+    scan tier, row-identical to `@plan(impl='join')`."""
+    from siddhi_operator_spark.operators import joins as J
+
+    J.clear_decision_cache()
+    events = spark.range(2400).select(
+        F.col("id").alias("event_id"),
+        F.timestamp_seconds(F.lit(1700000000) + F.col("id") * 7).alias("ts"),
+        F.lit(None).cast("long").alias("user_id"),
+        F.when((F.col("id") % 3) == 0, "purchase")
+        .otherwise("signup")
+        .alias("event_type"),
+    )
+    defs = """
+    define stream events (event_id long, ts string, user_id long,
+                          event_type string);
+    """
+    queries = {
+        "Conv": """
+    @plan(impl='auto')
+    from every e1=events[event_type == 'signup']
+         -> e2=events[event_type == 'purchase'] within 1 hour
+    select e1.event_id as signup_id, e2.event_id as purchase_id
+    insert into Conv;
+    """,
+        "Quiet": """
+    @plan(impl='auto')
+    from e1=events[event_type == 'signup']
+         -> not events[event_type == 'purchase'] for 10 sec
+    select e1.user_id as user_id, e1.event_id as signup_id
+    insert into Quiet;
+    """,
+    }
+    for out_name, q in queries.items():
+        auto = run_app(defs + q, {"events": events}, pattern_key="user_id")[out_name]
+        join = run_app(
+            defs + q.replace("impl='auto'", "impl='join'"),
+            {"events": events},
+            pattern_key="user_id",
+        )[out_name]
+        assert "_probe" in auto._jdf.queryExecution().executedPlan().toString()
+        assert "_probe" not in join._jdf.queryExecution().executedPlan().toString()
+        rows = sorted(map(tuple, auto.collect()))
+        assert rows == sorted(map(tuple, join.collect()))
+        # a purchase follows every signup but the last two; the NULL
+        # key disarms each signup 7 s before one, not those 14 s before
+        assert len(rows) == {"Conv": 1598, "Quiet": 801}[out_name]
+
+
 def test_run_app_streaming_join_bucket_hint(spark):
     """r14: `@plan(bucket='true')` in a STREAMING QL app routes the
     stream-stream join through the epoch-widened hot-key tier —
@@ -2282,28 +2398,37 @@ def test_ql_plan_hint_strict_parse(spark):
 
 
 def test_equi_pairs_paren_and_quote_balance():
-    """r15 (r14 advice): _equi_pairs must not extract 'equi terms'
-    from inside OR-nested groups or string literals; a redundant
-    outer paren around a genuine top-level conjunction still yields
-    its keys."""
-    from siddhi_operator_spark.siddhiql.builder import _equi_pairs
+    """The ON splitter (`_split_on`, behind the batch bucket pick and
+    the streaming equi keys) takes equi pairs from top-level conjuncts
+    only: none from inside OR-nested groups or string literals, while
+    a redundant outer paren around a genuine top-level conjunction
+    still yields its keys.  Residuals keep their string literals."""
+    from siddhi_operator_spark.siddhiql.builder import _split_on
+
+    def equi(on: str) -> list:
+        return _split_on(on, "a", "b")[0]
 
     # OR-nested group: neither fragment is a top-level conjunct
-    assert _equi_pairs(
-        "a.c > 1 or (a.k = b.k and a.j = b.j)", "a", "b"
-    ) == []
+    assert equi("a.c > 1 or (a.k = b.k and a.j = b.j)") == []
     # string literal containing ' and ' must not corrupt extraction
-    assert _equi_pairs(
-        "a.k = b.k and a.s = 'x and y'", "a", "b"
-    ) == [("k", "k")]
+    assert _split_on("a.k = b.k and a.s = 'x and y'", "a", "b") == (
+        [("k", "k")],
+        ["l.s = 'x and y'"],
+    )
+    # side names inside a literal are not rewritten
+    assert _split_on("b.k = a.k and a.s = 'a.b'", "a", "b") == (
+        [("k", "k")],
+        ["l.s = 'a.b'"],
+    )
     # redundant outer parens around top-level ANDs still work
-    assert _equi_pairs(
-        "(a.k = b.k and a.ts > b.ts)", "a", "b"
-    ) == [("k", "k")]
+    assert equi("(a.k = b.k and a.ts > b.ts)") == [("k", "k")]
+    # a `between … and …` term stays one conjunct
+    assert _split_on("a.v between 1 and 5 and a.k = b.k", "a", "b") == (
+        [("k", "k")],
+        ["l.v between 1 and 5"],
+    )
     # plain top-level conjunction unchanged
-    assert _equi_pairs(
-        "a.k = b.k and a.j = b.j", "a", "b"
-    ) == [("k", "k"), ("j", "j")]
+    assert equi("a.k = b.k and a.j = b.j") == [("k", "k"), ("j", "j")]
 
 
 def test_ql_session_prefix_routing(spark):
