@@ -16,11 +16,13 @@ shuffle is keyed and bounded; the time bound is part of the join
 condition so state/probe ranges stay small and AQE can split skew.
 
 One batch kernel per shape: the QL compiler (`siddhiql/builder.py`)
-calls the absence and logical-`and` join kernels and the nearest-probe
-scan tier below with its own `<alias>_<col>` frames.  NULL keys: every
-kernel treats a NULL key as its own key (the QL runners' rule); each
-public operator ANDs ``key IS NOT NULL`` into its probe predicate, so
-there a NULL key never matches, in every tier.
+calls the strict-chain lead pass, the followed-by step join, the
+absence and logical-`and` join kernels and the nearest-probe scan tier
+below with its own `<alias>_<col>` frames.  NULL keys: every kernel
+treats a NULL key as its own key (the QL runners' rule); each public
+operator filters ``key IS NOT NULL`` into its probe side (or, for
+:func:`sequence_adjacent`, its input), so there a NULL key never
+matches, in every tier.
 """
 
 from __future__ import annotations
@@ -190,6 +192,92 @@ def _key(col: str) -> Column:
     return F.struct(F.col(col).alias("_k"))
 
 
+def _lead_chain(
+    df: DataFrame,
+    key: str,
+    ts: str,
+    id_col: str,
+    names: Sequence[str | None],
+    preds: Sequence[Column] = (),
+    within_seconds: float | None = None,
+) -> DataFrame:
+    """A strict chain: ``len(names)`` consecutive events per key, found
+    by ONE window over ``partitionBy(key).orderBy(ts, id_col)``, no
+    join.  Every row starts a candidate whose position i is its i-th
+    lead; it matches when every position exists, position i satisfies
+    ``preds[i]`` (a predicate over one event; missing: any event) and,
+    with ``within_seconds``, the last position is within the budget of
+    the first (ts never decreases along the chain).  A NULL key is its
+    own key.  (The key is a plain column: a struct expression there is
+    re-extracted once per lead, one shuffle each.)
+
+    Returns the key as ``__k``, then ``<name>_<col>`` for every column
+    of each named position (a None name is matched, not projected)."""
+    w = Window.partitionBy(key).orderBy(ts, id_col)
+
+    def at(c: Column, i: int) -> Column:
+        return c if i == 0 else F.lead(c, i).over(w)
+
+    last = len(names) - 1
+    hit = at(F.lit(1), last).isNotNull()
+    for i, p in enumerate(preds):
+        hit = hit & at(p, i)
+    if within_seconds is not None and last:
+        budget = F.expr(f"INTERVAL {within_seconds} SECONDS")
+        hit = hit & (at(F.col(ts), last) <= F.col(ts) + budget)
+    projected = [
+        at(F.col(c), i).alias(f"{n}_{c}")
+        for i, n in enumerate(names)
+        if n is not None
+        for c in df.columns
+    ]
+    return (
+        df.select(F.col(key).alias("__k"), *projected, hit.alias("_hit"))
+        .filter("_hit")
+        .drop("_hit")
+    )
+
+
+def _step_join(
+    partial: DataFrame,
+    step: DataFrame,
+    key: str,
+    after: tuple[str, str],
+    span: tuple[str, str],
+    within_seconds: float | None,
+    pick: tuple[Sequence[str], Sequence[str]] | None = None,
+    residual: Column | None = None,
+) -> DataFrame:
+    """One followed-by step: each ``partial`` row joined to the ``step``
+    rows of the same :func:`_key` (column ``key`` in both frames; the
+    step's is dropped) whose first ts is strictly after the partial's
+    last (``after``), and whose last ts is within ``within_seconds`` of
+    the match start (``span``: partial's start ts, step's last ts).
+    ``residual`` is one more join conjunct: a QL cross-step predicate,
+    or the operator's ``bucket`` epoch equality.  ``pick`` (ids naming
+    a partial row, step order) keeps the first step row per partial
+    row, the reference's first completing match; it partitions by
+    :func:`_key` plus those ids, so it reuses the join's shuffle, and a
+    next step's join reuses it too."""
+    step = step.withColumnRenamed(key, "_sk")
+    cond = (_key(key) == _key("_sk")) & (F.col(after[1]) > F.col(after[0]))
+    if within_seconds is not None:
+        budget = F.expr(f"INTERVAL {within_seconds} SECONDS")
+        cond = cond & (F.col(span[1]) <= F.col(span[0]) + budget)
+    if residual is not None:
+        cond = cond & residual
+    joined = partial.join(step, cond).drop("_sk")
+    if pick is None:
+        return joined
+    ids, order = pick
+    w = Window.partitionBy(_key(key), *ids).orderBy(*order)
+    return (
+        joined.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
 def _absence_join(
     arm: DataFrame,
     arm_key: str,
@@ -264,29 +352,34 @@ def followed_by(
     For each e1 (per key), find e2 with e1.ts < e2.ts ≤ e1.ts + t.
     ``first_match_only`` keeps the earliest e2 per e1 (the reference
     emits the first completing match per started state machine);
-    ``every=False`` additionally keeps only the first e1 per key.
+    ``every=False`` additionally keeps only the first e1 per key.  A
+    NULL key never matches.
 
     Returns columns: key, e1_ts, e1_id, e2_ts, e2_id (+ e1_/e2_ prefixed
     payload hooks can be added by the caller before/after).
 
-    ``impl`` (r12): ``"join"`` (default) is the time-bounded keyed
-    equi-join + first-match re-window; ``"scan"`` is the fanout-free
-    single-shuffle nearest-probe pass (:func:`_nearest_probe_scan` —
-    "first completing e2 per e1" IS "nearest later e2, then a time
-    filter"; `every` + first-match shapes only). Measured ×1000
-    (100 M events, constant per-key density, SCALEBENCH r12): the
-    join reads 3.7–5.2 s vs the scan's 5.3–8.7 s — SMJ + the tiny
-    fanout stay in whole-stage codegen while WindowExec's running
-    min-struct does not — so the join stays the default; the scan is
-    HOT-KEY INSURANCE, the same regime story as ``bucket``: its
-    per-key cost is O(n log n) always, where the join's pre-filter
-    pair production is O(signups × in-window purchases) on a dense
-    key (a key with 1 M events and an hour-wide budget materializes
-    billions of pairs before the rn=1 filter — the scan shape
-    survives it, row-identically). ``"auto"`` (r13) derives the pick
-    from measured key density (:func:`choose_pattern_impl` — one
-    stats job); shapes the scan cannot express (`every=False`,
-    all-matches, `bucket`) stay on the join tier."""
+    The regime rule behind ``impl`` and ``bucket``: the join tier's
+    cost per key is its pair production, e1 events × in-window e2
+    events, made before the first-match pick; the scan tier's is one
+    sort, O(n log n) however dense the key.  While pair production
+    stays small (roughly constant per-key density) the join is the
+    cheaper plan — it stays in whole-stage codegen, the scan's running
+    min-struct window does not — so the join is the default and the
+    other tiers are hot-key insurance, row-identical to it:
+
+    - ``impl="join"``: the time-bounded keyed join, then the first-match
+      pick (:func:`_step_join`);
+    - ``impl="scan"``: the fanout-free single-shuffle nearest-probe pass
+      (:func:`_nearest_probe_scan` — "first completing e2 per e1" IS
+      "nearest later e2, then a time filter"); `every` + first-match
+      shapes only;
+    - ``impl="auto"``: the pick from measured key density
+      (:func:`choose_pattern_impl`, one stats job); shapes the scan
+      cannot express (`every=False`, all-matches, `bucket`) stay on the
+      join tier;
+    - ``bucket=True``: the join also matches on `t`-wide time epochs (e2
+      lies in e1's epoch or the next), which bounds a hot key's pairs
+      at the price of an explode and a wider shuffle, so it is opt-in."""
     _check_impl(impl)
     scannable = every and first_match_only and not bucket
     if impl == "scan" and not scannable:
@@ -311,42 +404,24 @@ def followed_by(
         w = Window.partitionBy("k").orderBy("e1_ts", "e1_id")
         e1 = e1.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
     e2 = df.filter(probe).select(
-        F.col(key).alias("k2"),
+        F.col(key).alias("k"),
         F.col(ts).alias("e2_ts"),
         F.col("event_id").alias("e2_id"),
     )
-    # bucket=True additionally coarsens time into `t`-wide epochs and
-    # joins on (key, epoch): e2 ∈ (e1, e1+t] lives in e1's epoch or the
-    # next, so per-key pair production stays bounded however DENSE one
-    # key is (hot-key insurance). Measured ×100 on the horizontally
-    # scaled fixture (constant per-key density) it is ~1.8× SLOWER than
-    # the plain keyed join — the explode + wider shuffle costs more
-    # than the pruning returns — so it stays opt-in (SCALEBENCH.md).
-    cond = (
-        (F.col("k") == F.col("k2"))
-        & (F.col("e2_ts") > F.col("e1_ts"))
-        & (
-            F.col("e2_ts")
-            <= F.col("e1_ts") + F.expr(f"INTERVAL {within_seconds} SECONDS")
-        )
-    )
+    epoch = None
     if bucket:
         w_us = int(within_seconds * 1_000_000)
-        e2 = e2.withColumn(
-            "_tb", F.floor(F.unix_micros(F.col("e2_ts")) / F.lit(w_us))
-        )
-        b1 = F.floor(F.unix_micros(F.col("e1_ts")) / F.lit(w_us))
-        e1 = e1.withColumn("_tb", F.explode(F.array(b1, b1 + F.lit(1))))
-        cond = cond & (e1["_tb"] == e2["_tb"])
-    joined = e1.join(e2, on=cond, how="inner").drop("k2", "_tb")
-    if first_match_only:
-        w = Window.partitionBy("k", "e1_id").orderBy("e2_ts", "e2_id")
-        joined = (
-            joined.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-    return joined.withColumnRenamed("k", key)
+        e2 = e2.withColumn("_tb2", F.floor(F.unix_micros("e2_ts") / F.lit(w_us)))
+        b1 = F.floor(F.unix_micros("e1_ts") / F.lit(w_us))
+        e1 = e1.withColumn("_tb1", F.explode(F.array(b1, b1 + F.lit(1))))
+        epoch = F.col("_tb1") == F.col("_tb2")
+    ts_pair = ("e1_ts", "e2_ts")
+    joined = _step_join(
+        e1, e2, "k", ts_pair, ts_pair, within_seconds,
+        (["e1_id"], ["e2_ts", "e2_id"]) if first_match_only else None,
+        residual=epoch,
+    )
+    return joined.drop("_tb1", "_tb2").withColumnRenamed("k", key)
 
 
 def absence(
@@ -399,23 +474,26 @@ def sequence_adjacent(
     (`CountPreStateProcessor.java` handles the quantifier variants;
     strict contiguity per SURVEY.md §3.10).
 
-    Batch mapping: lead() chains — event i matches p_i applied to the
-    i-th lead. ``preds`` is [(name, predicate-over-prefixed-columns)];
-    predicates reference columns as `{name}_{col}`.
+    Rule: a match is n consecutive events of one key, ordered by
+    (``ts``, ``order_tiebreak``), where event i satisfies predicate i
+    and all n events exist — a step with no real predicate
+    (``F.lit(True)``) never matches past the key's last event.  A NULL
+    key never matches.  ``preds`` is [(name, predicate)]; predicates
+    reference the events' columns as `{name}_{col}`.
 
-    The per-key lead() is one keyed sort — no join, no state blowup.
+    One lead() window pass (:func:`_lead_chain`): one keyed sort, no
+    join.  Returns key, then `{name}_{col}` for every non-key column.
     """
-    base_cols = df.columns
-    w = Window.partitionBy(key).orderBy(ts, order_tiebreak)
-    out = df
-    for i, (name, _) in enumerate(preds):
-        for c in base_cols:
-            out = out.withColumn(f"{name}_{c}", F.lead(F.col(c), i).over(w))
-    cond = None
+    names = [name for name, _ in preds]
+    cond = F.lit(True)
     for _, pred in preds:
-        cond = pred if cond is None else (cond & pred)
+        cond = cond & pred
+    out = _lead_chain(
+        df.filter(F.col(key).isNotNull()), key, ts, order_tiebreak, names
+    )
     return out.filter(cond).select(
-        key, *[f"{name}_{c}" for name, _ in preds for c in base_cols if c != key]
+        F.col("__k").alias(key),
+        *[f"{name}_{c}" for name in names for c in df.columns if c != key],
     )
 
 

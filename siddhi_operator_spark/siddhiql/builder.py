@@ -1567,14 +1567,11 @@ def _run_pattern_simple(
     key: str,
     project: bool = True,
 ) -> DataFrame:
-    """Chain of time-bounded first-match joins — the batch fixed point
-    of the NFA. Columns come out as `<alias>_<col>`; select expressions
-    may reference `e1.x` (rewritten to `e1_x`).
-
-    Sequences (`strict=True`, grammar rule `sequence`): contiguity is
-    enforced via a per-key arrival sequence number — step i+1 must be
-    the IMMEDIATELY next event (`__seq == prev + 1`), matching
-    `StreamPreStateProcessor`'s strict-contiguity mode."""
+    """A plain chain — the batch fixed point of the NFA — as one run
+    per step (:func:`_run_chain`).  Columns come out as `__k`, then
+    `<alias>_<col>`; select expressions may reference `e1.x` (rewritten
+    to `e1_x`).  A step predicate that references an earlier alias is
+    deferred (:func:`_classify_step_predicate`)."""
     base_cols = df.columns
     # `@plan(impl='scan'|'auto')` — the fanout-free hot-key tier,
     # reachable from QL since r14 (r13 verdict #1).  The scannable
@@ -1599,113 +1596,105 @@ def _run_pattern_simple(
                 "run on the join tier (use impl='auto' to fall back "
                 "silently)"
             )
-    if inp.strict:
-        seq_w = Window.partitionBy(key).orderBy(ts_col, id_col)
-        df = df.withColumn("__seq", F.row_number().over(seq_w))
-        base_cols = base_cols + ["__seq"]
-    partial: DataFrame | None = None
-    prior_aliases: list[str] = []
+    runs, aliases = [], []
     for step in inp.steps:
-        s = df
-        deferred = None
-        if step.predicate:
-            pre, deferred = _classify_step_predicate(
-                step.predicate, step.alias, prior_aliases, base_cols
-            )
-            if pre:
-                s = s.filter(F.expr(pre))
-        s = s.select(
-            F.col(key).alias("__k"),
-            *[F.col(c).alias(f"{step.alias}_{c}") for c in base_cols],
+        pre, deferred = (
+            _classify_step_predicate(step.predicate, step.alias, aliases, base_cols)
+            if step.predicate
+            else (None, None)
         )
-        if partial is None:
-            if deferred:
-                raise ValueError(
-                    f"step '{step.alias}' references a prior alias but is first"
-                )
-            partial = s
-            first = step.alias
-            prev_alias = step.alias
-            prior_aliases.append(step.alias)
-            continue
-        prev = prev_alias
-        if inp.strict:
-            cond = F.col("p.__k").eqNullSafe(F.col("s.__k")) & (
-                F.col(f"s.{step.alias}___seq") == F.col(f"p.{prev}___seq") + 1
-            )
+        runs.append(([step.alias], _pred(pre), deferred))
+        aliases.append(step.alias)
+    out = _run_chain(df, inp, runs, ts_col, id_col, key)
+    return _rewrite_pattern_select(out, q) if project else out
+
+
+def _run_chain(
+    df: DataFrame,
+    inp: PatternInput,
+    runs: list[tuple[list[str | None], Column, str | None]],
+    ts_col: str,
+    id_col: str,
+    key: str,
+) -> DataFrame:
+    """A chain of runs on the operator kernels (`operators/patterns.py`);
+    each run is (position names, own predicate, deferred cross-step
+    predicate or None), and a plain step is a run of one.
+
+    - sequence (`,`, `StreamPreStateProcessor`'s strict-contiguity
+      mode): the runs' positions are consecutive events of the key —
+      ONE :func:`_lead_chain` window; deferred predicates filter its row;
+    - followed-by (`->`): each run is consecutive events among those
+      matching its predicate (one lead chain per run), and each run
+      after the first joins through :func:`_step_join`, deferred
+      predicate as the join residual, then the first-match pick.
+
+    A NULL key is its own key."""
+    from ..operators.patterns import _lead_chain, _step_join
+
+    within = inp.within_seconds
+    if inp.strict:
+        out = _lead_chain(
+            df, key, ts_col, id_col,
+            [n for names, _p, _d in runs for n in names],
+            [p for names, p, _d in runs for _n in names],
+            within,
+        )
+        for *_, d in runs:
+            if d:
+                out = out.filter(F.expr(d))
+        return out
+    out = None
+    for names, pred, d in runs:
+        run = _lead_chain(
+            df.filter(pred), key, ts_col, id_col, names,
+            within_seconds=within if out is None else None,
+        )
+        head, tail = names[0], names[-1]
+        if out is None:
+            out, first = run, head
         else:
-            cond = F.col("p.__k").eqNullSafe(F.col("s.__k")) & (
-                F.col(f"s.{step.alias}_{ts_col}") > F.col(f"p.{prev}_{ts_col}")
+            out = _step_join(
+                out,
+                run,
+                "__k",
+                (f"{prev}_{ts_col}", f"{head}_{ts_col}"),
+                (f"{first}_{ts_col}", f"{tail}_{ts_col}"),
+                within,
+                (
+                    [f"{first}_{id_col}", f"{prev}_{id_col}"],
+                    [f"{head}_{ts_col}", f"{head}_{id_col}"],
+                ),
+                residual=F.expr(d) if d else None,
             )
-        if inp.within_seconds is not None:
-            cond = cond & (
-                F.col(f"s.{step.alias}_{ts_col}")
-                <= F.col(f"p.{first}_{ts_col}")
-                + F.expr(f"INTERVAL {inp.within_seconds} SECONDS")
-            )
-        joined = partial.alias("p").join(s.alias("s"), on=cond).drop(F.col("s.__k"))
-        if deferred:
-            # cross-step predicate: filter before the first-match pick
-            joined = joined.filter(F.expr(deferred))
-        if inp.strict:
-            partial = joined  # adjacency is unique — no first-match pick
-        else:
-            w = Window.partitionBy(
-                "__k", f"{first}_{id_col}", f"{prev}_{id_col}"
-            ).orderBy(f"{step.alias}_{ts_col}", f"{step.alias}_{id_col}")
-            partial = (
-                joined.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        prev_alias = step.alias
-        prior_aliases.append(step.alias)
-    if not project:
-        return partial
-    return _rewrite_pattern_select(partial, q)
+        prev = tail
+    return out
 
 
 def _run_pattern_quantified(
     df: DataFrame, q: QueryDef, inp: PatternInput, ts_col: str, id_col: str, key: str
 ) -> DataFrame:
     """Count-quantified pattern steps (`e=S[c]<m:n>`,
-    `CountPreStateProcessor.java`): each quantified step expands into L
-    adjacency-chained pseudo-steps, one plan variant per combination of
-    lengths across quantified steps; variants union and a leftmost-
+    `CountPreStateProcessor.java`): one plan variant per combination of
+    run lengths across quantified steps; variants union and a leftmost-
     greedy pick resolves overlaps — the batch fixed point of the
     reference's greedy count state.
 
-    Adjacency inside a quantified run: among MATCHING events in pattern
-    (non-strict) mode — non-matching arrivals are skipped, as in
-    `StreamPreStateProcessor` pattern semantics — and among ALL events
-    in sequence (strict) mode. The greedy pick orders candidates per
-    (key, start event) by earliest completion then longest match
-    (a count state stops collecting when the next step's event
-    arrives); a TRAILING quantified step has no next step, so there the
-    longest run wins outright. Quantified alias `e` exposes
+    Each variant is one :func:`_run_chain`: a length-L run is L
+    consecutive events — among MATCHING events in pattern (non-strict)
+    mode, non-matching arrivals skipped as in `StreamPreStateProcessor`
+    pattern semantics, and among ALL events in sequence (strict) mode,
+    where the whole variant is one lead window.  The greedy pick orders
+    candidates per (key, start event) by earliest completion then
+    longest match (a count state stops collecting when the next step's
+    event arrives); a TRAILING quantified step has no next step, so
+    there the longest run wins outright.  Quantified alias `e` exposes
     `e__first_*`, `e__last_*`, `e__count`; select via `e[0].x` /
     `e[last].x`."""
     from itertools import product
 
     base_cols = df.columns
-    if inp.strict:
-        seq_w = Window.partitionBy(key).orderBy(ts_col, id_col)
-        df = df.withColumn("__seq", F.row_number().over(seq_w))
-    fseq_w = Window.partitionBy(key).orderBy(ts_col, id_col)
-    prepared = []
-    for st in inp.steps:
-        s = df
-        if st.predicate:
-            s = s.filter(F.expr(st.predicate))
-        quant = _quant(st)
-        cols = list(base_cols)
-        if inp.strict:
-            cols.append("__seq")
-        elif quant:
-            s = s.withColumn("__fseq", F.row_number().over(fseq_w))
-            cols.append("__fseq")
-        prepared.append((st, s, cols, quant))
-
+    steps = [(st, _pred(st.predicate), _quant(st)) for st in inp.steps]
     dtypes = {f.name: f.dataType for f in df.schema.fields}
     ranges = [range(st.min_count, _max_reps(st) + 1) for st in inp.steps]
     n_variants = 1
@@ -1717,101 +1706,26 @@ def _run_pattern_quantified(
             "(> 64): narrow the <m:n> ranges"
         )
 
+    def run_names(st: PatternStep, quant: bool, length: int) -> list[str | None]:
+        """A run's positions; only its first and last are projected."""
+        if not quant:
+            return [st.alias]
+        return [
+            f"{st.alias}__{i}" if i in (0, length - 1) else None
+            for i in range(length)
+        ]
+
     def build_variant(lengths: tuple[int, ...]) -> DataFrame:
-        partial: DataFrame | None = None
-        first_pa = prev_pa = ""
-        for (st, s, cols, quant), length in zip(prepared, lengths):
-            if not length:
-                continue
-            if quant:
-                # run collapse (r15 OPT, guide §3.5): a length-L run is
-                # CONTIGUOUS on its adjacency axis (__fseq by
-                # construction of row_number; __seq by the strict
-                # adjacency requirement), so the L-1 adjacency
-                # self-joins of the old unrolled chain reduce to ONE
-                # lead(·, L-1) window carrying the run's last event —
-                # the equality filter below enforces exactly the
-                # conjunction of the chain's +1 conditions (measured on
-                # the `*` registry row at sf0.1: plan 144→32 join
-                # nodes / 146→48 exchanges, cold build+run 13.8→11.1 s,
-                # warm 3.9→3.4 s; the structural point is that intra-run
-                # cost is now one window pass instead of L-1 joins, so
-                # it no longer grows with the unroll cap).
-                pa = f"{st.alias}__0"
-                last_pa = f"{st.alias}__{length - 1}"
-                seq_c = "__seq" if inp.strict else "__fseq"
-                sel_cols = [F.col(key).alias("__k")] + [
-                    F.col(c).alias(f"{pa}_{c}") for c in cols
-                ]
-                if length > 1:
-                    run_w = Window.partitionBy(key).orderBy(seq_c)
-                    sel_cols += [
-                        F.lead(F.col(c), length - 1)
-                        .over(run_w)
-                        .alias(f"{last_pa}_{c}")
-                        for c in cols
-                    ]
-                sel = s.select(*sel_cols)
-                if length > 1:
-                    sel = sel.filter(
-                        F.col(f"{last_pa}_{seq_c}")
-                        == F.col(f"{pa}_{seq_c}") + (length - 1)
-                    )
-                    if inp.within_seconds is not None and partial is None:
-                        # run events obey `within` iff the LAST one does:
-                        # ts is non-decreasing along the adjacency axis
-                        sel = sel.filter(
-                            F.col(f"{last_pa}_{ts_col}")
-                            <= F.col(f"{pa}_{ts_col}")
-                            + F.expr(f"INTERVAL {inp.within_seconds} SECONDS")
-                        )
-            else:
-                pa = last_pa = st.alias
-                sel = s.select(
-                    F.col(key).alias("__k"),
-                    *[F.col(c).alias(f"{pa}_{c}") for c in cols],
-                )
-            if partial is None:
-                partial = sel
-                first_pa = pa
-                prev_pa = last_pa
-                continue
-            if inp.strict:
-                cond = F.col("p.__k").eqNullSafe(F.col("s.__k")) & (
-                    F.col(f"s.{pa}___seq") == F.col(f"p.{prev_pa}___seq") + 1
-                )
-            else:
-                cond = F.col("p.__k").eqNullSafe(F.col("s.__k")) & (
-                    F.col(f"s.{pa}_{ts_col}") > F.col(f"p.{prev_pa}_{ts_col}")
-                )
-            if inp.within_seconds is not None:
-                # the run's last event bounds every member (ts
-                # non-decreasing), so one conjunct covers the chain's
-                # per-event checks
-                cond = cond & (
-                    F.col(f"s.{last_pa}_{ts_col}")
-                    <= F.col(f"p.{first_pa}_{ts_col}")
-                    + F.expr(f"INTERVAL {inp.within_seconds} SECONDS")
-                )
-            joined = (
-                partial.alias("p").join(sel.alias("s"), on=cond).drop(F.col("s.__k"))
-            )
-            if inp.strict:
-                partial = joined  # __seq adjacency is unique — no pick needed
-            else:
-                w = Window.partitionBy(
-                    "__k", f"{first_pa}_{id_col}", f"{prev_pa}_{id_col}"
-                ).orderBy(f"{pa}_{ts_col}", f"{pa}_{id_col}")
-                partial = (
-                    joined.withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") == 1)
-                    .drop("_rn")
-                )
-            prev_pa = last_pa
+        runs = [
+            (run_names(st, quant, length), pred, None)
+            for (st, pred, quant), length in zip(steps, lengths)
+            if length
+        ]
+        partial = _run_chain(df, inp, runs, ts_col, id_col, key)
         # canonical schema shared by all variants; zero-length steps
         # (`?`/`*`/`<0:n>` skipped entirely) contribute typed NULLs
         out_cols = [F.col("__k")]
-        for (st, _s, _cols, quant), length in zip(prepared, lengths):
+        for (st, _p, quant), length in zip(steps, lengths):
             if quant:
                 for part, k2 in (("first", 0), ("last", length - 1)):
                     for c in base_cols:
@@ -1830,14 +1744,7 @@ def _run_pattern_quantified(
                     out_cols.append(F.col(f"{st.alias}_{c}"))
         # match start = first BOUND event (not the first step, which a
         # zero-min quantifier may skip) — the greedy-dedup partition key
-        start_pa = next(
-            (
-                (f"{st.alias}__0" if quant else st.alias)
-                for (st, _s, _c, quant), length in zip(prepared, lengths)
-                if length
-            ),
-        )
-        out_cols.append(F.col(f"{start_pa}_{id_col}").alias("__start_id"))
+        out_cols.append(F.col(f"{runs[0][0][0]}_{id_col}").alias("__start_id"))
         prio = 0
         for length in lengths:  # leftmost-greedy dominance (base 17 > max 16)
             prio = prio * 17 + length

@@ -82,11 +82,12 @@ def keyed_groups(
     handles every key in a bucket (the kernels split a bucket's rows
     into keys by ``__sem_key``).
 
-    `applyInPandasWithState` costs ~0.3 ms per (group × micro-batch)
-    python call (measured: 100 k user keys × 4 batches = 127 s of pure
-    per-group overhead at ×100 — SCALEBENCH round 5), so keying the
-    STATE by the semantic key makes high-cardinality streams
-    overhead-bound; buckets amortize that over |keys|/n_buckets keys.
+    `applyInPandasWithState` pays a python call per (group ×
+    micro-batch), so keying the STATE by the semantic key makes
+    high-cardinality streams overhead-bound (measured on 4 cores: the
+    pattern NFA's state update costs ~5.6 ms per key per batch, 17–19 s
+    for a 3,000-key batch against 2.3 s with 4 or 16 buckets); buckets
+    amortize that over |keys|/n_buckets keys.
     Trade-off: each batch rewrites the whole bucket's state, so size
     n_buckets so one bucket's state fits a task comfortably, and keep
     per-key grouping for sparse-key streams. The bucket hash input is

@@ -350,8 +350,8 @@ def pattern_nfa(
     ) -> Iterator[pd.DataFrame]:
         # dict of per-key partial lists inside ONE state entry — one
         # key per group, or every key of a hash bucket, whose
-        # per-(group × batch) python-call overhead (~0.3 ms, SCALEBENCH
-        # round 5) then amortizes over the bucket's keys.
+        # per-(group × batch) python-call overhead (see `keyed_groups`)
+        # then amortizes over the bucket's keys.
         per_key: dict[str | None, list[_Partial]] = {}
         if state.exists:
             s_keys, s_step, s_start, s_aux, s_toks = state.get

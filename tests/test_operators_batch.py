@@ -316,6 +316,46 @@ def test_sequence_adjacent(events_df):
     assert rows == [(1, 2), (2, 5)]
 
 
+def test_sequence_adjacent_needs_every_position_and_a_key(spark):
+    """A sequence matches n events that all exist: a step with no real
+    predicate (`F.lit(True)`) does not match past a key's last event.
+    And, like its sibling operators, a NULL key never matches, while a
+    QL sequence keeps a NULL key as its own key."""
+    from siddhi_operator_spark.siddhiql import run_app
+
+    rows = [
+        (1, "2024-01-01 00:00:01", 7, "a", 1.0),
+        (2, "2024-01-01 00:00:02", 7, "b", 2.0),
+        (3, "2024-01-01 00:00:03", 7, "a", 3.0),
+        (4, "2024-01-01 00:00:04", None, "a", 4.0),
+        (5, "2024-01-01 00:00:05", None, "b", 5.0),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "event_id long, ts string, user_id long, event_type string, value double",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+
+    def ids(preds):
+        out = P.sequence_adjacent(
+            df, key="user_id", ts="ts", order_tiebreak="event_id", preds=preds
+        )
+        return sorted((r.e1_event_id, r.e2_event_id) for r in out.collect())
+
+    assert ids([("e1", F.col("e1_event_type") == "a"), ("e2", F.lit(True))]) == [(1, 2)]
+    assert ids(
+        [("e1", F.col("e1_event_type") == "a"), ("e2", F.col("e2_event_type") == "b")]
+    ) == [(1, 2)]
+    app = """
+    define stream S (event_id long, ts string, user_id long,
+                     event_type string, value double);
+    from every e1=S[event_type == 'a'], e2=S
+    select e1.event_id as id1, e2.event_id as id2
+    insert into Out;
+    """
+    out = run_app(app, {"S": df}, pattern_key="user_id")["Out"]
+    assert sorted(map(tuple, out.collect())) == [(1, 2), (4, 5)]
+
+
 def test_upsert_replay(events_df):
     state = TB.upsert_replay(
         events_df, keys=["user_id"], order=[F.col("ts").desc(), F.col("event_id").desc()]

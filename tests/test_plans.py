@@ -986,3 +986,77 @@ def test_connected_components_local_graph_runs_zero_star_rounds(spark):
     assert jobs <= 7, jobs
     labels = {r.node: r.component for r in out.collect()}
     assert set(labels.values()) == {0, 100, 200}
+
+
+_CHAINS = {
+    "fb2": "every e1=S[event_type == 'signup'] -> e2=S[event_type == 'purchase']"
+    " within 1 hour",
+    "fb3": "every e1=S[event_type == 'signup'] -> e2=S[event_type == 'click']"
+    " -> e3=S[event_type == 'purchase'] within 1 hour",
+    "seq2": "every e1=S[event_type == 'signup'], e2=S[event_type == 'purchase']",
+    "seq3": "every e1=S[event_type == 'signup'], e2=S[event_type == 'click'],"
+    " e3=S[event_type == 'purchase']",
+    "quant": "every e1=S[event_type == 'signup'] -> e2=S[event_type == 'click']<2:3>"
+    " -> e3=S[event_type == 'purchase'] within 1 hour",
+}
+
+
+@pytest.mark.parametrize(
+    "plan, exchanges, joins",
+    [
+        ("fb2", 2, 1),
+        ("op_followed_by", 2, 1),
+        ("fb3", 3, 2),
+        ("seq2", 1, 0),
+        ("seq3", 1, 0),
+        ("op_sequence_adjacent", 1, 0),
+        ("siddhiql_count_quantifier", 2, 0),
+        ("quant", 12, 4),
+    ],
+)
+def test_pattern_chain_plan_shapes(spark, plan, exchanges, joins):
+    """One kernel per chain shape (`operators/patterns.py`): a sequence
+    is one lead() window (one shuffle, no join, for any length or a
+    strict quantified run), and each followed-by step is one join whose
+    first-match pick and next join reuse its struct-keyed shuffle — the
+    QL chain plans like the operator `followed_by`.  Counted in the
+    executed plan with broadcast and AQE off, so every join is a
+    sort-merge join and every shuffle shows."""
+    from siddhi_operator_spark.operators import patterns as P
+    from siddhi_operator_spark.siddhiql import run_app
+
+    e = load(spark, SF, "events")
+    old = {
+        k: spark.conf.get(k)
+        for k in ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.enabled")
+    }
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        if plan == "op_followed_by":
+            df = P.followed_by(
+                e, "user_id", "ts", F.col("event_type") == "signup",
+                F.col("event_type") == "purchase", 3600,
+            )
+        elif plan == "op_sequence_adjacent":
+            df = P.sequence_adjacent(
+                e, "user_id", "ts", "event_id",
+                [("e1", F.col("e1_event_type") == "signup"),
+                 ("e2", F.col("e2_event_type") == "purchase")],
+            )
+        elif plan in REGISTRY:
+            df = REGISTRY[plan].fn(spark, SF)
+        else:
+            app = f"""
+            define stream S (event_id long, ts string, user_id long,
+                             event_type string, value double);
+            from {_CHAINS[plan]}
+            select *
+            insert into Out;
+            """
+            df = run_app(app, {"S": e}, pattern_key="user_id")["Out"]
+        tree = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert (tree.count("Exchange"), tree.count("Join")) == (exchanges, joins), tree

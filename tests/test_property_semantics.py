@@ -123,6 +123,83 @@ def test_followed_by_matches_bruteforce(spark, evs):
         assert got == sorted(want), impl
 
 
+chain_events_strategy = st.lists(
+    st.tuples(
+        st.sampled_from([None, 0, 1]),  # user: a NULL key is its own key
+        st.integers(min_value=0, max_value=8).map(lambda x: 10 * x),  # ties
+        st.sampled_from(["a", "b", "c"]),  # type
+    ),
+    min_size=1,
+    max_size=30,
+)
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(evs=chain_events_strategy)
+def test_ql_chains_match_bruteforce(spark, evs):
+    """The QL chain kernels (`operators/patterns.py::_lead_chain` and
+    `_step_join`) against a python model: a sequence is n consecutive
+    events of one key in (ts, id) order, every one present; a
+    followed-by step takes the earliest later event of the key within
+    the budget (strictly later ts; ties: lowest id).  A NULL key is its
+    own key; a step with no predicate matches any event."""
+    from siddhi_operator_spark.siddhiql import run_app
+
+    rows = [
+        (i, BASE + datetime.timedelta(seconds=off), u, t)
+        for i, (u, off, t) in enumerate(evs)
+    ]
+    per_key: dict = {}
+    for r in sorted(rows, key=lambda r: (r[1], r[0])):
+        per_key.setdefault(r[2], []).append(r)
+    budget = datetime.timedelta(seconds=60)
+
+    def sequences(preds, within=None):
+        out = []
+        for evk in per_key.values():
+            for i in range(len(evk) - len(preds) + 1):
+                run = evk[i : i + len(preds)]
+                if all(p is None or r[3] == p for p, r in zip(preds, run)) and (
+                    within is None or run[-1][1] <= run[0][1] + within
+                ):
+                    out.append(tuple(r[0] for r in run))
+        return sorted(out)
+
+    followed = []
+    for i1, t1, u1, ty1 in rows:
+        cands = [
+            (t2, i2)
+            for i2, t2, u2, ty2 in rows
+            if ty1 == "a" and ty2 != "c" and u2 == u1 and t1 < t2 <= t1 + budget
+        ]
+        if cands:
+            followed.append((i1, min(cands)[1]))
+    apps = {
+        "every e1=S[event_type == 'a'], e2=S": sequences(["a", None]),
+        "every e1=S[event_type == 'a'], e2=S[event_type == 'b'],"
+        " e3=S within 60 sec": sequences(["a", "b", None], budget),
+        "every e1=S[event_type == 'a'] -> e2=S[event_type != 'c']"
+        " within 60 sec": sorted(followed),
+    }
+    df = _df(spark, evs)
+    for pattern, want in apps.items():
+        n = pattern.count("=S")
+        sel = ", ".join(f"e{k}.event_id as id{k}" for k in range(1, n + 1))
+        app = f"""
+        define stream S (event_id long, ts string, user_id long,
+                         event_type string, value double);
+        from {pattern}
+        select {sel}
+        insert into Out;
+        """
+        out = run_app(app, {"S": df}, pattern_key="user_id")["Out"]
+        assert sorted(map(tuple, out.collect())) == want, pattern
+
+
 @settings(
     max_examples=8,
     deadline=None,
